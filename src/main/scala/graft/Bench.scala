@@ -130,7 +130,7 @@ object Bench {
     val calibSec = math.round(calibrate() * 10000) / 10000.0
     val cpu0 = processCpuSec()
     val wall0 = System.nanoTime()
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[Throwable, Double] = {
       val t0 = System.nanoTime()
       // Materialize FULL rows from the query's own physical plan
       // (r11 integrity fix): the previous `df.count()` wrapped the query
@@ -145,7 +145,7 @@ object Bench {
       // range-partitioner SAMPLING pass that re-executes the whole
       // upstream — the old count() path dropped the sort too
       // (EliminateSorts), so stripping keeps that much like-for-like.
-      val ok = try {
+      try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.analyzed match {
           case s: org.apache.spark.sql.catalyst.plans.logical.Sort
@@ -154,9 +154,8 @@ object Bench {
         }
         org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark, plan)
           .queryExecution.toRdd.count()
-        true
-      } catch { case _: Throwable => false }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
     }
     // INTERLEAVED passes: run the whole suite N times and take each query's
     // min across passes, instead of back-to-back min-of-N per query. With
@@ -168,13 +167,14 @@ object Bench {
     val best = scala.collection.mutable.Map.empty[String, Double]
     for (pass <- 1 to runs) {
       for ((name, fn) <- queries) {
-        val t = once(fn)
         // min over SUCCESSFUL passes; -1 only if every pass failed (a
         // single transient task failure must not erase real timings)
-        if (t >= 0)
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-        else
-          System.err.println(s"[bench] $name failed pass $pass")
+        once(fn) match {
+          case Right(t) =>
+            best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
+          case Left(e) => System.err.println(
+            s"[bench] $name failed pass $pass: ${e.getClass.getName}: ${e.getMessage}")
+        }
       }
       System.gc() // reset GC debt at the pass boundary, not mid-pass
     }
@@ -183,7 +183,12 @@ object Bench {
     val qs = results.map { case (k, v) =>
         s"\"" + k + "\":" + (math.round(v * 10000) / 10000.0) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    // a query that failed every pass keeps its -1 in the per-query map but
+    // is counted and named apart, never summed into the total
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val failedJson = s""""failed":${failed.size},""" +
+      failed.map("\"" + _ + "\"").mkString(""""failed_queries":[""", ",", "],")
     val loadAfter = loadAvg1m()
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val cpuSec = { val c = processCpuSec(); if (c >= 0 && cpu0 >= 0) c - cpu0 else -1.0 }
@@ -215,7 +220,7 @@ object Bench {
     // The FULL artifact (every per-query timing) goes to outFile — the
     // machine-readable record a reader should lift first.
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,$env}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$failedJson"sf":"$sfDir","runs":$runs,$env}"""
     // hash the EXACT bytes written (trailing newline included) so
     // `sha256sum <outFile>` matches the advertised digest (r15 — the
     // r14 stamp hashed the string without the newline and could not be
@@ -265,7 +270,7 @@ object Bench {
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,""" +
       s""""queries_shown":"top20_by_sec","queries_n":${results.size},""" +
-      fileInfo +
+      failedJson + fileInfo +
       s""""sf":"$sfDir","runs":$runs,$env}""")
     spark.stop()
   }

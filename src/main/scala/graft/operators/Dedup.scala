@@ -413,7 +413,7 @@ object Dedup {
     * (v → label(v)) into the message edge set (see the round comment).
     * Labels only ever DECREASE, so an unchanged (count, sum(label)) is a
     * fixpoint — checked on the round's localCheckpoint, one materializing
-    * action per round (same discipline as DependencyGraph.doubledClosure).
+    * action per round.
     * `maxRounds` guards the adversarial case. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 15): DataFrame = {
     // localCheckpoint rather than persist (r15): a cached plan keeps its

@@ -1,14 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Distributed form of the reference's graph stage (SURVEY.md §2.1 G2-G5)
-  * plus a multi-hop transitive closure extension. All pure DataFrame ops —
-  * Catalyst handles pushdown/pruning; the graph is metadata-scale but every
-  * op here is written to survive a 100 TB catalog (hash joins on `src`/`dst`,
-  * no driver-side loops except the bounded closure iteration).
+  * plus multi-hop closure and refresh-level extensions. G2-G5 are pure
+  * DataFrame ops — Catalyst handles pushdown/pruning, with hash joins on
+  * `src`/`dst`. The closure and refresh levels assume the edge list fits
+  * on the driver (one edge per view → dependency reference, metadata
+  * scale): each collects it once and runs no further driver round-trips;
+  * the closure broadcasts the adjacency map and its output stays
+  * distributed by source.
   *
   * Expected input: `lineage` DataFrame with columns
   * (view: string, deps: array<string>) — the output of the lineage UDF stage.
@@ -38,13 +44,10 @@ object DependencyGraph {
 
   /** G2 (node set): endpoints ∪ declared views.
     * Reference dependencies_to_mermaid.py:100-108. */
-  def nodes(lineage: DataFrame): DataFrame = {
-    val e = edges(lineage)
-    e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .union(lineage.select(col("view").as("id")))
+  def nodes(lineage: DataFrame): DataFrame =
+    lineage.select(explode(concat(array(col("view")),
+        coalesce(col("deps"), array()))).as("id"))
       .distinct()
-  }
 
   /** G4 (node classification): node ∈ table set → chTable else chView.
     * Reference dependencies_to_mermaid.py:125-129. Broadcast the table list
@@ -58,8 +61,7 @@ object DependencyGraph {
   /** G5 (isolated nodes): nodes that are endpoint of no edge, sorted.
     * Reference dependencies_to_mermaid.py:137-149. */
   def isolated(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val endpoints = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
+    val endpoints = edges.select(explode(array(col("src"), col("dst"))).as("id"))
     nodes.join(endpoints, Seq("id"), "left_anti").orderBy("id")
   }
 
@@ -71,89 +73,83 @@ object DependencyGraph {
   def fanIn(edges: DataFrame): DataFrame =
     edges.groupBy("dst").agg(count("*").as("fan_in")).orderBy(desc("fan_in"), col("dst"))
 
-  /** Pointer-doubling reachability core: after round k, `reach` holds every
-    * (src, dst) connected by a path of ≤ 2^k edges, with depth = the
-    * `shortest`-or-longest such path (min-plus / max-plus matrix squaring).
-    * O(log diameter) rounds instead of the frontier form's O(diameter),
-    * and exactly ONE action per round: the convergence-stats aggregate
-    * (pair count + depth sum) materializes the round's LAZY
-    * `localCheckpoint` and returns the stats in the same job; later
-    * rounds read the pinned blocks — no recompute.
-    * Convergence: depths only shrink (min) / grow (max) and the pair set
-    * only grows, so an unchanged (count, sum) fixes the point. For min,
-    * an unchanged pair set already implies every shortest path ≤ 2^(k-1),
-    * which round k measures exactly; for max (longest path, DAG-safe) the
-    * sum catches depths still stretching after the pair set fills.
-    * `maxRounds = 10` admits paths of 2^10 hops — far past any real
-    * catalog's depth; cycles (a malformed catalog) terminate via the cap. */
-  private def doubledClosure(edges: DataFrame, shortest: Boolean,
-      maxRounds: Int): DataFrame = {
-    val aggDepth = if (shortest) min(col("depth")) else max(col("depth"))
-    // LAZY checkpoints (r15, the connectedComponents convention): the
-    // convergence stats aggregate reads every partition, so it both
-    // materializes the round's checkpoint and returns (count, sum) in
-    // ONE action — the eager form paid a separate materializing job per
-    // round. Values are unchanged: (src, dst)-keyed exact min/max over
-    // integer depths is partition-layout-independent.
-    var reach = edges.select(col("src"), col("dst"), lit(1).as("depth"))
-      .localCheckpoint(false)
-    def stats(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum("depth")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var prev = stats(reach)
-    // pair-count-derived shuffle width for the round plans (r15, guide
-    // §2.2): the reach set here is catalog-metadata-scale, yet each
-    // round's self-join + groupBy planned at the session shuffle
-    // constant — near-empty reduce tasks per round. One reduce partition
-    // per ~20k reach pairs, re-derived each round from the live pair
-    // count (the closure can grow quadratically), capped at the session
-    // setting, which is restored after the loop.
-    val sess = edges.sparkSession
-    val savedSp = sess.conf.get("spark.sql.shuffle.partitions")
-    def roundSp(pairs: Long): String = math.max(1L,
-      math.min(savedSp.toLong, pairs / 20000L + 1L)).toString
-    var i = 0
-    var done = prev._1 == 0
-    try {
-      while (i < maxRounds && !done) {
-        sess.conf.set("spark.sql.shuffle.partitions", roundSp(prev._1))
-        val hop = reach.alias("a")
-          .join(reach.alias("b"), col("a.dst") === col("b.src"))
-          .select(col("a.src").as("src"), col("b.dst").as("dst"),
-            (col("a.depth") + col("b.depth")).as("depth"))
-        val combined = reach.union(hop)
-          .groupBy("src", "dst").agg(aggDepth.as("depth"))
-          .localCheckpoint(false)
-        val cur = stats(combined)
-        if (cur == prev) done = true
-        prev = cur
-        reach = combined
-        i += 1
+  /** The distinct (src, dst) edge list, read to the driver once: one
+    * action, plus whatever jobs the lazy upstream needs. */
+  private def collectEdges(edges: DataFrame): Array[(Any, Any)] =
+    edges.select("src", "dst").collect().map(r => (r.get(0), r.get(1))).distinct
+
+  /** Path-length cap: `maxRounds` admits paths of at most 2^maxRounds
+    * edges. */
+  private def pathCap(maxRounds: Int): Int =
+    if (maxRounds >= 31) Int.MaxValue else 1 << math.max(0, maxRounds)
+
+  /** Shortest hop count from `src` to every node within `cap` hops of it.
+    * `src` itself is a target only when a cycle leads back to it. A null
+    * id never equals an edge's source under SQL equality, so it is
+    * reached but not expanded. */
+  private def bfs(adj: Map[Any, Array[Any]], src: Any, cap: Int): Iterator[(Any, Int)] = {
+    val depth = mutable.HashMap.empty[Any, Int]
+    var frontier = Iterable(src)
+    var d = 0
+    while (frontier.nonEmpty && d < cap) {
+      d += 1
+      val next = mutable.ArrayBuffer.empty[Any]
+      for (u <- frontier; v <- adj.getOrElse(u, Array.empty[Any]) if !depth.contains(v)) {
+        depth(v) = d
+        if (v != null) next += v
       }
-    } finally sess.conf.set("spark.sql.shuffle.partitions", savedSp)
-    reach
+      frontier = next
+    }
+    depth.iterator
   }
 
   /** Refresh order: topological levels over the dependency DAG — level 0 =
     * objects that depend on nothing (base tables, isolated objects),
     * level(v) = 1 + max(level of v's dependencies) = the longest path
-    * ending at v (any path ending at v extends backward to an in-degree-0
-    * node, so the max over ALL paths ending at v is the level). Runs the
-    * max-plus pointer-doubling closure, then one aggregation — O(log depth)
-    * rounds. */
+    * ending at v. Computed on the driver by sweeping f(v) = max(f(v),
+    * f(u) + 1) over the collected edges until a sweep changes nothing,
+    * with f capped at 2^maxRounds; the k-th sweep has followed every walk
+    * of k edges, so it settles within 2^maxRounds sweeps. Objects on or
+    * downstream of a cycle (a malformed catalog) read 2^maxRounds. */
   def refreshLevels(allObjects: DataFrame, edges: DataFrame, maxRounds: Int = 10): DataFrame = {
-    val lv = doubledClosure(edges, shortest = false, maxRounds)
-      .groupBy(col("dst").as("id")).agg(max("depth").as("level"))
+    val es = collectEdges(edges)
+    val cap = pathCap(maxRounds)
+    val level = mutable.HashMap.empty[Any, Int]
+    es.foreach { case (_, v) => level(v) = 1 }
+    var changed = true
+    while (changed) {
+      changed = false
+      // a null id never joins, so it starts a walk but never extends one
+      for ((u, v) <- es if u != null) {
+        val l = math.min(cap, level.getOrElse(u, 0) + 1)
+        if (l > level(v)) { level(v) = l; changed = true }
+      }
+    }
+    val spark = edges.sparkSession
+    val lv = spark.createDataFrame(
+      level.iterator.map { case (id, l) => Row(id, l) }.toSeq.asJava,
+      StructType(Seq(edges.schema("dst").copy(name = "id"),
+        StructField("level", IntegerType, nullable = false))))
     val zeros = allObjects.select(col("id"))
       .join(lv, Seq("id"), "left_anti")
       .withColumn("level", lit(0))
-    zeros.union(lv.select(col("id"), col("level")))
+    zeros.union(lv)
   }
 
-  /** Multi-hop lineage: transitive closure with depth = shortest hop count,
-    * via min-plus pointer doubling — O(log diameter) rounds, one action per
-    * round (see [[doubledClosure]]). */
-  def transitiveClosure(edges: DataFrame, maxRounds: Int = 10): DataFrame =
-    doubledClosure(edges, shortest = true, maxRounds)
+  /** Multi-hop lineage: transitive closure with depth = shortest hop count
+    * over paths of at most 2^maxRounds edges. The adjacency map is
+    * broadcast and one `mapPartitions` job runs a bounded BFS per source,
+    * so the output stays distributed by source. */
+  def transitiveClosure(edges: DataFrame, maxRounds: Int = 10): DataFrame = {
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val adj = collectEdges(edges).groupMap(_._1)(_._2)
+    val sources = adj.keys.toSeq.sortBy(k => String.valueOf(k))
+    val bc = sc.broadcast(adj)
+    val cap = pathCap(maxRounds)
+    val rows = sc.parallelize(sources, math.max(1, math.min(sc.defaultParallelism, sources.size)))
+      .mapPartitions(_.flatMap(s => bfs(bc.value, s, cap).map { case (d, k) => Row(s, d, k) }))
+    spark.createDataFrame(rows, StructType(Seq(edges.schema("src"), edges.schema("dst"),
+      StructField("depth", IntegerType, nullable = false))))
+  }
 }

@@ -22,8 +22,9 @@ object MetadataSql {
   /** Register the full analysis as temp views derived from `catalog`
     * (a `system.tables`-shaped DataFrame). Views are lazy plans — each SQL
     * query re-optimizes end-to-end through Catalyst (filter pushdown into
-    * the catalog scan included); `graft_closure` is materialized because
-    * its iterative self-join cannot be expressed as a single lazy plan. */
+    * the catalog scan included). `graft_closure` is the exception: it
+    * reads the edge list to the driver once, here, and each query then
+    * runs its per-source BFS over that snapshot. */
   def register(spark: SparkSession, catalog: DataFrame): Unit = {
     catalog.createOrReplaceTempView("graft_catalog")
 
@@ -58,7 +59,7 @@ object MetadataSql {
     DependencyGraph.fanOut(edges).createOrReplaceTempView("graft_fan_out")
     DependencyGraph.fanIn(edges).createOrReplaceTempView("graft_fan_in")
 
-    // closure is iterative → materialize once at registration
+    // collects the edges now; later catalog changes need a re-register
     DependencyGraph.transitiveClosure(edges)
       .createOrReplaceTempView("graft_closure")
   }

@@ -72,6 +72,52 @@ class PipelineSpec extends AnyFunSuite {
     assert(closure.filter(col("depth") === 1).count() == 17)
   }
 
+  private def closureOf(edges: Seq[(String, String)], maxRounds: Int = 10) = {
+    import spark.implicits._
+    DependencyGraph.transitiveClosure(edges.toDF("src", "dst"), maxRounds)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+  }
+
+  private def levelsOf(objects: Seq[String], edges: Seq[(String, String)],
+      maxRounds: Int = 10) = {
+    import spark.implicits._
+    DependencyGraph.refreshLevels(objects.toDF("id"), edges.toDF("src", "dst"), maxRounds)
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+  }
+
+  test("closure and refresh levels: cycles, duplicate edges, empty graph") {
+    // a cycle a <-> b: shortest depths close the loop (a,a,2); levels of
+    // everything on or downstream of it sit at the path cap 2^maxRounds
+    val cyclic = Seq("t" -> "a", "a" -> "b", "b" -> "a", "b" -> "c")
+    assert(closureOf(cyclic, maxRounds = 3) == Set(
+      ("a", "a", 2), ("a", "b", 1), ("a", "c", 2), ("b", "a", 1), ("b", "b", 2),
+      ("b", "c", 1), ("t", "a", 1), ("t", "b", 2), ("t", "c", 3)))
+    assert(levelsOf(Seq("t", "a", "b", "c", "z"), cyclic, maxRounds = 3) ==
+      Map("a" -> 8, "b" -> 8, "c" -> 8, "t" -> 0, "z" -> 0))
+    assert(closureOf(Seq("x" -> "y", "x" -> "y", "y" -> "z")) ==
+      Set(("x", "y", 1), ("x", "z", 2), ("y", "z", 1)))
+    assert(closureOf(Seq.empty).isEmpty)
+    assert(levelsOf(Seq("q"), Seq.empty) == Map("q" -> 0))
+  }
+
+  test("closure and refresh levels leave no persisted RDDs or conf changes") {
+    import spark.implicits._
+    val edges = Seq("t" -> "a", "a" -> "b", "b" -> "a", "b" -> "c").toDF("src", "dst")
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val spBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    DependencyGraph.transitiveClosure(edges).collect()
+    DependencyGraph.refreshLevels(Seq("t", "z").toDF("id"), edges).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == spBefore)
+  }
+
+  test("nodes keep a view whose deps are null") {
+    import spark.implicits._
+    val lineage = Seq(("v1", Seq("t1", "t2")), ("v2", null)).toDF("view", "deps")
+    assert(DependencyGraph.nodes(lineage).collect().map(_.getString(0)).toSet ==
+      Set("v1", "v2", "t1", "t2"))
+  }
+
   test("mermaid output matches the reference output contract") {
     val out = LineagePipeline.toMermaid(catalog,
       MermaidOptions(includeIsolatedNodes = false))

@@ -1233,17 +1233,16 @@ class ScaleDesignSpec extends AnyFunSuite {
       s"corpus side shuffled before the probe:\n$streamed")
   }
 
-  test("pointer-doubling closure: 40-hop chain closes within the default 10 rounds") {
+  test("closure: 40-hop chain closes within the default 2^10 path cap") {
     import spark.implicits._
-    // frontier propagation needs 40 rounds (one per hop); matrix squaring
-    // needs ceil(log2(40)) = 6 — default maxRounds=10 only suffices if the
-    // doubling actually happens
+    // the default maxRounds = 10 caps paths at 2^10 edges, so a 40-hop
+    // chain must close completely, with exact shortest and longest depths
     val edges = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("src", "dst")
     val c = DependencyGraph.transitiveClosure(edges)
     assert(c.count() == 41L * 40 / 2)
     val d = c.filter(col("src") === "n00" && col("dst") === "n40")
       .head().getAs[Int]("depth")
-    assert(d == 40) // min-plus: shortest-path depth survives the squaring
+    assert(d == 40)
     val levels = DependencyGraph.refreshLevels(
       (0 to 40).map(i => f"n$i%02d").toDF("id"), edges)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
