@@ -1,11 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import java.nio.file.{Files, Paths}
 
 object Bench {
+
+  /** Warm up the JVM / parquet footer cache / codegen pipeline so the
+    * first timed query isn't charged session-startup cost. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
+      "region", "events", "documents", "embeddings").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+
+  /** A fresh DataFrame over `df`'s analyzed plan without its trailing
+    * global sort. The sort exists for the oracle's presentation only, and
+    * under full-row execution a global sort pays a range-partitioner
+    * SAMPLING pass that re-executes the whole upstream — the old count()
+    * path dropped the sort too (EliminateSorts), so stripping keeps that
+    * much like-for-like. */
+  def withoutTrailingSort(spark: SparkSession, df: DataFrame): DataFrame =
+    ColumnBridge.ofRows(spark, df.queryExecution.analyzed match {
+      case s: Sort if s.global => s.child
+      case p => p
+    })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // min-of-N timing (default 3): run 1 pays codegen/compile, and a single
     // repeat was not enough to kill scheduler/JIT noise on sub-second
     // queries (the r2 q16/q13 "regressions" were exactly that).
@@ -52,22 +75,8 @@ object Bench {
       Thread.sleep(10000)
       loadBefore = loadAvg1m()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the JVM / parquet footer cache / codegen pipeline so the
-    // first timed query isn't charged session-startup cost.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    val spark = Session.local()
+    warmUp(spark, sfDir)
     // optional comma-separated name-prefix filter (local iteration only;
     // the driver always runs the full set)
     val nameFilter: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
@@ -130,7 +139,7 @@ object Bench {
     val calibSec = math.round(calibrate() * 10000) / 10000.0
     val cpu0 = processCpuSec()
     val wall0 = System.nanoTime()
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[Throwable, Double] = {
+    def once(fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
       val t0 = System.nanoTime()
       // Materialize FULL rows from the query's own physical plan
       // (r11 integrity fix): the previous `df.count()` wrapped the query
@@ -140,20 +149,9 @@ object Bench {
       // cleaning) were timing bare scans, not their operators. toRdd
       // executes the planned query as-is (all columns, codegen intact);
       // the RDD count only walks the produced rows. The TRAILING global
-      // sort is stripped first: it exists for the oracle's presentation
-      // only, and under full-row execution a global sort pays a
-      // range-partitioner SAMPLING pass that re-executes the whole
-      // upstream — the old count() path dropped the sort too
-      // (EliminateSorts), so stripping keeps that much like-for-like.
+      // sort is stripped first (see withoutTrailingSort).
       try {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.analyzed match {
-          case s: org.apache.spark.sql.catalyst.plans.logical.Sort
-              if s.global => s.child
-          case p => p
-        }
-        org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark, plan)
-          .queryExecution.toRdd.count()
+        withoutTrailingSort(spark, fn(spark, sfDir)).queryExecution.toRdd.count()
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable => Left(e) }
     }

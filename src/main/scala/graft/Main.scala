@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.model.MermaidOptions
 import graft.operators.LineagePipeline
 import graft.sources.CatalogSource
@@ -21,14 +20,7 @@ object Main {
       sys.exit(2)
     }
     val out = Paths.get(args(0))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     try {
       val catalog =
         if (args.length > 1) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for headline queries so the
   * scan/shuffle/broadcast structure can be audited (pushed filters, pruned
   * read schemas, broadcast vs shuffle joins, whole-stage codegen spans).
@@ -32,17 +30,9 @@ object PlanAudit {
         // scan-speed rule suite, and the gopher/decontam pipeline's
         // broadcast-only probes
         "v19_ivf_range", "t31_gopher_rules", "p8_gopher_decontam_pack")
-    // SPARK_GRAFT_CPUS (default 4) — scale-adaptive operators (fanOut)
-    // shape plans by session parallelism, so auditing the bench's plan
-    // needs the bench's core count (r15)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's session: scale-adaptive operators (fanOut) shape plans
+    // by session parallelism, so auditing the bench's plan needs its cores
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool (r15 optimization round): per-query cost breakdown the bench
   * total can't show — DataFrame build time, plan time, execution time,
   * and the job/stage/task counts that reveal per-job scheduling overhead
-  * vs genuine compute. Mirrors Bench's materializer (toRdd.count with the
-  * trailing global sort stripped) so numbers are comparable.
+  * vs genuine compute. Shares Bench's warm-up and materializer (toRdd.count
+  * with the trailing global sort stripped) so numbers are comparable; the
+  * last pass of each query also lists its 15 slowest jobs.
   *
   * Usage: runMain graft.ProfileQuery [sfDir] [passes] [queryName...]
   */
@@ -18,18 +18,7 @@ object ProfileQuery {
     val passes = args.lift(1).map(_.toInt).getOrElse(2)
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q1_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("PROFILE_BYPASS_THRESHOLD", "200"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.local()
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
@@ -55,28 +44,16 @@ object ProfileQuery {
           taskNanos.addAndGet(t.taskMetrics.executorRunTime * 1000000L)
       }
     })
-    // warmup (mirror Bench)
-    Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    Bench.warmUp(spark, sfDir)
     println(f"${"query"}%-28s pass  build_s  plan_s  exec_s  jobs stages tasks task_cpu_s")
-    val dumpJobs = sys.env.get("PROFILE_DUMP_JOBS").contains("1")
     for (n <- names; p <- 1 to passes) {
       val fn = SparkEntry.queries(n)
       jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0)
       jobDurs.clear()
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val plan0 = df.queryExecution.analyzed match {
-        case s: org.apache.spark.sql.catalyst.plans.logical.Sort
-            if s.global => s.child
-        case pl => pl
-      }
+      val df = Bench.withoutTrailingSort(spark, fn(spark, sfDir))
       val t1 = System.nanoTime()
-      val qe = org.apache.spark.sql.graftbridge.ColumnBridge
-        .ofRows(spark, plan0).queryExecution
+      val qe = df.queryExecution
       qe.executedPlan // force planning
       val t2 = System.nanoTime()
       qe.toRdd.count()
@@ -84,7 +61,7 @@ object ProfileQuery {
       // note: build may itself run jobs (counts/collect-driven queries);
       // those are charged to build_s and included in the job counts.
       println(f"$n%-28s $p%4d  ${(t1 - t0) / 1e9}%7.3f ${(t2 - t1) / 1e9}%7.3f ${(t3 - t2) / 1e9}%7.3f  ${jobs.get}%4d ${stages.get}%6d ${tasks.get}%5d ${taskNanos.get / 1e9}%9.3f")
-      if (dumpJobs && p == passes) {
+      if (p == passes) {
         import scala.jdk.CollectionConverters._
         jobDurs.asScala.toSeq.sortBy(-_._2).take(15).foreach { case (id, d, cs) =>
           println(f"    job $id%4d ${d}%8.3f s  $cs")

@@ -167,7 +167,7 @@ object Queries {
     // G4+G5: classification + isolated objects (left-anti join)
     "m5_isolated" -> ((s, _) => {
       val catalog = CatalogSource.fixtureCatalog(s).toDF()
-        .filter(!col("database").isin("system", "INFORMATION_SCHEMA", "information_schema"))
+        .filter(!col("database").isin(CatalogSource.systemDbs: _*))
       val objs = catalog.select(concat_ws(".", col("database"), col("name")).as("id"))
       DependencyGraph.isolated(objs, fixtureEdges(s))
     }),
@@ -1592,7 +1592,7 @@ object Queries {
     // refresh order: topological levels over the dependency DAG
     "m7_refresh_levels" -> ((s, _) => {
       val catalog = CatalogSource.fixtureCatalog(s).toDF()
-        .filter(!col("database").isin("system", "INFORMATION_SCHEMA", "information_schema"))
+        .filter(!col("database").isin(CatalogSource.systemDbs: _*))
       val objs = catalog.select(concat_ws(".", col("database"), col("name")).as("id"))
       graft.operators.DependencyGraph.refreshLevels(objs, fixtureEdges(s))
         .orderBy("id")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** User-facing CH-SQL runner: execute a ClickHouse SELECT string against a
   * directory of parquet tables (table `t` resolves to `<dir>/t.parquet`).
   *
@@ -17,33 +15,15 @@ object Sql {
     val dir = args(0)
     val query = args(1)
     val maxRows = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // catalog-first resolution so CREATE VIEW results are queryable;
     // otherwise table t reads <dir>/t.parquet
     def resolve(n: String): org.apache.spark.sql.DataFrame =
       if (spark.catalog.tableExists(n)) spark.table(n)
       else spark.read.parquet(s"$dir/$n.parquet")
-    // ';'-separated statements (quote-aware split), each dispatched
-    // through the statement layer (SELECT / EXPLAIN / CREATE VIEW / SET)
-    val stmts = {
-      val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      var inQuote = false
-      query.foreach {
-        case '\'' => inQuote = !inQuote; cur += '\''
-        case ';' if !inQuote => parts += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      if (cur.toString.trim.nonEmpty) parts += cur.toString
-      parts.toSeq.map(_.trim).filter(_.nonEmpty)
-    }
+    // ';'-separated statements, each dispatched through the statement
+    // layer (SELECT / EXPLAIN / CREATE VIEW / SET)
+    val stmts = splitStatements(query)
     for ((stmt, i) <- stmts.zipWithIndex) {
       // SHOW TABLES needs the directory listing — a CLI concern, so it
       // lives here rather than in the resolver-based statement layer
@@ -63,6 +43,19 @@ object Sql {
       }
     }
     spark.stop()
+  }
+
+  /** Split a script on its `;` tokens. The split rides the ChSql lexer, so
+    * a `;` inside a string literal (escaped quotes included), a backquoted
+    * identifier or a comment does not end a statement. Blank statements
+    * are dropped. */
+  def splitStatements(script: String): Seq[String] = {
+    val cuts = chsql.ChSql.lexPos(script).collect {
+      case (chsql.ChSql.TP(";"), start, _) => start
+    }
+    val bounds = (-1 +: cuts) :+ script.length
+    bounds.zip(bounds.tail).map { case (a, b) => script.substring(a + 1, b).trim }
+      .filter(_.nonEmpty)
   }
 
   private def render(df: org.apache.spark.sql.DataFrame,

@@ -60,19 +60,20 @@ object ChSql {
 
   // ===================== lexer =====================
 
-  private[chsql] sealed trait Tok
-  private[chsql] case class TId(s: String) extends Tok { def up: String = s.toUpperCase }
-  private[chsql] case class TNum(s: String) extends Tok
-  private[chsql] case class TStr(s: String) extends Tok
-  private[chsql] case class TP(s: String) extends Tok
-  private[chsql] case object TEnd extends Tok
+  private[graft] sealed trait Tok
+  private[graft] case class TId(s: String) extends Tok { def up: String = s.toUpperCase }
+  private[graft] case class TNum(s: String) extends Tok
+  private[graft] case class TStr(s: String) extends Tok
+  private[graft] case class TP(s: String) extends Tok
+  private[graft] case object TEnd extends Tok
 
   /** Position-tracking lexer: (token, start, end-exclusive) offsets over
     * the ORIGINAL text. The DDL layer ([[ChDdl]]) splits clause bodies
     * with this instead of re-deriving tokenizer behavior in regex
     * scanners — a string literal containing `) ENGINE =` or a keyword
-    * cannot fool token-level splitting. */
-  private[chsql] def lexPos(input: String): Vector[(Tok, Int, Int)] =
+    * cannot fool token-level splitting; [[graft.Sql]] splits scripts into
+    * statements on its `;` tokens. */
+  private[graft] def lexPos(input: String): Vector[(Tok, Int, Int)] =
     lexImpl(input)
 
   private def lex(input: String): Vector[Tok] = lexImpl(input).map(_._1)

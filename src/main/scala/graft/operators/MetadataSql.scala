@@ -28,7 +28,8 @@ object MetadataSql {
   def register(spark: SparkSession, catalog: DataFrame): Unit = {
     catalog.createOrReplaceTempView("graft_catalog")
 
-    CatalogSource.withKind(catalog).createOrReplaceTempView("graft_objects")
+    val objects = CatalogSource.withKind(catalog)
+    objects.createOrReplaceTempView("graft_objects")
 
     val (deps, errs) = LineagePipeline.dependencies(catalog)
     deps.createOrReplaceTempView("graft_view_dependencies")
@@ -44,16 +45,13 @@ object MetadataSql {
     DependencyGraph.classify(nodes, tables)
       .createOrReplaceTempView("graft_node_classes")
 
-    val allObjects = catalog
-      .filter(!col("database").isin("system", "INFORMATION_SCHEMA", "information_schema"))
+    val userObjects = objects.filter(!col("database").isin(CatalogSource.systemDbs: _*))
+    val allObjects = userObjects
       .select(concat_ws(".", col("database"), col("name")).as("id"))
     DependencyGraph.isolated(allObjects, edges)
       .createOrReplaceTempView("graft_isolated_objects")
 
-    spark.sql(
-      """SELECT engine, kind, count(*) AS n FROM graft_objects
-        |WHERE database NOT IN ('system', 'INFORMATION_SCHEMA', 'information_schema')
-        |GROUP BY engine, kind""".stripMargin)
+    userObjects.groupBy("engine", "kind").agg(count(lit(1)).as("n"))
       .createOrReplaceTempView("graft_objects_by_engine")
 
     DependencyGraph.fanOut(edges).createOrReplaceTempView("graft_fan_out")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.CatalogObject
@@ -10,8 +10,8 @@ import graft.model.CatalogObject
   * fixture (FIXTURES.md §2) used for offline runs and tests.
   *
   * Reference semantics ported (S1/S2/S3, SURVEY.md §2.1):
-  *  - view-kind iff engine is View/MaterializedView/LiveView or contains
-  *    "View" (ch_view_dependencies.py:302-303);
+  *  - view-kind iff the engine contains "View", which covers
+  *    View/MaterializedView/LiveView (ch_view_dependencies.py:302-303);
   *  - system databases excluded (ch_view_dependencies.py:298, 315);
   *  - deterministic ORDER BY database, name (ch_view_dependencies.py:305, 322);
   *  - DDL is a column of the snapshot — the reference's per-view N+1
@@ -27,7 +27,15 @@ object CatalogSource {
     StructField("engine", StringType, nullable = false),
     StructField("create_table_query", StringType, nullable = true)))
 
-  private val systemDbs = Seq("system", "INFORMATION_SCHEMA", "information_schema")
+  /** Databases every analysis leaves out (ch_view_dependencies.py:298, 315). */
+  val systemDbs: Seq[String] = Seq("system", "INFORMATION_SCHEMA", "information_schema")
+
+  /** The one view-kind rule (S1): the engine name contains "View" — View,
+    * MaterializedView, LiveView, WindowView. */
+  val isView: Column = col("engine").contains("View")
+
+  private def userDbs(df: DataFrame, includeSystem: Boolean): DataFrame =
+    if (includeSystem) df else df.filter(!col("database").isin(systemDbs: _*))
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema).parquet(path)
@@ -48,28 +56,18 @@ object CatalogSource {
       properties)
 
   /** S1: view-kind catalog objects, system DBs excluded, ordered. */
-  def views(catalog: DataFrame, includeSystem: Boolean = false): DataFrame = {
-    val base = catalog.filter(
-      col("engine").isin("View", "MaterializedView", "LiveView") ||
-        col("engine").like("%View%"))
-    val filtered = if (includeSystem) base
-      else base.filter(!col("database").isin(systemDbs: _*))
-    filtered.orderBy("database", "name")
-  }
+  def views(catalog: DataFrame, includeSystem: Boolean = false): DataFrame =
+    userDbs(catalog.filter(isView), includeSystem).orderBy("database", "name")
 
   /** S2: non-view catalog objects, system DBs excluded, ordered. */
-  def tables(catalog: DataFrame, includeSystem: Boolean = false): DataFrame = {
-    val base = catalog.filter(!col("engine").like("%View%"))
-    val filtered = if (includeSystem) base
-      else base.filter(!col("database").isin(systemDbs: _*))
-    filtered.orderBy("database", "name")
-  }
+  def tables(catalog: DataFrame, includeSystem: Boolean = false): DataFrame =
+    userDbs(catalog.filter(!isView), includeSystem).orderBy("database", "name")
 
   /** Single-pass alternative: one scan, a derived `kind` column
     * (SURVEY.md §1.1) — preferred at scale over two scans. */
   def withKind(catalog: DataFrame): DataFrame =
     catalog.withColumn("kind",
-      when(col("engine").rlike("View"), "view").otherwise("table"))
+      when(isView, "view").otherwise("table"))
 
   /** Built-in household fixture catalog (FIXTURES.md §2): 5 base tables and
     * 7 views whose DDL yields exactly the lineage documented in the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -27,13 +27,7 @@ object AnnOperatingPoints {
     val dirs = args.drop(1).map { a =>
       val Array(l, p) = a.split("=", 2); (l, p)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .appName("ann-operating-points").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val k = 10
     // the ANN entry points rename idCol to "id" before applying the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Encode-time-flat-in-merges evidence for the byte-level BPE tier
@@ -14,11 +13,7 @@ import org.apache.spark.sql.functions._
 object BpeBytesFlatMain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("bpe-bytes-flat").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val in = getClass.getResourceAsStream("/graft/bpe_merges_bytes_1k.tsv")
     val all =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()

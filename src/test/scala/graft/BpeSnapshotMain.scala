@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the t28/t28b merge-table snapshots: trains
@@ -39,10 +38,7 @@ object BpeSnapshotMain {
     val pairMode = args.length > 3 && args(3) == "pairs"
     val byteMode = args.length > 3 && args(3) == "bytes"
     val byte2Mode = args.length > 3 && args(3) == "bytes2"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .appName("bpe-snapshot").getOrCreate()
+    val spark = Session.local()
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val base = raw.filter(col("lang") === "en")
     val docs =

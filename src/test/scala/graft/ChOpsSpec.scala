@@ -1,19 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ChOps
 
 /** Semantics of the ClickHouse-construct rewrites not already covered by
   * the oracle gate. */
-class ChOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("windowFunnel: depth respects order and window") {

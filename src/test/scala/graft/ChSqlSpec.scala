@@ -1,21 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.chsql.ChSql
 
 /** The CH-SQL text front end: parse + plan checks against hand-built
   * DataFrame equivalents on in-memory data. Cross-engine value checks for
   * the ch* entries live in the DuckDB oracle gate. */
-class ChSqlSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChSqlSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private lazy val orders = Seq(
@@ -1616,5 +1609,13 @@ class ChSqlSpec extends AnyFunSuite {
         |  ngramDistance('clickhouse', 'clickhorse') AS near""".stripMargin)
     val Seq(Seq(same: Double, far: Double, near: Double)) = r
     assert(same == 0.0 && far == 1.0 && near > 0.0 && near < 1.0)
+  }
+
+  test("Sql.splitStatements: a ';' in a string, a backquoted name or a comment does not split") {
+    Seq("SELECT 'a\\';b'", "SELECT 1 AS `a;b`", "SELECT 1 -- x;y").foreach { q =>
+      assert(Sql.splitStatements(q) == Seq(q))
+    }
+    assert(Sql.splitStatements("SELECT 1; SELECT 'x;y' ;\n; SELECT 2;") ==
+      Seq("SELECT 1", "SELECT 'x;y'", "SELECT 2"))
   }
 }

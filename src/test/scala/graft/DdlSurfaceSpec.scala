@@ -1,19 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The DDL/DML statement surface of the reference grammar (SURVEY.md §2.2
   * "DDL / catalog statements") executed through Spark SQL: CREATE DATABASE /
   * TABLE / VIEW, INSERT VALUES + INSERT SELECT (CH insertStmt), CTAS,
   * ALTER ADD COLUMN, DESCRIBE, SHOW, TRUNCATE-equivalent, DROP. */
-class DdlSurfaceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val loc =
     java.nio.file.Files.createTempDirectory("graft_ddl").toString

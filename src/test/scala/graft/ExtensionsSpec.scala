@@ -1,18 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.plans.GraftFunctions
 import graft.functions.PortableHash
 
 /** Native expressions callable from plain Spark SQL after registration. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
 
   test("graft_char_fold matches the Column API value") {
     GraftFunctions.register(spark)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** DuckDB third leg of the DDL/session fuzz gate: run each generated
   * session ([[FuzzDdl]]) through the REAL engine, record the engine's
   * actual final state (and, for engine arms, its `SELECT … FINAL` state),
@@ -15,13 +13,7 @@ object FuzzDdlDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/fuzz_ddl.jsonl"
     val n = if (args.length > 1) args(1).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-      .appName("fuzz-ddl-dump").getOrCreate()
+    val spark = Session.local()
 
     def chRun(s: String): Seq[org.apache.spark.sql.Row] = {
       def resolve(nm: String) =

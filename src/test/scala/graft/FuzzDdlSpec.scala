@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** In-JVM legs of the DDL/session fuzz gate (generator: [[FuzzDdl]]).
   * Per seed: run the generated session through `ChSql.statement`, then
@@ -12,14 +11,7 @@ import org.apache.spark.sql.SparkSession
   *     OPTIMIZE FINAL + plain SELECT ≡ the same collapse.
   * The DuckDB third leg is [[FuzzDdlDump]] + tools/fuzz_ddl_duck_check.py.
   */
-class FuzzDdlSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FuzzDdlSpec extends AnyFunSuite with SparkSuite {
 
   private def chRun(s: String): Seq[org.apache.spark.sql.Row] = {
     def resolve(n: String) =

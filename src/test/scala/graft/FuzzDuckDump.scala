@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.chsql.ChSql
 import java.nio.file.{Files, Paths}
 
@@ -39,13 +38,7 @@ object FuzzDuckDump {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/fuzz_duck.jsonl"
     val nSeeds = if (args.length > 2) args(2).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     spark.read.parquet(s"$sfDir/orders.parquet")
       .createOrReplaceTempView("orders")
     spark.read.parquet(s"$sfDir/customer.parquet")

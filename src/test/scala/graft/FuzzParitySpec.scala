@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.chsql.ChSql
 
 /** Differential fuzz gate (VERDICT r7 §next-1): the fixed ch*-corpus is
@@ -37,15 +36,11 @@ import graft.chsql.ChSql
   * rides a unique ORDER BY key, and every window ORDER BY includes the
   * unique o_orderkey, so both engines' results are value-deterministic.
   */
-class FuzzParitySpec extends AnyFunSuite {
+class FuzzParitySpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  // both twins read the same temp views of this spec's session
+  override protected lazy val spark = {
+    val s = Session.local().newSession()
     s.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .createOrReplaceTempView("orders")
     s.read.parquet("/root/testdata/sf0.001/customer.parquet")

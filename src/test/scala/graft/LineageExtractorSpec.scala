@@ -7,7 +7,7 @@ import graft.model.LineageParseException
 /** DDL corpus for lineage-extractor parity (FIXTURES.md §4), one case per
   * grammar feature affecting table extraction
   * (reference ch_view_dependencies.py:105-258). */
-class LineageExtractorSpec extends AnyFunSuite {
+class LineageExtractorSpec extends AnyFunSuite with SparkSuite {
 
   private def t(ddl: String, db: String = "test"): Seq[String] =
     LineageExtractor.tables(ddl, Some(db))
@@ -231,8 +231,6 @@ class LineageExtractorSpec extends AnyFunSuite {
   test("exact tier: the whole fixture corpus parses exactly (no silent fallback)") {
     // if a grammar gap sneaks in, m9 would silently ride the heuristic —
     // pin that every well-formed corpus view gets the real parse
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val views = graft.sources.CatalogSource.views(
       graft.sources.CatalogSource.fixtureCatalog(spark).toDF()).collect()
     val tiers = views.map { r =>

@@ -1,18 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.MetadataSql
 import graft.sources.CatalogSource
 
 /** SQL-surface tests: the whole analysis runnable as plain Spark SQL. */
-class MetadataSqlSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MetadataSqlSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val registered: Unit =
     MetadataSql.register(spark, CatalogSource.fixtureCatalog(spark).toDF())

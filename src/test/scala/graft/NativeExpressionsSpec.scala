@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.plans.NativeExpressions
 
@@ -9,13 +8,7 @@ import graft.plans.NativeExpressions
   * HOF formulations (and pins the one documented divergence). The HOF
   * forms are the executable spec: any engine can run them, so agreement
   * here is what lets the native forms replace them in the hot path. */
-class NativeExpressionsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NativeExpressionsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("simhash_32 matches the nested-HOF formulation, negative hashes included") {

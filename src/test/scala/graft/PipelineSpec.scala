@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.model.MermaidOptions
 import graft.operators.{DependencyGraph, LineagePipeline}
@@ -10,14 +9,7 @@ import graft.sources.CatalogSource
 /** End-to-end: fixture catalog → lineage UDF → graph ops → Mermaid.
   * Exercises scan→filter→project→UDF→explode→join→sort→collect→render
   * through Catalyst in one flow (SURVEY.md §7 minimum slice). */
-class PipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val catalog = CatalogSource.fixtureCatalog(spark).toDF()
 
@@ -29,6 +21,17 @@ class PipelineSpec extends AnyFunSuite {
       "v_human_profile", "v_pet_ownership"))
     val tbl = CatalogSource.tables(catalog).select("name").collect().map(_.getString(0))
     assert(tbl.toSeq == Seq("car", "household", "household_member", "human", "orphan", "pet"))
+  }
+
+  test("one view rule: withKind says view exactly for the rows views(includeSystem = true) returns") {
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("database", "name").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val kinded = CatalogSource.withKind(catalog)
+    val asViews = ids(kinded.filter(col("kind") === "view"))
+    assert(asViews == ids(CatalogSource.views(catalog, includeSystem = true)))
+    assert(asViews.size == 9 && asViews.contains(("INFORMATION_SCHEMA", "TABLES")))
+    assert(ids(kinded.filter(col("kind") === "table")) ==
+      ids(CatalogSource.tables(catalog, includeSystem = true)))
   }
 
   test("lineage matches FIXTURES.md expected dependency map") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.chsql.ChSql
 
 /** The negative-grammar CONTRACT: every known-unsupported form the engine
@@ -18,14 +18,7 @@ import graft.chsql.ChSql
   * ALTER MODIFY SETTING, MOVE PARTITION TO DISK (alterTableClause
   * fan-out), watchStmt, dictionaryStmt.
   */
-class RefusalMatrixSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
 
   private def resolve(n: String): DataFrame = {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -9,20 +8,14 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * without shuffling, partitioned layouts prune at the source, and scans
   * only read projected columns. (Run on sf0.001 — the assertions are about
   * plan SHAPE, which is scale-invariant.) */
-class ScaleDesignSpec extends AnyFunSuite {
+class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
 
-  // isolated child session: the JVM-wide session may exist already (suite
-  // order), so AQE/broadcast knobs must be set at session level — builder
+  // AQE/broadcast knobs are set on this spec's child session: builder
   // configs would be silently ignored by getOrCreate
-  private lazy val spark = {
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = base.newSession()
+  override protected lazy val spark = {
+    val s = Session.local().newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
     s.conf.set("spark.sql.adaptive.enabled", "false") // plain plan shape for counts

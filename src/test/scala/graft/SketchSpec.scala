@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import graft.functions.{KmvSketch, PortableHash}
@@ -11,14 +10,7 @@ import graft.functions.{KmvSketch, PortableHash}
   * ride the cross-engine hash gate — register layouts are engine-specific —
   * so the portable KMV / hash-sample tiers carry the oracle entries
   * (q30b/q31b) and these tests pin the native sketches' relative error. */
-class SketchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // 20k rows over 5k distinct keys, deterministic

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.StreamingOps
@@ -10,14 +9,7 @@ import graft.streaming.StreamingOps.MaterializedView
 /** Streaming semantics: the MV transform must produce identical results in
   * batch (POPULATE) and streaming (refresh) mode — the consistency contract
   * that makes the MV a materialization rather than an approximation. */
-class StreamingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val schema = StructType(Seq(

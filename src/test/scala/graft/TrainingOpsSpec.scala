@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
 import graft.operators.{ChOps, Dedup, Multimodal, Similarity, TextAnalysis}
@@ -9,14 +8,7 @@ import graft.operators.{ChOps, Dedup, Multimodal, Similarity, TextAnalysis}
 /** Invariant tests for the training-data pipeline operators (the
   * cross-engine value checks live in the DuckDB oracle gate; these pin
   * semantic properties). */
-class TrainingOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private lazy val docs = Seq(

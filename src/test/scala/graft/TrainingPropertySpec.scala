@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextAnalysis}
 
@@ -11,13 +10,7 @@ import graft.operators.{Dedup, TextAnalysis}
   * oracle gate pins exact values on the fixture tables; these pin
   * STRUCTURAL invariants on random corpora (chunk reassembly, quota
   * bounds, sampling determinism and monotonicity, dedup idempotence). */
-class TrainingPropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrainingPropertySpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def forAll[A](g: Gen[A], n: Int = 25)(f: A => Unit): Unit =
