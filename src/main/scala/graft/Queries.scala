@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.operators.{DependencyGraph, LineagePipeline, Mutations}
+import graft.operators.{DependencyGraph, LineagePipeline, Mutations, Similarity}
+import graft.operators.Similarity.{AnnIndex, Cells, Coarse, Every, Exhaustive,
+  Pq, ResidualPq, Sq8, Sqrt}
 import graft.sources.{CatalogSource, TableFunctions}
 
 /** The operator inventory (SURVEY.md §2) as named queries with DuckDB
@@ -49,6 +51,46 @@ object Queries {
   private def tblPar(s: SparkSession, dir: String, name: String,
       by: String): DataFrame =
     graft.plans.ScaleShape.fanOut(tbl(s, dir, name), col(by))
+
+  /** Row count of the embeddings table from its parquet footers — a
+    * metadata read, so an ANN spec's [[Cells]] sizing skips its count job. */
+  private def embeddingsN(s: SparkSession, dir: String): Long =
+    Similarity.parquetRowCount(s, s"$dir/embeddings.parquet")
+
+  private def annTrain(emb: DataFrame, spec: AnnIndex): Similarity.Trained =
+    Similarity.train(emb, "vec_id", "embedding", spec)
+
+  /** ANN top-k of the first ten embeddings (the v* query set). */
+  private def annTopK(emb: DataFrame, ix: Similarity.Trained, nprobe: Int = 1,
+      k: Int = 3): DataFrame =
+    Similarity.search(emb, "vec_id", "embedding", ix, col("id") < 10, k, nprobe)
+
+  /** v15/v17: IVFADC at C = 10 cells and m = 4, both codebooks trained one
+    * Lloyd round; `n` is the corpus size. */
+  private def ivfPqTrainedSpec(n: Long): AnnIndex =
+    AnnIndex(Coarse(Cells(10, Some(n)), iters = 1),
+      Pq(4, math.max(1L, n / 10).toInt, iters = 1))
+
+  /** v19/v19b: every neighbor with cosine ≥ 0.25 in the 2 probed cells of
+    * a C = 10 index trained `iters` k-means rounds. */
+  private def annRange(s: SparkSession, dir: String, iters: Int): DataFrame = {
+    val emb = tbl(s, dir, "embeddings")
+    Similarity.rangeSearch(emb, "vec_id", "embedding", annTrain(emb,
+        AnnIndex(Coarse(Cells(10, Some(embeddingsN(s, dir))), iters))),
+        col("id") < 10, simMin = 0.25, nprobe = 2)
+      .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
+  }
+
+  /** `ix` after a save → load round trip through a fresh temp directory.
+    * Loading is eager, so the directory is deleted before this returns. */
+  private def viaParquet(s: SparkSession, ix: Similarity.Trained,
+      prefix: String): Similarity.Trained = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      Similarity.save(s, dir.toString, ix)
+      Similarity.load(s, dir.toString, ix.spec)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 
   /** The events table carries TIMESTAMP(NANOS) parquet values. Depending
     * on the runtime, the scan surfaces them either as LONG nanos (the
@@ -1379,27 +1421,26 @@ object Queries {
     // factors. The r8 fixed-STRIDE form grew its codebook with the
     // corpus (C = n/50), which BENCH_sf1.json measured at 13.6× for 10×
     // data — quadratic by construction.
-    // knownN from parquet footers (metadata-only, O(files)) — the preset
-    // no longer pays a full count() scan before assignment (r9 verdict
+    // knownN from parquet footers (metadata-only, O(files)) — sizing
+    // pays no full count() scan before assignment (r9 verdict
     // What's-wrong #2)
-    "v3_ivf_topk" -> ((s, dir) =>
-      graft.operators.Similarity.ivfTopKFixedC(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          c = 10, queryPred = col("id") < 10, k = 3,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))),
+    "v3_ivf_topk" -> ((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Cells(10, Some(embeddingsN(s, dir)))))))
+        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
+    }),
 
     // IVF at the operating point: codebook sized C ~ sqrt(n) from a
     // cheap count (capped — a bound codebook is the extreme-scale norm
     // and keeps assignment linear in n). The fixed-centroidEvery v3/v5
     // forms scale their codebook with the corpus, which is quadratic
     // across SFs — BENCH_sf1.json measures the difference.
-    "v7_ivf_auto" -> ((s, dir) =>
-      graft.operators.Similarity.ivfTopKAuto(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          queryPred = col("id") < 10, k = 3)
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))))
+    "v7_ivf_auto" -> ((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      annTopK(emb, annTrain(emb, AnnIndex(Coarse(Sqrt))))
+        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
+    }))
 
   private val oracles4: Map[String, String] = Map(
 
@@ -1519,7 +1560,7 @@ object Queries {
          |ORDER BY query_id, sim DESC, neighbor_id""".stripMargin,
 
     // same algebra as v3 but the centroid stride is computed from the
-    // corpus size (C ~ sqrt(n)), mirroring ivfTopKAuto's every =
+    // corpus size (C ~ sqrt(n)), mirroring the Sqrt sizing's every =
     // max(1, round(sqrt(n)), n/4096)
     "v7_ivf_auto" ->
       s"""WITH vecs AS (SELECT vec_id AS id,
@@ -1681,13 +1722,12 @@ object Queries {
 
     // IVF with multi-cell probing (nprobe=2): recall/latency trade dial,
     // on the same constant-C codebook as v3 (linear assignment)
-    "v5_ivf_nprobe2" -> ((s, dir) =>
-      graft.operators.Similarity.ivfTopKFixedC(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          c = 10, queryPred = col("id") < 10, k = 3, nprobe = 2,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))))
+    "v5_ivf_nprobe2" -> ((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Cells(10, Some(embeddingsN(s, dir)))))), nprobe = 2)
+        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
+    }))
 
   private val oracles5: Map[String, String] = Map(
 
@@ -5747,7 +5787,7 @@ object Queries {
     }.mkString(",\n")
 
   /** ADC distance: left-assoc sum of per-subspace reconstruction
-    * distances, ascending j — the exact grouping of pqAdcCompute. */
+    * distances, ascending j — the exact grouping of pqAdcByQueryCompute. */
   private def pqAdcSql(m: Int, dsub: Int): String =
     (0 until m).map(j => s"(${sqlL2Slice("q.qv", s"k$j.cv_$j", j, dsub)})")
       .mkString(" + ")
@@ -5811,7 +5851,7 @@ object Queries {
     * is the centroid-stride expression: v10 pins the historical literal
     * 50; p2 derives the √n operating point from the corpus count (the
     * same GREATEST(1, round(sqrt(n)), n // cap) rule as semDedupAuto /
-    * ivfTopKAuto on the Spark side). */
+    * the Sqrt ANN sizing on the Spark side). */
   private def semdedupCteBlock(strideSql: String = "50"): String =
     s"""base AS (SELECT vec_id AS id,
        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -5860,8 +5900,7 @@ object Queries {
       // corpus, which blows the uint8 code space past 256 and makes
       // encode cost quadratic across scale factors
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.pqTopK(emb, "vec_id", "embedding",
-          m = 4, centroidEvery = every, queryPred = col("id") < 10, k = 3)
+      annTopK(emb, annTrain(emb, AnnIndex(Coarse(Exhaustive), Pq(4, every))))
         .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
     }),
 
@@ -5877,9 +5916,8 @@ object Queries {
     "v14_pq_trained" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.pqTopKTrained(emb, "vec_id", "embedding",
-          m = 4, centroidEvery = every, iters = 1,
-          queryPred = col("id") < 10, k = 3)
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Exhaustive), Pq(4, every, iters = 1))))
         .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
     }),
 
@@ -5889,9 +5927,8 @@ object Queries {
     "v9_ivfpq_topk" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-          m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
-          queryPred = col("id") < 10, k = 3, nprobe = 2)
+      annTopK(emb, annTrain(emb, AnnIndex(Coarse(Every(every)), Pq(4, every))),
+          nprobe = 2)
         .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
     }),
 
@@ -5968,7 +6005,7 @@ object Queries {
       val all = emb.unionByName(copies)
       // One count feeds semDedupAuto's stride (knownN); the survivor set
       // is materialized ONCE (localCheckpoint) before indexing — without
-      // it, ivfTopKAuto's count + codebook collect + the final ranking
+      // it, the √n index's count + codebook collect + the final ranking
       // each re-evaluated the whole k-means/pairwise lineage (a real
       // pipeline persists the deduped corpus before building the index)
       val kept = graft.operators.Similarity.semDedupAuto(all, "vec_id",
@@ -5976,8 +6013,7 @@ object Queries {
         .filter(col("keep")).select(col("id").as("vec_id"))
       val corpus = all.join(kept, Seq("vec_id"), "left_semi")
         .localCheckpoint(true)
-      graft.operators.Similarity.ivfTopKAuto(corpus, "vec_id", "embedding",
-          queryPred = col("id") < 10, k = 3)
+      annTopK(corpus, annTrain(corpus, AnnIndex(Coarse(Sqrt))))
         .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
     }))
 
@@ -6292,8 +6328,7 @@ object Queries {
       val emb = tbl(s, dir, "embeddings")
       val exact = graft.operators.Similarity.topKNeighbors(
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 3)
-      val approx = graft.operators.Similarity.ivfTopK(emb, "vec_id",
-        "embedding", centroidEvery = 50, queryPred = col("id") < 10, k = 3)
+      val approx = annTopK(emb, annTrain(emb, AnnIndex(Coarse(Every(50)))))
       graft.operators.Similarity.annRecall(exact, approx)
         .orderBy("query_id")
     }),
@@ -6532,13 +6567,12 @@ object Queries {
     // as v5, one deterministic Lloyd round over the stride init — the
     // serving plan (assignment + cell join) is identical to v3/v5, only
     // the codebook VALUES differ. knownN from parquet footers.
-    "v13_ivf_trained" -> ((s, dir) =>
-      graft.operators.Similarity.ivfTopKTrained(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          c = 10, iters = 1, queryPred = col("id") < 10, k = 3, nprobe = 2,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))))
+    "v13_ivf_trained" -> ((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      annTopK(emb, annTrain(emb, AnnIndex(
+          Coarse(Cells(10, Some(embeddingsN(s, dir))), iters = 1))), nprobe = 2)
+        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
+    }))
 
   // ===== round 12: byte-level BPE, trained IVFADC, DSIR resampling =====
   private val batch14: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -6698,36 +6732,25 @@ object Queries {
     // v9's (plan-pinned), only codebook values differ. DuckDB replays
     // coarse k-means (v13 block), per-subspace PQ training (v14 block),
     // the trained-cell probe, and the ADC ranking end-to-end.
-    "v15_ivfpq_trained" -> ((s, dir) =>
-      graft.operators.Similarity.ivfPqTopKTrained(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          m = 4, c = 10, pqIters = 1, coarseIters = 1,
-          queryPred = col("id") < 10, k = 3, nprobe = 2,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), col("adist"), col("neighbor_id"))),
+    "v15_ivfpq_trained" -> ((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      annTopK(emb, annTrain(emb, ivfPqTrainedSpec(embeddingsN(s, dir))),
+          nprobe = 2)
+        .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
+    }),
 
     // PERSISTED IVFADC index (the faiss write_index/read_index
     // workflow): train BOTH codebooks exactly as v15, save them as
-    // parquet, reload, and serve through the byte-identical
-    // ivfPqTopKWith pipeline. Parquet round-trips doubles bit-exactly,
+    // parquet, reload, and serve through the same search pipeline.
+    // Parquet round-trips doubles bit-exactly,
     // so load→serve ≡ train→serve — proven cross-engine by sharing
     // v15's training-replay oracle. At 100 TB this is THE serving
     // shape: codebooks train once on a sample and persist; every query
     // batch serves from the artifact.
     "v17_index_persist" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val n = graft.operators.Similarity.parquetRowCount(
-        s, s"$dir/embeddings.parquet")
-      val every = math.max(1L, n / 10).toInt
-      val cb = graft.operators.Similarity.pqCodebooksTrained(
-        emb, "vec_id", "embedding", m = 4, centroidEvery = every, iters = 1)
-      val (cids, cvs) = graft.operators.Similarity.kmeansCodebook(
-        emb, "vec_id", "embedding", every, iters = 1)
-      val idx = java.nio.file.Files.createTempDirectory("graft_idx").toString
-      graft.operators.Similarity.saveIvfPqIndex(s, idx, cids, cvs, cb)
-      graft.operators.Similarity.ivfPqTopKPersisted(emb, "vec_id",
-          "embedding", idx, queryPred = col("id") < 10, k = 3, nprobe = 2)
+      val ix = annTrain(emb, ivfPqTrainedSpec(embeddingsN(s, dir)))
+      annTopK(emb, viaParquet(s, ix, "graft_idx"), nprobe = 2)
         .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
     }),
 
@@ -6739,10 +6762,9 @@ object Queries {
     "v18_ivfpq_refined" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.ivfPqTopKRefined(emb, "vec_id",
-          "embedding", m = 4, pqCentroidEvery = every,
-          coarseCentroidEvery = every,
-          queryPred = col("id") < 10, k = 3, rerank = 10, nprobe = 2)
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Every(every)), Pq(4, every), rerank = 10)),
+          nprobe = 2)
         .orderBy(col("query_id"), col("dist"), col("neighbor_id"))
     }),
 
@@ -6756,10 +6778,8 @@ object Queries {
     "v16_ivfpq_residual" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.ivfPqTopKResidual(emb, "vec_id",
-          "embedding", m = 4, pqCentroidEvery = every,
-          coarseCentroidEvery = every,
-          queryPred = col("id") < 10, k = 3, nprobe = 2)
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Every(every)), ResidualPq(4, every))), nprobe = 2)
         .orderBy(col("query_id"), col("adist"), col("neighbor_id"))
     }))
 
@@ -7899,13 +7919,7 @@ object Queries {
     // sim >= 0.25 in the query's 2 probed cells — threshold-bounded
     // output, so the plan has NO per-query window/sort at all (cheaper
     // than top-k at scale); same constant-C codebook as v3/v5.
-    "v19_ivf_range" -> ((s, dir) =>
-      graft.operators.Similarity.ivfRangeSearch(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          c = 10, queryPred = col("id") < 10, simMin = 0.25, nprobe = 2,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))))
+    "v19_ivf_range" -> ((s, dir) => annRange(s, dir, iters = 0)))
 
   // ---- shared r12c oracle blocks (one definition each — t31/t32/p8) ----
 
@@ -8222,7 +8236,7 @@ object Queries {
     // IndexIVFPQ with encode_residual + IndexRefineFlat): residual
     // encoding, BOTH codebooks trained (one Lloyd round each), a
     // 10-candidate ADC shortlist, exact re-rank over the raw vectors.
-    // r12's refine tier hardcoded the stride ivfPqTopK shortlist, so
+    // r12's refine tier hardcoded the stride IVFADC shortlist, so
     // this composition — the one the ANN artifact recommends — could
     // not be built; refineExact now wraps any shortlist producer, and
     // the DuckDB oracle replays BOTH trainings + residual encode +
@@ -8230,11 +8244,8 @@ object Queries {
     "v20_refined_residual" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.ivfPqTopKRefinedResidual(emb, "vec_id",
-          "embedding", m = 4, pqCentroidEvery = every,
-          coarseCentroidEvery = every,
-          queryPred = col("id") < 10, k = 3, rerank = 10, nprobe = 2,
-          pqIters = 1, coarseIters = 1)
+      annTopK(emb, annTrain(emb, AnnIndex(Coarse(Every(every), iters = 1),
+          ResidualPq(4, every, iters = 1), rerank = 10)), nprobe = 2)
         .orderBy(col("query_id"), col("dist"), col("neighbor_id"))
     }),
 
@@ -8291,14 +8302,7 @@ object Queries {
     // range operating point). The serving plan is unchanged: row-local
     // assignment, one broadcast cell join, scan-side similarity filter,
     // ZERO windows/shuffles (pinned) — only the codebook VALUES differ.
-    "v19b_ivf_range_trained" -> ((s, dir) =>
-      graft.operators.Similarity.ivfRangeSearch(
-          tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          c = 10, queryPred = col("id") < 10, simMin = 0.25, nprobe = 2,
-          coarseIters = 1,
-          knownN = graft.operators.Similarity.parquetRowCount(
-            s, s"$dir/embeddings.parquet"))
-        .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))))
+    "v19b_ivf_range_trained" -> ((s, dir) => annRange(s, dir, iters = 1)))
 
   private val oracles16: Map[String, String] = Map(
 
@@ -8453,9 +8457,10 @@ object Queries {
   // r14 oracle hardcoded m/cap/nprobe/ln(4.0) as literals)
   private val V22Cells = 40
   private val V22M = 4
-  private val V22Cap = 4
+  private val V22Cap = Similarity.HnswMaxLevelCap
   private val V22NProbe = 2
   private val V22K = 3
+  private val v22Spec = AnnIndex(Coarse(Cells(V22Cells), hnsw = Some(V22M)))
 
   private val batch17: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -8567,10 +8572,7 @@ object Queries {
     // cell join + top-k tail.
     "v22_ivf_hnsw" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val every = math.max(1L, emb.count() / V22Cells).toInt
-      graft.operators.Similarity.ivfHnswTopK(emb, "vec_id", "embedding",
-          centroidEvery = every, m = V22M, queryPred = col("id") < 10,
-          k = V22K, nprobe = V22NProbe, maxLevelCap = V22Cap)
+      annTopK(emb, annTrain(emb, v22Spec), nprobe = V22NProbe, k = V22K)
         .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
     }),
 
@@ -8586,9 +8588,9 @@ object Queries {
     "v21_ivf_sq8" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val every = math.max(1L, emb.count() / 10).toInt
-      graft.operators.Similarity.ivfSq8TopK(emb, "vec_id", "embedding",
-          centroidEvery = every, queryPred = col("id") < 10, k = 3,
-          rerank = 10, nprobe = 2, coarseIters = 1)
+      annTopK(emb, annTrain(emb,
+          AnnIndex(Coarse(Every(every), iters = 1), Sq8, rerank = 10)),
+          nprobe = 2)
         .orderBy(col("query_id"), col("dist"), col("neighbor_id"))
     }))
 
@@ -8683,7 +8685,7 @@ object Queries {
     sb.toString
   }
 
-  /** DuckDB replay of [[graft.operators.Similarity.ivfHnswTopK]],
+  /** DuckDB replay of the v22 HNSW-routed [[Similarity.search]],
     * GENERATED from the tuning constants the Spark query passes
     * (cells/m/cap/nprobe/k — r15, ADVICE: the r14 oracle spelled them
     * as literals, so retuning the query could silently desynchronize
@@ -8918,23 +8920,14 @@ object Queries {
     // only IVFADC had save/load): build the deterministic navigable
     // graph over the stride codebook ONCE, save it as parquet
     // (pos, cid, cv, lvl, per-layer adjacency), reload, and serve the
-    // byte-identical ivfHnswTopKWith pipeline from the artifact.
+    // same search pipeline from the artifact.
     // Parquet round-trips doubles/ints bit-exactly, so load→serve ≡
     // build→serve — proven cross-engine by sharing v22's
     // full-graph-replay oracle (the v17/v15 convention).
     "v22b_hnsw_persist" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val vecs = emb.select(col("vec_id").as("id"),
-        graft.operators.Similarity.asDouble(col("embedding")).as("v"))
-      val every = math.max(1L, emb.count() / V22Cells).toInt
-      val (cids, cvs) = graft.operators.Similarity.strideCodebook(vecs, every)
-      val g = graft.operators.Similarity.buildHnswGraph(cids, cvs, V22M,
-        V22Cap)
-      val idx = java.nio.file.Files.createTempDirectory("graft_hnsw").toString
-      graft.operators.Similarity.saveHnswGraph(s, idx, g)
-      graft.operators.Similarity.ivfHnswTopKPersisted(emb, "vec_id",
-          "embedding", idx, queryPred = col("id") < 10, k = V22K,
-          nprobe = V22NProbe)
+      annTopK(emb, viaParquet(s, annTrain(emb, v22Spec), "graft_hnsw"),
+          nprobe = V22NProbe, k = V22K)
         .orderBy(col("query_id"), desc("sim"), col("neighbor_id"))
     }),
 

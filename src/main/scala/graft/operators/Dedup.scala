@@ -70,19 +70,6 @@ object Dedup {
             (acc, x) => pmod(acc * lit(1000003L) + x, lit(PortableHash.Mod)))))
         .as(Seq("band_id", "band_hash")))
 
-  /** Candidate near-duplicate pairs (id1 < id2) from shared LSH buckets,
-    * deduplicated across bands.
-    *
-    * `maxBucketSize` is the hot-bucket guard for skewed corpora: a bucket
-    * of b docs yields b² candidate rows, so one boilerplate-heavy bucket
-    * (empty strings, license headers) can dominate the whole job at 100 TB.
-    * Buckets above the cap are DROPPED before the self-join (their members
-    * still pair up through their other, more selective bands — the standard
-    * MinHash-LSH skew mitigation). Bucket sizing is a groupBy.count (map-side
-    * partial aggregation — safe on exactly the skewed key) + a broadcast
-    * anti-join against the few oversize keys; a window count would buffer
-    * the whole hot bucket through a sort, defeating the guard. The default
-    * `Int.MaxValue` skips the sizing pass entirely. */
   /** Default hot-bucket cap for [[lshCandidatePairsCapped]]: 1000 members
     * bounds any one bucket's self-join output at ~5·10^5 pair rows. In a
     * healthy MinHash-LSH run a bucket is a handful of genuine near-dups;
@@ -100,6 +87,19 @@ object Dedup {
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
     lshCandidatePairs(bandsDf, idCol, maxBucketSize)
 
+  /** Candidate near-duplicate pairs (id1 < id2) from shared LSH buckets,
+    * deduplicated across bands.
+    *
+    * `maxBucketSize` is the hot-bucket guard for skewed corpora: a bucket
+    * of b docs yields b² candidate rows, so one boilerplate-heavy bucket
+    * (empty strings, license headers) can dominate the whole job at 100 TB.
+    * Buckets above the cap are DROPPED before the self-join (their members
+    * still pair up through their other, more selective bands — the standard
+    * MinHash-LSH skew mitigation). Bucket sizing is a groupBy.count (map-side
+    * partial aggregation — safe on exactly the skewed key) + a broadcast
+    * anti-join against the few oversize keys; a window count would buffer
+    * the whole hot bucket through a sort, defeating the guard. The default
+    * `Int.MaxValue` skips the sizing pass entirely. */
   def lshCandidatePairs(bandsDf: DataFrame, idCol: String,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val kept =

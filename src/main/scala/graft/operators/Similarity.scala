@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions._
   *    (shuffle key = bucket id), turning O(n²) into Σ O(b²) per bucket.
   *    Hyperplane components derive from an arithmetic PRNG so any SQL
   *    engine can re-derive them (no stored random state).
+  *  - [[AnnIndex]] — the IVF family as one spec (coarse quantizer × codec
+  *    × optional exact refine) with [[train]], [[search]],
+  *    [[rangeSearch]], [[save]] and [[load]].
   */
 object Similarity {
 
   /** Row count of a parquet dataset from its FILE FOOTERS only — a
     * metadata read (listing + footer parse per file), never a data scan.
-    * This is how a 100 TB pipeline feeds [[ivfTopKFixedC]]'s `knownN`
+    * This is how a 100 TB pipeline feeds [[Cells]]'s `knownN`
     * when it doesn't already carry the count from an ingest manifest:
     * the footer walk costs O(files), not O(bytes). */
   def parquetRowCount(spark: org.apache.spark.sql.SparkSession,
@@ -139,296 +142,20 @@ object Similarity {
   def hyperplaneBucket(vec: Column, nPlanes: Int): Column =
     graft.plans.NativeExpressions.hyperplane_bucket(vec, nPlanes)
 
-  /** IVF-style ANN: a deterministic coarse quantizer (every `centroidEvery`-th
-    * vector by id is a centroid — in production, k-means centroids) assigns
-    * each vector to its nearest cell; queries search only their own cell
-    * (nprobe=1). Turns brute-force O(n·q) into O(n·C + q·n/C).
-    *
-    * Scale design: cell assignment is ROW-LOCAL — the centroid codebook is
-    * collected once (small by construction: C ≈ √n vectors is the IVF
-    * operating point, and faiss keeps the same codebook driver-side) and
-    * embedded as literal arrays in a codegen'd argmax expression
-    * ([[graft.plans.NativeExpressions.NearestCentroids]]). The corpus is
-    * scanned once with ZERO joins and ZERO shuffles for assignment — the
-    * previous crossJoin×window form expanded n·C rows through an exchange.
-    * The only shuffle left is the final per-query top-k window over
-    * candidate rows. Returns (query_id, neighbor_id, sim) top-k within the
-    * query's probed cells. */
-  /** Coarse-quantizer assignment shared by IVF and IVF-PQ: stride-sampled
-    * codebook (every `centroidEvery`-th id — in production, k-means), cell
-    * ids via the row-local codegen'd argmax. Returns `vecs` with a
-    * `__cells` array column (nprobe nearest cell ids, best first).
-    *
-    * Codebook transport: tiny codebooks ride as plan literals (zero
-    * set-up cost; the per-row centroid-norm recompute is noise at this
-    * size); past `maxLiteralCentroids` the broadcast form wins twice —
-    * centroid norms are precomputed once in the Codebook (the literal
-    * form re-derives them on every scanned row, doubling assignment
-    * flops), and the literals would otherwise bloat EVERY serialized
-    * plan/task by the full codebook (tens of MB at C≈√n for
-    * billion-vector corpora). Either way assignment stays row-local:
-    * zero joins, zero shuffles. */
-  /** Row-local cell assignment against an explicit driver-side codebook
-    * (ids + vectors) — the transport switch is shared by IVF, IVF-PQ and
-    * k-means iterations. */
-  private def assignWith(
-      vecs: DataFrame, cids: Array[Long], cvs: Array[Array[Double]],
-      nprobe: Int, roundTo: Int, maxLiteralCentroids: Int
-  ): DataFrame = {
-    val probed =
-      if (cids.length <= maxLiteralCentroids) {
-        val cidsLit = typedLit(cids.toSeq)
-        val cvsLit = typedLit(cvs.map(_.toSeq).toSeq)
-        graft.plans.NativeExpressions.nearest_centroids(
-          col("v"), cidsLit, cvsLit, nprobe, roundTo)
-      } else {
-        val cb = new graft.plans.Codebook(cids, cvs)
-        val bc = vecs.sparkSession.sparkContext.broadcast(cb)
-        graft.plans.NativeExpressions.nearest_centroids_bc(
-          col("v"), bc, nprobe, roundTo)
-      }
-    vecs.withColumn("__cells", probed)
-  }
-
-  /** Stride-sampled codebook rows: (id, vector) of every
-    * `centroidEvery`-th vector, id-ordered. */
-  private[graft] def strideCodebook(
-      vecs: DataFrame, centroidEvery: Int
-  ): (Array[Long], Array[Array[Double]]) = {
-    val centRows = vecs.filter(pmod(col("id"), lit(centroidEvery)) === 0)
-      .orderBy("id").collect()
-    (centRows.map(_.getLong(0)), centRows.map(_.getSeq[Double](1).toArray))
-  }
-
-  private[graft] def coarseAssigned(
-      vecs: DataFrame, centroidEvery: Int, nprobe: Int,
-      roundTo: Int, maxLiteralCentroids: Int
-  ): DataFrame = {
-    val (cids, cvs) = strideCodebook(vecs, centroidEvery)
-    assignWith(vecs, cids, cvs, nprobe, roundTo, maxLiteralCentroids)
-  }
-
-  def ivfTopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) = strideCodebook(vecs, centroidEvery)
-    ivfTopKWith(corpus, idCol, vecCol, cids, cvs, queryPred, k, roundTo,
-      nprobe, maxLiteralCentroids)
-  }
-
-  /** [[ivfTopK]] serving over a caller-supplied coarse codebook — the
-    * index/serve split: any (ids, vectors) codebook plugs into the same
-    * row-local assignment + cell-join pipeline. All `ivfTopK*` presets
-    * route through here; it is also the natural entry point for a
-    * PERSISTED codebook (train once, serve many — the faiss workflow). */
-  private[graft] def ivfTopKWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val assigned = assignWith(vecs, cids, cvs, nprobe, roundTo,
-      maxLiteralCentroids)
-    // corpus vectors live in exactly their nearest cell (element 1);
-    // queries probe their nprobe nearest cells
-    val cells = assigned
-      .select(col("id"), col("v"), element_at(col("__cells"), 1).as("cell"))
-    val queries = assigned.filter(queryPred)
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(col("__cells")).as("cell"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), col("neighbor_id"))
-    broadcast(queries)
-      .join(cells.select(col("id").as("neighbor_id"), col("v").as("cv"), col("cell")),
-        "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), roundTo).as("sim"))
-      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= k).drop("rn")
-  }
-
-  /** [[ivfTopK]] at the IVF operating point — the preset a scaling
-    * pipeline should reach for. A FIXED `centroidEvery` grows the
-    * codebook linearly with the corpus (C = n/every), which makes
-    * assignment cost n·C = n²/every — quadratic across scale factors
-    * (the r8 sf0.1→sf1 bench measured v3/v5 at ~19-22× for 10× data for
-    * exactly this reason; BENCH_sf1.json). This preset sizes the
-    * codebook from a cheap count: C ≈ √n (the classical IVF operating
-    * point, assignment n^1.5) capped at `maxCentroids` — and a BOUND
-    * codebook is the production norm at extreme scale (faiss-style
-    * fixed-size coarse quantizers), which makes assignment linear in n
-    * once the cap binds. */
-  def ivfTopKAuto(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1, maxCentroids: Int = 4096
-  ): DataFrame = {
-    val n = corpus.count()
-    val bySqrt = math.round(math.sqrt(n.toDouble))
-    val byCap = if (maxCentroids > 0) n / maxCentroids else 0L
-    val every = math.max(1L, math.max(bySqrt, byCap)).toInt
-    ivfTopK(corpus, idCol, vecCol, every, queryPred, k, roundTo, nprobe)
-  }
-
-  /** [[ivfTopK]] with a CONSTANT codebook size: the stride is derived
-    * from a cheap count as n/c, so the coarse quantizer holds ≈`c` cells
-    * at every corpus size — the faiss-style bounded-codebook shape.
-    * Assignment cost is O(c·n): LINEAR in the corpus by construction (vs
-    * quadratic for a fixed stride, whose codebook grows with n, and
-    * n^1.5 for the √n operating point until its cap binds). The trade is
-    * recall: cells average n/c vectors, so each probe scans a constant
-    * FRACTION of the corpus — pick `c` from the recall harness
-    * ([[annRecall]]) like any other operating point.
-    *
-    * `knownN`: pass the corpus row count when the pipeline already has it
-    * (ingest manifests, a prior stage's count, table statistics) — the
-    * stride derivation then costs zero extra jobs. Left at the default
-    * the preset pays one `count()` scan before assignment starts, which
-    * at 100 TB is a full-scan job whose only output is the stride. */
-  def ivfTopKFixedC(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      c: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1, knownN: Long = -1L
-  ): DataFrame = {
-    require(c > 0, s"ivfTopKFixedC: need c > 0 cells, got $c")
-    val n = if (knownN >= 0) knownN else corpus.count()
-    val every = math.max(1L, n / c).toInt
-    ivfTopK(corpus, idCol, vecCol, every, queryPred, k, roundTo, nprobe)
-  }
-
-  /** [[ivfTopK]] with a TRAINED coarse codebook: k-means
-    * ([[kmeansCodebook]], stride init at C ≈ `c` cells, `iters` Lloyd
-    * rounds) replaces the raw stride sample. The ANN operating-point
-    * artifact (ANN_OPERATING_POINTS.json, r10) measured the stride
-    * codebook as the recall CEILING of the fixed-C family — stride cells
-    * follow the id layout, not the data distribution, so raising `c`
-    * bought no recall. Training buys recall at IDENTICAL serving cost:
-    * the trained codebook has the same size, so assignment, probe
-    * fraction, and the candidate join are byte-for-byte the same plan.
-    * Training cost is `iters` × (one row-local assignment scan + one
-    * bounded element-wise mean shuffle) — linear in n at constant C, and
-    * at 100 TB it runs on a SAMPLE anyway (k-means quality saturates far
-    * below full-corpus n; pass the sample as `corpus` and serve the
-    * returned plan, or persist the codebook and call [[ivfTopKWith]]).
-    * `knownN` skips the sizing count — same contract as
-    * [[ivfTopKFixedC]]. */
-  def ivfTopKTrained(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1, knownN: Long = -1L,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(c > 0, s"ivfTopKTrained: need c > 0 cells, got $c")
-    require(iters >= 0, s"ivfTopKTrained: need iters >= 0, got $iters")
-    val n = if (knownN >= 0) knownN else corpus.count()
-    val every = math.max(1L, n / c).toInt
-    val (cids, cvs) = kmeansCodebook(corpus, idCol, vecCol, every, iters,
-      roundTo, maxLiteralCentroids)
-    ivfTopKWith(corpus, idCol, vecCol, cids, cvs, queryPred, k, roundTo,
-      nprobe, maxLiteralCentroids)
-  }
-
-  /** IVF RANGE search — the faiss `range_search` shape: every neighbor
-    * with cosine similarity ≥ `simMin` inside the query's probed cells,
-    * instead of a fixed top-k. The radius query is what dedup-style
-    * consumers actually want ("everything closer than t", not "the 3
-    * closest whatever their distance"), and at scale it is CHEAPER than
-    * top-k: the output is bounded by the threshold, so the plan needs NO
-    * per-query window/sort at all — row-local assignment (same codegen'd
-    * argmax as [[ivfTopK]]), one broadcast-queries cell join, a scan-side
-    * similarity filter. Zero wide operators beyond the candidate join.
-    * Same constant-C codebook contract as [[ivfTopKFixedC]]; `knownN`
-    * skips the sizing count.
-    *
-    * `coarseIters > 0` TRAINS the coarse codebook ([[kmeansCodebook]],
-    * Lloyd rounds over the stride init) exactly the way
-    * [[ivfTopKTrained]] does for top-k (r13 — the r12c cut served a
-    * stride codebook only, which the ANN artifact measured as the range
-    * pair-recall ceiling: stride cells follow the id layout, not the
-    * data). The serving plan is unchanged — same row-local assignment,
-    * same cell join, same zero-window shape — only the codebook VALUES
-    * differ, so any pair-recall lift is pure training quality. */
-  def ivfRangeSearch(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      c: Int, queryPred: Column, simMin: Double,
-      roundTo: Int = 6, nprobe: Int = 1, knownN: Long = -1L,
-      coarseIters: Int = 0,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(c > 0, s"ivfRangeSearch: need c > 0 cells, got $c")
-    require(simMin >= -1.0 && simMin <= 1.0,
-      s"ivfRangeSearch: simMin must be a cosine in [-1, 1], got $simMin")
-    require(coarseIters >= 0,
-      s"ivfRangeSearch: need coarseIters >= 0, got $coarseIters")
-    val n = if (knownN >= 0) knownN else corpus.count()
-    val every = math.max(1L, n / c).toInt
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) =
-      if (coarseIters > 0)
-        kmeansCodebook(corpus, idCol, vecCol, every, coarseIters, roundTo,
-          maxLiteralCentroids)
-      else strideCodebook(vecs, every)
-    ivfRangeSearchWith(corpus, idCol, vecCol, cids, cvs, queryPred, simMin,
-      roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** [[ivfRangeSearch]] serving over a caller-supplied coarse codebook —
-    * the index/serve split (train once, serve many), same convention as
-    * [[ivfTopKWith]]/[[pqTopKWith]]. */
-  private[graft] def ivfRangeSearchWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      queryPred: Column, simMin: Double,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val assigned = assignWith(vecs, cids, cvs, nprobe, roundTo,
-      maxLiteralCentroids)
-    val cells = assigned
-      .select(col("id"), col("v"), element_at(col("__cells"), 1).as("cell"))
-    val queries = assigned.filter(queryPred)
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(col("__cells")).as("cell"))
-    broadcast(queries)
-      .join(cells.select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("cell")), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), roundTo).as("sim"))
-      .filter(col("sim") >= simMin)
-  }
 
   /** Bucketed approximate all-pairs: candidate pairs share a bucket;
     * exact cosine verifies. Returns (id1, id2, sim) with id1 < id2 and
     * sim ≥ threshold.
     *
     * `maxBucketSize` is the hot-bucket guard (same contract as
-    * [[Dedup.lshCandidatePairs]]): a degenerate bucket — zero/near-zero
+    * [[Dedup.lshCandidatePairs]], default cap
+    * [[Dedup.DefaultMaxBucketSize]]): a degenerate bucket — zero/near-zero
     * vectors, boilerplate embeddings that all land on the same sign
     * pattern — yields b² candidate rows from the self-join and can
     * dominate the whole job at 100 TB. Buckets above the cap are DROPPED
     * before the join (bucket sizing is a map-side groupBy.count + a
     * broadcast anti-join against the few oversize keys). The default
     * `Int.MaxValue` skips the sizing pass entirely. */
-  /** [[nearDuplicatesLsh]] with the skew guard ON by default (cap
-    * contract and rationale: [[Dedup.DefaultMaxBucketSize]]) — the
-    * preset a 100 TB pipeline should reach for; the uncapped variant
-    * exists for oracle-exact runs. */
-  def nearDuplicatesLshCapped(
-      df: DataFrame, idCol: String, vecCol: String,
-      nPlanes: Int, threshold: Double, roundTo: Int = 6,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize
-  ): DataFrame =
-    nearDuplicatesLsh(df, idCol, vecCol, nPlanes, threshold, roundTo,
-      maxBucketSize)
-
   def nearDuplicatesLsh(
       df: DataFrame, idCol: String, vecCol: String,
       nPlanes: Int, threshold: Double, roundTo: Int = 6,
@@ -455,25 +182,406 @@ object Similarity {
       .distinct()
   }
 
-  // ---- Product quantization: the 100 TB vector-SCAN path ----
+  // ---- ANN index: one spec, train / search / rangeSearch / save / load ----
   //
-  // IVF prunes which vectors a query touches; PQ compresses what a touched
-  // vector COSTS: each corpus vector is stored as m small codes (m bytes at
-  // C=256) instead of d floats — a 64-dim float corpus shrinks 64×, which is
-  // the difference between a 100 TB corpus and a 1.6 TB code table that fits
-  // executor memory. Scoring is asymmetric distance computation (ADC): the
-  // query precomputes a per-subspace lookup table once, then each corpus row
-  // costs m array reads — memory-bound, not flop-bound. IVF-PQ composes the
-  // two (the faiss IVFADC design): coarse cells prune, ADC ranks the
-  // survivors without ever re-reading raw vectors.
+  // Every index here is a coarse quantizer (which cell a vector lives in)
+  // composed with a codec (how a probed candidate is scored) and an
+  // optional exact refine — the IVF family of faiss, and the
+  // partition-index-plus-per-partition-scorer shape of REPOSE. Training
+  // runs driver-bounded passes before any serving plan exists; serving is
+  // ONE pipeline for every combination:
+  //
+  //  1. row-local coarse assignment (codegen'd argmax over the codebook,
+  //     or the HNSW walk) — zero joins, zero shuffles;
+  //  2. the few queries ride a BROADCAST, joined to the corpus on `cell`
+  //     (corpus rows live in their nearest cell, queries probe nprobe);
+  //  3. self-pairs drop;
+  //  4. a per-codec score column: cosine (Flat), dequantized cosine
+  //     (Sq8), or ADC through the broadcast LUT map (Pq/ResidualPq);
+  //  5. the per-query top-k window — the only shuffle — or, for range
+  //     search, a scan-side similarity filter with no window at all.
+  //
+  // Exhaustive search is the one-cell instance of the same join.
+
+  /** Decimal places of every ANN score and trained centroid — the
+    * precision the SQL oracles replay. */
+  private[graft] val RoundTo = 6
+  /** Coarse codebooks up to this size ride as plan literals; larger ones
+    * as a broadcast (see [[assignWith]]). */
+  private[graft] val MaxLiteralCentroids = 64
+  /** Cap of the √n coarse codebook ([[Sqrt]]): past it the codebook is
+    * constant-size and assignment linear in n (the faiss norm). */
+  private[graft] val MaxCentroids = 4096
+  /** Highest HNSW layer a node can reach ([[buildHnswGraph]]). */
+  private[graft] val HnswMaxLevelCap = 4
+
+  /** Coarse codebook size. A fixed stride grows the codebook with the
+    * corpus (assignment n²/stride — quadratic across scale factors, the
+    * BENCH_sf1.json lesson); [[Cells]] and [[Sqrt]] do not. */
+  sealed trait Sizing
+  /** Every `n`-th vector by id is a centroid. */
+  final case class Every(n: Int) extends Sizing
+  /** ≈`c` cells at every corpus size (stride n/c): assignment O(c·n),
+    * linear. `knownN` is the corpus row count when the pipeline already
+    * has it (ingest manifest, [[parquetRowCount]]); it skips the sizing
+    * `count()` job, which at 100 TB is a full scan. */
+  final case class Cells(c: Int, knownN: Option[Long] = None) extends Sizing
+  /** C ≈ √n, the classical IVF operating point, capped at
+    * [[MaxCentroids]]. */
+  case object Sqrt extends Sizing
+  /** No coarse quantizer: one cell holds the whole corpus. */
+  case object Exhaustive extends Sizing
+
+  /** Coarse quantizer: the stride-sampled codebook, `iters` k-means
+    * rounds over it ([[kmeansCodebook]] — the stride codebook follows the
+    * id layout, not the data, and was the measured recall ceiling), and
+    * optionally an HNSW routing graph of degree `hnsw` over it
+    * ([[buildHnswGraph]]: past a few thousand cells the O(C·d) argmax
+    * dominates; the walk costs O(M·log C·d) and is approximate). */
+  final case class Coarse(sizing: Sizing, iters: Int = 0,
+      hnsw: Option[Int] = None)
+
+  /** How a probed candidate is stored and scored. */
+  sealed trait Codec
+  /** Raw vectors, cosine similarity (`sim`, descending). */
+  case object Flat extends Codec
+  /** int8 scalar codes ([[quantizeInt8]]); queries stay raw and
+    * candidates dequantize on the fly (`sim`). ~8× less bandwidth than
+    * the double pipeline, per-dimension so recall stays near Flat. */
+  case object Sq8 extends Codec
+  /** Product quantization (faiss IVFADC): m sub-codes per vector from
+    * per-subspace codebooks (stride `every`, `iters` Lloyd rounds —
+    * [[pqCodebooksTrained]]); ADC squared L2 (`adist`, ascending). */
+  final case class Pq(m: Int, every: Int, iters: Int = 0) extends Codec
+  /** [[Pq]] over `x − centroid(cell(x))` (Jégou et al. 2011, faiss
+    * `encode_residual`): residuals are tighter, so the same code budget
+    * buys recall; LUTs are per (query, probed cell). */
+  final case class ResidualPq(m: Int, every: Int, iters: Int = 0)
+    extends Codec
+
+  /** An ANN index spec. `rerank > 0` keeps that many candidates per
+    * query and re-ranks them by exact squared L2 ([[refineExact]], the
+    * faiss `IndexRefineFlat` stack; output column `dist`). */
+  final case class AnnIndex(coarse: Coarse, codec: Codec = Flat,
+      rerank: Int = 0)
+
+  /** A trained [[AnnIndex]]: the coarse codebook (empty for
+    * [[Exhaustive]]), the HNSW graph and the PQ codebooks it needs. All
+    * are configuration-sized and live driver-side. */
+  final class Trained private[operators] (val spec: AnnIndex,
+      private[graft] val cids: Array[Long],
+      private[graft] val cvs: Array[Array[Double]],
+      private[graft] val hnsw: Option[graft.plans.HnswGraph],
+      private[graft] val pq: Option[graft.plans.PqCodebooks])
+
+  private def sqrtEvery(n: Long, maxCentroids: Int): Int = {
+    val byCap = if (maxCentroids > 0) n / maxCentroids else 0L
+    math.max(1L, math.max(math.round(math.sqrt(n.toDouble)), byCap)).toInt
+  }
+
+  /** Train `spec` over `corpus`. At 100 TB pass a sample: codebook
+    * quality saturates far below full-corpus n, and the result persists
+    * ([[save]]) to serve many query batches. */
+  def train(corpus: DataFrame, idCol: String, vecCol: String,
+      spec: AnnIndex): Trained = {
+    val AnnIndex(coarse, codec, rerank) = spec
+    require(coarse.iters >= 0, s"train: need iters >= 0, got ${coarse.iters}")
+    require(rerank >= 0, s"train: need rerank >= 0, got $rerank")
+    val every = coarse.sizing match {
+      case Every(n) =>
+        require(n > 0, s"train: need every > 0, got $n"); Some(n)
+      case Cells(c, knownN) =>
+        require(c > 0, s"train: need c > 0 cells, got $c")
+        Some(math.max(1L, knownN.getOrElse(corpus.count()) / c).toInt)
+      case Sqrt => Some(sqrtEvery(corpus.count(), MaxCentroids))
+      case Exhaustive =>
+        require(coarse.iters == 0 && coarse.hnsw.isEmpty &&
+          !codec.isInstanceOf[ResidualPq],
+          s"train: $spec needs a coarse quantizer")
+        None
+    }
+    val (cids, cvs) = every.fold((Array.empty[Long], Array.empty[Array[Double]]))(
+      kmeansCodebook(corpus, idCol, vecCol, _, coarse.iters))
+    val pq = codec match {
+      case Pq(m, e, it) =>
+        Some(pqCodebooksTrained(corpus, idCol, vecCol, m, e, it))
+      case ResidualPq(m, e, it) =>
+        Some(residualPqCodebooks(corpus, idCol, vecCol, cids, cvs, m, e, it))
+      case _ => None
+    }
+    new Trained(spec, cids, cvs, coarse.hnsw.map(buildHnswGraph(cids, cvs, _)),
+      pq)
+  }
+
+  /** Top-k neighbors of the `queryPred` rows (evaluated over columns
+    * `id`, `v`) within their `nprobe` nearest cells: (query_id,
+    * neighbor_id, score), score `sim`, `adist` or — with rerank — `dist`,
+    * ties to the smaller neighbor id. */
+  def search(corpus: DataFrame, idCol: String, vecCol: String,
+      index: Trained, queryPred: Column, k: Int, nprobe: Int = 1): DataFrame =
+    search(corpus, idCol, vecCol, index, queryPred, k, nprobe,
+      MaxLiteralCentroids)
+
+  private[graft] def search(corpus: DataFrame, idCol: String, vecCol: String,
+      index: Trained, queryPred: Column, k: Int, nprobe: Int,
+      maxLiteralCentroids: Int): DataFrame = {
+    val rerank = index.spec.rerank
+    require(rerank == 0 || rerank >= k,
+      s"search: rerank ($rerank) must be 0 (off) or >= k ($k)")
+    val (scored, score) = candidates(corpus, idCol, vecCol, index, queryPred,
+      nprobe, maxLiteralCentroids)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(if (score == "sim") desc(score) else col(score),
+        col("neighbor_id"))
+    val short = scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= (if (rerank > 0) rerank else k)).drop("rn")
+    if (rerank > 0) refineExact(corpus, idCol, vecCol, short, queryPred, k)
+    else short
+  }
+
+  /** Range search (faiss `range_search`): every neighbor with cosine
+    * `sim` ≥ `simMin` in the query's probed cells. The output is bounded
+    * by the threshold, so the plan has no per-query window or sort — one
+    * broadcast cell join and a scan-side filter, cheaper than top-k. */
+  def rangeSearch(corpus: DataFrame, idCol: String, vecCol: String,
+      index: Trained, queryPred: Column, simMin: Double,
+      nprobe: Int = 1): DataFrame = {
+    require(simMin >= -1.0 && simMin <= 1.0,
+      s"rangeSearch: simMin must be a cosine in [-1, 1], got $simMin")
+    require((index.spec.codec == Flat || index.spec.codec == Sq8) &&
+      index.spec.rerank == 0,
+      s"rangeSearch: needs a cosine codec without rerank, got ${index.spec}")
+    candidates(corpus, idCol, vecCol, index, queryPred, nprobe,
+      MaxLiteralCentroids)._1.filter(col("sim") >= simMin)
+  }
+
+  /** The serve core: steps 1–4 of the pipeline above. Returns the scored
+    * (query_id, neighbor_id, score) candidates and the score's name. */
+  private def candidates(corpus: DataFrame, idCol: String, vecCol: String,
+      ix: Trained, queryPred: Column, nprobe: Int,
+      maxLiteralCentroids: Int): (DataFrame, String) = {
+    val spark = corpus.sparkSession
+    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+    val assigned = ix.hnsw match {
+      case Some(g) => vecs.withColumn("__cells",
+        graft.plans.NativeExpressions.hnsw_assign_bc(col("v"),
+          spark.sparkContext.broadcast(g), nprobe, RoundTo))
+      case None if ix.cids.isEmpty =>
+        vecs.withColumn("__cells", array(lit(0L)))
+      case None => assignWith(vecs, ix.cids, ix.cvs, nprobe, RoundTo,
+        maxLiteralCentroids)
+    }
+    // corpus vectors live in exactly their nearest cell (element 1);
+    // queries probe their nprobe nearest
+    val cell = element_at(col("__cells"), 1)
+    def joined(queries: DataFrame, cells: DataFrame, score: Column) =
+      broadcast(queries).join(cells, "cell")
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"), score)
+    ix.spec.codec match {
+      case codec @ (Flat | Sq8) =>
+        val queries = assigned.filter(queryPred).select(col("id").as("query_id"),
+          col("v").as("qv"), explode(col("__cells")).as("cell"))
+        val (stored, nv) =
+          if (codec == Flat) (col("v").as("nv"), col("nv"))
+          else (graft.plans.NativeExpressions.int8_quant(col("v")).as("__q"),
+            dequantizeInt8(col("__q.scale"), col("__q.codes")))
+        val cells = assigned.select(col("id").as("neighbor_id"),
+          cell.as("cell"), stored)
+        (joined(queries, cells, round(cosine(col("qv"), nv), RoundTo).as("sim")),
+          "sim")
+      case codec =>
+        val cb = ix.pq.get
+        val residual = codec.isInstanceOf[ResidualPq]
+        // residual = v − centroid(assigned cell); row-local, codegen'd
+        val target =
+          if (!residual) col("v")
+          else graft.plans.NativeExpressions.residual_bc(col("v"), cell,
+            spark.sparkContext.broadcast(
+              new graft.plans.Codebook(ix.cids, ix.cvs)))
+        // The code table is MATERIALIZED before the candidate join (eager
+        // localCheckpoint — faiss stores the IVFADC index the same way):
+        // left inline, the join's match loop re-evaluated the encode +
+        // assign projection once per CANDIDATE row, turning the O(m) ADC
+        // contract into O(m·C·dsub) — measured 24 s vs 0.9 s on a
+        // 1M-candidate probe at C=256. It stores n·(m+2) small values.
+        val cells = assigned.select(col("id").as("neighbor_id"),
+          cell.as("cell"), graft.plans.NativeExpressions.pq_encode_bc(target,
+            spark.sparkContext.broadcast(cb)).as("codes"))
+          .localCheckpoint(true)
+        // LUT transport: a per-query table is m·C doubles (8 KB at C=256);
+        // as a join COLUMN it was copied into every candidate row (26 s at
+        // 1M candidates where the ADC math costs < 1 s). The tables are
+        // computed driver-side, one per (query, probed cell) — a residual
+        // query differs per cell — and ship ONCE as a broadcast map under
+        // a sequential key that rides the probe list; per-candidate cost
+        // is O(m) + one hash probe. Id-sorted so the broadcast payload is
+        // reproducible across runs.
+        val qRows = assigned.filter(queryPred)
+          .select(col("id"), col("v"), col("__cells")).collect()
+          .sortBy(_.getLong(0))
+        val centById = ix.cids.zip(ix.cvs).toMap
+        val luts = new java.util.HashMap[java.lang.Long, Array[Double]]()
+        val probes = qRows.toSeq.flatMap { r =>
+          val qv = r.getSeq[Double](1).toArray
+          r.getSeq[Long](2).map { c =>
+            val x = if (!residual) qv else {
+              val cv = centById(c); Array.tabulate(qv.length)(i => qv(i) - cv(i))
+            }
+            val key = luts.size.toLong
+            luts.put(key, graft.plans.NativeExpressions.pqLutCompute(
+              org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(x), cb)
+              .toDoubleArray())
+            (r.getLong(0), c, key)
+          }
+        }
+        val bcLuts = spark.sparkContext.broadcast(
+          new graft.plans.PqLutMap(cb.nCentroids, luts))
+        import spark.implicits._
+        (joined(probes.toDF("query_id", "cell", "lut_key"), cells,
+          graft.plans.NativeExpressions.pq_adc_by_query(col("lut_key"),
+            col("codes"), bcLuts, RoundTo).as("adist")), "adist")
+    }
+  }
+
+  // ---- index persistence: train once, serve many across jobs (the faiss
+  // write_index/read_index workflow). Parquet round-trips doubles and
+  // ints bit-exactly, so load→serve ≡ train→serve (v17 and v22b share the
+  // oracles of v15 and v22).
+
+  // The writers fix these layouts; the loaders supply them instead of
+  // paying per-load parquet schema inference (~100 ms/read).
+  private[graft] val indexSchemas: Map[String, org.apache.spark.sql.types.StructType] =
+    Map(
+      "coarse" -> "cid BIGINT, cv ARRAY<DOUBLE>",
+      "pq" -> "j INT, c INT, cv ARRAY<DOUBLE>",
+      "hnsw" -> "pos INT, cid BIGINT, cv ARRAY<DOUBLE>, lvl INT, adj ARRAY<ARRAY<INT>>"
+    ).map { case (k, ddl) => k -> org.apache.spark.sql.types.StructType.fromDDL(ddl) }
+
+  /** Write `index` under `dir`: `coarse` (cid, cv) rows in cid order, or
+    * for an HNSW coarse quantizer `hnsw` (pos, cid, cv, lvl, per-layer
+    * neighbor positions — entry and max level are re-derived on load),
+    * plus `pq` (j, c, cv) rows for a PQ codec. */
+  def save(spark: org.apache.spark.sql.SparkSession, dir: String,
+      index: Trained): Unit = {
+    import spark.implicits._
+    def write(kind: String, df: DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$kind")
+    index.hnsw match {
+      case Some(g) => write("hnsw", g.cids.indices.map { p =>
+        (p, g.cids(p), g.cvs(p).toSeq, g.levels(p), g.adj.map(_(p).toSeq).toSeq)
+      }.toDF("pos", "cid", "cv", "lvl", "adj"))
+      case None if index.cids.nonEmpty => write("coarse",
+        index.cids.zip(index.cvs.map(_.toSeq)).toSeq.toDF("cid", "cv"))
+      case None =>
+    }
+    index.pq.foreach { cb =>
+      write("pq", (for (j <- 0 until cb.m; c <- 0 until cb.nCentroids)
+        yield (j, c, cb.cents(j)(c).toSeq)).toDF("j", "c", "cv"))
+    }
+  }
+
+  /** Read back what [[save]] wrote for `spec`. Eager and driver-bounded
+    * (the artifacts are codebook-sized), so `dir` may be deleted as soon
+    * as this returns. */
+  def load(spark: org.apache.spark.sql.SparkSession, dir: String,
+      spec: AnnIndex): Trained = {
+    def read(kind: String): Array[org.apache.spark.sql.Row] = {
+      val rows = spark.read.schema(indexSchemas(kind)).parquet(s"$dir/$kind")
+        .collect()
+      require(rows.nonEmpty, s"load: empty $kind index at $dir")
+      rows
+    }
+    val hnsw = spec.coarse.hnsw.map { _ =>
+      val rows = read("hnsw").sortBy(_.getInt(0))
+      require(rows.map(_.getInt(0)).toSeq == rows.indices,
+        s"load: non-contiguous HNSW node positions at $dir")
+      val adjs = rows.map(_.getSeq[scala.collection.Seq[Int]](4))
+      require(adjs.forall(_.size == adjs.head.size),
+        s"load: ragged HNSW layer count at $dir")
+      val cids = rows.map(_.getLong(1))
+      val levels = rows.map(_.getInt(3))
+      new graft.plans.HnswGraph(cids, rows.map(_.getSeq[Double](2).toArray),
+        levels, Array.tabulate(adjs.head.size)(l => adjs.map(_(l).toArray)),
+        cids.indices.minBy(i => (-levels(i), cids(i))), levels.max)
+    }
+    val (cids, cvs) = hnsw match {
+      case Some(g) => (g.cids, g.cvs)
+      case None if spec.coarse.sizing == Exhaustive =>
+        (Array.empty[Long], Array.empty[Array[Double]])
+      case None =>
+        val rows = read("coarse").sortBy(_.getLong(0))
+        (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
+    }
+    val pq = spec.codec match {
+      case Flat | Sq8 => None
+      case _ =>
+        val rows = read("pq")
+        val m = rows.map(_.getInt(0)).max + 1
+        val cents = Array.tabulate(m) { j =>
+          rows.filter(_.getInt(0) == j).sortBy(_.getInt(1))
+            .map(_.getSeq[Double](2).toArray)
+        }
+        require(cents.forall(_.length == cents(0).length),
+          s"load: ragged PQ index at $dir")
+        Some(new graft.plans.PqCodebooks(m, cents(0)(0).length, cents))
+    }
+    new Trained(spec, cids, cvs, hnsw, pq)
+  }
+
+  /** Row-local cell assignment against a driver-side codebook: `vecs`
+    * (id, v) gains `__cells`, the nprobe nearest cell ids best first,
+    * from a codegen'd argmax ([[graft.plans.NativeExpressions.NearestCentroids]])
+    * — the corpus is scanned once with zero joins and zero shuffles.
+    *
+    * Codebook transport: up to `maxLiteralCentroids` the codebook rides as
+    * plan literals (zero set-up cost). Past it a broadcast wins twice:
+    * centroid norms are precomputed once in the [[graft.plans.Codebook]]
+    * (the literal form re-derives them on every row), and the literals
+    * would otherwise bloat every serialized plan and task by the full
+    * codebook (tens of MB at C ≈ √n for billion-vector corpora). */
+  private def assignWith(
+      vecs: DataFrame, cids: Array[Long], cvs: Array[Array[Double]],
+      nprobe: Int, roundTo: Int,
+      maxLiteralCentroids: Int = MaxLiteralCentroids
+  ): DataFrame = {
+    val probed =
+      if (cids.length <= maxLiteralCentroids) {
+        val cidsLit = typedLit(cids.toSeq)
+        val cvsLit = typedLit(cvs.map(_.toSeq).toSeq)
+        graft.plans.NativeExpressions.nearest_centroids(
+          col("v"), cidsLit, cvsLit, nprobe, roundTo)
+      } else {
+        val cb = new graft.plans.Codebook(cids, cvs)
+        val bc = vecs.sparkSession.sparkContext.broadcast(cb)
+        graft.plans.NativeExpressions.nearest_centroids_bc(
+          col("v"), bc, nprobe, roundTo)
+      }
+    vecs.withColumn("__cells", probed)
+  }
+
+  /** Stride-sampled codebook rows: (id, vector) of every
+    * `centroidEvery`-th vector, id-ordered. */
+  private def strideCodebook(
+      vecs: DataFrame, centroidEvery: Int
+  ): (Array[Long], Array[Array[Double]]) = {
+    val centRows = vecs.filter(pmod(col("id"), lit(centroidEvery)) === 0)
+      .orderBy("id").collect()
+    (centRows.map(_.getLong(0)), centRows.map(_.getSeq[Double](1).toArray))
+  }
+
+  // ---- training steps (called by train; public for tests and harnesses) ----
 
   /** Build deterministic per-subspace codebooks from every
     * `centroidEvery`-th vector (by id): subspace j's codebook is the
-    * stride sample's j-th slice. In production these come from per-subspace
-    * k-means; the stride sample keeps the transport/scan shape identical
-    * while staying engine-replayable (same contract as [[ivfTopK]]'s
-    * coarse codebook). The codebook is small by construction (C·d doubles)
-    * and ships per-executor as a broadcast. */
+    * stride sample's j-th slice — engine-replayable, the same contract
+    * as the coarse stride codebook. Small by construction (C·d doubles);
+    * ships per-executor as a broadcast.
+    *
+    * PQ compresses what a probed vector COSTS: m small codes instead of
+    * d floats (64× at d=64), scored by asymmetric distance computation —
+    * the query precomputes a per-subspace lookup table once, then each
+    * corpus row costs m array reads. */
   def pqCodebooks(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, centroidEvery: Int, strideOffset: Int = 0
@@ -506,34 +614,17 @@ object Similarity {
         asDouble(col(vecCol)), bc).as("codes"))
   }
 
-  /** Exhaustive ADC top-k: queries precompute their LUT once (row-local on
-    * the broadcast side), the corpus is scanned as codes only — per
-    * (query, row) cost is m lookups. Returns (query_id, neighbor_id,
-    * adist) with adist = PQ-approximated squared L2, rank (adist asc,
-    * neighbor_id) — L2 is the PQ-native metric. */
-  def pqTopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, centroidEvery: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6
-  ): DataFrame =
-    pqTopKWith(corpus, idCol, vecCol,
-      pqCodebooks(corpus, idCol, vecCol, m, centroidEvery), queryPred, k,
-      roundTo)
-
-  /** PQ codebooks TRAINED per subspace — closes the stride ceiling for
-    * the PQ tiers the way [[ivfTopKTrained]] closed it for IVF:
-    * `iters` deterministic Lloyd rounds over the stride init. The
-    * assignment step IS [[pqEncode]] (row-local scan against the
-    * broadcast codebooks — a vector's code is its cell per subspace);
-    * the update is ONE map-combinable (subspace, code, pos) mean
-    * shuffle per round, ≤ C·d rows to the driver (the kmeansCodebook
-    * convention). Empty cells keep their previous centroid; means are
-    * ROUNDED to `roundTo` so a SQL oracle replays the trained codebooks
+  /** PQ codebooks TRAINED per subspace: `iters` deterministic Lloyd
+    * rounds over the stride init ([[pqCodebooks]], which `iters = 0`
+    * returns unchanged). The assignment step IS [[pqEncode]] (a vector's
+    * code is its cell per subspace); the update is ONE map-combinable
+    * (subspace, code, pos) mean shuffle per round, ≤ C·d rows to the
+    * driver. Empty cells keep their previous centroid; means are ROUNDED
+    * to [[RoundTo]] so a SQL oracle replays the trained codebooks
     * bit-for-bit at the compared precision. */
   def pqCodebooksTrained(
       corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, centroidEvery: Int, iters: Int, roundTo: Int = 6,
-      strideOffset: Int = 0
+      m: Int, centroidEvery: Int, iters: Int, strideOffset: Int = 0
   ): graft.plans.PqCodebooks = {
     var cb = pqCodebooks(corpus, idCol, vecCol, m, centroidEvery,
       strideOffset)
@@ -547,7 +638,7 @@ object Similarity {
         .select(col("j"), col("c"),
           posexplode(slice(col("v"), col("j") * dsub + 1, lit(dsub)))
             .as(Seq("pos", "x")))
-        .groupBy("j", "c", "pos").agg(round(avg("x"), roundTo).as("mx"))
+        .groupBy("j", "c", "pos").agg(round(avg("x"), RoundTo).as("mx"))
         .collect() // ≤ m·C·dsub = C·d rows — bounded by configuration
       // the broadcast only serves this round's encode — release it, or
       // a long-lived session leaks one codebook copy per Lloyd round
@@ -564,37 +655,25 @@ object Similarity {
     cb
   }
 
-  /** [[pqTopK]] over [[pqCodebooksTrained]] — identical serving plan
-    * (encode + broadcast-LUT ADC), only the codebook VALUES differ, so
-    * any recall delta at equal serve cost is the training's quality. */
-  def pqTopKTrained(
+  /** The residual codec's training: coarse assignment → row-local
+    * residuals → [[pqCodebooksTrained]] over the residuals. The stride
+    * init starts at OFFSET 1: under a stride coarse codebook the
+    * coarse-centroid rows' residuals are identically zero (their nearest
+    * centroid is themselves), so offset 0 would seed every subspace with
+    * C copies of the zero vector. */
+  private[graft] def residualPqCodebooks(
       corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, centroidEvery: Int, iters: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6
-  ): DataFrame =
-    pqTopKWith(corpus, idCol, vecCol,
-      pqCodebooksTrained(corpus, idCol, vecCol, m, centroidEvery, iters,
-        roundTo), queryPred, k, roundTo)
-
-  private[graft] def pqTopKWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cb: graft.plans.PqCodebooks, queryPred: Column, k: Int,
-      roundTo: Int = 6
-  ): DataFrame = {
-    val bc = corpus.sparkSession.sparkContext.broadcast(cb)
+      cids: Array[Long], cvs: Array[Array[Double]],
+      m: Int, pqCentroidEvery: Int, pqIters: Int
+  ): graft.plans.PqCodebooks = {
     val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val codes = vecs.select(col("id").as("neighbor_id"),
-      graft.plans.NativeExpressions.pq_encode_bc(col("v"), bc).as("codes"))
-    val queries = vecs.filter(queryPred).select(col("id").as("query_id"),
-      graft.plans.NativeExpressions.pq_lut_bc(col("v"), bc).as("lut"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    broadcast(queries).crossJoin(codes)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.NativeExpressions.pq_adc(
-          col("lut"), col("codes"), cb.nCentroids, roundTo).as("adist"))
-      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= k).drop("rn")
+    val bcCoarse = corpus.sparkSession.sparkContext.broadcast(
+      new graft.plans.Codebook(cids, cvs))
+    val resid = assignWith(vecs, cids, cvs, 1, RoundTo).select(col("id"),
+      graft.plans.NativeExpressions.residual_bc(
+        col("v"), element_at(col("__cells"), 1), bcCoarse).as("rv"))
+    pqCodebooksTrained(resid, "id", "rv", m, pqCentroidEvery, pqIters,
+      strideOffset = 1)
   }
 
   // ---- int8 scalar quantization ----
@@ -622,7 +701,9 @@ object Similarity {
         round(col("__q.err"), roundTo).as("err"))
   }
 
-  /** Reconstruction from int8 codes: x̂ = code · scale. */
+  /** Reconstruction from int8 codes: x̂ = code · scale. The scale stays
+    * unrounded (amax/127, a plain double every engine computes the same),
+    * so dequantization replays exactly. */
   def dequantizeInt8(scale: Column, codes: Column): Column =
     transform(codes, c => c.cast("double") * scale)
 
@@ -630,21 +711,23 @@ object Similarity {
 
   /** Lloyd's k-means over the embedding column, fully deterministic and
     * engine-replayable: stride-sampled init (every `centroidEvery`-th
-    * vector), cosine assignment (the same rounded row-local argmax as
-    * IVF), per-cell means ROUNDED to `roundTo` (so any SQL engine's avg
-    * reproduces the next codebook bit-for-bit at the compared precision).
-    * Each of the `iters` update rounds is: one row-local assignment scan +
-    * one element-wise mean (posexplode → groupBy (cell, pos) — map-side
-    * combinable, d rows per vector). Cells that lose all members keep
-    * their previous centroid. The codebook lives driver-side between
-    * rounds (C·d doubles — the faiss convention); at 100 TB the per-round
-    * cost is one scan + one bounded shuffle, and C stays user-capped.
-    * Returns (cell ids, centroid vectors). */
+    * vector — the whole codebook when `iters = 0`), cosine assignment
+    * (the same rounded row-local argmax as IVF), per-cell means ROUNDED
+    * to `roundTo` (so any SQL engine's avg reproduces the next codebook
+    * bit-for-bit at the compared precision). Each of the `iters` update
+    * rounds is: one row-local assignment scan + one element-wise mean
+    * (posexplode → groupBy (cell, pos) — map-side combinable, d rows per
+    * vector). Cells that lose all members keep their previous centroid.
+    * The codebook lives driver-side between rounds (C·d doubles — the
+    * faiss convention); at 100 TB the per-round cost is one scan + one
+    * bounded shuffle, and C stays user-capped. Returns (cell ids,
+    * centroid vectors). */
   def kmeansCodebook(
       corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int, iters: Int, roundTo: Int = 6,
-      maxLiteralCentroids: Int = 64
+      centroidEvery: Int, iters: Int, roundTo: Int = 6
   ): (Array[Long], Array[Array[Double]]) = {
+    val vecs0 = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+    if (iters == 0) return strideCodebook(vecs0, centroidEvery)
     // lazy checkpoint (r15): the (id, v) projection re-derived the
     // upstream embedding expressions on EVERY pass — the stride init
     // plus one assignment scan per iteration, so a pipeline corpus
@@ -653,11 +736,10 @@ object Similarity {
     // every subsequent pass reads the stored doubles. Value-identical:
     // same vectors, same partitioning (row-local projection preserves
     // the scan splits), same per-partition fold order.
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .localCheckpoint(false)
+    val vecs = vecs0.localCheckpoint(false)
     var (cids, cvs) = strideCodebook(vecs, centroidEvery)
     for (_ <- 0 until iters) {
-      val assigned = assignWith(vecs, cids, cvs, 1, roundTo, maxLiteralCentroids)
+      val assigned = assignWith(vecs, cids, cvs, 1, roundTo)
         .select(col("v"), element_at(col("__cells"), 1).as("cell"))
       val means = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -681,17 +763,17 @@ object Similarity {
   def semDedup(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroidEvery: Int, iters: Int, threshold: Double,
-      roundTo: Int = 6, maxLiteralCentroids: Int = 64
+      roundTo: Int = 6
   ): DataFrame = {
     val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val (cids, cvs) = kmeansCodebook(corpus, idCol, vecCol, centroidEvery,
-      iters, roundTo, maxLiteralCentroids)
+      iters, roundTo)
     // lazy checkpoint (r15): `cells` feeds BOTH sides of the within-cell
     // self-join AND the final keep-join — per-branch pushdown gave each
     // its own copy of the assignment scan (3 passes); the checkpoint runs
     // it once and materializes at AQE-sized width. A real pipeline
     // materializes the assignment before the pairwise pass anyway.
-    val cells = assignWith(vecs, cids, cvs, 1, roundTo, maxLiteralCentroids)
+    val cells = assignWith(vecs, cids, cvs, 1, roundTo)
       .select(col("id"), col("v"), element_at(col("__cells"), 1).as("cell"))
       .localCheckpoint(false)
     val l = cells.select(col("cell"), col("id").as("id1"), col("v").as("v1"))
@@ -711,296 +793,29 @@ object Similarity {
     * factors (the v3/v5 lesson), while a FIXED C does the reverse
     * (pairwise cell sizes grow linearly → n²/C pairs). C ≈ √n balances
     * both terms at O(n^1.5·d) — the minimizer — and `maxCentroids` caps
-    * driver/broadcast state exactly like [[ivfTopKAuto]] (beyond the cap
-    * the codebook is constant-size and assignment is linear again).
-    * Pass `knownN` when the pipeline already knows the corpus size to
-    * skip the extra count scan. */
+    * driver/broadcast state exactly like the [[Sqrt]] coarse sizing
+    * (beyond the cap the codebook is constant-size and assignment is
+    * linear again). Pass `knownN` when the pipeline already knows the
+    * corpus size to skip the extra count scan. */
   def semDedupAuto(
       corpus: DataFrame, idCol: String, vecCol: String,
       iters: Int, threshold: Double, roundTo: Int = 6,
-      maxCentroids: Int = 4096, knownN: Long = -1L
+      maxCentroids: Int = MaxCentroids, knownN: Long = -1L
   ): DataFrame = {
     val n = if (knownN >= 0) knownN else corpus.count()
-    val bySqrt = math.round(math.sqrt(n.toDouble))
-    val byCap = if (maxCentroids > 0) n / maxCentroids else 0L
-    val every = math.max(1L, math.max(bySqrt, byCap)).toInt
-    semDedup(corpus, idCol, vecCol, every, iters, threshold, roundTo,
-      maxLiteralCentroids = 64)
+    semDedup(corpus, idCol, vecCol, sqrtEvery(n, maxCentroids), iters,
+      threshold, roundTo)
   }
 
-  /** IVF-PQ (faiss IVFADC): coarse cells prune the candidate set
-    * ([[coarseAssigned]] — row-local argmax, `nprobe` cells per query),
-    * ADC ranks survivors from their codes. The scoring join touches only
-    * probed-cell code rows; raw vectors are read exactly once (to encode
-    * and assign) and never again.
-    *
-    * LUT transport (r10 fix, measured while building the ANN
-    * operating-point artifact): the per-query ADC lookup table is m·C
-    * doubles — 8 KB at C=256 — and the old shape carried it as a COLUMN
-    * of the broadcast query side, so every candidate join OUTPUT row
-    * copied the full table (~8 GB of copying at 1M candidates: 26 s
-    * where the ADC math costs <1 s, and the factor GROWS with the
-    * codebook). The LUTs now ship ONCE as a broadcast map keyed by
-    * query id ([[graft.plans.PqLutMap]]); the join carries only
-    * (query_id, cell) and per-candidate cost is O(m) + a hash probe,
-    * independent of C. Query LUTs are computed driver-side — the query
-    * set is broadcast-small by this entry point's contract. */
-  def ivfPqTopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, pqCentroidEvery: Int, coarseCentroidEvery: Int,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val cb = pqCodebooks(corpus, idCol, vecCol, m, pqCentroidEvery)
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) = strideCodebook(vecs, coarseCentroidEvery)
-    ivfPqTopKWith(corpus, idCol, vecCol, cb, cids, cvs, queryPred, k,
-      roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** IVFADC with BOTH codebooks TRAINED — the fully-faiss-shaped index
-    * this family builds toward: the coarse quantizer is k-means
-    * ([[kmeansCodebook]], `coarseIters` Lloyd rounds over the stride
-    * init at C ≈ `c` cells) and the subspace codebooks are per-subspace
-    * Lloyd ([[pqCodebooksTrained]], `pqIters` rounds). r11 measured each
-    * training ALONE lifting recall at identical serve cost (v13 coarse,
-    * v14 PQ); this composes them. The serving plan is byte-identical to
-    * [[ivfPqTopK]]'s ([[ivfPqTopKWith]] — assignment + materialized code
-    * index + broadcast-LUT ADC join), only the codebook VALUES differ,
-    * so recall deltas are pure training quality. Training cost is
-    * `coarseIters + pqIters` bounded-state passes (each one row-local
-    * assignment scan + one ≤C·d-row mean shuffle) — at 100 TB both run
-    * on a sample and the codebooks persist (train once, serve many).
-    * `knownN` skips the sizing count ([[ivfTopKFixedC]] contract). */
-  def ivfPqTopKTrained(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, c: Int, pqIters: Int, coarseIters: Int,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1, knownN: Long = -1L,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(c > 0, s"ivfPqTopKTrained: need c > 0 cells, got $c")
-    require(pqIters >= 0 && coarseIters >= 0,
-      s"ivfPqTopKTrained: iters must be >= 0, got ($pqIters, $coarseIters)")
-    val n = if (knownN >= 0) knownN else corpus.count()
-    val every = math.max(1L, n / c).toInt
-    val cb = pqCodebooksTrained(corpus, idCol, vecCol, m, every, pqIters,
-      roundTo)
-    val (cids, cvs) = kmeansCodebook(corpus, idCol, vecCol, every,
-      coarseIters, roundTo, maxLiteralCentroids)
-    ivfPqTopKWith(corpus, idCol, vecCol, cb, cids, cvs, queryPred, k,
-      roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** [[ivfPqTopK]] serving over caller-supplied codebooks (coarse ids +
-    * vectors, PQ subspace codebooks) — the index/serve split of
-    * [[ivfTopKWith]]/[[pqTopKWith]] for the composed IVFADC index; the
-    * natural entry point for PERSISTED codebooks. */
-  private[graft] def ivfPqTopKWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cb: graft.plans.PqCodebooks,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val bc = corpus.sparkSession.sparkContext.broadcast(cb)
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val assigned = assignWith(vecs, cids, cvs, nprobe, roundTo,
-      maxLiteralCentroids)
-    // The code table is MATERIALIZED before the candidate join (eager
-    // localCheckpoint — faiss stores the IVFADC index the same way):
-    // left inline, the join's match loop re-evaluated the stream-side
-    // encode+assign projection once per CANDIDATE row, turning the
-    // O(m)-per-candidate ADC contract into O(m·C·dsub) — measured 24 s
-    // vs 0.9 s on a 1M-candidate probe at C=256. The checkpoint costs
-    // one pass over the corpus and stores n·(m+2) small values — the
-    // 64×-compressed index, the artifact a 100 TB pipeline persists
-    // anyway. */
-    val cells = assigned.select(
-      col("id").as("neighbor_id"),
-      element_at(col("__cells"), 1).as("cell"),
-      graft.plans.NativeExpressions.pq_encode_bc(col("v"), bc).as("codes"))
-      .localCheckpoint(true)
-    // query LUTs: driver-computed, broadcast once, probed by query id
-    val qRows = assigned.filter(queryPred)
-      .select(col("id"), col("v"), col("__cells")).collect()
-    val lutMap = new java.util.HashMap[java.lang.Long, Array[Double]]()
-    qRows.foreach { r =>
-      lutMap.put(java.lang.Long.valueOf(r.getLong(0)),
-        graft.plans.NativeExpressions.pqLutCompute(
-          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-            r.getSeq[Double](1).toArray), cb).toDoubleArray())
-    }
-    val bcLuts = corpus.sparkSession.sparkContext.broadcast(
-      new graft.plans.PqLutMap(cb.nCentroids, lutMap))
-    import corpus.sparkSession.implicits._
-    val queries = qRows.toSeq
-      .flatMap(r => r.getSeq[Long](2).map(c => (r.getLong(0), c)))
-      .toDF("query_id", "cell")
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    broadcast(queries).join(cells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.NativeExpressions.pq_adc_by_query(
-          col("query_id"), col("codes"), bcLuts, roundTo).as("adist"))
-      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= k).drop("rn")
-  }
-
-  // ---- index persistence (train once / serve many across JOBS) ----
-  // The serving entry points already split index from serve
-  // (ivfTopKWith / pqTopKWith / ivfPqTopKWith); these close the loop by
-  // making the trained codebooks durable ARTIFACTS — at 100 TB the
-  // codebooks train once (on a sample) and every subsequent batch of
-  // queries serves from the persisted parquet, exactly the faiss
-  // write_index/read_index workflow. Doubles round-trip parquet
-  // bit-exactly, so load→serve is value-identical to train→serve (the
-  // v17 oracle proves it cross-engine by replaying the TRAINING).
-
-  /** Persist a coarse codebook as (cid, cv) parquet rows. Codebook order
-    * is cid-ascending — the same order strideCodebook/kmeansCodebook
-    * produce — so a load reproduces positions exactly. */
-  def saveCoarseCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String, cids: Array[Long], cvs: Array[Array[Double]]): Unit = {
-    import spark.implicits._
-    cids.zip(cvs.map(_.toSeq)).toSeq.toDF("cid", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  // Reader schemas for the persisted-index artifacts (r15, guide §6):
-  // the WRITERS above fix these schemas exactly, so the loaders supply
-  // them instead of paying per-load parquet schema inference (measured
-  // ~100 ms/read on this runtime — pure metadata; the index data is
-  // still read from parquet on every load).
-  private val coarseIdxSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "cid BIGINT, cv ARRAY<DOUBLE>")
-  private val pqIdxSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "j INT, c INT, cv ARRAY<DOUBLE>")
-  private val hnswIdxSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "pos INT, cid BIGINT, cv ARRAY<DOUBLE>, lvl INT, adj ARRAY<ARRAY<INT>>")
-
-  def loadCoarseCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Long], Array[Array[Double]]) = {
-    val rows = spark.read.schema(coarseIdxSchema).parquet(path)
-      .orderBy("cid").collect()
-    require(rows.nonEmpty, s"loadCoarseCodebook: empty index at $path")
-    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
-  }
-
-  /** Persist PQ subspace codebooks as (j, c, cv) parquet rows; m and
-    * dsub are derivable (max j + 1, cv length). */
-  def savePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String, cb: graft.plans.PqCodebooks): Unit = {
-    import spark.implicits._
-    val rows = for (j <- 0 until cb.m; c <- 0 until cb.nCentroids)
-      yield (j, c, cb.cents(j)(c).toSeq)
-    rows.toDF("j", "c", "cv").coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.plans.PqCodebooks = {
-    val rows = spark.read.schema(pqIdxSchema).parquet(path)
-      .orderBy("j", "c").collect()
-    require(rows.nonEmpty, s"loadPqCodebooks: empty index at $path")
-    val m = rows.map(_.getInt(0)).max + 1
-    val cents = Array.tabulate(m) { j =>
-      rows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray)
-    }
-    require(cents.forall(_.length == cents(0).length),
-      s"loadPqCodebooks: ragged index at $path")
-    new graft.plans.PqCodebooks(m, cents(0)(0).length, cents)
-  }
-
-  /** Write a full IVFADC index (coarse + PQ codebooks) under one
-    * directory: `<dir>/coarse`, `<dir>/pq`. */
-  def saveIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      cb: graft.plans.PqCodebooks): Unit = {
-    saveCoarseCodebook(spark, s"$dir/coarse", cids, cvs)
-    savePqCodebooks(spark, s"$dir/pq", cb)
-  }
-
-  /** Serve IVFADC from a persisted index directory — the byte-identical
-    * [[ivfPqTopKWith]] pipeline over loaded codebooks. */
-  def ivfPqTopKPersisted(
-      corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val spark = corpus.sparkSession
-    val (cids, cvs) = loadCoarseCodebook(spark, s"$dir/coarse")
-    val cb = loadPqCodebooks(spark, s"$dir/pq")
-    ivfPqTopKWith(corpus, idCol, vecCol, cb, cids, cvs, queryPred, k,
-      roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** Two-stage serving: IVFADC shortlist → EXACT re-rank — the faiss
-    * `IndexRefineFlat` pattern, the standard production shape for
-    * recall-critical serving. Stage 1 retrieves `rerank` (≥ k)
-    * candidates per query from the 64×-compressed code index (ADC
-    * approximate distances); stage 2 joins ONLY those candidates back
-    * to the raw vectors (the shortlist is queries×rerank rows —
-    * broadcast-small — so the corpus streams through one broadcast
-    * hash join, never shuffles) and re-scores with exact squared L2
-    * (`‖q‖² + ‖n‖² − 2·q·n`, sequential-fold dots, SQL-replayable).
-    * Per-query exact-distance cost: `rerank` vectors instead of the
-    * corpus. */
-  def ivfPqTopKRefined(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, pqCentroidEvery: Int, coarseCentroidEvery: Int,
-      queryPred: Column, k: Int, rerank: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(rerank >= k, s"ivfPqTopKRefined: rerank ($rerank) must be >= k ($k)")
-    refineExact(corpus, idCol, vecCol,
-      ivfPqTopK(corpus, idCol, vecCol, m, pqCentroidEvery,
-        coarseCentroidEvery, queryPred, rerank, roundTo, nprobe,
-        maxLiteralCentroids),
-      queryPred, k, roundTo)
-  }
-
-  /** Refine over the RESIDUAL(+trained) IVFADC — the composition the
-    * ANN operating-point artifact recommends: the shortlist comes from
-    * the index that wins every measured recall cell
-    * ([[ivfPqTopKResidual]] with both trainings on), the exact re-rank
-    * buys back the compression loss at output-bounded cost. The refine
-    * stage is byte-identical to [[ivfPqTopKRefined]]'s
-    * ([[refineExact]]); only the shortlist PRODUCER differs, so recall
-    * deltas between the two tiers are pure shortlist quality. */
-  def ivfPqTopKRefinedResidual(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, pqCentroidEvery: Int, coarseCentroidEvery: Int,
-      queryPred: Column, k: Int, rerank: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      pqIters: Int = 0, coarseIters: Int = 0,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(rerank >= k,
-      s"ivfPqTopKRefinedResidual: rerank ($rerank) must be >= k ($k)")
-    refineExact(corpus, idCol, vecCol,
-      ivfPqTopKResidual(corpus, idCol, vecCol, m, pqCentroidEvery,
-        coarseCentroidEvery, queryPred, rerank, roundTo, nprobe,
-        pqIters, coarseIters, maxLiteralCentroids),
-      queryPred, k, roundTo)
-  }
-
-  /** EXACT re-rank over ANY shortlist producer (r13 — the r12 cut
-    * hardcoded the stride [[ivfPqTopK]] shortlist, so the recommended
-    * "shortlist+refine" stack could not wrap the residual+trained index
-    * that wins every measured recall cell). `shortlist` is any
-    * (query_id, neighbor_id, …) candidate table bounded by
-    * queries × rerank — broadcast-small by contract — so the corpus
-    * streams through one broadcast hash join (never shuffles) and is
-    * re-scored with exact squared L2 (`‖q‖² + ‖n‖² − 2·q·n`,
-    * sequential-fold dots, SQL-replayable). */
+  /** EXACT re-rank of any shortlist producer (the [[AnnIndex]] `rerank`
+    * stage). `shortlist` is a (query_id, neighbor_id, …) candidate table
+    * bounded by queries × rerank — broadcast-small by contract — so the
+    * corpus streams through one broadcast hash join (never shuffles) and
+    * is re-scored with exact squared L2 (`‖q‖² + ‖n‖² − 2·q·n`,
+    * sequential-fold dots, SQL-replayable), top-k by (dist, id). */
   def refineExact(
       corpus: DataFrame, idCol: String, vecCol: String,
-      shortlist: DataFrame, queryPred: Column, k: Int,
-      roundTo: Int = 6
+      shortlist: DataFrame, queryPred: Column, k: Int
   ): DataFrame = {
     val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val cands = broadcast(shortlist.select("query_id", "neighbor_id"))
@@ -1009,7 +824,7 @@ object Similarity {
       .join(broadcast(vecs.filter(queryPred)
         .select(col("id").as("query_id"), col("v").as("qv"))), "query_id")
     val d2 = round(dot(col("qv"), col("qv")) + dot(col("nv"), col("nv")) -
-      lit(2.0) * dot(col("qv"), col("nv")), roundTo)
+      lit(2.0) * dot(col("qv"), col("nv")), RoundTo)
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("dist"), col("neighbor_id"))
     cands.select(col("query_id"), col("neighbor_id"), d2.as("dist"))
@@ -1017,16 +832,14 @@ object Similarity {
       .drop("rn")
   }
 
-  /** Deterministic HNSW routing-graph BUILD over a coarse codebook
-    * (r14, v22 — the faiss `IndexHNSWFlat`-as-coarse-quantizer story:
-    * past a few thousand cells, brute-force O(C·d) per-row assignment
-    * dominates; the graph walk costs O(M·path·d) ≈ O(M·log C·d)).
-    * Fully engine-replayable:
+  /** Deterministic HNSW routing-graph BUILD over a coarse codebook (the
+    * faiss `IndexHNSWFlat`-as-coarse-quantizer story). Fully
+    * engine-replayable:
     *
     *  - levels: the classic geometric assignment made DETERMINISTIC —
     *    u = (charFold(str(cid)) + 1)/(Mod + 1) ∈ (0, 1],
-    *    level = min(⌊−ln(u)/ln(M)⌋, maxLevelCap) (the portable-hash
-    *    Gumbel/mixture trick; any SQL engine recomputes it);
+    *    level = min(⌊−ln(u)/ln(M)⌋, [[HnswMaxLevelCap]]) (the
+    *    portable-hash Gumbel/mixture trick; any SQL engine recomputes it);
     *  - adjacency at layer l: among nodes of level ≥ l, each node's
     *    top-M others by (ROUNDED cosine desc, cid asc) — the "naive"
     *    HNSW neighbor rule (no diversity pruning), chosen because a
@@ -1035,15 +848,14 @@ object Similarity {
     *
     * Build cost is O(C²·d) driver-side over the CODEBOOK (configuration
     * scale, not corpus — the same boundedness contract as
-    * [[kmeansCodebook]]); at 100 TB the graph persists next to the
-    * codebook and serves many query batches. */
+    * [[kmeansCodebook]]). Serving walks it row-locally
+    * ([[graft.plans.NativeExpressions.hnswAssignCompute]]): corpus rows
+    * land in their walk's layer-0 local maximum, queries probe it plus
+    * its nearest layer-0 neighbors. */
   def buildHnswGraph(cids: Array[Long], cvs: Array[Array[Double]],
-      m: Int, maxLevelCap: Int = 4,
-      roundTo: Int = 6): graft.plans.HnswGraph = {
+      m: Int): graft.plans.HnswGraph = {
     require(cids.nonEmpty, "buildHnswGraph: empty codebook")
     require(m > 0, s"buildHnswGraph: need m > 0, got $m")
-    require(maxLevelCap >= 0,
-      s"buildHnswGraph: need maxLevelCap >= 0, got $maxLevelCap")
     val n = cids.length
     // -ln(u) / ln(M) as a DIVISION, operation-identical to the SQL
     // oracle's floor(-ln(u) / ln(M)) — a precomputed reciprocal
@@ -1056,7 +868,7 @@ object Similarity {
         graft.functions.PortableHash.Mult, graft.functions.PortableHash.Mod)
       val u = (h + 1).toDouble /
         (graft.functions.PortableHash.Mod + 1).toDouble
-      math.min(math.floor(-math.log(u) / lnM).toInt, maxLevelCap)
+      math.min(math.floor(-math.log(u) / lnM).toInt, HnswMaxLevelCap)
     }
     val norms = cvs.map(v => math.sqrt(v.map(x => x * x).sum))
     def sim(i: Int, j: Int): Double = {
@@ -1065,10 +877,10 @@ object Similarity {
       while (k < a.length) { dp += a(k) * b(k); k += 1 }
       val denom = norms(i) * norms(j)
       graft.plans.NativeExpressions.roundHalfUp(
-        if (denom == 0) 0.0 else dp / denom, roundTo)
+        if (denom == 0) 0.0 else dp / denom, RoundTo)
     }
     val maxLevel = levels.max
-    val adj = Array.tabulate(maxLevelCap + 1) { l =>
+    val adj = Array.tabulate(HnswMaxLevelCap + 1) { l =>
       val members = (0 until n).filter(levels(_) >= l)
       Array.tabulate(n) { i =>
         if (levels(i) < l) Array.empty[Int]
@@ -1078,341 +890,5 @@ object Similarity {
     }
     val entry = (0 until n).minBy(i => (-levels(i), cids(i)))
     new graft.plans.HnswGraph(cids, cvs, levels, adj, entry, maxLevel)
-  }
-
-  /** IVF top-k served through HNSW-routed assignment (r14, v22): the
-    * [[ivfTopKWith]] pipeline with the per-row brute-force centroid
-    * argmax replaced by the greedy graph walk
-    * ([[graft.plans.NativeExpressions.hnswAssignCompute]]) — corpus
-    * rows land in their walk's layer-0 local maximum, queries probe it
-    * plus its nearest layer-0 neighbors (nprobe total). Assignment is
-    * APPROXIMATE on both sides (the honest HNSW trade: recall bounded
-    * by the walk, measured in the ANN artifact), row-local, zero
-    * joins/shuffles; everything downstream is byte-identical to the
-    * IVF serve. */
-  def ivfHnswTopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int, m: Int, queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1, maxLevelCap: Int = 4
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) = strideCodebook(vecs, centroidEvery)
-    val graph = buildHnswGraph(cids, cvs, m, maxLevelCap, roundTo)
-    ivfHnswTopKWith(corpus, idCol, vecCol, graph, queryPred, k, roundTo,
-      nprobe)
-  }
-
-  /** [[ivfHnswTopK]] serving over a caller-supplied (persisted) graph —
-    * the index/serve split. */
-  private[graft] def ivfHnswTopKWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      graph: graft.plans.HnswGraph, queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val bc = corpus.sparkSession.sparkContext.broadcast(graph)
-    val assigned = vecs.withColumn("__cells",
-      graft.plans.NativeExpressions.hnsw_assign_bc(col("v"), bc, nprobe,
-        roundTo))
-    val cells = assigned
-      .select(col("id"), col("v"), element_at(col("__cells"), 1).as("cell"))
-    val queries = assigned.filter(queryPred)
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(col("__cells")).as("cell"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), col("neighbor_id"))
-    broadcast(queries)
-      .join(cells.select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("cell")), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), roundTo).as("sim"))
-      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= k)
-      .drop("rn")
-  }
-
-  /** Persist an HNSW routing graph as parquet rows
-    * (pos, cid, cv, lvl, adj) — adj is the per-LAYER neighbor-position
-    * lists, layers 0..maxLevelCap (r15, v22b: the doc has promised "at
-    * 100 TB the graph persists next to the codebook" since r14; this
-    * is the save half — the [[saveIvfPqIndex]] convention). Parquet
-    * round-trips doubles and ints bit-exactly, so load→serve ≡
-    * build→serve (pinned; v22b shares v22's oracle the way v17 shares
-    * v15's). `entry`/`maxLevel` are NOT stored: both are pure functions
-    * of (levels, cids) — re-derived on load exactly as
-    * [[buildHnswGraph]] derives them. */
-  def saveHnswGraph(spark: org.apache.spark.sql.SparkSession,
-      path: String, g: graft.plans.HnswGraph): Unit = {
-    import spark.implicits._
-    g.cids.indices.map { p =>
-      (p, g.cids(p), g.cvs(p).toSeq, g.levels(p),
-        g.adj.map(_(p).toSeq).toSeq)
-    }.toDF("pos", "cid", "cv", "lvl", "adj")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a [[saveHnswGraph]] artifact. Driver-bounded by construction:
-    * the graph is CODEBOOK-sized (C nodes × ≤(cap+1)·M neighbor ids),
-    * configuration scale, the same contract as [[loadCoarseCodebook]]. */
-  def loadHnswGraph(spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.plans.HnswGraph = {
-    val rows = spark.read.schema(hnswIdxSchema).parquet(path)
-      .select("pos", "cid", "cv", "lvl", "adj").collect()
-      .sortBy(_.getInt(0))
-    require(rows.nonEmpty, s"loadHnswGraph: empty artifact at $path")
-    require(rows.map(_.getInt(0)).toSeq == rows.indices.toSeq,
-      s"loadHnswGraph: non-contiguous node positions at $path")
-    val cids = rows.map(_.getLong(1))
-    val cvs = rows.map(_.getSeq[Double](2).toArray)
-    val levels = rows.map(_.getInt(3))
-    val layerCount = rows.head.getSeq[scala.collection.Seq[Int]](4).size
-    require(rows.forall(_.getSeq[scala.collection.Seq[Int]](4).size ==
-      layerCount), s"loadHnswGraph: ragged layer count at $path")
-    val adj = Array.tabulate(layerCount) { l =>
-      rows.map(_.getSeq[scala.collection.Seq[Int]](4)(l).toArray)
-    }
-    val entry = cids.indices.minBy(i => (-levels(i), cids(i)))
-    new graft.plans.HnswGraph(cids, cvs, levels, adj, entry, levels.max)
-  }
-
-  /** [[ivfHnswTopK]] over a PERSISTED graph — build once
-    * ([[buildHnswGraph]] + [[saveHnswGraph]]), serve every batch from
-    * the artifact through the byte-identical [[ivfHnswTopKWith]]
-    * pipeline (the v17 index/serve split). */
-  def ivfHnswTopKPersisted(
-      corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      queryPred: Column, k: Int, roundTo: Int = 6, nprobe: Int = 1
-  ): DataFrame = {
-    val g = loadHnswGraph(corpus.sparkSession, dir)
-    ivfHnswTopKWith(corpus, idCol, vecCol, g, queryPred, k, roundTo,
-      nprobe)
-  }
-
-  /** IVF-SQ8 (r14) — the faiss `IndexIVFScalarQuantizer(QT_8bit)`
-    * analog, the middle memory tier between raw IVF (8 B/dim here) and
-    * IVFADC (m bytes/vector): probed cells scan INT8 codes. The index
-    * at rest per vector is (cell, scale, d×int8) — ~8× less
-    * memory-bandwidth than the double pipeline (4× vs float32), with
-    * far better recall than PQ at the same nprobe because quantization
-    * is per-DIMENSION, not per-subspace-centroid.
-    *
-    *  - build: coarse assignment (stride or, with `coarseIters > 0`,
-    *    k-means-trained — same [[kmeansCodebook]] switch as every IVF
-    *    tier) + the [[quantizeInt8]] native O(d) pass; both row-local.
-    *  - serve: queries stay RAW (the faiss convention — only the
-    *    corpus side pays the compression); probed-cell candidates are
-    *    dequantized on the fly (code·scale, row-local inside the join
-    *    projection) and cosine-scored. Plan shape = [[ivfTopKWith]]
-    *    exactly: one broadcast of the query side, zero shuffles before
-    *    the per-query top-k window.
-    *  - `rerank > 0` composes [[refineExact]] over the int8 shortlist
-    *    (the faiss SQ-then-refine stack): exact L2 over raw vectors at
-    *    output-bounded cost buys back the quantization loss.
-    *
-    * Scale: the per-vector scale stays UNROUNDED (amax/127 — a plain
-    * double both engines compute identically), so dequantization is
-    * exactly replayable. */
-  def ivfSq8TopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      centroidEvery: Int, queryPred: Column, k: Int,
-      rerank: Int = 0, roundTo: Int = 6, nprobe: Int = 1,
-      coarseIters: Int = 0, maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) =
-      if (coarseIters > 0)
-        kmeansCodebook(corpus, idCol, vecCol, centroidEvery, coarseIters,
-          roundTo, maxLiteralCentroids)
-      else strideCodebook(vecs, centroidEvery)
-    ivfSq8TopKWith(corpus, idCol, vecCol, cids, cvs, queryPred, k, rerank,
-      roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** [[ivfSq8TopK]] serving over a caller-supplied coarse codebook (the
-    * index/serve split, [[ivfTopKWith]] convention). */
-  private[graft] def ivfSq8TopKWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      queryPred: Column, k: Int,
-      rerank: Int = 0, roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    require(rerank == 0 || rerank >= k,
-      s"ivfSq8TopK: rerank ($rerank) must be 0 (off) or >= k ($k)")
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val assigned = assignWith(vecs, cids, cvs, nprobe, roundTo,
-      maxLiteralCentroids)
-    val cells = assigned
-      .select(col("id").as("neighbor_id"),
-        element_at(col("__cells"), 1).as("cell"),
-        graft.plans.NativeExpressions.int8_quant(col("v")).as("__q"))
-      .select(col("neighbor_id"), col("cell"),
-        col("__q.scale").as("nscale"), col("__q.codes").as("ncodes"))
-    val queries = assigned.filter(queryPred)
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        explode(col("__cells")).as("cell"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), col("neighbor_id"))
-    val shortK = if (rerank > 0) rerank else k
-    val short = broadcast(queries).join(cells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"),
-          dequantizeInt8(col("nscale"), col("ncodes"))), roundTo).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= shortK).drop("rn")
-    if (rerank > 0)
-      refineExact(corpus, idCol, vecCol, short, queryPred, k, roundTo)
-    else short
-  }
-
-  /** RESIDUAL IVFADC — the actual Jégou et al. (2011) formulation (the
-    * faiss `IndexIVFPQ` default, `encode_residual=true`): the fine
-    * quantizer encodes `x − centroid(cell(x))` instead of the raw
-    * vector. Residuals concentrate around the origin, so the same PQ
-    * budget (m × C centroids) covers a far tighter distribution — the
-    * standard recall lift over raw-vector IVFPQ at identical serve
-    * cost. What changes vs [[ivfPqTopK]]:
-    *
-    *  - corpus side: one extra ROW-LOCAL O(d) subtraction before the
-    *    encode ([[graft.plans.NativeExpressions.ResidualBC]], broadcast
-    *    coarse codebook) — zero new joins/shuffles; the persisted code
-    *    index is the same n·(m+2) small values;
-    *  - query side: the ADC LUT is PER (query, probed cell) — the
-    *    query's residual differs per cell — so the broadcast LUT map
-    *    holds queries × nprobe tables (m·C doubles each) keyed by a
-    *    driver-assigned (query, cell) key that rides the broadcast
-    *    probe list through the join. Per-candidate cost is unchanged:
-    *    O(m) + one hash probe.
-    *
-    * `pqIters > 0` trains the subspace codebooks on the RESIDUALS
-    * ([[pqCodebooksTrained]] over the residual column); `coarseIters
-    * > 0` trains the coarse quantizer ([[kmeansCodebook]]) first — both
-    * trainings compose exactly like [[ivfPqTopKTrained]]. At 100 TB the
-    * codebooks train on a sample and persist; serving is the same
-    * assignment scan + materialized code index + broadcast-LUT join as
-    * every IVFADC tier here. */
-  def ivfPqTopKResidual(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, pqCentroidEvery: Int, coarseCentroidEvery: Int,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      pqIters: Int = 0, coarseIters: Int = 0,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (cids, cvs) =
-      if (coarseIters > 0)
-        kmeansCodebook(corpus, idCol, vecCol, coarseCentroidEvery,
-          coarseIters, roundTo, maxLiteralCentroids)
-      else strideCodebook(vecs, coarseCentroidEvery)
-    val cb = residualPqCodebooks(corpus, idCol, vecCol, cids, cvs, m,
-      pqCentroidEvery, pqIters, roundTo, maxLiteralCentroids)
-    ivfPqTopKResidualWith(corpus, idCol, vecCol, cids, cvs, cb, queryPred,
-      k, roundTo, nprobe, maxLiteralCentroids)
-  }
-
-  /** The residual tier's TRAINING half (r14 index/serve split): coarse
-    * assignment → row-local residuals → PQ codebooks over the residuals
-    * (stride init at offset 1, or `pqIters` Lloyd rounds). Exposed so a
-    * serving artifact can train ONCE and time serving separately — the
-    * same contract [[kmeansCodebook]]/[[pqCodebooksTrained]] give the
-    * non-residual tiers. */
-  private[graft] def residualPqCodebooks(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      m: Int, pqCentroidEvery: Int, pqIters: Int = 0,
-      roundTo: Int = 6, maxLiteralCentroids: Int = 64
-  ): graft.plans.PqCodebooks = {
-    val spark = corpus.sparkSession
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val bcCoarse = spark.sparkContext.broadcast(
-      new graft.plans.Codebook(cids, cvs))
-    val assigned = assignWith(vecs, cids, cvs, 1, roundTo,
-      maxLiteralCentroids)
-    val resid = assigned.withColumn("rv",
-      graft.plans.NativeExpressions.residual_bc(
-        col("v"), element_at(col("__cells"), 1), bcCoarse))
-    // PQ init strides at OFFSET 1: under a stride coarse codebook the
-    // coarse-centroid rows' residuals are identically ZERO (their
-    // nearest centroid is themselves), so offset-0 init would seed
-    // every subspace with C copies of the zero vector
-    if (pqIters > 0)
-      pqCodebooksTrained(resid.select(col("id"), col("rv")), "id", "rv",
-        m, pqCentroidEvery, pqIters, roundTo, strideOffset = 1)
-    else
-      pqCodebooks(resid.select(col("id"), col("rv")), "id", "rv",
-        m, pqCentroidEvery, strideOffset = 1)
-  }
-
-  /** [[ivfPqTopKResidual]] serving over caller-supplied codebooks (the
-    * r14 index/serve split — residual twin of [[ivfPqTopKWith]]): coarse
-    * assignment, residual encode, materialized code index, per-(query,
-    * probed-cell) residual LUTs, broadcast ADC join. */
-  private[graft] def ivfPqTopKResidualWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cids: Array[Long], cvs: Array[Array[Double]],
-      cb: graft.plans.PqCodebooks,
-      queryPred: Column, k: Int,
-      roundTo: Int = 6, nprobe: Int = 1,
-      maxLiteralCentroids: Int = 64
-  ): DataFrame = {
-    val spark = corpus.sparkSession
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val bcCoarse = spark.sparkContext.broadcast(
-      new graft.plans.Codebook(cids, cvs))
-    val assigned = assignWith(vecs, cids, cvs, nprobe, roundTo,
-      maxLiteralCentroids)
-    // residual = v − centroid(assigned cell); row-local, codegen'd
-    val resid = assigned.withColumn("rv",
-      graft.plans.NativeExpressions.residual_bc(
-        col("v"), element_at(col("__cells"), 1), bcCoarse))
-    val bcCb = spark.sparkContext.broadcast(cb)
-    // materialized code index: the ivfPqTopKWith contract (one pass,
-    // n·(m+2) small values — the persisted artifact)
-    val cells = resid.select(
-      col("id").as("neighbor_id"),
-      element_at(col("__cells"), 1).as("cell"),
-      graft.plans.NativeExpressions.pq_encode_bc(col("rv"), bcCb).as("codes"))
-      .localCheckpoint(true)
-    // per-(query, probed cell) LUTs: driver-computed over the query's
-    // residual vs THAT cell, broadcast once, keyed by a driver-assigned
-    // sequential key carried on the broadcast probe list
-    // id-sorted so the sequential lut_key assignment is REPRODUCIBLE
-    // across runs (collect() order is partition-layout-dependent);
-    // results never depended on it — keys and probe rows are built
-    // together — but deterministic broadcast payloads are free here
-    val qRows = assigned.filter(queryPred)
-      .select(col("id"), col("v"), col("__cells")).collect()
-      .sortBy(_.getLong(0))
-    val centById = cids.zip(cvs).toMap
-    val lutMap = new java.util.HashMap[java.lang.Long, Array[Double]]()
-    val probeRows = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      r.getSeq[Long](2).map { cell =>
-        val cv = centById(cell)
-        val qres = Array.tabulate(qv.length)(i => qv(i) - cv(i))
-        val key = lutMap.size.toLong
-        lutMap.put(java.lang.Long.valueOf(key),
-          graft.plans.NativeExpressions.pqLutCompute(
-            org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(qres),
-            cb).toDoubleArray())
-        (qid, cell, key)
-      }
-    }.toSeq
-    val bcLuts = spark.sparkContext.broadcast(
-      new graft.plans.PqLutMap(cb.nCentroids, lutMap))
-    import spark.implicits._
-    val queries = probeRows.toDF("query_id", "cell", "lut_key")
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    broadcast(queries).join(cells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.NativeExpressions.pq_adc_by_query(
-          col("lut_key"), col("codes"), bcLuts, roundTo).as("adist"))
-      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= k).drop("rn")
   }
 }

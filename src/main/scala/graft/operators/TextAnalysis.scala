@@ -1686,7 +1686,7 @@ object TextAnalysis {
 
   /** Persist trained linear-model weights (t33's single model, t34's
     * one-vs-rest matrix) as parquet rows (model, bucket, weight) —
-    * the [[graft.operators.Similarity.saveCoarseCodebook]] convention:
+    * the [[graft.operators.Similarity.save]] convention:
     * parquet round-trips doubles bit-exactly, so load→serve ≡
     * train→serve (pinned). At 100 TB this is THE serving shape: train
     * once on a bounded seed, persist, serve every batch from the

@@ -1706,7 +1706,7 @@ object NativeExpressions {
   /** ADC lookup table for one query vector: flat array of m·C squared L2
     * distances, entry j·C + c = dist(query slice j, centroid c of
     * subspace j). Computed ONCE per query (O(C·d)); scoring a corpus row
-    * then costs m array reads ([[pqAdcCompute]]) instead of d flops —
+    * then costs m array reads ([[pqAdcByQueryCompute]]) instead of d flops —
     * the asymmetric-distance-computation trade that makes PQ scans
     * memory-bound rather than flop-bound at scale. */
   def pqLutCompute(vec: ArrayData, cb: PqCodebooks): ArrayData = {
@@ -1734,21 +1734,6 @@ object NativeExpressions {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
-  /** ADC score: Σ_j lut[j·C + code_j] (ascending j — same grouping as a
-    * per-subspace left-assoc sum, so a SQL twin summing per-subspace
-    * reconstruction distances in order reproduces the exact double),
-    * rounded to `roundTo`. */
-  def pqAdcCompute(lut: ArrayData, codes: ArrayData, c: Int, roundTo: Int): Double = {
-    val m = codes.numElements()
-    var s = 0.0
-    var j = 0
-    while (j < m) {
-      s += lut.getDouble(j * c + codes.getInt(j))
-      j += 1
-    }
-    roundHalfUp(s, roundTo)
-  }
-
   /** PQ encode with a broadcast codebook (same transport rationale as
     * [[NearestCentroidsBC]]: the codebook ships once per executor, never
     * per-plan/per-task). */
@@ -1771,43 +1756,12 @@ object NativeExpressions {
       copy(child = newChild)
   }
 
-  case class PqLutBC(child: Expression,
-      codebooks: org.apache.spark.broadcast.Broadcast[PqCodebooks])
-      extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-      DoubleType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override protected def nullSafeEval(input: Any): Any =
-      pqLutCompute(input.asInstanceOf[ArrayData], codebooks.value)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("pqCodebooks", codebooks,
-        classOf[org.apache.spark.broadcast.Broadcast[PqCodebooks]].getName)
-      defineCodeGen(ctx, ev, c =>
-        s"graft.plans.NativeExpressions.pqLutCompute(" +
-          s"$c, (graft.plans.PqCodebooks) $bcRef.value())")
-    }
-    override protected def withNewChildInternal(newChild: Expression): PqLutBC =
-      copy(child = newChild)
-  }
-
-  case class PqAdc(left: Expression, right: Expression, c: Int, roundTo: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
-    override protected def nullSafeEval(lut: Any, codes: Any): Any =
-      pqAdcCompute(lut.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], c, roundTo)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (l, r) =>
-        s"graft.plans.NativeExpressions.pqAdcCompute($l, $r, $c, $roundTo)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): PqAdc =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** ADC via the broadcast query→LUT map: same sum, same rounding as
-    * [[pqAdcCompute]] — only the TRANSPORT differs (the LUT is probed
-    * from the broadcast by query id instead of riding the join as an
-    * 8 KB column copied into every candidate row). */
+  /** ADC score via the broadcast key→LUT map: Σ_j lut[j·C + code_j]
+    * (ascending j — same grouping as a per-subspace left-assoc sum, so a
+    * SQL twin summing per-subspace reconstruction distances in order
+    * reproduces the exact double), rounded to `roundTo`. The LUT is
+    * probed from the broadcast by key instead of riding the join as an
+    * 8 KB column copied into every candidate row. */
   def pqAdcByQueryCompute(qid: Long, codes: ArrayData, m: PqLutMap,
       roundTo: Int): Double = {
     val lut = m.luts.get(qid)
@@ -1851,12 +1805,6 @@ object NativeExpressions {
   def pq_encode_bc(vec: Column,
       codebooks: org.apache.spark.broadcast.Broadcast[PqCodebooks]): Column =
     ColumnBridge.column(PqEncodeBC(ColumnBridge.expression(vec), codebooks))
-  def pq_lut_bc(vec: Column,
-      codebooks: org.apache.spark.broadcast.Broadcast[PqCodebooks]): Column =
-    ColumnBridge.column(PqLutBC(ColumnBridge.expression(vec), codebooks))
-  def pq_adc(lut: Column, codes: Column, c: Int, roundTo: Int): Column =
-    ColumnBridge.column(PqAdc(ColumnBridge.expression(lut),
-      ColumnBridge.expression(codes), c, roundTo))
 
   // ---- Bigram language model (CCNet-style perplexity quality signal) ----
 
@@ -2191,12 +2139,12 @@ final class PqCodebooks(val m: Int, val dsub: Int,
   def nCentroids: Int = cents(0).length
 }
 
-/** Per-query ADC lookup tables keyed by query id, shipped ONCE as a
-  * broadcast. The previous shape carried each query's full LUT (m·C
+/** ADC lookup tables keyed by (query, probed cell) probe key, shipped
+  * ONCE as a broadcast. The previous shape carried each query's full LUT (m·C
   * doubles — 8 KB at C=256) as a COLUMN through the candidate join, so
   * every join OUTPUT row copied the whole table: at 1M candidate rows
   * that is ~8 GB of array copying and was measured at 26 s where the
-  * ADC math itself costs under 1 s. Indexing the broadcast by query id
+  * ADC math itself costs under 1 s. Indexing the broadcast by key
   * makes the per-candidate cost O(m) + one hash probe, independent of
   * the codebook size. */
 final class PqLutMap(val c: Int,

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.operators.Similarity.{AnnIndex, Cells, Coarse, Every,
+  Exhaustive, Pq, ResidualPq, Sq8}
 
 /** ANN recall-vs-cost operating-point harness (VERDICT r9 §next-3): the
   * `annRecall` evaluator exists, but v12 measures ONE configuration at
@@ -10,9 +12,9 @@ import graft.operators.Similarity
   * recommended operating point is a MEASUREMENT, not an assertion:
   *
   *   exact brute force (ground truth + its own cost) vs
-  *   ivfTopKFixedC  c ∈ {10, 32} × nprobe ∈ {1, 2}   (constant codebook)
-  *   pqTopK         m=4, C=10/subspace               (v8 tier)
-  *   ivfPqTopK      m=4, both codebooks C=10, nprobe ∈ {1, 2} (v9 tier)
+  *   IVF (Cells)    c ∈ {10, 32} × nprobe ∈ {1, 2}   (constant codebook)
+  *   exhaustive PQ  m=4, C=10/subspace               (v8 tier)
+  *   IVF-PQ         m=4, both codebooks C=10, nprobe ∈ {1, 2} (v9 tier)
   *
   * at every supplied scale directory (sf0.1 and the derived sf1), k=10
   * over 50 query vectors. Wall time is min-of-2 full materializations;
@@ -34,6 +36,12 @@ object AnnOperatingPoints {
     // query predicate; the exact tier filters the raw frame
     val qPred = col("id") < 50
     val qPredRaw = col("vec_id") < 50
+
+    def train(emb: DataFrame, spec: AnnIndex): Similarity.Trained =
+      Similarity.train(emb, "vec_id", "embedding", spec)
+    def serve(emb: DataFrame, ix: Similarity.Trained, kk: Int,
+        np: Int): DataFrame =
+      Similarity.search(emb, "vec_id", "embedding", ix, qPred, kk, np)
 
     def timed(mk: () => DataFrame): (Double, DataFrame) = {
       def once(): (Double, DataFrame) = {
@@ -110,8 +118,7 @@ object AnnOperatingPoints {
 
       for (c <- Seq(10, 32); np <- Seq(1, 2)) {
         val (sec, df) = timed(() =>
-          Similarity.ivfTopKFixedC(emb, "vec_id", "embedding", c = c,
-            queryPred = qPred, k = k, nprobe = np, knownN = n))
+          serve(emb, train(emb, AnnIndex(Coarse(Cells(c, Some(n))))), k, np))
         val r = meanRecall(exact, df)
         cells += s"""  "ivf_fixedC_c${c}_nprobe$np": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
         System.err.println(s"  ivf c=$c np=$np: ${f"$sec%.3f"}s recall=${f"$r%.4f"}")
@@ -121,18 +128,14 @@ object AnnOperatingPoints {
       // own caveat: the stride codebook is the fixed-C family's recall
       // ceiling). Training is timed SEPARATELY — a real index trains
       // once and serves many query batches — and serving reuses the
-      // byte-identical ivfTopKWith plan as the stride tiers, so any
-      // recall delta at equal serve cost is the codebook's quality.
+      // same search plan as the stride tiers, so any recall delta at
+      // equal serve cost is the codebook's quality.
       for (c <- Seq(10, 32)) {
-        val every = math.max(1L, n / c).toInt
         val t0 = System.nanoTime()
-        val (cids, cvs) = Similarity.kmeansCodebook(emb, "vec_id",
-          "embedding", every, iters = 2)
+        val ix = train(emb, AnnIndex(Coarse(Cells(c, Some(n)), iters = 2)))
         val trainSec = (System.nanoTime() - t0) / 1e9
         for (np <- Seq(1, 2)) {
-          val (sec, df) = timed(() =>
-            Similarity.ivfTopKWith(emb, "vec_id", "embedding", cids, cvs,
-              queryPred = qPred, k = k, nprobe = np))
+          val (sec, df) = timed(() => serve(emb, ix, k, np))
           val r = meanRecall(exact, df)
           cells += s"""  "ivf_trained_c${c}_iters2_nprobe$np": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivf-trained c=$c np=$np: ${f"$sec%.3f"}s" +
@@ -164,8 +167,9 @@ object AnnOperatingPoints {
         System.err.println(s"  exact-range: ${f"$exSec%.3f"}s pairs=${truePairs.size}")
         for (np <- Seq(1, 2)) {
           val (sec, df) = timed(() =>
-            Similarity.ivfRangeSearch(emb, "vec_id", "embedding", c = 10,
-              queryPred = qPred, simMin = simMin, nprobe = np, knownN = n))
+            Similarity.rangeSearch(emb, "vec_id", "embedding",
+              train(emb, AnnIndex(Coarse(Cells(10, Some(n))))),
+              queryPred = qPred, simMin = simMin, nprobe = np))
           val found = df.select("query_id", "neighbor_id").collect()
             .map(r => (r.getLong(0), r.getLong(1))).toSet
           val rec = if (truePairs.isEmpty) 1.0
@@ -181,16 +185,13 @@ object AnnOperatingPoints {
         // sec column is serve-only, apples-to-apples with the stride
         // range rows.
         {
-          val every = math.max(1L, n / 10).toInt
           val t0 = System.nanoTime()
-          val (rcids, rcvs) = Similarity.kmeansCodebook(emb, "vec_id",
-            "embedding", every, iters = 2)
+          val rix = train(emb, AnnIndex(Coarse(Cells(10, Some(n)), iters = 2)))
           val trainSec = (System.nanoTime() - t0) / 1e9
           for (np <- Seq(1, 2)) {
             val (sec, df) = timed(() =>
-              Similarity.ivfRangeSearchWith(emb, "vec_id", "embedding",
-                rcids, rcvs, queryPred = qPred, simMin = simMin,
-                nprobe = np))
+              Similarity.rangeSearch(emb, "vec_id", "embedding", rix,
+                queryPred = qPred, simMin = simMin, nprobe = np))
             val found = df.select("query_id", "neighbor_id").collect()
               .map(r => (r.getLong(0), r.getLong(1))).toSet
             val rec = if (truePairs.isEmpty) 1.0
@@ -217,16 +218,15 @@ object AnnOperatingPoints {
       val every256 = math.max(1L, (n + 255) / 256).toInt
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val (pqSec, pqDf) = timed(() =>
-          Similarity.pqTopK(emb, "vec_id", "embedding", m = 4,
-            centroidEvery = every, queryPred = qPred, k = k))
+          serve(emb, train(emb, AnnIndex(Coarse(Exhaustive), Pq(4, every))),
+            k, 1))
         val pqR = meanRecall(exactL2, pqDf)
         cells += s"""  "pq_m4_$cLabel": {"sec": ${f"$pqSec%.3f"}, "recall_at_10": ${f"$pqR%.4f"}}"""
         System.err.println(s"  pq $cLabel: ${f"$pqSec%.3f"}s recall=${f"$pqR%.4f"}")
         for (np <- Seq(1, 2)) {
           val (sec, df) = timed(() =>
-            Similarity.ivfPqTopK(emb, "vec_id", "embedding", m = 4,
-              pqCentroidEvery = every, coarseCentroidEvery = every10,
-              queryPred = qPred, k = k, nprobe = np))
+            serve(emb, train(emb, AnnIndex(Coarse(Every(every10)),
+              Pq(4, every))), k, np))
           val r = meanRecall(exactL2, df)
           cells += s"""  "ivfpq_m4_${cLabel}_nprobe$np": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivfpq $cLabel np=$np: ${f"$sec%.3f"}s recall=${f"$r%.4f"}")
@@ -237,12 +237,10 @@ object AnnOperatingPoints {
       // cost is the training's quality (the v13 methodology, PQ family)
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val t0 = System.nanoTime()
-        val tcb = Similarity.pqCodebooksTrained(emb, "vec_id", "embedding",
-          m = 4, centroidEvery = every, iters = 1)
+        val tix = train(emb,
+          AnnIndex(Coarse(Exhaustive), Pq(4, every, iters = 1)))
         val trainSec = (System.nanoTime() - t0) / 1e9
-        val (sec, df) = timed(() =>
-          Similarity.pqTopKWith(emb, "vec_id", "embedding", tcb,
-            queryPred = qPred, k = k))
+        val (sec, df) = timed(() => serve(emb, tix, k, 1))
         val r = meanRecall(exactL2, df)
         cells += s"""  "pq_trained_m4_${cLabel}_iters1": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
         System.err.println(s"  pq-trained $cLabel: ${f"$sec%.3f"}s" +
@@ -251,18 +249,14 @@ object AnnOperatingPoints {
       // TRAINED-everything IVFADC (r12, v15): both codebooks trained —
       // coarse k-means at C=10/iters=2 (the recommended cosine tier's
       // codebook) + one Lloyd round per subspace — served through the
-      // byte-identical ivfPqTopKWith plan as the stride IVFADC cells
+      // same search plan as the stride IVFADC cells
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val t0 = System.nanoTime()
-        val tcb = Similarity.pqCodebooksTrained(emb, "vec_id", "embedding",
-          m = 4, centroidEvery = every, iters = 1)
-        val (cids, cvs) = Similarity.kmeansCodebook(emb, "vec_id",
-          "embedding", every10, iters = 2)
+        val tix = train(emb, AnnIndex(Coarse(Every(every10), iters = 2),
+          Pq(4, every, iters = 1)))
         val trainSec = (System.nanoTime() - t0) / 1e9
         for (np <- Seq(1, 2)) {
-          val (sec, df) = timed(() =>
-            Similarity.ivfPqTopKWith(emb, "vec_id", "embedding", tcb,
-              cids, cvs, queryPred = qPred, k = k, nprobe = np))
+          val (sec, df) = timed(() => serve(emb, tix, k, np))
           val r = meanRecall(exactL2, df)
           cells += s"""  "ivfpq_trained_m4_${cLabel}_nprobe$np": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivfpq-trained $cLabel np=$np: " +
@@ -273,30 +267,25 @@ object AnnOperatingPoints {
       // fine quantizer encodes x − centroid(cell). Untrained rows are
       // directly comparable to ivfpq_m4_* (same stride init, codebook
       // built inside the timed call). r14: the trained rows now train
-      // BOTH codebooks outside timed() (kmeansCodebook +
-      // residualPqCodebooks — the index/serve split finally exists for
-      // the residual tier), so their sec is serve-only and directly
+      // BOTH codebooks outside timed() (train — the index/serve split
+      // finally exists for the residual tier), so their sec is serve-only
+      // and directly
       // comparable to every other trained row; train_sec records the
       // full training chain.
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val t0 = System.nanoTime()
-        val (rcids, rcvs) = Similarity.kmeansCodebook(emb, "vec_id",
-          "embedding", every10, iters = 2)
-        val rcb = Similarity.residualPqCodebooks(emb, "vec_id", "embedding",
-          rcids, rcvs, m = 4, pqCentroidEvery = every, pqIters = 1)
+        val rix = train(emb, AnnIndex(Coarse(Every(every10), iters = 2),
+          ResidualPq(4, every, iters = 1)))
         val trainSec = (System.nanoTime() - t0) / 1e9
         for (np <- Seq(1, 2)) {
           val (sec, df) = timed(() =>
-            Similarity.ivfPqTopKResidual(emb, "vec_id", "embedding", m = 4,
-              pqCentroidEvery = every, coarseCentroidEvery = every10,
-              queryPred = qPred, k = k, nprobe = np))
+            serve(emb, train(emb, AnnIndex(Coarse(Every(every10)),
+              ResidualPq(4, every))), k, np))
           val r = meanRecall(exactL2, df)
           cells += s"""  "ivfpq_residual_m4_${cLabel}_nprobe$np": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivfpq-residual $cLabel np=$np: " +
             s"${f"$sec%.3f"}s recall=${f"$r%.4f"}")
-          val (tsec, tdf) = timed(() =>
-            Similarity.ivfPqTopKResidualWith(emb, "vec_id", "embedding",
-              rcids, rcvs, rcb, queryPred = qPred, k = k, nprobe = np))
+          val (tsec, tdf) = timed(() => serve(emb, rix, k, np))
           val tr = meanRecall(exactL2, tdf)
           cells += s"""  "ivfpq_residual_trained_m4_${cLabel}_nprobe$np": {"sec": ${f"$tsec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$tr%.4f"}}"""
           System.err.println(s"  ivfpq-residual-trained $cLabel np=$np: " +
@@ -308,9 +297,8 @@ object AnnOperatingPoints {
       // at per-query cost rerank=50 exact distances, not corpus
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val (sec, df) = timed(() =>
-          Similarity.ivfPqTopKRefined(emb, "vec_id", "embedding", m = 4,
-            pqCentroidEvery = every, coarseCentroidEvery = every10,
-            queryPred = qPred, k = k, rerank = 50, nprobe = 2))
+          serve(emb, train(emb, AnnIndex(Coarse(Every(every10)), Pq(4, every),
+            rerank = 50)), k, 2))
         val r = meanRecall(exactL2, df)
         cells += s"""  "ivfpq_refined_m4_${cLabel}_nprobe2_rerank50": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
         System.err.println(s"  ivfpq-refined $cLabel: ${f"$sec%.3f"}s recall=${f"$r%.4f"}")
@@ -324,16 +312,10 @@ object AnnOperatingPoints {
       // the timed call is shortlist + refine serving only.
       for ((cLabel, every) <- Seq("C10" -> every10, "C256" -> every256)) {
         val t0 = System.nanoTime()
-        val (rcids, rcvs) = Similarity.kmeansCodebook(emb, "vec_id",
-          "embedding", every10, iters = 2)
-        val rcb = Similarity.residualPqCodebooks(emb, "vec_id", "embedding",
-          rcids, rcvs, m = 4, pqCentroidEvery = every, pqIters = 1)
+        val rix = train(emb, AnnIndex(Coarse(Every(every10), iters = 2),
+          ResidualPq(4, every, iters = 1), rerank = 50))
         val trainSec = (System.nanoTime() - t0) / 1e9
-        val (sec, df) = timed(() =>
-          Similarity.refineExact(emb, "vec_id", "embedding",
-            Similarity.ivfPqTopKResidualWith(emb, "vec_id", "embedding",
-              rcids, rcvs, rcb, queryPred = qPred, k = 50, nprobe = 2),
-            queryPred = qPred, k = k))
+        val (sec, df) = timed(() => serve(emb, rix, k, 2))
         val r = meanRecall(exactL2, df)
         cells += s"""  "ivfpq_refined_residual_trained_m4_${cLabel}_nprobe2_rerank50": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
         System.err.println(s"  ivfpq-refined-residual $cLabel: " +
@@ -348,29 +330,26 @@ object AnnOperatingPoints {
       {
         for (np <- Seq(1, 2)) {
           val (sec, df) = timed(() =>
-            Similarity.ivfSq8TopK(emb, "vec_id", "embedding",
-              centroidEvery = every10, queryPred = qPred, k = k,
-              nprobe = np))
+            serve(emb, train(emb, AnnIndex(Coarse(Every(every10)), Sq8)), k,
+              np))
           val r = meanRecall(exact, df)
           cells += s"""  "ivf_sq8_c10_nprobe$np": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivf-sq8 c=10 np=$np: ${f"$sec%.3f"}s recall=${f"$r%.4f"}")
         }
         val t0 = System.nanoTime()
-        val (scids, scvs) = Similarity.kmeansCodebook(emb, "vec_id",
-          "embedding", every10, iters = 2)
+        val sq8 = AnnIndex(Coarse(Every(every10), iters = 2), Sq8)
+        val six = train(emb, sq8)
         val trainSec = (System.nanoTime() - t0) / 1e9
         for (np <- Seq(1, 2)) {
-          val (sec, df) = timed(() =>
-            Similarity.ivfSq8TopKWith(emb, "vec_id", "embedding", scids,
-              scvs, queryPred = qPred, k = k, nprobe = np))
+          val (sec, df) = timed(() => serve(emb, six, k, np))
           val r = meanRecall(exact, df)
           cells += s"""  "ivf_sq8_trained_c10_nprobe$np": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivf-sq8-trained c=10 np=$np: ${f"$sec%.3f"}s" +
             s" (train ${f"$trainSec%.3f"}s) recall=${f"$r%.4f"}")
         }
-        val (rsec, rdf) = timed(() =>
-          Similarity.ivfSq8TopKWith(emb, "vec_id", "embedding", scids,
-            scvs, queryPred = qPred, k = k, rerank = 50, nprobe = 2))
+        // the same (deterministic) training, served with an exact re-rank
+        val rix = train(emb, sq8.copy(rerank = 50))
+        val (rsec, rdf) = timed(() => serve(emb, rix, k, 2))
         val rr = meanRecall(exactL2, rdf)
         cells += s"""  "ivf_sq8_refined_trained_c10_nprobe2_rerank50": {"sec": ${f"$rsec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$rr%.4f"}}"""
         System.err.println(s"  ivf-sq8-refined c=10: ${f"$rsec%.3f"}s recall=${f"$rr%.4f"}")
@@ -387,24 +366,16 @@ object AnnOperatingPoints {
         val every40 = math.max(1L, n / 40).toInt
         for (np <- Seq(1, 2)) {
           val (sec, df) = timed(() =>
-            Similarity.ivfTopKFixedC(emb, "vec_id", "embedding", c = 40,
-              queryPred = qPred, k = k, nprobe = np, knownN = n))
+            serve(emb, train(emb, AnnIndex(Coarse(Cells(40, Some(n))))), k, np))
           val r = meanRecall(exact, df)
           cells += s"""  "ivf_fixedC_c40_nprobe$np": {"sec": ${f"$sec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivf c=40 np=$np: ${f"$sec%.3f"}s recall=${f"$r%.4f"}")
         }
         val t0 = System.nanoTime()
-        val cents = emb.select(col("vec_id").as("id"),
-            Similarity.asDouble(col("embedding")).as("v"))
-          .filter(pmod(col("id"), lit(every40.toLong)) === 0)
-          .orderBy("id").collect()
-        val g = Similarity.buildHnswGraph(cents.map(_.getLong(0)),
-          cents.map(_.getSeq[Double](1).toArray), m = 8)
+        val hix = train(emb, AnnIndex(Coarse(Every(every40), hnsw = Some(8))))
         val trainSec = (System.nanoTime() - t0) / 1e9
         for (np <- Seq(1, 2)) {
-          val (sec, df) = timed(() =>
-            Similarity.ivfHnswTopKWith(emb, "vec_id", "embedding", g,
-              queryPred = qPred, k = k, nprobe = np))
+          val (sec, df) = timed(() => serve(emb, hix, k, np))
           val r = meanRecall(exact, df)
           cells += s"""  "ivf_hnsw_c40_m8_nprobe$np": {"sec": ${f"$sec%.3f"}, "train_sec": ${f"$trainSec%.3f"}, "recall_at_10": ${f"$r%.4f"}}"""
           System.err.println(s"  ivf-hnsw c=40 m=8 np=$np: ${f"$sec%.3f"}s" +

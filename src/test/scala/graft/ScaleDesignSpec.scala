@@ -86,6 +86,15 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   import graft.operators.{ChOps, DependencyGraph, Similarity}
+  import graft.operators.Similarity.{AnnIndex, Cells, Coarse, Every,
+    Exhaustive, Pq, ResidualPq, Sq8}
+
+  /** Train `spec` over (vec_id, embedding) and serve its top-k. */
+  private def annTopK(emb: org.apache.spark.sql.DataFrame, spec: AnnIndex,
+      queryPred: org.apache.spark.sql.Column, k: Int,
+      nprobe: Int = 1): org.apache.spark.sql.DataFrame =
+    Similarity.search(emb, "vec_id", "embedding",
+      Similarity.train(emb, "vec_id", "embedding", spec), queryPred, k, nprobe)
 
   test("LIMIT WITH TIES: distributed form has no window at all, matches global-window form") {
     val part = spark.read.parquet(s"$sf/part.parquet")
@@ -272,8 +281,9 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       Seq((5000L, 5001L)))
     val degenerate = (0 until n).map(i => (i.toLong, Array(1.0f, 2.0f, 3.0f)))
       .toDF("vec_id", "embedding")
-    assert(Similarity.nearDuplicatesLshCapped(
-      degenerate, "vec_id", "embedding", nPlanes = 8, threshold = 0.9)
+    assert(Similarity.nearDuplicatesLsh(
+      degenerate, "vec_id", "embedding", nPlanes = 8, threshold = 0.9,
+      maxBucketSize = graft.operators.Dedup.DefaultMaxBucketSize)
       .count() == 0)
   }
 
@@ -386,8 +396,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
   test("IVF top-k: row-local assignment — no nested-loop join, exactly one shuffle") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val out = Similarity.ivfTopK(emb, "vec_id", "embedding",
-      centroidEvery = 20, queryPred = col("id") < 5, k = 3)
+    val out = annTopK(emb, AnnIndex(Coarse(Every(20))),
+      queryPred = col("id") < 5, k = 3)
     val plan = out.queryExecution.executedPlan
     // the old crossJoin(broadcast(centroids)) assignment planned as a
     // BroadcastNestedLoopJoin expanding n·C rows through the window shuffle
@@ -410,8 +420,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     def nCells(n: Int): Long = {
       // distinct assigned cells never exceed the codebook; the codebook
       // has ceil(n / (n/c)) ≈ c entries (stride-sampled ids)
-      val out = Similarity.ivfTopKFixedC(corpus(n), "vec_id", "embedding",
-        c = 8, queryPred = col("id") < 2, k = 2)
+      val out = annTopK(corpus(n), AnnIndex(Coarse(Cells(8))),
+        queryPred = col("id") < 2, k = 2)
       out.count() // force
       val every = math.max(1L, n / 8L)
       (n + every - 1) / every // codebook entries at this stride
@@ -421,8 +431,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     assert(small >= 8 && small <= 9, s"small-corpus codebook: $small")
     assert(big >= 8 && big <= 9, s"big-corpus codebook: $big")
     // and the results stay top-k-shaped
-    val out = Similarity.ivfTopKFixedC(corpus(400), "vec_id", "embedding",
-      c = 8, queryPred = col("id") < 2, k = 2).collect()
+    val out = annTopK(corpus(400), AnnIndex(Coarse(Cells(8))),
+      queryPred = col("id") < 2, k = 2).collect()
     assert(out.nonEmpty && out.length <= 4)
   }
 
@@ -451,23 +461,23 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // construction only (no action): stride-sample collect is inherent
     // to both; the count() job is the elidable difference
     val without = jobsDuring {
-      Similarity.ivfTopKFixedC(corpus, "vec_id", "embedding",
-        c = 8, queryPred = col("id") < 2, k = 2)
+      annTopK(corpus, AnnIndex(Coarse(Cells(8))),
+        queryPred = col("id") < 2, k = 2)
       ()
     }
     val withN = jobsDuring {
-      Similarity.ivfTopKFixedC(corpus, "vec_id", "embedding",
-        c = 8, queryPred = col("id") < 2, k = 2, knownN = 400L)
+      annTopK(corpus, AnnIndex(Coarse(Cells(8, knownN = Some(400L)))),
+        queryPred = col("id") < 2, k = 2)
       ()
     }
     assert(withN < without,
       s"knownN must remove the count job: $withN !< $without")
     // identical results either way (same stride derivation)
-    val a = Similarity.ivfTopKFixedC(corpus, "vec_id", "embedding",
-      c = 8, queryPred = col("id") < 2, k = 2)
+    val a = annTopK(corpus, AnnIndex(Coarse(Cells(8))),
+      queryPred = col("id") < 2, k = 2)
       .orderBy("query_id", "neighbor_id").collect().toSeq
-    val b = Similarity.ivfTopKFixedC(corpus, "vec_id", "embedding",
-      c = 8, queryPred = col("id") < 2, k = 2, knownN = 400L)
+    val b = annTopK(corpus, AnnIndex(Coarse(Cells(8, knownN = Some(400L)))),
+      queryPred = col("id") < 2, k = 2)
       .orderBy("query_id", "neighbor_id").collect().toSeq
     assert(a == b)
     // and the footer-count helper agrees with a real scan on real data
@@ -487,11 +497,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val n = emb.count()
     def nodeSeq(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }.toSeq
-    val stride = Similarity.ivfTopKFixedC(emb, "vec_id", "embedding",
-      c = 10, queryPred = col("id") < 5, k = 3, nprobe = 2, knownN = n)
-    val trained = Similarity.ivfTopKTrained(emb, "vec_id", "embedding",
-      c = 10, iters = 1, queryPred = col("id") < 5, k = 3, nprobe = 2,
-      knownN = n)
+    val stride = annTopK(emb, AnnIndex(Coarse(Cells(10, Some(n)))),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
+    val trained = annTopK(emb, AnnIndex(Coarse(Cells(10, Some(n)), iters = 1)),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(nodeSeq(trained) == nodeSeq(stride),
       s"serving plans diverge:\n${nodeSeq(trained)}\nvs\n${nodeSeq(stride)}")
     assert(shuffleCount(trained) == 1) // still only the final top-k window
@@ -503,7 +512,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("ivfSq8TopK: serving plan keeps raw IVF's wide-operator skeleton (int8 " +
       "codes change WHAT the scan carries, not the shuffle/join structure)") {
     // the SQ8 claim at 100 TB is memory bandwidth, not plan shape: the
-    // probed-cell join must stay the ivfTopKWith pipeline — one
+    // probed-cell join must stay the Flat serve pipeline — one
     // broadcast of the query side, one top-k window shuffle — with the
     // int8 encode/dequantize riding as row-local projections (they may
     // split a codegen stage, but must add NO wide operator)
@@ -515,10 +524,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     def skeleton(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }
         .filter(n => wide.exists(n.startsWith)).toSeq
-    val raw = Similarity.ivfTopKFixedC(emb, "vec_id", "embedding",
-      c = 10, queryPred = col("id") < 5, k = 3, nprobe = 2, knownN = n)
-    val sq8 = Similarity.ivfSq8TopK(emb, "vec_id", "embedding",
-      centroidEvery = math.max(1L, n / 10).toInt,
+    val raw = annTopK(emb, AnnIndex(Coarse(Cells(10, Some(n)))),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
+    val sq8 = annTopK(emb,
+      AnnIndex(Coarse(Every(math.max(1L, n / 10).toInt)), Sq8),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(skeleton(sq8) == skeleton(raw),
       s"wide-operator skeletons diverge:\n${skeleton(sq8)}\nvs\n${skeleton(raw)}")
@@ -539,10 +548,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     def skeleton(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }
         .filter(nm => wide.exists(nm.startsWith)).toSeq
-    val raw = Similarity.ivfTopKFixedC(emb, "vec_id", "embedding",
-      c = 10, queryPred = col("id") < 5, k = 3, nprobe = 2, knownN = n)
-    val hnsw = Similarity.ivfHnswTopK(emb, "vec_id", "embedding",
-      centroidEvery = math.max(1L, n / 10).toInt, m = 4,
+    val raw = annTopK(emb, AnnIndex(Coarse(Cells(10, Some(n)))),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
+    val hnsw = annTopK(emb,
+      AnnIndex(Coarse(Every(math.max(1L, n / 10).toInt), hnsw = Some(4))),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(skeleton(hnsw) == skeleton(raw),
       s"wide-operator skeletons diverge:\n${skeleton(hnsw)}\nvs\n${skeleton(raw)}")
@@ -560,12 +569,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val every = math.max(1L, n / 10).toInt
     def nodeSeq(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }.toSeq
-    val stride = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
+    val stride = annTopK(emb, AnnIndex(Coarse(Every(every)), Pq(4, every)),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
-    val trained = Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
-      m = 4, c = 10, pqIters = 1, coarseIters = 1,
-      queryPred = col("id") < 5, k = 3, nprobe = 2, knownN = n)
+    val trained = annTopK(emb, AnnIndex(Coarse(Cells(10, Some(n)), iters = 1),
+      Pq(4, every, iters = 1)), queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(nodeSeq(trained) == nodeSeq(stride),
       s"serving plans diverge:\n${nodeSeq(trained)}\nvs\n${nodeSeq(stride)}")
     assert(trained.queryExecution.executedPlan.collect {
@@ -581,9 +588,9 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val n = emb.count()
     val every = math.max(1L, n / 10).toInt
-    val out = Similarity.ivfPqTopKRefined(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
-      queryPred = col("id") < 5, k = 3, rerank = 10, nprobe = 2)
+    val out = annTopK(emb,
+      AnnIndex(Coarse(Every(every)), Pq(4, every), rerank = 10),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
     val plan = out.queryExecution.executedPlan
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
     assert(shuffleCount(out) <= 2,
@@ -610,13 +617,12 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val every = math.max(1L, n / 10).toInt
     def nodeSeq(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }.toSeq
-    val refStride = Similarity.ivfPqTopKRefined(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
-      queryPred = col("id") < 5, k = 3, rerank = 10, nprobe = 2)
-    val refResid = Similarity.ivfPqTopKRefinedResidual(emb, "vec_id",
-      "embedding", m = 4, pqCentroidEvery = every,
-      coarseCentroidEvery = every, queryPred = col("id") < 5, k = 3,
-      rerank = 10, nprobe = 2, pqIters = 1, coarseIters = 1)
+    val refStride = annTopK(emb,
+      AnnIndex(Coarse(Every(every)), Pq(4, every), rerank = 10),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
+    val refResid = annTopK(emb, AnnIndex(Coarse(Every(every), iters = 1),
+      ResidualPq(4, every, iters = 1), rerank = 10),
+      queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(nodeSeq(refResid) == nodeSeq(refStride),
       s"serving plans diverge:\n${nodeSeq(refResid)}\nvs\n${nodeSeq(refStride)}")
     assert(refResid.queryExecution.executedPlan.collect {
@@ -643,11 +649,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val every = math.max(1L, n / 10).toInt
     def nodeSeq(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan.collect { case p => p.nodeName }.toSeq
-    val stride = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
+    val stride = annTopK(emb, AnnIndex(Coarse(Every(every)), Pq(4, every)),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
-    val resid = Similarity.ivfPqTopKResidual(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = every, coarseCentroidEvery = every,
+    val resid = annTopK(emb,
+      AnnIndex(Coarse(Every(every)), ResidualPq(4, every)),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
     assert(nodeSeq(resid) == nodeSeq(stride),
       s"serving plans diverge:\n${nodeSeq(resid)}\nvs\n${nodeSeq(stride)}")
@@ -662,6 +667,84 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     assert(resid.count() > 0)
   }
 
+  test("one serve core: every codec plans a broadcast query side joined on " +
+      "cell and no shuffle before the single top-k window; range has no window") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val every = math.max(1L, emb.count() / 10).toInt
+    val q = col("id") < 5
+    def train(spec: AnnIndex) = Similarity.train(emb, "vec_id", "embedding", spec)
+    def topK(spec: AnnIndex) = Similarity.search(emb, "vec_id", "embedding",
+      train(spec), q, k = 3, nprobe = 2)
+    // (case, plan, windows the plan must hold)
+    val cases = Seq(
+      ("Flat", topK(AnnIndex(Coarse(Every(every)))), 1),
+      ("Sq8", topK(AnnIndex(Coarse(Every(every)), Sq8)), 1),
+      ("Pq", topK(AnnIndex(Coarse(Every(every)), Pq(4, every))), 1),
+      ("ResidualPq", topK(AnnIndex(Coarse(Every(every)), ResidualPq(4, every))), 1),
+      ("exhaustive Pq", topK(AnnIndex(Coarse(Exhaustive), Pq(4, every))), 1),
+      ("HNSW", topK(AnnIndex(Coarse(Every(every), hnsw = Some(4)))), 1),
+      ("range", Similarity.rangeSearch(emb, "vec_id", "embedding",
+        train(AnnIndex(Coarse(Every(every)))), q, simMin = 0.25, nprobe = 2), 0))
+    cases.foreach { case (name, df, windows) =>
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.exists(j =>
+        j.buildSide == BuildLeft && j.leftKeys.exists(_.references.exists(
+          _.name == "cell"))), s"$name: queries must broadcast into the cell join:\n$plan")
+      val ws = plan.collect { case w: WindowExec => w }
+      assert(ws.size == windows, s"$name: expected $windows window(s):\n$plan")
+      // the only shuffle is the top-k window's own input exchange
+      assert(shuffleCount(df) == windows && ws.forall(_.collect {
+        case e: ShuffleExchangeExec => e }.size == 1),
+        s"$name: a shuffle runs before the top-k window:\n$plan")
+      assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
+      assert(df.count() > 0, s"$name: no candidates")
+    }
+  }
+
+  test("ANN save writes the coarse, pq and hnsw parquet layouts unchanged") {
+    // indexes written before the one-spec API must keep loading: the
+    // artifacts are (cid, cv), (j, c, cv) and (pos, cid, cv, lvl, adj)
+    val layouts = Map(
+      "coarse" -> "cid BIGINT, cv ARRAY<DOUBLE>",
+      "pq" -> "j INT, c INT, cv ARRAY<DOUBLE>",
+      "hnsw" -> "pos INT, cid BIGINT, cv ARRAY<DOUBLE>, lvl INT, adj ARRAY<ARRAY<INT>>")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_layout")
+    try {
+      for ((sub, spec) <- Seq(
+          "ivfpq" -> AnnIndex(Coarse(Every(50)), Pq(4, 50)),
+          "hnsw" -> AnnIndex(Coarse(Every(50), hnsw = Some(4))))) {
+        val ix = Similarity.train(emb, "vec_id", "embedding", spec)
+        Similarity.save(spark, s"$dir/$sub", ix)
+        val loaded = Similarity.load(spark, s"$dir/$sub", spec)
+        assert(loaded.cids.sameElements(ix.cids))
+      }
+      val written = Seq("ivfpq/coarse", "ivfpq/pq", "hnsw/hnsw")
+      assert(Seq("ivfpq", "hnsw").flatMap(sub =>
+        new java.io.File(s"$dir/$sub").list().toSeq.map(k => s"$sub/$k"))
+        .sorted == written.sorted)
+      written.foreach { path =>
+        val got = spark.read.parquet(s"$dir/$path").schema
+        val want = org.apache.spark.sql.types.StructType.fromDDL(
+          layouts(path.split("/").last))
+        assert(got.catalogString == want.catalogString, s"$path: $got")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("persisted-index registry entries leave no index directory behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def indexDirs(): Set[String] = tmp.list().toSet
+      .filter(n => n.startsWith("graft_idx") || n.startsWith("graft_hnsw"))
+    val before = indexDirs()
+    for (name <- Seq("v17_index_persist", "v22b_hnsw_persist"))
+      assert(SparkEntry.queries(name)(spark, sf).count() > 0, name)
+    val leaked = indexDirs() -- before
+    assert(leaked.isEmpty, s"leaked index dirs: $leaked")
+  }
+
   test("IVF broadcast codebook: no literal blowup at C=10k, BNLJ-free, same results") {
     // 12k-vector corpus with centroidEvery=1 → a 12k-entry codebook: far
     // past maxLiteralCentroids, so the codebook must ride as a broadcast
@@ -669,8 +752,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val corpus = spark.range(12000).select(col("id").as("vec_id"),
       array(col("id").cast("double") % 97, col("id").cast("double") % 89,
         col("id").cast("double") % 83).as("embedding"), col("id"))
-    val out = Similarity.ivfTopK(corpus, "vec_id", "embedding",
-      centroidEvery = 1, queryPred = col("id") < 3, k = 2)
+    val out = annTopK(corpus, AnnIndex(Coarse(Every(1))),
+      queryPred = col("id") < 3, k = 2)
     val plan = out.queryExecution.executedPlan
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
     assert(shuffleCount(out) == 1) // still only the final top-k window
@@ -679,8 +762,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     assert(planChars < 50000, s"plan carries literal codebook: $planChars chars")
     // both transports rank identically on a real corpus
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    def rows(maxLit: Int) = Similarity.ivfTopK(emb, "vec_id", "embedding",
-        centroidEvery = 20, queryPred = col("id") < 5, k = 3,
+    val ix = Similarity.train(emb, "vec_id", "embedding",
+      AnnIndex(Coarse(Every(20))))
+    def rows(maxLit: Int) = Similarity.search(emb, "vec_id", "embedding", ix,
+        queryPred = col("id") < 5, k = 3, nprobe = 1,
         maxLiteralCentroids = maxLit)
       .orderBy("query_id", "neighbor_id").collect().map(_.toString).toSeq
     assert(rows(1024) == rows(0)) // literal path == broadcast path
@@ -1257,8 +1342,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // exhaustive ADC: the only shuffle is the final per-query top-k window
     // (the query×codes product is a deliberate broadcast cross join — the
     // broadcast side is the FEW queries, never the corpus)
-    val out = Similarity.pqTopK(emb, "vec_id", "embedding",
-      m = 4, centroidEvery = 50, queryPred = col("id") < 5, k = 3)
+    val out = annTopK(emb, AnnIndex(Coarse(Exhaustive), Pq(4, 50)),
+      queryPred = col("id") < 5, k = 3)
     assert(shuffleCount(out) == 1)
     assert(out.count() == 15)
   }
@@ -1298,8 +1383,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       trained.cents(j).zip(trained2.cents(j))
         .forall { case (a, b) => a.sameElements(b) }))
     // identical serving shape: encode row-local, one top-k shuffle
-    val out = Similarity.pqTopKTrained(emb, "vec_id", "embedding",
-      m = 4, centroidEvery = 50, iters = 1, queryPred = col("id") < 5, k = 3)
+    val out = annTopK(emb, AnnIndex(Coarse(Exhaustive), Pq(4, 50, iters = 1)),
+      queryPred = col("id") < 5, k = 3)
     assert(shuffleCount(out) == 1)
     assert(out.count() == 15)
   }
@@ -1315,8 +1400,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val codes = Similarity.pqEncode(emb, "vec_id", "embedding", cb)
       .filter(col("id") < 20).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
-    val out = Similarity.pqTopK(emb.filter(col("vec_id") < 20), "vec_id",
-      "embedding", m = 4, centroidEvery = 5, queryPred = col("id") < 3, k = 5)
+    val out = annTopK(emb.filter(col("vec_id") < 20),
+      AnnIndex(Coarse(Exhaustive), Pq(4, 5)), queryPred = col("id") < 3, k = 5)
     // recompute every returned adist from first principles: the codebooks
     // of THIS call (centroidEvery=5), re-encode, sum per-subspace L2
     val cb5 = Similarity.pqCodebooks(emb.filter(col("vec_id") < 20), "vec_id",
@@ -1347,8 +1432,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
   test("IVF-PQ: candidates restricted to probed cells, one shuffle, BNLJ-free") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val out = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      m = 4, pqCentroidEvery = 50, coarseCentroidEvery = 20,
+    val out = annTopK(emb, AnnIndex(Coarse(Every(20)), Pq(4, 50)),
       queryPred = col("id") < 5, k = 3, nprobe = 2)
     val plan = out.queryExecution.executedPlan
     // cell-restricted ADC is a broadcast HASH join on cell — the
@@ -1358,9 +1442,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val rows = out.collect()
     assert(rows.nonEmpty)
     // IVF-PQ results are a subset of the exhaustive ADC ranking's universe:
-    // every returned pair must also score identically under pqTopK's ADC
-    val exhaustive = Similarity.pqTopK(emb, "vec_id", "embedding",
-        m = 4, centroidEvery = 50, queryPred = col("id") < 5, k = 500)
+    // every returned pair must also score identically under the
+    // exhaustive ADC
+    val exhaustive = annTopK(emb, AnnIndex(Coarse(Exhaustive), Pq(4, 50)),
+        queryPred = col("id") < 5, k = 500)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     rows.foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
@@ -1617,8 +1702,9 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("ivfRangeSearch: threshold-bounded output — ZERO shuffles, no " +
       "window, no sort (cheaper than top-k); queries ride broadcast") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val out = Similarity.ivfRangeSearch(emb, "vec_id", "embedding",
-      c = 10, queryPred = col("id") < 10, simMin = 0.25, nprobe = 2)
+    val out = Similarity.rangeSearch(emb, "vec_id", "embedding",
+      Similarity.train(emb, "vec_id", "embedding", AnnIndex(Coarse(Cells(10)))),
+      queryPred = col("id") < 10, simMin = 0.25, nprobe = 2)
     val plan = out.queryExecution.executedPlan
     assert(shuffleCount(out) == 0, s"range search must not shuffle:\n$plan")
     assert(plan.collect {
@@ -1634,9 +1720,10 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // TRAINED-coarse variant (r13, v19b): training happens driver-side
     // before the plan exists, so the SERVING plan keeps the identical
     // zero-shuffle/zero-window shape — only the codebook VALUES differ
-    val trained = Similarity.ivfRangeSearch(emb, "vec_id", "embedding",
-      c = 10, queryPred = col("id") < 10, simMin = 0.25, nprobe = 2,
-      coarseIters = 1)
+    val trained = Similarity.rangeSearch(emb, "vec_id", "embedding",
+      Similarity.train(emb, "vec_id", "embedding",
+        AnnIndex(Coarse(Cells(10), iters = 1))),
+      queryPred = col("id") < 10, simMin = 0.25, nprobe = 2)
     val tplan = trained.queryExecution.executedPlan
     assert(shuffleCount(trained) == 0,
       s"trained range search must not shuffle:\n$tplan")

@@ -4,12 +4,27 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
 import graft.operators.{ChOps, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Similarity.{AnnIndex, Cells, Coarse, Every, Pq,
+  ResidualPq, Sq8}
 
 /** Invariant tests for the training-data pipeline operators (the
   * cross-engine value checks live in the DuckDB oracle gate; these pin
   * semantic properties). */
 class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
+
+  private def annTrain(df: org.apache.spark.sql.DataFrame, spec: AnnIndex) =
+    Similarity.train(df, "vec_id", "embedding", spec)
+
+  /** Train `spec` over (vec_id, embedding) and serve its top-k. */
+  private def annTopK(df: org.apache.spark.sql.DataFrame, spec: AnnIndex,
+      queryPred: org.apache.spark.sql.Column, k: Int,
+      nprobe: Int = 1): org.apache.spark.sql.DataFrame =
+    Similarity.search(df, "vec_id", "embedding", annTrain(df, spec),
+      queryPred, k, nprobe)
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
 
   private lazy val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
@@ -531,11 +546,11 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2))
     // zero Lloyd rounds: the stride init IS the codebook → byte-identical
-    // to ivfTopKFixedC at the same (c, nprobe)
-    val t0 = canon(Similarity.ivfTopKTrained(df, "vec_id", "embedding",
-      c = 6, iters = 0, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
-    val fx = canon(Similarity.ivfTopKFixedC(df, "vec_id", "embedding",
-      c = 6, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
+    // to the untrained stride index at the same (c, nprobe)
+    val t0 = canon(annTopK(df, AnnIndex(Coarse(Cells(6), iters = 0)),
+      queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
+    val fx = canon(annTopK(df, AnnIndex(Coarse(Cells(6))),
+      queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
     assert(t0.sameElements(fx), "iters=0 must equal the stride preset")
     // training must actually move the codebook on non-degenerate data
     // (else the preset silently serves the stride cells)
@@ -548,16 +563,16 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       "one Lloyd round left every centroid untouched")
     // trained serving: deterministic across runs, k-bounded, self-free,
     // sims within [-1, 1]
-    def trained() = canon(Similarity.ivfTopKTrained(df, "vec_id", "embedding",
-      c = 6, iters = 2, queryPred = col("id") < 5, k = 3, nprobe = 2,
-      knownN = 120L).collect())
+    def trained() = canon(annTopK(df,
+      AnnIndex(Coarse(Cells(6, knownN = Some(120L)), iters = 2)),
+      queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
     val a = trained(); val b = trained()
     assert(a.sameElements(b), "trained serving must be deterministic")
     assert(a.groupBy(_._1).values.forall(_.length <= 3))
     assert(a.forall(t => t._1 != t._2 && t._3 >= -1.0 && t._3 <= 1.0))
     // knownN path agrees with the counted path
-    val c2 = canon(Similarity.ivfTopKTrained(df, "vec_id", "embedding",
-      c = 6, iters = 2, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
+    val c2 = canon(annTopK(df, AnnIndex(Coarse(Cells(6), iters = 2)),
+      queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
     assert(a.sameElements(c2))
   }
 
@@ -567,17 +582,18 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       Seq.tabulate(8)(d => math.sin(i * (d + 1) * 0.43))
     val df = spark.createDataFrame((0L until 120L).map(i => (i, vec(i))))
       .toDF("vec_id", "embedding")
-    val cb = Similarity.pqCodebooksTrained(df, "vec_id", "embedding",
-      m = 4, centroidEvery = 12, iters = 1)
-    val (cids, cvs) = Similarity.kmeansCodebook(df, "vec_id", "embedding",
-      centroidEvery = 24, iters = 2)
+    val spec = AnnIndex(Coarse(Every(24), iters = 2), Pq(4, 12, iters = 1))
+    val ix = annTrain(df, spec)
+    val (cids, cvs, cb) = (ix.cids, ix.cvs, ix.pq.get)
     val dir = java.nio.file.Files.createTempDirectory("graft_idx_t").toString
-    Similarity.saveIvfPqIndex(spark, dir, cids, cvs, cb)
+    Similarity.save(spark, dir, ix)
+    // loading is eager: the artifact can go as soon as load returns
+    val ix2 = try Similarity.load(spark, dir, spec) finally deleteDir(dir)
     // bit-exact round-trip of every double
-    val (cids2, cvs2) = Similarity.loadCoarseCodebook(spark, s"$dir/coarse")
+    val (cids2, cvs2) = (ix2.cids, ix2.cvs)
     assert(cids2.sameElements(cids))
     assert(cvs2.zip(cvs).forall { case (a, b) => a.sameElements(b) })
-    val cb2 = Similarity.loadPqCodebooks(spark, s"$dir/pq")
+    val cb2 = ix2.pq.get
     assert(cb2.m == cb.m && cb2.dsub == cb.dsub)
     assert((0 until cb.m).forall(j => (0 until cb.nCentroids).forall(c =>
       cb2.cents(j)(c).sameElements(cb.cents(j)(c)))))
@@ -585,10 +601,10 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     def canon(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2)).toSeq
-    val mem = canon(Similarity.ivfPqTopKWith(df, "vec_id", "embedding",
-      cb, cids, cvs, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
-    val per = canon(Similarity.ivfPqTopKPersisted(df, "vec_id", "embedding",
-      dir, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
+    val mem = canon(Similarity.search(df, "vec_id", "embedding",
+      ix, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
+    val per = canon(Similarity.search(df, "vec_id", "embedding",
+      ix2, queryPred = col("id") < 5, k = 3, nprobe = 2).collect())
     assert(per == mem, "persisted serve must equal in-memory serve")
     // the FULL production serving story composes (r13, refineExact over
     // ANY shortlist producer): train → persist → load → ADC shortlist →
@@ -597,11 +613,11 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2)).toSeq
     val refMem = canond(Similarity.refineExact(df, "vec_id", "embedding",
-      Similarity.ivfPqTopKWith(df, "vec_id", "embedding", cb, cids, cvs,
+      Similarity.search(df, "vec_id", "embedding", ix,
         queryPred = col("id") < 5, k = 6, nprobe = 2),
       queryPred = col("id") < 5, k = 3).collect())
     val refPer = canond(Similarity.refineExact(df, "vec_id", "embedding",
-      Similarity.ivfPqTopKPersisted(df, "vec_id", "embedding", dir,
+      Similarity.search(df, "vec_id", "embedding", ix2,
         queryPred = col("id") < 5, k = 6, nprobe = 2),
       queryPred = col("id") < 5, k = 3).collect())
     assert(refPer == refMem && refPer.nonEmpty,
@@ -611,19 +627,18 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
   test("ivfPqTopKRefined == independent driver-side exact re-rank of the ADC shortlist") {
     // the refine stage is a THEOREM, not a heuristic: refined(q) must
     // equal the exact-L2 top-k over exactly the rerank-sized shortlist
-    // ivfPqTopK returns — recomputed here with plain driver arithmetic
+    // the IVFADC index returns — recomputed here with plain driver arithmetic
     def vec(i: Long): Seq[Double] =
       Seq.tabulate(8)(d => math.sin(i * (d + 1) * 0.29))
     val df = spark.createDataFrame((0L until 150L).map(i => (i, vec(i))))
       .toDF("vec_id", "embedding")
-    val refined = Similarity.ivfPqTopKRefined(df, "vec_id", "embedding",
-        m = 4, pqCentroidEvery = 15, coarseCentroidEvery = 15,
-        queryPred = col("id") < 6, k = 3, rerank = 8, nprobe = 2)
+    val refined = annTopK(df,
+        AnnIndex(Coarse(Every(15)), Pq(4, 15), rerank = 8),
+        queryPred = col("id") < 6, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).map { case (q, rs) =>
         q -> rs.map(t => (t._2, t._3)).sortBy(t => (t._2, t._1)).toSeq }
-    val shortlist = Similarity.ivfPqTopK(df, "vec_id", "embedding",
-        m = 4, pqCentroidEvery = 15, coarseCentroidEvery = 15,
+    val shortlist = annTopK(df, AnnIndex(Coarse(Every(15)), Pq(4, 15)),
         queryPred = col("id") < 6, k = 8, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     def d2(a: Seq[Double], b: Seq[Double]): Double = {
@@ -657,8 +672,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val planted = Seq((97L, vec(1L).map(_ + 1e-4)))
     val df = spark.createDataFrame(base ++ planted)
       .toDF("vec_id", "embedding")
-    def run() = Similarity.ivfPqTopKResidual(df, "vec_id", "embedding",
-        m = 4, pqCentroidEvery = 12, coarseCentroidEvery = 24,
+    def run() = annTopK(df, AnnIndex(Coarse(Every(24)), ResidualPq(4, 12)),
         queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2))
@@ -670,10 +684,9 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     assert(q1.nonEmpty && q1.head._2 == 97L,
       s"planted near-copy must rank first for query 1, got ${q1.toSeq}")
     // trained variant serves the same contract (and actually trains)
-    val t = Similarity.ivfPqTopKResidual(df, "vec_id", "embedding",
-        m = 4, pqCentroidEvery = 12, coarseCentroidEvery = 24,
-        queryPred = col("id") < 4, k = 3, nprobe = 2,
-        pqIters = 1, coarseIters = 1)
+    val t = annTopK(df, AnnIndex(Coarse(Every(24), iters = 1),
+        ResidualPq(4, 12, iters = 1)),
+        queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(t.nonEmpty && t.forall(x => x._1 != x._2 && x._3 >= 0.0))
   }
@@ -691,41 +704,44 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val df = spark.createDataFrame(base ++ planted)
       .toDF("vec_id", "embedding")
     // cosine tier (no rerank): near-copy must survive int8 quantization
-    val cosRows = Similarity.ivfSq8TopK(df, "vec_id", "embedding",
-        centroidEvery = 24, queryPred = col("id") < 4, k = 3, nprobe = 2)
+    val cosRows = annTopK(df, AnnIndex(Coarse(Every(24)), Sq8),
+        queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val q1 = cosRows.filter(_._1 == 1L).sortBy(t => (-t._3, t._2))
     assert(q1.nonEmpty && q1.head._2 == 97L,
       s"planted near-copy must top the int8 cosine list, got ${q1.toSeq}")
     // refined tier ranks by exact L2 and equals refineExact over the
     // cosine shortlist computed independently
-    val refined = Similarity.ivfSq8TopK(df, "vec_id", "embedding",
-        centroidEvery = 24, queryPred = col("id") < 4, k = 3, rerank = 8,
-        nprobe = 2)
+    val refined = annTopK(df, AnnIndex(Coarse(Every(24)), Sq8, rerank = 8),
+        queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2))
-    val short = Similarity.ivfSq8TopK(df, "vec_id", "embedding",
-      centroidEvery = 24, queryPred = col("id") < 4, k = 8, nprobe = 2)
+    val short = annTopK(df, AnnIndex(Coarse(Every(24)), Sq8),
+      queryPred = col("id") < 4, k = 8, nprobe = 2)
     val manual = Similarity.refineExact(df, "vec_id", "embedding", short,
         queryPred = col("id") < 4, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2))
     assert(refined.sameElements(manual),
       "rerank path must equal refineExact over the int8 shortlist")
-    // With-codebook serve ≡ the inline trained serve (index/serve split)
+    // trained-index serve ≡ the inline train+serve (index/serve split);
+    // the trained coarse codebook is kmeansCodebook's
+    val trainedSpec = AnnIndex(Coarse(Every(24), iters = 1), Sq8)
+    val ix = annTrain(df, trainedSpec)
     val (cids, cvs) = Similarity.kmeansCodebook(df, "vec_id", "embedding",
       24, iters = 1)
-    val viaWith = Similarity.ivfSq8TopKWith(df, "vec_id", "embedding",
-        cids, cvs, queryPred = col("id") < 4, k = 3, nprobe = 2)
+    assert(ix.cids.sameElements(cids) &&
+      ix.cvs.zip(cvs).forall { case (a, b) => a.sameElements(b) })
+    val viaWith = Similarity.search(df, "vec_id", "embedding",
+        ix, queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
-    val inline = Similarity.ivfSq8TopK(df, "vec_id", "embedding",
-        centroidEvery = 24, queryPred = col("id") < 4, k = 3, nprobe = 2,
-        coarseIters = 1)
+    val inline = annTopK(df, trainedSpec,
+        queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
     assert(viaWith == inline)
     intercept[IllegalArgumentException] {
-      Similarity.ivfSq8TopK(df, "vec_id", "embedding", centroidEvery = 24,
-        queryPred = col("id") < 4, k = 5, rerank = 3) // rerank < k
+      annTopK(df, AnnIndex(Coarse(Every(24)), Sq8, rerank = 3),
+        queryPred = col("id") < 4, k = 5) // rerank < k
     }
   }
 
@@ -741,8 +757,8 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val planted = Seq((97L, vec(1L).map(_ + 1e-4)))
     val df = spark.createDataFrame(base ++ planted)
       .toDF("vec_id", "embedding")
-    def run() = Similarity.ivfHnswTopK(df, "vec_id", "embedding",
-        centroidEvery = 8, m = 4, queryPred = col("id") < 4, k = 3,
+    val hnswSpec = AnnIndex(Coarse(Every(8), hnsw = Some(4)))
+    def run() = annTopK(df, hnswSpec, queryPred = col("id") < 4, k = 3,
         nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, -t._3, t._2))
@@ -779,12 +795,16 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
           s"cell $cell is not a layer-0 local max for a vector")
       }
     }
-    // graph-reuse serve ≡ inline (index/serve split)
-    val viaWith = Similarity.ivfHnswTopKWith(df, "vec_id", "embedding", g,
+    // graph-reuse serve ≡ inline (index/serve split); the trained graph
+    // is the one built above
+    val ix = annTrain(df, hnswSpec)
+    assert(ix.hnsw.get.cids.toSeq == g.cids.toSeq &&
+      ix.hnsw.get.adj.map(_.map(_.toSeq).toSeq).toSeq ==
+        g.adj.map(_.map(_.toSeq).toSeq).toSeq)
+    val viaWith = Similarity.search(df, "vec_id", "embedding", ix,
         queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
-    val inline = Similarity.ivfHnswTopK(df, "vec_id", "embedding",
-        centroidEvery = 8, m = 4, queryPred = col("id") < 4, k = 3,
+    val inline = annTopK(df, hnswSpec, queryPred = col("id") < 4, k = 3,
         nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
     assert(viaWith == inline)
@@ -812,27 +832,34 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val cents = vecs.filter(col("id") % 8 === 0).orderBy("id").collect()
     val g = Similarity.buildHnswGraph(cents.map(_.getLong(0)),
       cents.map(_.getSeq[Double](1).toArray), m = 4)
+    val spec = AnnIndex(Coarse(Every(8), hnsw = Some(4)))
+    val ix = annTrain(df, spec)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_t").toString
-    Similarity.saveHnswGraph(spark, dir, g)
-    val g2 = Similarity.loadHnswGraph(spark, dir)
+    Similarity.save(spark, dir, ix)
+    // loading is eager: the artifact can go as soon as load returns
+    val loaded = try Similarity.load(spark, dir, spec) finally deleteDir(dir)
+    val g2 = loaded.hnsw.get
+    assert(ix.hnsw.get.cids.toSeq == g.cids.toSeq &&
+      ix.hnsw.get.adj.map(_.map(_.toSeq).toSeq).toSeq ==
+        g.adj.map(_.map(_.toSeq).toSeq).toSeq) // trained graph == g
     assert(g2.cids.toSeq == g.cids.toSeq)
     assert(g2.levels.toSeq == g.levels.toSeq)
     assert(g2.cvs.map(_.toSeq).toSeq == g.cvs.map(_.toSeq).toSeq)
     assert(g2.adj.map(_.map(_.toSeq).toSeq).toSeq ==
       g.adj.map(_.map(_.toSeq).toSeq).toSeq)
     assert(g2.entry == g.entry && g2.maxLevel == g.maxLevel)
-    val fromArtifact = Similarity.ivfHnswTopKPersisted(df, "vec_id",
-        "embedding", dir, queryPred = col("id") < 4, k = 3, nprobe = 2)
+    val fromArtifact = Similarity.search(df, "vec_id",
+        "embedding", loaded, queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
-    val fromBuild = Similarity.ivfHnswTopKWith(df, "vec_id", "embedding",
-        g, queryPred = col("id") < 4, k = 3, nprobe = 2)
+    val fromBuild = Similarity.search(df, "vec_id", "embedding",
+        ix, queryPred = col("id") < 4, k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
     assert(fromArtifact == fromBuild,
       "serving from the persisted graph diverged from the in-memory build")
-    intercept[Exception] { // empty dir: schema inference fails honestly
-      Similarity.loadHnswGraph(spark,
-        java.nio.file.Files.createTempDirectory("graft_hnsw_e").toString)
-    }
+    val empty = java.nio.file.Files.createTempDirectory("graft_hnsw_e").toString
+    try intercept[Exception] { // empty dir: no artifact, fails honestly
+      Similarity.load(spark, empty, spec)
+    } finally deleteDir(empty)
   }
 
   test("quantizeInt8: codes bounded, round-trip error bounded by scale/2, shuffle-free") {
@@ -2044,20 +2071,23 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
         else Seq(0.0f, 1.0f, 0.1f * (i % 5))
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
-    val range = Similarity.ivfRangeSearch(vecs, "vec_id", "embedding",
-      c = 4, queryPred = col("id") < 6, simMin = 0.9, nprobe = 2)
+    val range = Similarity.rangeSearch(vecs, "vec_id", "embedding",
+      annTrain(vecs, AnnIndex(Coarse(Cells(4)))),
+      queryPred = col("id") < 6, simMin = 0.9, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val topAll = Similarity.ivfTopKFixedC(vecs, "vec_id", "embedding",
-      c = 4, queryPred = col("id") < 6, k = 1000, nprobe = 2)
+    val topAll = annTopK(vecs, AnnIndex(Coarse(Cells(4))),
+      queryPred = col("id") < 6, k = 1000, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter(_._3 >= 0.9).toSet
     assert(range.nonEmpty && range == topAll)
     intercept[IllegalArgumentException] {
-      Similarity.ivfRangeSearch(vecs, "vec_id", "embedding", c = 0,
+      Similarity.rangeSearch(vecs, "vec_id", "embedding",
+        annTrain(vecs, AnnIndex(Coarse(Cells(0)))),
         queryPred = col("id") < 1, simMin = 0.5)
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfRangeSearch(vecs, "vec_id", "embedding", c = 4,
+      Similarity.rangeSearch(vecs, "vec_id", "embedding",
+        annTrain(vecs, AnnIndex(Coarse(Cells(4)))),
         queryPred = col("id") < 1, simMin = 1.5)
     }
   }

@@ -570,9 +570,11 @@ class TrainingPropertySpec extends AnyFunSuite with SparkSuite {
       .map(_.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) })
     val (c, np, simMin) = (4, 2, 0.3)
     forAll(corpusG, n = 12) { rows =>
-      val got = Similarity.ivfRangeSearch(
-          rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-          c = c, queryPred = col("id") < 5, simMin = simMin, nprobe = np)
+      val df = rows.toDF("vec_id", "embedding")
+      val got = Similarity.rangeSearch(df, "vec_id", "embedding",
+          Similarity.train(df, "vec_id", "embedding",
+            Similarity.AnnIndex(Similarity.Coarse(Similarity.Cells(c)))),
+          queryPred = col("id") < 5, simMin = simMin, nprobe = np)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
       // independent recompute: stride codebook (every n/c-th id), rounded
