@@ -146,17 +146,12 @@ object Queries {
   private val tableNames =
     Seq("car", "household", "household_member", "human", "orphan", "pet")
 
-  // one lineage-pipeline run per session — six m-queries share the edges
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap[SparkSession, DataFrame]()
-
-  private def fixtureEdges(s: SparkSession): DataFrame =
-    edgeCache.getOrElseUpdate(s, {
-      val (deps, _) = LineagePipeline.dependencies(
-        CatalogSource.fixtureCatalog(s).toDF())
-      DependencyGraph.dedupEdges(DependencyGraph.edges(deps))
-        .select("src", "dst").persist()
-    })
+  // the fixture's deduplicated edge list, over the local lineage rows
+  private def fixtureEdges(s: SparkSession): DataFrame = {
+    val (deps, _) = LineagePipeline.dependencies(
+      CatalogSource.fixtureCatalog(s).toDF())
+    DependencyGraph.dedupEdges(DependencyGraph.edges(deps)).select("src", "dst")
+  }
 
   // ---- query registry ---------------------------------------------------
 
@@ -191,12 +186,9 @@ object Queries {
     // must reproduce the corpus's known-true edge set — same oracle as
     // m3, independently derived through a different extractor
     "m9_lineage_exact" -> ((s, _) => {
-      val (deps, _) = {
-        val lin = LineagePipeline.lineageExact(
+      val deps = LineagePipeline.lineageExact(
           CatalogSource.views(CatalogSource.fixtureCatalog(s).toDF()))
-        (lin.filter(col("error").isNull).select("view", "deps"),
-          lin.filter(col("error").isNotNull))
-      }
+        .filter(col("error").isNull).select("view", "deps")
       DependencyGraph.dedupEdges(DependencyGraph.edges(deps))
         .select("src", "dst").orderBy("src", "dst")
     }),

@@ -20,11 +20,15 @@ import graft.sources.CatalogSource
 object MetadataSql {
 
   /** Register the full analysis as temp views derived from `catalog`
-    * (a `system.tables`-shaped DataFrame). Views are lazy plans — each SQL
-    * query re-optimizes end-to-end through Catalyst (filter pushdown into
-    * the catalog scan included). `graft_closure` is the exception: it
-    * reads the edge list to the driver once, here, and each query then
-    * runs its per-source BFS over that snapshot. */
+    * (a `system.tables`-shaped DataFrame). The catalog views
+    * (`graft_catalog`, `graft_objects`, `graft_objects_by_engine`) are lazy
+    * plans over `catalog`. Every lineage-derived view is a snapshot taken
+    * here: [[LineagePipeline.dependencies]] parses the DDL once, in one
+    * job, and `graft_view_dependencies`, `graft_lineage_errors`,
+    * `graft_edges`, `graft_node_classes`, `graft_isolated_objects`,
+    * `graft_fan_out`/`graft_fan_in` and `graft_closure` (which also reads
+    * the edge list to the driver once, here) are plans over those local
+    * rows. Later catalog changes need a re-register. */
   def register(spark: SparkSession, catalog: DataFrame): Unit = {
     catalog.createOrReplaceTempView("graft_catalog")
 

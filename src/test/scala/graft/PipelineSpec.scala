@@ -1,7 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestBridge
 import graft.model.MermaidOptions
 import graft.operators.{DependencyGraph, LineagePipeline}
 import graft.sources.CatalogSource
@@ -48,6 +57,90 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(m("test.v_household_health_score") == List("test.v_household_flags"))
     assert(m("test.v_pet_ownership") == List("test.human", "test.pet"))
     assert(m("test.v_human_profile") == List("test.human", "test.v_car_inventory"))
+  }
+
+  /** Spark jobs `body` starts on this thread. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val tag = "graft.spec.jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    try {
+      val out = body
+      TestBridge.waitListenerBus(spark)
+      (out, jobs.get())
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+  }
+
+  test("dependencies parses the catalog in one job; both frames are local rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_catalog")
+    try {
+      val path = dir.resolve("catalog.parquet").toString
+      catalog.write.parquet(path)
+      val onDisk = CatalogSource.readParquet(spark, path)
+      onDisk.count() // warm the scan so lazy set-up jobs stay out of the count
+      val ((deps, errs), jobs) = jobsOf(LineagePipeline.dependencies(onDisk))
+      assert(jobs == 1)
+      for (df <- Seq(deps, errs)) {
+        val plan = Plans.nodes(df.queryExecution.executedPlan)
+        assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))), plan)
+        assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), plan)
+        assert(!plan.exists(_.isInstanceOf[Exchange]), plan)
+      }
+      assert(deps.count() == 7 && errs.count() == 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("dependencies rows come in (database, name) order, equal to the lazy lineage") {
+    import spark.implicits._
+    // as view ids "a-b.c" < "a.z", but as (database, name) ("a", "z") < ("a-b", "c")
+    val extra = Seq(("a-b", "c", "View", "CREATE VIEW c AS SELECT * FROM t"),
+      ("a", "z", "View", "CREATE VIEW z AS SELECT * FROM t"))
+      .toDF("database", "name", "engine", "create_table_query")
+    val shuffled = catalog.union(extra).orderBy(desc("name"))
+    val lazyDeps = LineagePipeline.lineage(CatalogSource.views(shuffled))
+      .filter(col("error").isNull).select("view", "deps").collect().toSeq
+    val (deps, _) = LineagePipeline.dependencies(shuffled)
+    assert(deps.collect().toSeq == lazyDeps)
+    assert(lazyDeps.map(_.getString(0)).take(2) == Seq("a.z", "a-b.c"))
+  }
+
+  /** Runs `frames` and asserts it left no persistent RDD, no cached relation
+    * and no conf change behind. */
+  private def assertLeavesNoState(frames: => Seq[DataFrame]): Unit = {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val cacheEmptyBefore = cache.isEmpty
+    val confBefore = spark.conf.getAll
+    for (df <- frames) {
+      df.collect()
+      assert(df.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r }.isEmpty)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+    assert(cache.isEmpty == cacheEmptyBefore)
+    assert(spark.conf.getAll == confBefore)
+  }
+
+  test("dependencies, toMermaid and the m3-m7 registry entries leave no state behind") {
+    assertLeavesNoState {
+      val (deps, errs) = LineagePipeline.dependencies(catalog)
+      LineagePipeline.toMermaid(catalog)
+      Seq(deps, errs) ++ Seq("m3_lineage_edges", "m4_fanout", "m5_isolated",
+        "m6_closure", "m7_refresh_levels").map(Queries.all(_)(spark, ""))
+    }
   }
 
   test("graph ops: edges, dedup, classify, isolated, closure") {
@@ -106,12 +199,8 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   test("closure and refresh levels leave no persisted RDDs or conf changes") {
     import spark.implicits._
     val edges = Seq("t" -> "a", "a" -> "b", "b" -> "a", "b" -> "c").toDF("src", "dst")
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val spBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    DependencyGraph.transitiveClosure(edges).collect()
-    DependencyGraph.refreshLevels(Seq("t", "z").toDF("id"), edges).collect()
-    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == spBefore)
+    assertLeavesNoState(Seq(DependencyGraph.transitiveClosure(edges),
+      DependencyGraph.refreshLevels(Seq("t", "z").toDF("id"), edges)))
   }
 
   test("nodes keep a view whose deps are null") {
@@ -132,6 +221,46 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(out.contains("  test.v_household_flags -.-> test.v_household_health_score"))
     assert(out.endsWith("\n"))
     assert(!out.contains("\""))
+  }
+
+  test("mermaid output on the fixture is pinned byte for byte") {
+    // node and edge lines follow the views' order, sorted by view id
+    assert(LineagePipeline.toMermaid(catalog) ==
+      """graph LR
+        |  classDef chTable fill:#ffdd00,stroke:#000000,stroke-width:2px,color:#000000
+        |  classDef chView fill:#d6e4f8,stroke:#154360,stroke-width:2px,color:#154360
+        |
+        |  test.v_car_inventory:::chView
+        |  test.car:::chTable
+        |  test.household:::chTable
+        |  test.human:::chTable
+        |  test.v_city_household_flag_stats:::chView
+        |  test.v_household_flags:::chView
+        |  test.household_member:::chTable
+        |  test.pet:::chTable
+        |  test.v_household_health_score:::chView
+        |  test.v_household_roster:::chView
+        |  test.v_human_profile:::chView
+        |  test.v_pet_ownership:::chView
+        |
+        |  test.car -.-> test.v_car_inventory
+        |  test.household -.-> test.v_car_inventory
+        |  test.human -.-> test.v_car_inventory
+        |  test.v_household_flags -.-> test.v_city_household_flag_stats
+        |  test.car -.-> test.v_household_flags
+        |  test.household -.-> test.v_household_flags
+        |  test.household_member -.-> test.v_household_flags
+        |  test.pet -.-> test.v_household_flags
+        |  test.v_household_flags -.-> test.v_household_health_score
+        |  test.car -.-> test.v_household_roster
+        |  test.household -.-> test.v_household_roster
+        |  test.household_member -.-> test.v_household_roster
+        |  test.pet -.-> test.v_household_roster
+        |  test.human -.-> test.v_human_profile
+        |  test.v_car_inventory -.-> test.v_human_profile
+        |  test.human -.-> test.v_pet_ownership
+        |  test.pet -.-> test.v_pet_ownership
+        |""".stripMargin)
   }
 
   test("flagship entry returns rows") {
