@@ -1,6 +1,6 @@
 package graft
 
-/** User-facing CH-SQL runner: execute a ClickHouse SELECT string against a
+/** User-facing CH-SQL runner: execute ClickHouse statements against a
   * directory of parquet tables (table `t` resolves to `<dir>/t.parquet`).
   *
   * Usage: runMain graft.Sql <tableDir> "<CH SQL>" [maxRows]
@@ -12,43 +12,47 @@ package graft
 object Sql {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Sql <tableDir> \"<CH SQL>\" [maxRows]")
-    val dir = args(0)
-    val query = args(1)
-    val maxRows = if (args.length > 2) args(2).toInt else 50
     val spark = Session.local()
+    try run(spark, args(0), args(1), if (args.length > 2) args(2).toInt else 50)
+    finally spark.stop()
+  }
+
+  /** Run a ';'-separated script against the tables of `dir`, printing
+    * each statement's result. */
+  private[graft] def run(spark: org.apache.spark.sql.SparkSession, dir: String,
+      query: String, maxRows: Int): Unit = {
     // catalog-first resolution so CREATE VIEW results are queryable;
     // otherwise table t reads <dir>/t.parquet
     def resolve(n: String): org.apache.spark.sql.DataFrame =
       if (spark.catalog.tableExists(n)) spark.table(n)
       else spark.read.parquet(s"$dir/$n.parquet")
     // ';'-separated statements, each dispatched through the statement
-    // layer (SELECT / EXPLAIN / CREATE VIEW / SET)
+    // layer
     val stmts = splitStatements(query)
     for ((stmt, i) <- stmts.zipWithIndex) {
-      // SHOW TABLES needs the directory listing — a CLI concern, so it
-      // lives here rather than in the resolver-based statement layer
-      if (stmt.toUpperCase(java.util.Locale.ROOT).startsWith("SHOW TABLES")) {
-        import spark.implicits._
+      val c = new chsql.ChSql.Cur(stmt)
+      // SHOW TABLES also lists the directory's tables — a CLI concern, so
+      // the names are added here, on the shared SHOW TABLES reader
+      if (c.eatKw("SHOW", "TABLES")) {
         val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten
           .filter(_.getName.endsWith(".parquet"))
           .map(_.getName.stripSuffix(".parquet"))
-        val views = spark.catalog.listTables().collect().map(_.name).toSeq
-        render((files ++ views).distinct.sorted.toDF("name"), None, maxRows)
+        render(chsql.ChDdl.showTables(spark, c, files), None, maxRows)
       } else {
         // run under a query id so KILL QUERY / SHOW PROCESSLIST see it
         operators.AdminOps.withQueryId(spark, s"cli-$i", stmt) {
-          val (df, fmt) = chsql.ChSql.statement(spark, stmt)(resolve)
+          val (df, fmt) = chsql.ChSql.statement(spark, c)(resolve)
           render(df, fmt, maxRows)
         }
       }
     }
-    spark.stop()
   }
 
   /** Split a script on its `;` tokens. The split rides the ChSql lexer, so
     * a `;` inside a string literal (escaped quotes included), a backquoted
-    * identifier or a comment does not end a statement. Blank statements
-    * are dropped. */
+    * identifier or a comment does not end a statement; the inline rows of
+    * an `INSERT ... FORMAT f` are data and run to the end of the script.
+    * Blank statements are dropped. */
   def splitStatements(script: String): Seq[String] = {
     val cuts = chsql.ChSql.lexPos(script).collect {
       case (chsql.ChSql.TP(";"), start, _) => start

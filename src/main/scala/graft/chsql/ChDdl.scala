@@ -2,9 +2,12 @@ package graft.chsql
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import ChSql.{Cur, TNum, TP, TStr}
 
-/** The DDL/DML statement surface of the CH grammar as *text*, planned onto
-  * the operators that already implement the semantics:
+/** The DDL/DML/admin statements of the CH grammar, read from the tokens
+  * of the one statement front end ([[ChSql.statement]] lexes each
+  * statement once and hands its [[ChSql.Cur]] here) and planned onto the
+  * operators that already implement the semantics:
   *
   *  - `CREATE TABLE name (cols) ENGINE = E[(v)] [ORDER BY ...] [PARTITION
   *    BY ...]` (createTableStmt, ClickHouseParser.py:4136-4183; schema
@@ -12,11 +15,11 @@ import org.apache.spark.sql.functions._
   *    [[graft.model.ChTypes]], engine sorting key / version / partition
   *    key carried as table properties (`graft.order_by`, `graft.version`,
   *    partition key as real Spark partitioning).
-  *  - `INSERT INTO t [(cols)] VALUES|SELECT` (insertStmt,
+  *  - `INSERT INTO t [(cols)] VALUES|SELECT|FORMAT` (insertStmt,
   *    ClickHouseParser.py:7607-7706, data clauses 7796-7856) → a
   *    distributed append (`insertInto`) — new parquet files next to the
   *    existing ones, exactly CH's new-part shape. Unlisted columns fill
-  *    with NULL (CH fills defaults).
+  *    with their default.
   *  - `ALTER TABLE t DELETE|UPDATE ... WHERE` (alterStmt,
   *    ClickHouseParser.py:2242-2344) → [[graft.operators.Mutations]]
   *    transforms inside a rewrite-and-swap: write rewritten data as a new
@@ -29,9 +32,13 @@ import org.apache.spark.sql.functions._
   *    FINAL applies the ReplacingMergeTree collapse
   *    ([[graft.operators.ChOps.selectFinal]]) using the engine keys from
   *    CREATE TABLE.
-  *  - `DROP TABLE|VIEW`, `TRUNCATE`, `RENAME TABLE a TO b`, `USE db`,
-  *    `SHOW DATABASES|TABLES|CREATE TABLE` (7149-7357, 8463-8690,
-  *    14204-14248, 11994-13901) → Spark catalog operations.
+  *  - `DROP`, `TRUNCATE`, `RENAME`, `EXCHANGE`, `USE`, `ATTACH`/`DETACH`,
+  *    the `SHOW` family, `CHECK`, `EXISTS`, `KILL`, `SYSTEM`, `WATCH`,
+  *    dictionaries and SQL functions (7149-7357, 8463-8690, 11994-14321)
+  *    → Spark catalog operations and the session registries.
+  *
+  * Every statement is parsed to its end before it acts: a clause a
+  * handler does not know is a `ChSql:` error, never silently dropped.
   *
   * Scale note: every data-touching verb here is a distributed job — the
   * driver never materializes rows. INSERT appends files; mutations are a
@@ -41,455 +48,493 @@ import org.apache.spark.sql.functions._
   */
 object ChDdl {
 
-  // ---- statement-head patterns (compiled once; dispatch() is on the
-  // hot path for every statement, including plain SELECTs) ----
-
-  // CREATE TABLE head only — the column list is NOT regex-captured: its
-  // body is cut out by token-level paren matching (matchParenEnd), so a
-  // DEFAULT string literal containing `) ENGINE =` cannot misparse
-  private val createTableHeadRe =
-    ("(?is)^CREATE\\s+(TEMPORARY\\s+)?TABLE\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)\\s*(\\(.*)$").r
-  // CREATE MATERIALIZED VIEW name [TO target] [POPULATE] AS SELECT
-  // (ClickHouseParser.py:4085-4133); LIVE VIEW (livе-view kind) rides
-  // the same registry with complete-mode refresh semantics
-  private val createMvRe =
-    ("(?is)^CREATE\\s+(MATERIALIZED|LIVE)\\s+VIEW\\s+" +
-      "(?:IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)" +
-      "(?:\\s+TO\\s+([\\w.]+))?(\\s+POPULATE)?\\s+AS\\s+" +
-      "((?:SELECT|WITH)\\s+.*)$").r
-  // WATCH view [EVENTS] [LIMIT n] (watchStmt, 14249-14321); EVENTS
-  // switches to the version-heartbeat stream; the LIMIT (number of
-  // refresh generations to emit) is accepted and left to the caller's
-  // sink, which owns the subscription lifetime
-  private val watchRe =
-    "(?is)^WATCH\\s+([\\w.]+)(\\s+EVENTS)?(?:\\s+LIMIT\\s+\\d+)?\\s*$".r
-  // CTAS (createTableStmt subquery form, 4136-4183): no column list —
-  // the schema comes from the SELECT
-  private val ctasRe =
-    ("(?is)^CREATE\\s+(TEMPORARY\\s+)?TABLE\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)\\s*" +
-      "(?:ENGINE\\s*=\\s*(\\w+)\\s*(?:\\(([^)]*)\\))?\\s*)?" +
-      "((?:ORDER|PARTITION)\\s+BY\\s+[^;]*?)?\\s*AS\\s+" +
-      "((?:SELECT|WITH)\\s+.*)$").r
-  // structure clone (createTableStmt `AS identifier` form): copies the
-  // source's declared columns, engine, and clauses; an ENGINE override
-  // swaps the engine line of the re-runnable SHOW CREATE text
-  private val cloneRe =
-    ("(?is)^CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)\\s+AS\\s+" +
-      "([A-Za-z_][\\w.]*)\\s*(?:ENGINE\\s*=\\s*(\\w+)\\s*" +
-      "(?:\\(([^)]*)\\))?)?\\s*$").r
-  private val insertRe =
-    ("(?is)^INSERT\\s+INTO\\s+(?!FUNCTION)(?:TABLE\\s+)?([\\w.]+)\\s*" +
-      "(?:\\(([\\w\\s,`]*)\\)\\s*)?(VALUES\\s*(.*)|(?:SELECT|WITH)\\s+.*)$").r
-  // INSERT ... FORMAT <fmt> <inline rows> (insertStmt data clause,
-  // ClickHouseParser.py:7796-7856): the rows ride inline after FORMAT
-  private val insertFormatRe =
-    ("(?is)^INSERT\\s+INTO\\s+(?!FUNCTION)(?:TABLE\\s+)?([\\w.]+)\\s*" +
-      "(?:\\(([\\w\\s,`]*)\\)\\s*)?FORMAT\\s+(\\w+)\\s+(.*)$").r
-  // lightweight DELETE statement (deleteStmt — CH's `DELETE FROM t
-  // WHERE p` is the mask-based mutation; the text layer runs the same
-  // rewrite the heavy mutation uses, which is the mask's compacted end
-  // state)
-  private val deleteFromRe =
-    "(?is)^DELETE\\s+FROM\\s+([\\w.]+)\\s+((?:IN|WHERE)\\s+.*)$".r
-  // lightweight UPDATE statement (updateStmt, ClickHouseParser.py:8187-
-  // 8265): UPDATE t SET a = e, ... [IN PARTITION p] WHERE pred — the
-  // standalone twin of ALTER ... UPDATE, same partition-pruned mutation
-  private val updateStmtRe =
-    "(?is)^UPDATE\\s+([\\w.]+)\\s+SET\\s+(.*)$".r
-  private val alterRe = "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)\\s+(.*)$".r
-  private val createDbRe =
-    ("(?is)^CREATE\\s+DATABASE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?([\\w]+)" +
-      "(?:\\s+ENGINE\\s*=\\s*\\w+)?\\s*$").r
-  private val dropDbRe =
-    "(?is)^DROP\\s+DATABASE\\s+(IF\\s+EXISTS\\s+)?([\\w]+)\\s*$".r
-  private val dropRe = "(?is)^DROP\\s+(TABLE|VIEW)\\s+(IF\\s+EXISTS\\s+)?([\\w.]+)\\s*$".r
-  private val truncateRe = "(?is)^TRUNCATE\\s+(?:TABLE\\s+)?([\\w.]+)\\s*$".r
-  private val renameRe = "(?is)^RENAME\\s+TABLE\\s+(.*)$".r
-  private val useRe = "(?is)^USE\\s+([\\w]+)\\s*$".r
-  private val optimizeRe =
-    ("(?is)^OPTIMIZE\\s+TABLE\\s+([\\w.]+)" +
-      "(?:\\s+PARTITION\\s+(.+?))?(\\s+FINAL)?(\\s+DEDUPLICATE)?\\s*$").r
-  private val showCreateRe =
-    "(?is)^SHOW\\s+CREATE\\s+(?:TABLE\\s+|VIEW\\s+)?([\\w.]+)\\s*$".r
-  // dictionary DDL (dictionaryStmt — CREATE DICTIONARY name (schema)
-  // PRIMARY KEY k SOURCE(...) [LAYOUT(...)] [RANGE(MIN lo MAX hi)]
-  // [LIFETIME(...)]). Point layouts (FLAT/HASHED/CACHE/DIRECT) are all
-  // the same broadcast hash; RANGE_HASHED adds the interval dimension
-  // (rangeClause, ClickHouseParser.py:4005-4048). LIFETIME is ignored:
-  // refresh is SYSTEM RELOAD DICTIONARY.
-  private val createDictRe =
-    ("(?is)^CREATE\\s+DICTIONARY\\s+(IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)\\s*" +
-      "\\((.*?)\\)\\s*PRIMARY\\s+KEY\\s+(\\w+)\\s+(SOURCE\\s*\\(.*)$").r
-  private val dictSourceFileRe =
-    ("(?is)SOURCE\\s*\\(\\s*FILE\\s*\\(\\s*path\\s+'([^']+)'" +
-      "(?:\\s+format\\s+'(\\w+)')?\\s*\\)\\s*\\)").r
-  // SOURCE(CLICKHOUSE(TABLE 'name')): the dictionary is backed by a
-  // table of this engine — the CH self-referential dictionary source.
-  private val dictSourceTableRe =
-    "(?is)SOURCE\\s*\\(\\s*CLICKHOUSE\\s*\\(\\s*TABLE\\s+'([\\w.]+)'\\s*\\)\\s*\\)".r
-  private val dictLayoutRe =
-    "(?is)LAYOUT\\s*\\(\\s*(\\w+)\\s*(?:\\(\\s*\\))?\\s*\\)".r
-  private val dictRangeRe =
-    "(?is)RANGE\\s*\\(\\s*MIN\\s+(\\w+)\\s+MAX\\s+(\\w+)\\s*\\)".r
-  private val dropDictRe =
-    "(?is)^DROP\\s+DICTIONARY\\s+(IF\\s+EXISTS\\s+)?([\\w.]+)\\s*$".r
-  // admin verbs (checkStmt 3807-3837, existsStmt 7358-7419,
-  // killStmt 8274-8365, systemStmt 13902-14107)
-  // ATTACH/DETACH (attachStmt 3843-3879; the DETACH alternatives of
-  // dropStmt 7149-7357): CH moves detached parts to a `detached/`
-  // directory and forgets the table; ATTACH re-registers it from there.
-  private val detachRe =
-    "(?is)^DETACH\\s+(TABLE|VIEW|DICTIONARY)\\s+(IF\\s+EXISTS\\s+)?([\\w.]+)\\s*$".r
-  private val attachRe =
-    "(?is)^ATTACH\\s+(TABLE|DICTIONARY)\\s+(IF\\s+NOT\\s+EXISTS\\s+)?([\\w.]+)\\s*$".r
-  private val checkRe = "(?is)^CHECK\\s+TABLE\\s+([\\w.]+)\\s*$".r
-  private val existsRe = "(?is)^EXISTS\\s+(?:TABLE\\s+)?([\\w.]+)\\s*$".r
-  private val killRe =
-    "(?is)^KILL\\s+QUERY\\s+WHERE\\s+query_id\\s*=\\s*'([^']*)'\\s*$".r
-  private val killMutationRe =
-    "(?is)^KILL\\s+MUTATION\\s+WHERE\\s+(.+?)\\s*$".r
-  // createFunctionStmt / dropStmt FUNCTION alternative: SQL lambda UDFs
-  // (`CREATE FUNCTION f AS (a, b) -> a + b`) — see ChSql.sqlFuncs
-  private val createFuncRe =
-    ("(?is)^CREATE\\s+(OR\\s+REPLACE\\s+)?FUNCTION\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_]\\w*)\\s+AS\\s+(.+)$").r
-  private val dropFuncRe =
-    "(?is)^DROP\\s+FUNCTION\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_]\\w*)\\s*$".r
-  private val showCreateFuncRe =
-    "(?is)^SHOW\\s+CREATE\\s+FUNCTION\\s+([A-Za-z_]\\w*)\\s*$".r
-  // exchangeStmt: `EXCHANGE TABLES a AND b` — atomic name swap
-  private val exchangeRe =
-    "(?is)^EXCHANGE\\s+TABLES\\s+([\\w.]+)\\s+AND\\s+([\\w.]+)\\s*$".r
-  private val renameDbRe =
-    "(?is)^RENAME\\s+DATABASE\\s+(\\w+)\\s+TO\\s+(\\w+)\\s*$".r
-  private val systemRe = "(?is)^SYSTEM\\s+(\\w+(?:\\s+\\w+)*?)(?:\\s+'([^']*)')?\\s*$".r
-  // showStmt family (ClickHouseParser.py:11994-13901): metadata, settings
-  // and access introspection. Single-user engine — the access surfaces
-  // report the implicit all-powerful `default` user, the cluster
-  // surfaces the one local "cluster" Spark local mode is.
-  private val showColumnsRe =
-    ("(?is)^SHOW\\s+(?:EXTENDED\\s+)?(?:FULL\\s+)?(?:COLUMNS|FIELDS)\\s+" +
-      "(?:FROM|IN)\\s+([\\w.]+)(?:\\s+(NOT\\s+)?(ILIKE|LIKE)\\s+'([^']*)')?\\s*$").r
-  private val showIndexRe =
-    ("(?is)^SHOW\\s+(?:EXTENDED\\s+)?(?:INDEX|INDEXES|INDICES|KEYS)\\s+" +
-      "(?:FROM|IN)\\s+([\\w.]+)\\s*$").r
-  private val showGrantsRe =
-    ("(?is)^SHOW\\s+GRANTS(?:\\s+FOR\\s+(\\w+))?" +
-      "(?:\\s+WITH\\s+IMPLICIT)?(?:\\s+FINAL)?\\s*$").r
-  private val showSettingsRe =
-    "(?is)^SHOW\\s+(CHANGED\\s+)?SETTINGS(?:\\s+(ILIKE|LIKE)\\s+'([^']*)')?\\s*$".r
-  private val showSettingRe = "(?is)^SHOW\\s+SETTING\\s+(\\w+)\\s*$".r
-  private val showFunctionsRe =
-    "(?is)^SHOW\\s+FUNCTIONS(?:\\s+(ILIKE|LIKE)\\s+'([^']*)')?\\s*$".r
-  private val showClusterRe = "(?is)^SHOW\\s+CLUSTER\\s+'([^']*)'\\s*$".r
-  private val showClustersRe =
-    "(?is)^SHOW\\s+CLUSTERS(?:\\s+(ILIKE|LIKE)\\s+'([^']*)')?\\s*$".r
-  private val showCreateAccessRe =
-    ("(?is)^SHOW\\s+CREATE\\s+(USER|ROLE|(?:ROW\\s+)?POLICY|QUOTA|" +
-      "(?:SETTINGS\\s+)?PROFILE)\\s+(\\w+)\\s*$").r
-  private val showCreateDbRe =
-    "(?is)^SHOW\\s+CREATE\\s+DATABASE\\s+(\\w+)\\s*$".r
-  private val showCreateDictRe =
-    "(?is)^SHOW\\s+CREATE\\s+DICTIONARY\\s+([\\w.]+)\\s*$".r
-  private val showRolesRe =
-    "(?is)^SHOW\\s+(?:CURRENT\\s+|ENABLED\\s+)?ROLES\\s*$".r
-  private val showProfilesRe =
-    "(?is)^SHOW\\s+(?:SETTINGS\\s+)?PROFILES\\s*$".r
-  private val showPoliciesRe =
-    "(?is)^SHOW\\s+(?:ROW\\s+)?POLICIES(?:\\s+.*)?$".r
-  private val showQuotaRe = "(?is)^SHOW\\s+(?:CURRENT\\s+)?QUOTA\\s*$".r
-
-
-  /** Try to dispatch `text` as a DDL/DML statement. None = not a DDL head,
-    * caller falls through to the SELECT path. Each Some result is a
-    * one-column status frame (or a result frame for SHOW/metadata verbs). */
-  /** Statement heads that may carry an `ON CLUSTER` clause
-    * (clusterClause, ClickHouseParser.py:5461-5530). */
-  private val clusterableHeads = Set("CREATE", "ALTER", "DROP", "RENAME",
-    "TRUNCATE", "ATTACH", "DETACH", "OPTIMIZE", "KILL", "UPDATE", "DELETE")
-
-  /** Drop a top-level `ON CLUSTER <id|'str'>` clause from a DDL head:
-    * cluster-wide execution is the only mode a single engine has, so the
-    * topology name is accepted and discarded (the GLOBAL treatment).
-    * Token-level, and only in the statement header (before any top-level
-    * AS/SELECT), so join conditions on a column named `cluster` and
-    * literals containing the words cannot misparse. */
-  private def stripOnCluster(text: String): String = {
-    if (!text.toUpperCase(java.util.Locale.ROOT).contains("CLUSTER"))
-      return text
-    val head = text.split("\\s+", 2)(0).toUpperCase(java.util.Locale.ROOT)
-    if (!clusterableHeads(head)) return text
-    val toks = try ChSql.lexPos(text) catch { case _: Exception => return text }
-    var depth = 0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-        case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-        case (id: ChSql.TId, _, _) if depth == 0 &&
-            (id.up == "AS" || id.up == "SELECT") =>
-          return text // clusterClause lives in the header only
-        case (id: ChSql.TId, b, _) if depth == 0 && id.up == "ON" =>
-          (toks.lift(i + 1), toks.lift(i + 2)) match {
-            case (Some((c: ChSql.TId, _, _)),
-                  Some((ChSql.TId(_) | ChSql.TStr(_), _, e)))
-                if c.up == "CLUSTER" =>
-              return text.substring(0, b) + text.substring(e).dropWhile(_ == ' ')
-            case _ =>
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    text
-  }
-
-  // CREATE TABLE name UUID 'xxx' (uuidClause, ClickHouseParser.py:
-  // 4136-4183 region): the explicit-UUID form Atomic databases emit in
-  // SHOW CREATE / backups. Accept-and-record: the UUID is stripped before
-  // head parsing, stored as a table property, and surfaced by SHOW CREATE
-  // — it has no storage meaning here (Spark's catalog owns identity).
-  private val createUuidRe =
-    ("(?is)^(CREATE\\s+(?:TEMPORARY\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "[\\w.]+)\\s+UUID\\s+'([0-9a-fA-F-]{1,64})'(.*)$").r
-
-  def dispatch(spark: SparkSession, text: String)(
+  /** Run `c` when its head keywords name a DDL/DML/admin statement;
+    * None = not such a head (the caller parses a query). Each Some result
+    * is a one-column status frame, or a result frame for SHOW/metadata
+    * verbs. */
+  def dispatch(spark: SparkSession, c: Cur)(
       resolve: String => DataFrame): Option[DataFrame] = {
     import spark.implicits._
-    val (trimmed, createUuid) = stripOnCluster(text.trim) match {
-      case createUuidRe(head, uuid, tail) => (head + tail, Some(uuid))
-      case other => (other, None)
-    }
     def status(msg: String): DataFrame = Seq(msg).toDF("status")
+    val head = c.word()
+    if (!Heads(head)) return None
+    c.pos += 1
+    Some(head match {
+      case "CREATE" => create(spark, c, resolve, status)
 
-    trimmed match {
-      case createMvRe(kind, name, targetOrNull, populateOrNull, sel) =>
-        Some(createMaterializedView(spark, kind.toUpperCase(
-          java.util.Locale.ROOT) == "LIVE", name, Option(targetOrNull),
-          Option(populateOrNull).isDefined, sel, resolve, status))
+      case "WATCH" =>
+        // WATCH view [EVENTS] [LIMIT n] (watchStmt, 14249-14321); EVENTS
+        // switches to the version-heartbeat stream; the LIMIT (number of
+        // refresh generations to emit) is accepted and left to the
+        // caller's sink, which owns the subscription lifetime
+        val name = c.name("a view name")
+        val events = c.eatKw("EVENTS")
+        if (c.eatKw("LIMIT")) c.num("a LIMIT number")
+        c.done()
+        watchView(spark, name, resolve, events)
 
-      case watchRe(name, eventsOrNull) =>
-        Some(watchView(spark, name, resolve, Option(eventsOrNull).isDefined))
+      case "INSERT" => insert(spark, c, resolve, status)
 
-      case createTableHeadRe(tmp, ifNot, name, rest) =>
-        // cut the column list out with token-level paren matching, then
-        // split the tail into engine clauses and an optional AS SELECT
-        val end = matchParenEnd(rest)
-        require(end > 0, s"ChSql: CREATE TABLE $name: unbalanced column list")
-        val colsText = rest.substring(1, end - 1)
-        val tail0 = rest.substring(end).trim
-        val asPos = topKeywordPos(tail0, "AS")
-        val (engineTail, asSelect) =
-          if (asPos < 0) (tail0, None)
-          else (tail0.substring(0, asPos),
-            Some(tail0.substring(asPos).replaceFirst("(?is)^AS\\s+", "")))
-        val engRe = "(?is)^ENGINE\\s*=\\s*(\\w+)\\s*(?:\\(([^)]*)\\))?(.*)$".r
-        val (engine, engineArgs, clauses) = engineTail.trim match {
-          case engRe(e, a, more) => (e, Option(a).getOrElse(""), more)
-          case other => ("MergeTree", "", other) // ENGINE defaulted
+      case "DELETE" =>
+        // lightweight DELETE statement (deleteStmt — CH's `DELETE FROM t
+        // WHERE p` is the mask-based mutation; the text layer runs the
+        // same rewrite the heavy mutation uses, which is the mask's
+        // compacted end state)
+        c.expectKw("FROM")
+        val name = c.name("a table name")
+        status(s"deleted from $name (${
+          deleteRows(spark, c, name, resolve, "mutation needs a WHERE clause")})")
+
+      case "UPDATE" =>
+        // lightweight UPDATE statement (updateStmt, ClickHouseParser.py:
+        // 8187-8265): UPDATE t SET a = e, ... [IN PARTITION p] WHERE pred
+        // — the standalone twin of ALTER ... UPDATE, same partition-pruned
+        // mutation
+        val name = c.name("a table name")
+        c.expectKw("SET")
+        val (cols, scope) = updateRows(spark, c, name, resolve,
+          "mutation needs a WHERE clause")
+        status(s"updated $name (${cols.mkString(",")}; $scope)")
+
+      case "ALTER" =>
+        c.expectKw("TABLE")
+        val name = c.name("a table name")
+        alterTable(spark, c, name, resolve, status)
+
+      case "DROP" => drop(spark, c, status)
+
+      case "TRUNCATE" =>
+        c.eatKw("TABLE")
+        val name = c.name("a table name")
+        c.done()
+        memTables.get(name) match {
+          case Some(mt) =>
+            mt.rows.clear()
+            refreshMemView(spark, name, mt)
+          case None =>
+            spark.sql(s"TRUNCATE TABLE $name")
+            invalidateProjections(spark, name)
         }
-        // TEMPORARY tables are Memory-engine by default (createTableStmt
-        // TEMPORARY, ClickHouseParser.py:4136-4183); ENGINE = Memory is
-        // the RAM-resident table either way
-        val isMem = Option(tmp).isDefined || engine.equalsIgnoreCase("Memory")
+        status(s"truncated $name")
+
+      case "RENAME" =>
+        if (c.eatKw("DATABASE")) {
+          // refuse-or-implement, never silently no-op: the catalog cannot
+          // atomically re-home managed table locations across databases
+          val a = c.ident("a database name")
+          c.expectKw("TO")
+          val b = c.ident("a database name")
+          c.done()
+          c.fail(s"RENAME DATABASE is not supported — CREATE DATABASE $b " +
+            s"and RENAME TABLE each table out of $a instead")
+        }
+        // RENAME TABLE a TO b [, c TO d ...] (renameStmt, 8463-8530)
+        c.expectKw("TABLE")
+        val pairs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        do {
+          val a = c.name("a table name")
+          if (!c.eatKw("TO")) c.fail(s"RENAME expects 'a TO b' after '$a'")
+          pairs += ((a, c.name("a table name")))
+        } while (c.eatP(","))
+        c.done()
+        pairs.foreach { case (a, b) => renameTable(spark, a, b) }
+        status(pairs.map { case (a, b) => s"renamed $a to $b" }.mkString("; "))
+
+      case "EXCHANGE" =>
+        // exchangeStmt: `EXCHANGE TABLES a AND b` — atomic name swap; both
+        // must exist; the swap is three catalog renames — metadata-only,
+        // no data jobs
+        c.expectKw("TABLES")
+        val a = c.name("a table name")
+        c.expectKw("AND")
+        val b = c.name("a table name")
+        c.done()
+        Seq(a, b).foreach(t => require(spark.catalog.tableExists(t),
+          s"ChSql: EXCHANGE TABLES: $t does not exist"))
+        val tmp = s"${a}__xchg_tmp"
+        spark.sql(s"ALTER TABLE $a RENAME TO $tmp")
+        spark.sql(s"ALTER TABLE $b RENAME TO $a")
+        spark.sql(s"ALTER TABLE $tmp RENAME TO $b")
+        // projection registrations are keyed by NAME; after the swap each
+        // name's materialized copy describes the OTHER table's data —
+        // drop the copies (registrations survive; re-MATERIALIZE rebuilds)
+        Seq(a, b).foreach(invalidateProjections(spark, _))
+        status(s"exchanged $a and $b")
+
+      case "USE" =>
+        val db = c.ident("a database name")
+        c.done()
+        spark.sql(s"USE $db")
+        status(s"using $db")
+
+      case "OPTIMIZE" =>
+        c.expectKw("TABLE")
+        val name = c.name("a table name")
+        val part = if (c.eatKw("PARTITION")) Some(partition(c)) else None
+        val fin = c.eatKw("FINAL")
+        val dedup = c.eatKw("DEDUPLICATE")
+        c.done()
+        optimizeTable(spark, name, part, fin, dedup, status)
+
+      case "SHOW" => show(spark, c, resolve)
+
+      case "DETACH" | "ATTACH" =>
+        // ATTACH/DETACH (attachStmt 3843-3879; the DETACH alternatives of
+        // dropStmt 7149-7357): CH moves detached parts to a `detached/`
+        // directory and forgets the table; ATTACH re-registers it
+        val kind = (if (head == "DETACH") Seq("TABLE", "VIEW", "DICTIONARY")
+          else Seq("TABLE", "DICTIONARY")).find(c.eatKw(_))
+          .getOrElse(c.fail(s"unsupported $head ${c.slice(c.pos, c.pos + 1)}"))
+        val ifClause = if (head == "DETACH") c.ifExists() else c.ifNotExists()
+        val name = c.name(s"a ${kind.toLowerCase(java.util.Locale.ROOT)} name")
+        c.done()
+        if (head == "DETACH") detach(spark, kind, ifClause, name, status)
+        else attach(spark, kind, ifClause, name, status)
+
+      case "CHECK" =>
+        // full-scan validation over the table's file location (the path
+        // rides out of the resolver's scan relation, same as WATCH)
+        c.expectKw("TABLE")
+        val name = c.name("a table name")
+        c.done()
+        val paths = filePaths(spark, resolve(name))
+        require(paths.nonEmpty,
+          s"ChSql: CHECK TABLE $name: not a file-backed table")
+        val (ok, n, err) = graft.operators.AdminOps.checkTable(spark, paths.head)
+        Seq((name, ok, n, err.orNull)).toDF("table", "ok", "rows", "error")
+
+      case "EXISTS" =>
+        c.eatKw("TABLE")
+        val name = c.name("a table name")
+        c.done()
+        val exists = spark.catalog.tableExists(name) ||
+          (try { resolve(name); true } catch { case _: Exception => false })
+        Seq(if (exists) 1 else 0).toDF("result")
+
+      case "KILL" =>
+        // killStmt (8274-8365): queries registered via AdminOps.withQueryId
+        val query = c.eatKw("QUERY")
+        if (!query) c.expectKw("MUTATION")
+        c.cluster()
+        c.expectKw("WHERE")
+        if (query) {
+          c.expectKw("QUERY_ID")
+          c.expectP("=")
+          val id = c.str("a query id string")
+          c.done()
+          status(graft.operators.AdminOps.killQuery(spark, id))
+        } else {
+          val (from, until) = c.rest()
+          status(graft.operators.AdminOps.killMutation(c.slice(from, until)))
+        }
+
+      case "SYSTEM" =>
+        // systemStmt (13902-14107): the command words, then an optional
+        // quoted argument
+        val (from, until0) = c.rest()
+        val arg = c.toks(until0 - 1)._1 match {
+          case TStr(a) if until0 - 1 > from => Some(a)
+          case _ => None
+        }
+        val until = if (arg.isDefined) until0 - 1 else until0
+        if (until <= from) c.fail("SYSTEM needs a command")
+        status(graft.operators.AdminOps.system(spark, c.slice(from, until), arg))
+    })
+  }
+
+  /** Statement heads [[dispatch]] owns. */
+  private val Heads = Set("CREATE", "WATCH", "INSERT", "DELETE", "UPDATE",
+    "ALTER", "DROP", "TRUNCATE", "RENAME", "EXCHANGE", "USE", "OPTIMIZE",
+    "SHOW", "DETACH", "ATTACH", "CHECK", "EXISTS", "KILL", "SYSTEM")
+
+  // ===================== CREATE =====================
+
+  private def create(spark: SparkSession, c: Cur,
+      resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
+    if (c.isKw("TABLE") || c.isKw("TEMPORARY", "TABLE"))
+      createTable(spark, tableSpec(c), resolve, status)
+    else if (c.isKw("MATERIALIZED", "VIEW") || c.isKw("LIVE", "VIEW")) {
+      // CREATE MATERIALIZED VIEW name [TO target] [POPULATE] AS SELECT
+      // (ClickHouseParser.py:4085-4133); LIVE VIEW rides the same registry
+      // with complete-mode refresh semantics
+      val live = c.word() == "LIVE"
+      c.pos += 2
+      c.ifNotExists()
+      val name = c.name("a view name")
+      val target = if (c.eatKw("TO")) Some(c.name("a table name")) else None
+      val populate = c.eatKw("POPULATE")
+      c.expectKw("AS")
+      createMaterializedView(spark, live, name, target, populate, c.query(),
+        resolve, status)
+    } else if (c.eatKw("DATABASE")) {
+      val ifNot = c.ifNotExists()
+      val name = c.ident("a database name")
+      if (c.eatKw("ENGINE")) { c.expectP("="); c.ident("an engine name") }
+      c.done()
+      if (ifNot && spark.catalog.databaseExists(name))
+        status(s"database $name already exists")
+      else {
+        spark.sql(s"CREATE DATABASE ${if (ifNot) "IF NOT EXISTS " else ""}$name")
+        status(s"database $name created")
+      }
+    } else if (c.eatKw("DICTIONARY")) createDictionary(spark, c, resolve, status)
+    else if (c.isKw("FUNCTION") || c.isKw("OR", "REPLACE", "FUNCTION")) {
+      // createFunctionStmt: SQL lambda UDFs (`CREATE FUNCTION f AS (a, b)
+      // -> a + b`) — parse once, store the AST; ChSql.funcCall expands
+      // call sites at translation time (zero runtime UDFs)
+      val orReplace = c.eatKw("OR", "REPLACE")
+      c.expectKw("FUNCTION")
+      val ifNot = c.ifNotExists()
+      val name = c.ident("a function name")
+      c.cluster()
+      c.expectKw("AS")
+      val (from, until) = c.rest()
+      val bodyText = c.slice(from, until)
+      val lower = name.toLowerCase(java.util.Locale.ROOT)
+      if (FunctionCatalog.names.contains(lower))
+        c.fail(s"CREATE FUNCTION $name: the name collides with a system function")
+      if (ChSql.sqlFuncs.contains(lower) && !orReplace) {
+        if (ifNot) status(s"function $name already exists")
+        else c.fail(s"function $name already exists " +
+          "(use CREATE OR REPLACE FUNCTION)")
+      } else {
+        val (ps, body) = ChSql.parseFunctionBody(name, c.expr(from, until))
+        ChSql.sqlFuncs.put(lower, (ps, body, bodyText))
+        status(s"function $name created")
+      }
+    } else c.fail("unsupported CREATE statement: expected TABLE, VIEW, " +
+      "MATERIALIZED VIEW, LIVE VIEW, DATABASE, DICTIONARY or FUNCTION")
+  }
+
+  /** A parsed `CREATE [TEMPORARY] TABLE`: the column list, engine and
+    * engine clauses, and an `AS select` or `AS table` source. */
+  private final case class TableSpec(temporary: Boolean, ifNot: Boolean,
+      name: String, uuid: Option[String], cols: Seq[ColDef],
+      engine: Option[String], engineArgs: Option[String],
+      clauses: Map[String, String], settings: Seq[(String, String)],
+      asSelect: Option[ChSql.SetOp], asTable: Option[String])
+
+  /** Engine clauses of CREATE TABLE (engineClause, ClickHouseParser.py:
+    * 5807-6112): each body runs to the next of these keywords. */
+  private val TableClauses =
+    Seq("ORDER BY", "PARTITION BY", "PRIMARY KEY", "SAMPLE BY", "TTL", "SETTINGS")
+
+  /** CREATE TABLE read after its CREATE keyword. */
+  private def tableSpec(c: Cur): TableSpec = {
+    val temporary = c.eatKw("TEMPORARY")
+    c.expectKw("TABLE")
+    val ifNot = c.ifNotExists()
+    val name = c.name("a table name")
+    // CREATE TABLE name UUID 'xxx' (uuidClause): the explicit-UUID form
+    // Atomic databases emit in SHOW CREATE / backups — recorded as a table
+    // property and surfaced by SHOW CREATE; it has no storage meaning here
+    // (Spark's catalog owns identity)
+    val uuid = if (c.eatKw("UUID")) Some(c.str("a UUID string")) else None
+    uuid.foreach(u => require(u.nonEmpty && u.length <= 64 &&
+      u.forall(ch => ch == '-' || Character.digit(ch, 16) >= 0),
+      s"ChSql: malformed UUID '$u'"))
+    val cols =
+      if (!c.isP("(")) Nil
+      else {
+        val (from, until) = c.group()
+        c.items(from, until).map { case (a, b) => colDef(c, a, b) }
+      }
+    var engine = Option.empty[String]
+    var engineArgs = Option.empty[String]
+    val clauses = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var settings = Seq.empty[(String, String)]
+    var asSelect = Option.empty[ChSql.SetOp]
+    var asTable = Option.empty[String]
+    while (!c.atEnd) {
+      if (c.eatKw("ENGINE")) {
+        c.eatP("=")
+        engine = Some(c.ident("an engine name"))
+        if (c.isP("(")) { val (a, b) = c.group(); engineArgs = Some(c.slice(a, b)) }
+      } else if (c.eatKw("AS")) {
+        if (c.isKw("SELECT") || c.isKw("WITH") || c.isP("(")) asSelect = Some(c.query())
+        else asTable = Some(c.name("a table name"))
+      } else TableClauses.find(k => c.eatKw(k.split(' ').toSeq: _*)) match {
+        case Some(k) =>
+          require(!clauses.contains(k), s"ChSql: CREATE TABLE $name: duplicate $k")
+          val from = c.pos
+          c.pos = c.upTo(TableClauses ++ Seq("ENGINE", "AS"): _*)
+          require(c.pos > from, s"ChSql: CREATE TABLE $name: $k needs a body")
+          // trailing SETTINGS k = v, ... (engine settingsClause region,
+          // 5807-5962): recorded per key
+          if (k == "SETTINGS") settings = c.pairs(from, c.pos, "table SETTING")
+          clauses(k) = c.sliceUnparen(from, c.pos).trim
+        case None => c.fail(s"CREATE TABLE $name: unexpected '${
+          c.slice(c.pos, c.end)}'")
+      }
+    }
+    TableSpec(temporary, ifNot, name, uuid, cols, engine, engineArgs,
+      clauses.toMap - "SETTINGS", settings, asSelect, asTable)
+  }
+
+  /** Run a parsed CREATE TABLE: a column list (optionally filled from
+    * `AS select`), a CTAS, or a structure clone `AS table`. */
+  private def createTable(spark: SparkSession, s: TableSpec,
+      resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
+    val name = s.name
+    val engine = s.engine.getOrElse("MergeTree")
+    // TEMPORARY tables are Memory-engine by default (createTableStmt
+    // TEMPORARY, ClickHouseParser.py:4136-4183); ENGINE = Memory is the
+    // RAM-resident table either way
+    val isMem = s.temporary || engine.equalsIgnoreCase("Memory")
+    def onlyClauses(form: String, allowed: String*): Unit = {
+      val extra = s.clauses.keySet.toSeq.filterNot(allowed.contains) ++
+        (if (s.settings.nonEmpty) Seq("SETTINGS") else Nil)
+      require(extra.isEmpty, s"ChSql: CREATE TABLE $name $form does not take ${
+        extra.mkString(", ")}")
+    }
+    (s.cols.nonEmpty, s.asSelect, s.asTable) match {
+      case (true, sel, None) =>
         val preExisting = if (isMem) memTables.contains(name)
           else spark.catalog.tableExists(name)
         val created =
-          if (isMem) createMemoryTable(spark, Option(ifNot).isDefined, name,
-            colsText, Option(tmp).isDefined, status)
-          else createTable(spark, Option(ifNot).isDefined, name,
-            colsText, engine, engineArgs, clauses, status)
-        if (!(Option(ifNot).isDefined && preExisting)) {
+          if (isMem) createMemoryTable(spark, s.ifNot, name, s.cols,
+            s.temporary, status)
+          else createStoredTable(spark, s, engine, status)
+        if (!(s.ifNot && preExisting)) {
           // record the declared UUID (catalog tables only — TEMPORARY /
           // Memory tables have no CH UUID identity) for SHOW CREATE
-          createUuid.filter(_ => !isMem).foreach(u =>
+          s.uuid.filter(_ => !isMem).foreach(u =>
             spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
               s"('graft.uuid' = '$u')"))
-          asSelect.foreach(sel =>
-            appendInto(spark, name, Nil, ChSql.sql(spark, sel)(resolve)))
+          sel.foreach(q => appendInto(spark, name, Nil, ChSql.plan(spark, q)(resolve)))
         }
-        Some(created)
+        created
 
-      case cloneRe(ifNot, name, src, engOrNull, engArgsOrNull)
-          if spark.catalog.tableExists(src) || memTables.contains(src) =>
-        // `CREATE TABLE t2 AS t1 [ENGINE = e]` structure clone: replay
-        // the source's re-runnable SHOW CREATE text under the new name
-        // (round-trip pin guarantees fidelity); an ENGINE override swaps
-        // the engine line before the replay
-        if (Option(ifNot).isDefined && spark.catalog.tableExists(name))
-          Some(status(s"table $name already exists"))
+      case (false, None, Some(src)) =>
+        // `CREATE TABLE t2 AS t1 [ENGINE = e]` structure clone: re-read the
+        // source's re-runnable SHOW CREATE text (round-trip pin guarantees
+        // fidelity) and run it under the new name, engine swapped when
+        // given
+        onlyClauses("AS table")
+        require(spark.catalog.tableExists(src) || memTables.contains(src),
+          s"ChSql: CREATE TABLE $name AS $src: table $src does not exist")
+        if (s.ifNot && spark.catalog.tableExists(name))
+          status(s"table $name already exists")
         else {
-          var text = showCreate(spark, src, resolve)
-            .replaceFirst("(?s)^CREATE (TEMPORARY )?TABLE " +
-              java.util.regex.Pattern.quote(src),
-              java.util.regex.Matcher.quoteReplacement(s"CREATE TABLE $name"))
-          Option(engOrNull).foreach { e =>
-            val args = Option(engArgsOrNull).map(a => s"($a)").getOrElse("")
-            text = text.replaceFirst("(?m)^ENGINE = .*$",
-              java.util.regex.Matcher.quoteReplacement(s"ENGINE = $e$args"))
-          }
-          dispatch(spark, text)(resolve)
-          Some(status(s"table $name created (structure of $src)"))
+          val source = new Cur(showCreate(spark, src, resolve))
+          source.expectKw("CREATE")
+          val from = tableSpec(source)
+          createTable(spark, from.copy(temporary = false, ifNot = false,
+            name = name, uuid = None,
+            engine = s.engine.orElse(from.engine),
+            engineArgs = if (s.engine.isDefined) s.engineArgs else from.engineArgs),
+            resolve, status)
+          status(s"table $name created (structure of $src)")
         }
 
-      case ctasRe(tmp, ifNot, name, engineOrNull, engineArgsOrNull, tailOrNull,
-          sel) if Option(tmp).isDefined ||
-            Option(engineOrNull).exists(_.equalsIgnoreCase("Memory")) =>
+      case (false, Some(sel), None) if isMem =>
         // TEMPORARY / Memory-engine CTAS: evaluate and hold in RAM
-        if (Option(ifNot).isDefined && memTables.contains(name))
-          Some(status(s"table $name already exists"))
+        onlyClauses("AS SELECT")
+        if (s.ifNot && memTables.contains(name))
+          status(s"table $name already exists")
         else {
-          require(!memTables.contains(name),
-            s"ChSql: table $name already exists")
-          val df = ChSql.sql(spark, sel)(resolve)
+          require(!memTables.contains(name), s"ChSql: table $name already exists")
+          val df = ChSql.plan(spark, sel)(resolve)
           val mt = MemTable(org.apache.spark.sql.types.StructType(
               df.schema.fields.map(_.copy(nullable = true))),
-            scala.collection.mutable.ArrayBuffer.empty, Option(tmp).isDefined,
+            scala.collection.mutable.ArrayBuffer.empty, s.temporary,
             df.schema.fields.filter(_.nullable).map(_.name).toSet)
           memTables.put(name, mt)
           memAppend(spark, name, mt, Nil, df)
-          Some(status(s"table $name created from select (${
-            if (Option(tmp).isDefined) "temporary, " else ""}Memory engine)"))
+          status(s"table $name created from select (${
+            if (s.temporary) "temporary, " else ""}Memory engine)")
         }
 
-      case ctasRe(_, ifNot, name, engineOrNull, engineArgsOrNull, tailOrNull, sel) =>
-        if (Option(ifNot).isDefined && spark.catalog.tableExists(name))
-          Some(status(s"table $name already exists"))
+      case (false, Some(sel), None) =>
+        // CTAS (createTableStmt subquery form, 4136-4183): no column list —
+        // the schema comes from the SELECT
+        onlyClauses("AS SELECT", "ORDER BY", "PARTITION BY")
+        if (s.ifNot && spark.catalog.tableExists(name))
+          status(s"table $name already exists")
         else {
           if (!spark.catalog.tableExists(name)) dropStaleLocation(spark, name)
-          val df = ChSql.sql(spark, sel)(resolve)
+          val df = ChSql.plan(spark, sel)(resolve)
+          val args = s.engineArgs.map(_.trim)
+          def argsFor(e: String) = args.filter(_ => engine.equalsIgnoreCase(e))
           val props = Seq(
-            "graft.engine" -> Option(engineOrNull).getOrElse("MergeTree"),
+            "graft.engine" -> engine,
             // declared order + Nullable set from the SELECT output schema:
             // rewrite mutations relax the physical schema to all-nullable,
             // so without these props a post-mutation short INSERT would
             // fill NULL into every column (state-dependent fill rule)
             "graft.columns" -> df.schema.fieldNames.mkString(","),
             "graft.nullcols" ->
-              df.schema.fields.filter(_.nullable).map(_.name)
-                .mkString(",")) ++
-            Option(tailOrNull).flatMap(t =>
-              "(?is)ORDER\\s+BY\\s+(\\([^)]*\\)|[\\w]+)".r.findFirstMatchIn(t)
-                .map(m => "graft.order_by" ->
-                  m.group(1).stripPrefix("(").stripSuffix(")"))) ++
-            Option(engineArgsOrNull).filter(_ =>
-              Option(engineOrNull).exists(_.equalsIgnoreCase("ReplacingMergeTree")))
-              .map("graft.version" -> _.trim) ++
-            Option(engineArgsOrNull).filter(_ =>
-              Option(engineOrNull).exists(_.equalsIgnoreCase("SummingMergeTree")))
-              .map("graft.sum_cols" -> _.trim) ++
-            Option(engineArgsOrNull).filter(_ =>
-              Option(engineOrNull).exists(_.equalsIgnoreCase("CollapsingMergeTree")))
-              .map("graft.sign" -> _.trim) ++
-            Option(engineArgsOrNull).filter(_ => Option(engineOrNull).exists(
-                _.equalsIgnoreCase("VersionedCollapsingMergeTree")))
-              .toSeq.flatMap { a =>
-                val cs = a.split(",").map(_.trim).filter(_.nonEmpty)
-                require(cs.length == 2, "ChSql: VersionedCollapsingMergeTree " +
-                  "needs (sign, version) arguments")
-                Seq("graft.sign" -> cs(0), "graft.version" -> cs(1))
-              }
-          val partCols = Option(tailOrNull).flatMap(t =>
-            "(?is)PARTITION\\s+BY\\s+(\\([^)]*\\)|[\\w]+)".r
-              .findFirstMatchIn(t).map(_.group(1)
-                .stripPrefix("(").stripSuffix(")")))
-            .toSeq.flatMap(_.split(",")).map(_.trim)
-            .filter(df.columns.contains)
+              df.schema.fields.filter(_.nullable).map(_.name).mkString(",")) ++
+            s.clauses.get("ORDER BY").map("graft.order_by" -> _) ++
+            argsFor("ReplacingMergeTree").map("graft.version" -> _) ++
+            argsFor("SummingMergeTree").map("graft.sum_cols" -> _) ++
+            argsFor("CollapsingMergeTree").map("graft.sign" -> _) ++
+            argsFor("VersionedCollapsingMergeTree").toSeq.flatMap { a =>
+              val cs = a.split(",").map(_.trim).filter(_.nonEmpty)
+              require(cs.length == 2, "ChSql: VersionedCollapsingMergeTree " +
+                "needs (sign, version) arguments")
+              Seq("graft.sign" -> cs(0), "graft.version" -> cs(1))
+            }
+          val partCols = s.clauses.get("PARTITION BY").toSeq
+            .flatMap(_.split(",")).map(_.trim).filter(df.columns.contains)
           val w = sizedWrite(df).write.mode(SaveMode.ErrorIfExists)
           (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
             .saveAsTable(name)
           spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
             props.map { case (k, v) => s"${sqlLit(k)}=${sqlLit(v)}" }
               .mkString(", ") + ")")
-          Some(status(s"table $name created from select"))
+          status(s"table $name created from select")
         }
 
-      case insertFormatRe(name, colsOrNull, fmt, data) =>
-        val cols = Option(colsOrNull).toSeq
-          .flatMap(_.split(",")).map(_.trim.stripPrefix("`").stripSuffix("`"))
-          .filter(_.nonEmpty)
-        appendInto(spark, name, cols, inlineRows(spark, name, cols, fmt, data))
-        Some(status(s"inserted into $name ($fmt)"))
+      case _ => throw new IllegalArgumentException(s"ChSql: CREATE TABLE " +
+        s"$name needs one of: a column list, AS SELECT ..., AS table")
+    }
+  }
 
-      case insertRe(name, colsOrNull, body, valuesOrNull) =>
-        val cols = Option(colsOrNull).toSeq
-          .flatMap(_.split(",")).map(_.trim.stripPrefix("`").stripSuffix("`"))
-          .filter(_.nonEmpty)
-        val rows = Option(valuesOrNull) match {
-          case Some(values) => // VALUES (...), (...)
-            valuesFrame(spark, values, resolve)
-          case None => // INSERT ... SELECT
-            ChSql.sql(spark, body)(resolve)
-        }
-        appendInto(spark, name, cols, rows)
-        Some(status(s"inserted into $name"))
-
-      case deleteFromRe(name, rest) =>
-        val (inPart, where) = splitInPartitionWhere(rest)
-        val p = withPartitionScope(spark, name, inPart,
-          ChSql.compileExpr(spark, where, resolve))
-        val scope = mutateWhere(spark, name, p)(
-          graft.operators.Mutations.delete(_, p))
-        Some(status(s"deleted from $name ($scope)"))
-
-      case updateStmtRe(name, rest) =>
-        val (inPart, where) = splitInPartitionWhere(rest)
-        val setEnd = Seq(topKeywordPos(rest, "IN", "PARTITION"),
-          topKeywordPos(rest, "WHERE")).filter(_ >= 0).min
-        val assignments = parseAssignments(spark,
-          rest.substring(0, setEnd), resolve)
-        val p = withPartitionScope(spark, name, inPart,
-          ChSql.compileExpr(spark, where, resolve))
-        // same guard as the ALTER ... UPDATE path: a NULL assigned to a
-        // declared non-Nullable column must fail here too, or the stored
-        // NULL makes every later readTable AssertNotNull read throw
-        val scope = mutateWhere(spark, name, p, rowsPreserved = true)(df =>
-          guardNonNullableWrites(tablePropsSafe(spark, name),
-            graft.operators.Mutations.update(df, assignments, p), name))
-        Some(status(s"updated $name (${
-          assignments.map(_._1).mkString(",")}; $scope)"))
-
-      case alterRe(name, clause) =>
-        Some(alterTable(spark, name, clause.trim, resolve, status))
-
-      case createDbRe(ifNot, name) =>
-        if (Option(ifNot).isDefined && spark.catalog.databaseExists(name))
-          Some(status(s"database $name already exists"))
-        else {
-          spark.sql(s"CREATE DATABASE ${
-            if (Option(ifNot).isDefined) "IF NOT EXISTS " else ""}$name")
-          Some(status(s"database $name created"))
-        }
-
-      case dropDbRe(ifExists, name) =>
+  /** `DROP DATABASE|TABLE|VIEW|DICTIONARY|FUNCTION [IF EXISTS] name`. */
+  private def drop(spark: SparkSession, c: Cur,
+      status: String => DataFrame): DataFrame = {
+    val kindTok = c.ident("DATABASE, TABLE, VIEW, DICTIONARY or FUNCTION")
+    val kind = kindTok.toUpperCase(java.util.Locale.ROOT)
+    val ifExists = c.ifExists()
+    val name = kind match {
+      case "DATABASE" | "FUNCTION" => val n = c.ident(s"a name"); c.cluster(); n
+      case "TABLE" | "VIEW" | "DICTIONARY" => c.name("a name")
+      case _ => c.fail(s"unsupported DROP $kindTok")
+    }
+    c.done()
+    kind match {
+      case "DATABASE" =>
         if (!spark.catalog.databaseExists(name)) {
-          if (Option(ifExists).isEmpty) throw new IllegalArgumentException(
-            s"ChSql: database $name does not exist")
-          Some(status(s"database $name does not exist"))
+          if (!ifExists) c.fail(s"database $name does not exist")
+          status(s"database $name does not exist")
         } else {
           spark.sql(s"DROP DATABASE $name CASCADE")
-          Some(status(s"dropped database $name"))
+          status(s"dropped database $name")
         }
-
-      case dropRe(kind, ifExists, name) if memTables.contains(name) =>
+      case "FUNCTION" =>
+        if (ChSql.sqlFuncs.remove(name.toLowerCase(java.util.Locale.ROOT)).isDefined)
+          status(s"function $name dropped")
+        else if (ifExists) status(s"function $name does not exist (IF EXISTS)")
+        else c.fail(s"DROP FUNCTION $name: no such function")
+      case "DICTIONARY" =>
+        if (!graft.sources.Dictionaries.exists(name) && !ifExists)
+          c.fail(s"DICTIONARY $name does not exist")
+        graft.sources.Dictionaries.drop(name)
+        status(s"dropped dictionary $name")
+      case _ if memTables.contains(name) =>
         memTables.remove(name)
         spark.catalog.dropTempView(name)
-        Some(status(s"dropped $name"))
-
-      case dropRe(kind, ifExists, name) if ChSql.paramViews.contains(name) =>
+        status(s"dropped $name")
+      case _ if ChSql.paramViews.contains(name) =>
         ChSql.paramViews.remove(name)
-        Some(status(s"dropped parameterized view $name"))
-
-      case dropRe(kind, ifExists, name) =>
+        status(s"dropped parameterized view $name")
+      case _ =>
         val inCatalog = spark.catalog.tableExists(name)
-        val isMv = mvMeta.contains(name)
-        if (!inCatalog && !isMv) {
-          if (Option(ifExists).isEmpty) throw new IllegalArgumentException(
-            s"ChSql: $kind $name does not exist")
+        if (!inCatalog && !mvSources.contains(name)) {
+          if (!ifExists) c.fail(s"$kindTok $name does not exist")
           // IF EXISTS no-op must say so, not claim a drop happened
-          Some(status(s"$kind $name does not exist"))
+          status(s"$kindTok $name does not exist")
         } else {
           if (inCatalog) {
             // temp views (CREATE VIEW path) and catalog tables drop differently
@@ -505,339 +550,269 @@ object ChDdl {
               name.contains("__ngrambloom_"))
             graft.plans.BloomSkipIndex.invalidate(name)
           graft.streaming.StreamingOps.dropView(name)
-          mvMeta.remove(name)
+          mvSources.remove(name)
           // a table's materialized projections die with it
           projMeta.keys.filter(_._1 == name).foreach { k =>
             projMeta.remove(k).foreach(_.projTable
               .filter(spark.catalog.tableExists)
               .foreach(t => spark.sql(s"DROP TABLE $t")))
           }
-          Some(status(s"dropped $name"))
+          status(s"dropped $name")
         }
+    }
+  }
 
-      case truncateRe(name) if memTables.contains(name) =>
-        val mt = memTables(name)
-        mt.rows.clear()
-        refreshMemView(spark, name, mt)
-        Some(status(s"truncated $name"))
-
-      case truncateRe(name) =>
-        spark.sql(s"TRUNCATE TABLE $name")
-        invalidateProjections(spark, name)
-        Some(status(s"truncated $name"))
-
-      case renameRe(list) =>
-        // RENAME TABLE a TO b [, c TO d ...] (renameStmt, 8463-8530)
-        val pairs = list.split(",").map(_.trim).map { p =>
-          val m = "(?is)([\\w.]+)\\s+TO\\s+([\\w.]+)".r
-            .findFirstMatchIn(p).getOrElse(throw new IllegalArgumentException(
-              s"ChSql: RENAME expects 'a TO b', got '$p'"))
-          (m.group(1), m.group(2))
+  /** One `RENAME TABLE a TO b` step. Projections travel with the table
+    * (CH keeps them inside the table definition): the registrations are
+    * re-keyed and the materialized copies renamed — otherwise a later
+    * CREATE TABLE under the OLD name would find the stale registration
+    * and serve the renamed table's projection data to covered SELECTs. */
+  private def renameTable(spark: SparkSession, a: String, b: String): Unit = {
+    spark.sql(s"ALTER TABLE $a RENAME TO $b")
+    projMeta.keys.filter(_._1 == a).toSeq.foreach { k =>
+      projMeta.remove(k).foreach { meta =>
+        val moved = meta.projTable.flatMap { pt =>
+          val npt = s"${b}__proj_${k._2}"
+          if (spark.catalog.tableExists(pt)) {
+            spark.sql(s"ALTER TABLE $pt RENAME TO $npt")
+            Some(npt)
+          } else None
         }
-        pairs.foreach { case (a, b) =>
-          spark.sql(s"ALTER TABLE $a RENAME TO $b")
-          // projections travel with the table (CH keeps them inside the
-          // table definition): re-key the registrations and rename the
-          // materialized copies — otherwise a later CREATE TABLE under
-          // the OLD name would find the stale registration and serve the
-          // renamed table's projection data to covered SELECTs
-          projMeta.keys.filter(_._1 == a).toSeq.foreach { k =>
-            projMeta.remove(k).foreach { meta =>
-              val moved = meta.projTable.flatMap { pt =>
-                val npt = s"${b}__proj_${k._2}"
-                if (spark.catalog.tableExists(pt)) {
-                  spark.sql(s"ALTER TABLE $pt RENAME TO $npt")
-                  Some(npt)
-                } else None
-              }
-              projMeta.put((b, k._2), meta.copy(table = b, projTable = moved,
-                outCols = if (moved.isEmpty) Nil else meta.outCols))
-            }
-          }
-        }
-        Some(status(pairs.map { case (a, b) => s"renamed $a to $b" }.mkString("; ")))
+        projMeta.put((b, k._2), meta.copy(table = b, projTable = moved,
+          outCols = if (moved.isEmpty) Nil else meta.outCols))
+      }
+    }
+  }
 
-      case createFuncRe(orReplace, ifNot, name, bodyText) =>
-        // SQL lambda UDF: parse once, store the AST; ChSql.funcCall
-        // expands call sites at translation time (zero runtime UDFs)
-        val lower = name.toLowerCase(java.util.Locale.ROOT)
-        if (FunctionCatalog.names.contains(lower))
-          throw new IllegalArgumentException(
-            s"ChSql: CREATE FUNCTION $name: the name collides with a " +
-              "system function")
-        if (ChSql.sqlFuncs.contains(lower) && orReplace == null) {
-          if (ifNot != null) Some(status(s"function $name already exists"))
-          else throw new IllegalArgumentException(
-            s"ChSql: function $name already exists " +
-              "(use CREATE OR REPLACE FUNCTION)")
-        } else {
-          val (ps, body) = ChSql.parseFunctionBody(name, bodyText)
-          ChSql.sqlFuncs.put(lower, (ps, body, bodyText.trim))
-          Some(status(s"function $name created"))
-        }
+  /** `CREATE DICTIONARY name (schema) PRIMARY KEY k SOURCE(...)
+    * [LAYOUT(...)] [RANGE(MIN lo MAX hi)] [LIFETIME(...)] [SETTINGS(...)]`
+    * (dictionaryStmt). Point layouts (FLAT/HASHED/CACHE/DIRECT) are all
+    * the same broadcast hash; RANGE_HASHED adds the interval dimension
+    * (rangeClause, ClickHouseParser.py:4005-4048). LIFETIME and SETTINGS
+    * are ignored: refresh is SYSTEM RELOAD DICTIONARY. */
+  private def createDictionary(spark: SparkSession, c: Cur,
+      resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
+    import graft.sources.Dictionaries
+    val ifNot = c.ifNotExists()
+    val name = c.name("a dictionary name")
+    val (colsFrom, colsUntil) = c.group()
+    c.expectKw("PRIMARY", "KEY")
+    val key = c.ident("a key column")
+    var source = Option.empty[(String, Map[String, String])]
+    var layout = Option.empty[String]
+    var range = Option.empty[(String, String)]
+    while (!c.atEnd) {
+      if (c.eatKw("SOURCE")) {
+        // SOURCE(KIND(key 'value' ...)): FILE(path '...' [format '...'])
+        // or CLICKHOUSE(TABLE '...') — the CH self-referential source
+        c.expectP("(")
+        val kind = c.ident("a dictionary source").toUpperCase(java.util.Locale.ROOT)
+        val (a, b) = c.group()
+        c.expectP(")")
+        require((b - a) % 2 == 0, s"ChSql: SOURCE($kind(...)) takes key 'value' pairs")
+        source = Some(kind -> (a until b by 2).map { i =>
+          c.slice(i, i + 1).toUpperCase(java.util.Locale.ROOT) -> (c.toks(i + 1)._1 match {
+            case TStr(v) => v
+            case _ => c.slice(i + 1, i + 2)
+          })
+        }.toMap)
+      } else if (c.eatKw("LAYOUT")) {
+        c.expectP("(")
+        layout = Some(c.ident("a layout name").toUpperCase(java.util.Locale.ROOT))
+        if (c.isP("(")) c.group()
+        c.expectP(")")
+      } else if (c.eatKw("RANGE")) {
+        c.expectP("(")
+        c.expectKw("MIN")
+        val lo = c.ident("a range column")
+        c.expectKw("MAX")
+        val hi = c.ident("a range column")
+        c.expectP(")")
+        range = Some((lo, hi))
+      } else if (c.eatKw("LIFETIME") || c.eatKw("SETTINGS")) c.group()
+      else c.fail(s"CREATE DICTIONARY $name: unexpected '${c.slice(c.pos, c.end)}'")
+    }
+    if (ifNot && Dictionaries.exists(name))
+      return status(s"dictionary $name already exists")
+    val schema = graft.model.ChTypes.toSparkSchema(c.slice(colsFrom, colsUntil))
+    require(schema.fieldNames.contains(key),
+      s"ChSql: PRIMARY KEY $key is not a dictionary column")
+    // RANGE_HASHED is the one layout with different lookup semantics; the
+    // clause pair must be consistent, and the range bound columns must
+    // exist (they are structure, not attributes).
+    layout match {
+      case Some("RANGE_HASHED") => require(range.isDefined,
+        "ChSql: LAYOUT(RANGE_HASHED()) needs RANGE(MIN lo MAX hi)")
+      case _ => require(range.isEmpty,
+        "ChSql: RANGE(MIN .. MAX ..) needs LAYOUT(RANGE_HASHED())")
+    }
+    range.foreach { case (lo, hi) =>
+      Seq(lo, hi).foreach(col => require(schema.fieldNames.contains(col),
+        s"ChSql: RANGE column $col is not a dictionary column"))
+      require(lo != key && hi != key,
+        "ChSql: RANGE columns cannot be the PRIMARY KEY")
+    }
+    val nonAttr = Set(key) ++ range.toSeq.flatMap(r => Seq(r._1, r._2))
+    val attrs = schema.fieldNames.filterNot(nonAttr).map(col => col -> col).toMap
+    source match {
+      case Some(("FILE", kv)) if kv.contains("PATH") =>
+        Dictionaries.createFromPath(name, kv("PATH"),
+          kv.getOrElse("FORMAT", "parquet").toLowerCase(java.util.Locale.ROOT),
+          key, attrs, range)
+      case Some(("CLICKHOUSE", kv)) if kv.contains("TABLE") =>
+        // resolve (not spark.table) so Memory/TEMPORARY engine tables and
+        // qualified names work as dictionary sources
+        Dictionaries.create(name, _ => resolve(kv("TABLE")), key, attrs, range)
+      case _ => throw new IllegalArgumentException(
+        "ChSql: CREATE DICTIONARY needs SOURCE(FILE(path '...')) " +
+          "or SOURCE(CLICKHOUSE(TABLE '...'))")
+    }
+    // CH loads FLAT/HASHED dictionaries at create time; warming the
+    // resolved frame here keeps later dictGet translation zero-job
+    Dictionaries.loaded(spark, name)
+    status(s"dictionary $name created")
+  }
 
-      case dropFuncRe(ifEx, name) =>
-        val lower = name.toLowerCase(java.util.Locale.ROOT)
-        if (ChSql.sqlFuncs.remove(lower).isDefined)
-          Some(status(s"function $name dropped"))
-        else if (ifEx != null)
-          Some(status(s"function $name does not exist (IF EXISTS)"))
-        else throw new IllegalArgumentException(
-          s"ChSql: DROP FUNCTION $name: no such function")
+  // ===================== SHOW =====================
 
-      case showCreateFuncRe(name) =>
-        val (_, _, txt) = ChSql.sqlFuncs.getOrElse(
-          name.toLowerCase(java.util.Locale.ROOT),
-          throw new IllegalArgumentException(
-            s"ChSql: SHOW CREATE FUNCTION $name: no such function"))
-        Some(Seq(s"CREATE FUNCTION $name AS $txt").toDF("statement"))
-
-      case exchangeRe(a, b) =>
-        // EXCHANGE TABLES (exchangeStmt): both must exist; the swap is
-        // three catalog renames — metadata-only, no data jobs
-        Seq(a, b).foreach(t => require(spark.catalog.tableExists(t),
-          s"ChSql: EXCHANGE TABLES: $t does not exist"))
-        val tmp = s"${a}__xchg_tmp"
-        spark.sql(s"ALTER TABLE $a RENAME TO $tmp")
-        spark.sql(s"ALTER TABLE $b RENAME TO $a")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $b")
-        // projection registrations are keyed by NAME; after the swap each
-        // name's materialized copy describes the OTHER table's data —
-        // drop the copies (registrations survive; re-MATERIALIZE rebuilds)
-        Seq(a, b).foreach(invalidateProjections(spark, _))
-        Some(status(s"exchanged $a and $b"))
-
-      case renameDbRe(a, b) =>
-        // refuse-or-implement, never silently no-op: the catalog cannot
-        // atomically re-home managed table locations across databases
-        throw new IllegalArgumentException(
-          s"ChSql: RENAME DATABASE is not supported — CREATE DATABASE $b " +
-            s"and RENAME TABLE each table out of $a instead")
-
-      case useRe(db) =>
-        spark.sql(s"USE $db")
-        Some(status(s"using $db"))
-
-      case optimizeRe(name, partOrNull, fin, dedup) =>
-        Some(optimizeTable(spark, name,
-          Option(partOrNull).map(partitionValues),
-          Option(fin).isDefined, Option(dedup).isDefined, status))
-
-      // ---- showStmt family (order: multi-word SHOW CREATE forms must
-      // precede the generic SHOW CREATE TABLE pattern) ----
-
-      case showCreateDbRe(name) =>
+  /** The showStmt family (ClickHouseParser.py:11994-13901): metadata,
+    * settings and access introspection. Single-user engine — the access
+    * surfaces report the implicit all-powerful `default` user, the
+    * cluster surfaces the one local "cluster" Spark local mode is. */
+  private def show(spark: SparkSession, c: Cur,
+      resolve: String => DataFrame): DataFrame = {
+    import spark.implicits._
+    def ended[T](v: => T): T = { c.done(); v }
+    if (c.eatKw("CREATE")) {
+      if (c.eatKw("DATABASE")) {
+        val name = c.ident("a database name")
+        c.done()
         require(spark.catalog.databaseExists(name),
           s"ChSql: database $name does not exist")
-        Some(Seq(s"CREATE DATABASE $name").toDF("statement"))
-
-      case showCreateDictRe(name) =>
+        Seq(s"CREATE DATABASE $name").toDF("statement")
+      } else if (c.eatKw("DICTIONARY")) {
+        val name = c.name("a dictionary name")
+        c.done()
         val d = graft.sources.Dictionaries.get(name).getOrElse(
-          throw new IllegalArgumentException(
-            s"ChSql: DICTIONARY $name does not exist"))
+          c.fail(s"DICTIONARY $name does not exist"))
         val attrCols = d.attrs.keys.toSeq.sorted.filterNot(_ == d.keyCol)
         val rangeCols = d.range.toSeq.flatMap(r => Seq(r._1, r._2))
         val layout = d.range.map { case (lo, hi) =>
           s"LAYOUT(RANGE_HASHED()) RANGE(MIN $lo MAX $hi)"
         }.getOrElse("LAYOUT(HASHED)")
-        Some(Seq(s"CREATE DICTIONARY $name " +
+        Seq(s"CREATE DICTIONARY $name " +
           s"(${(d.keyCol +: (rangeCols ++ attrCols)).mkString(", ")}) " +
-          s"PRIMARY KEY ${d.keyCol} $layout").toDF("statement"))
-
-      case showCreateAccessRe(kind, name) =>
-        Some(Seq(showCreateAccess(kind, name)).toDF("statement"))
-
-      case showCreateRe(name) =>
-        Some(Seq(showCreate(spark, name, resolve)).toDF("statement"))
-
-      case showColumnsRe(name, notOrNull, kwOrNull, patOrNull) =>
-        Some(showColumns(spark, name, resolve,
-          Option(notOrNull).isDefined, Option(kwOrNull), Option(patOrNull)))
-
-      case showIndexRe(name) =>
-        Some(showIndex(spark, name))
-
-      case showGrantsRe(userOrNull) =>
+          s"PRIMARY KEY ${d.keyCol} $layout").toDF("statement")
+      } else if (c.eatKw("FUNCTION")) {
+        val name = c.ident("a function name")
+        c.done()
+        val (_, _, txt) = ChSql.sqlFuncs.getOrElse(
+          name.toLowerCase(java.util.Locale.ROOT),
+          c.fail(s"SHOW CREATE FUNCTION $name: no such function"))
+        Seq(s"CREATE FUNCTION $name AS $txt").toDF("statement")
+      } else Seq("USER" -> "USER", "ROLE" -> "ROLE", "ROW POLICY" -> "ROW POLICY",
+          "POLICY" -> "ROW POLICY", "QUOTA" -> "QUOTA",
+          "SETTINGS PROFILE" -> "SETTINGS PROFILE", "PROFILE" -> "SETTINGS PROFILE")
+          .find { case (k, _) => c.eatKw(k.split(' ').toSeq: _*) } match {
+        case Some((_, kind)) =>
+          val name = c.ident("a name")
+          c.done()
+          Seq(showCreateAccess(kind, name)).toDF("statement")
+        case None =>
+          if (!c.eatKw("TABLE")) c.eatKw("VIEW")
+          val name = c.name("a table name")
+          c.done()
+          Seq(showCreate(spark, name, resolve)).toDF("statement")
+      }
+    } else {
+      c.eatKw("EXTENDED")
+      c.eatKw("FULL")
+      c.eatKw("TEMPORARY")
+      if (c.eatKw("TABLES")) showTables(spark, c, Nil)
+      else if (c.eatKw("DATABASES"))
+        likeTail(c, spark.catalog.listDatabases().toDF.select(col("name")), "name")
+      else if (c.eatKw("COLUMNS") || c.eatKw("FIELDS")) {
+        if (!c.eatKw("FROM")) c.expectKw("IN")
+        likeTail(c, showColumns(spark, c.name("a table name"), resolve), "field")
+      } else if (Seq("INDEX", "INDEXES", "INDICES", "KEYS").exists(c.eatKw(_))) {
+        if (!c.eatKw("FROM")) c.expectKw("IN")
+        val name = c.name("a table name")
+        ended(showIndex(spark, name))
+      } else if (c.eatKw("GRANTS")) {
         // single-user model: the implicit `default` user owns everything
-        val u = Option(userOrNull).getOrElse("default")
+        val u = if (c.eatKw("FOR")) c.ident("a user name") else "default"
+        c.eatKw("WITH", "IMPLICIT")
+        c.eatKw("FINAL")
+        c.done()
         require(u.equalsIgnoreCase("default"),
           s"ChSql: there is no user named $u (single-user engine: only 'default')")
-        Some(Seq(s"GRANT ALL ON *.* TO $u WITH GRANT OPTION").toDF("grants"))
-
-      case showSettingsRe(changedOrNull, kwOrNull, patOrNull) =>
-        val df0 = graft.plans.Settings.settingsRows(spark)
+        Seq(s"GRANT ALL ON *.* TO $u WITH GRANT OPTION").toDF("grants")
+      } else if (c.eatKw("SETTINGS", "PROFILES") || c.eatKw("PROFILES"))
+        ended(Seq("default").toDF("name"))
+      else if (c.isKw("SETTINGS") || c.isKw("CHANGED", "SETTINGS")) {
+        val changed = c.eatKw("CHANGED")
+        c.expectKw("SETTINGS")
+        val df = graft.plans.Settings.settingsRows(spark)
           .toDF("name", "value", "changed", "spark_key")
-        val df1 = if (Option(changedOrNull).isDefined)
-          df0.filter(col("changed")) else df0
-        Some(likeFilter(df1, "name", Option(kwOrNull), Option(patOrNull)))
-
-      case showSettingRe(name) =>
+        likeTail(c, if (changed) df.filter(col("changed")) else df, "name")
+      } else if (c.eatKw("SETTING")) {
+        val name = c.ident("a setting name")
+        c.done()
         val row = graft.plans.Settings.settingsRows(spark)
-          .find(_._1 == name).getOrElse(throw new IllegalArgumentException(
-            s"ChSql: unknown setting $name (no Spark twin — see Settings.mapping)"))
-        Some(Seq((row._1, row._2)).toDF("name", "value"))
-
-      case showFunctionsRe(kwOrNull, patOrNull) =>
-        val df = (FunctionCatalog.names
+          .find(_._1 == name).getOrElse(c.fail(
+            s"unknown setting $name (no Spark twin — see Settings.mapping)"))
+        Seq((row._1, row._2)).toDF("name", "value")
+      } else if (c.eatKw("FUNCTIONS"))
+        likeTail(c, (FunctionCatalog.names
           .map(n => (n, FunctionCatalog.isAggregate(n))) ++
           ChSql.sqlFuncs.keys.toSeq.sorted.map(n => (n, false)))
-          .toDF("name", "is_aggregate")
-        Some(likeFilter(df, "name", Option(kwOrNull), Option(patOrNull)))
-
-      case showClusterRe(name) =>
+          .toDF("name", "is_aggregate"), "name")
+      else if (c.eatKw("CLUSTER")) {
         // Spark local mode is one "cluster" named local; a real deploy
         // would surface the executor topology here
-        Some(Seq(("local", 1, 1, "localhost"))
+        val name = c.str("a cluster name string")
+        ended(Seq(("local", 1, 1, "localhost"))
           .toDF("cluster", "shard_num", "replica_num", "host_name")
           .filter(col("cluster") === name))
-
-      case showClustersRe(kwOrNull, patOrNull) =>
-        Some(likeFilter(Seq("local").toDF("cluster"), "cluster",
-          Option(kwOrNull), Option(patOrNull)))
-
-      case showRolesRe() =>
-        Some(Seq.empty[String].toDF("name")) // no roles defined
-
-      case showProfilesRe() =>
-        Some(Seq("default").toDF("name"))
-
-      case showPoliciesRe() =>
-        Some(Seq.empty[String].toDF("name")) // no row policies defined
-
-      case showQuotaRe() =>
-        Some(Seq(("default", "default")).toDF("quota_name", "quota_key"))
-
-      case createDictRe(ifNot, name, cols, key, tail) =>
-        import graft.sources.Dictionaries
-        if (Option(ifNot).isDefined && Dictionaries.exists(name))
-          Some(status(s"dictionary $name already exists"))
-        else {
-          val schema = graft.model.ChTypes.toSparkSchema(cols)
-          require(schema.fieldNames.contains(key),
-            s"ChSql: PRIMARY KEY $key is not a dictionary column")
-          val layout = dictLayoutRe.findFirstMatchIn(tail)
-            .map(_.group(1).toUpperCase(java.util.Locale.ROOT))
-          val range = dictRangeRe.findFirstMatchIn(tail)
-            .map(m => (m.group(1), m.group(2)))
-          // RANGE_HASHED is the one layout with different lookup
-          // semantics; the clause pair must be consistent, and the range
-          // bound columns must exist (they are structure, not attributes).
-          layout match {
-            case Some("RANGE_HASHED") => require(range.isDefined,
-              "ChSql: LAYOUT(RANGE_HASHED()) needs RANGE(MIN lo MAX hi)")
-            case _ => require(range.isEmpty,
-              "ChSql: RANGE(MIN .. MAX ..) needs LAYOUT(RANGE_HASHED())")
-          }
-          range.foreach { case (lo, hi) =>
-            Seq(lo, hi).foreach(c => require(schema.fieldNames.contains(c),
-              s"ChSql: RANGE column $c is not a dictionary column"))
-            require(lo != key && hi != key,
-              "ChSql: RANGE columns cannot be the PRIMARY KEY")
-          }
-          val nonAttr = Set(key) ++ range.toSeq.flatMap(r => Seq(r._1, r._2))
-          val attrs = schema.fieldNames.filterNot(nonAttr)
-            .map(c => c -> c).toMap
-          tail match {
-            case t if dictSourceFileRe.findFirstMatchIn(t).isDefined =>
-              val m = dictSourceFileRe.findFirstMatchIn(t).get
-              Dictionaries.createFromPath(name, m.group(1),
-                Option(m.group(2)).getOrElse("parquet").toLowerCase,
-                key, attrs, range)
-            case t if dictSourceTableRe.findFirstMatchIn(t).isDefined =>
-              val src = dictSourceTableRe.findFirstMatchIn(t).get.group(1)
-              // resolve (not spark.table) so Memory/TEMPORARY engine
-              // tables and qualified names work as dictionary sources
-              Dictionaries.create(name, _ => resolve(src), key, attrs, range)
-            case _ => throw new IllegalArgumentException(
-              "ChSql: CREATE DICTIONARY needs SOURCE(FILE(path '...')) " +
-                "or SOURCE(CLICKHOUSE(TABLE '...'))")
-          }
-          // CH loads FLAT/HASHED dictionaries at create time; warming the
-          // resolved frame here keeps later dictGet translation zero-job
-          Dictionaries.loaded(spark, name)
-          Some(status(s"dictionary $name created"))
-        }
-
-      case dropDictRe(ifExists, name) =>
-        import graft.sources.Dictionaries
-        if (!Dictionaries.exists(name) && Option(ifExists).isEmpty)
-          throw new IllegalArgumentException(
-            s"ChSql: DICTIONARY $name does not exist")
-        Dictionaries.drop(name)
-        Some(status(s"dropped dictionary $name"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT)
-          .startsWith("SHOW DICTIONARIES") =>
-        Some(graft.sources.Dictionaries.names.toDF("name"))
-
-      case detachRe(kind, ifExists, name) =>
-        Some(detach(spark, kind.toUpperCase(java.util.Locale.ROOT),
-          Option(ifExists).isDefined, name, status))
-
-      case attachRe(kind, ifNot, name) =>
-        Some(attach(spark, kind.toUpperCase(java.util.Locale.ROOT),
-          Option(ifNot).isDefined, name, status))
-
-      case checkRe(name) =>
-        // full-scan validation over the table's file location (the path
-        // rides out of the resolver's scan relation, same as WATCH)
-        val paths = filePaths(spark, resolve(name))
-        require(paths.nonEmpty,
-          s"ChSql: CHECK TABLE $name: not a file-backed table")
-        val (ok, n, err) = graft.operators.AdminOps.checkTable(spark, paths.head)
-        Some(Seq((name, ok, n, err.orNull)).toDF("table", "ok", "rows", "error"))
-
-      case existsRe(name) =>
-        val exists = spark.catalog.tableExists(name) ||
-          (try { resolve(name); true } catch { case _: Exception => false })
-        Some(Seq(if (exists) 1 else 0).toDF("result"))
-
-      case killRe(queryId) =>
-        Some(status(graft.operators.AdminOps.killQuery(spark, queryId)))
-
-      case killMutationRe(where) =>
-        Some(status(graft.operators.AdminOps.killMutation(where)))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT)
-          .startsWith("SHOW PROCESSLIST") =>
-        // showStmt PROCESSLIST alternative (ClickHouseParser.py:11994-13901):
+      } else if (c.eatKw("CLUSTERS"))
+        likeTail(c, Seq("local").toDF("cluster"), "cluster")
+      else if (c.eatKw("DICTIONARIES"))
+        likeTail(c, graft.sources.Dictionaries.names.toDF("name"), "name")
+      else if (Seq("ROLES", "CURRENT ROLES", "ENABLED ROLES", "FILESYSTEM CACHES")
+          .exists(k => c.eatKw(k.split(' ').toSeq: _*)))
+        ended(Seq.empty[String].toDF("name")) // no roles, no fs cache layer
+      else if (c.eatKw("POLICIES") || c.eatKw("ROW", "POLICIES")) {
+        if (c.eatKw("ON")) c.name("a table name")
+        ended(Seq.empty[String].toDF("name")) // no row policies defined
+      } else if (c.eatKw("QUOTA") || c.eatKw("CURRENT", "QUOTA"))
+        ended(Seq(("default", "default")).toDF("quota_name", "quota_key"))
+      else if (c.eatKw("QUOTAS") || c.eatKw("USERS"))
+        ended(Seq("default").toDF("name"))
+      else if (c.eatKw("PROCESSLIST"))
         // live queries registered via AdminOps.withQueryId
-        Some(graft.operators.AdminOps.processList()
+        ended(graft.operators.AdminOps.processList()
           .toDF("query_id", "query", "elapsed_sec"))
-
-      case systemRe(cmd, argOrNull) =>
-        Some(status(graft.operators.AdminOps.system(
-          spark, cmd, Option(argOrNull))))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).trim == "SHOW USERS" =>
-        Some(Seq("default").toDF("name"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).startsWith("SHOW QUOTAS") =>
-        Some(Seq("default").toDF("name"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).trim == "SHOW ACCESS" =>
+      else if (c.eatKw("ACCESS"))
         // the concatenated access-entity dump (showStmt ACCESS,
         // ClickHouseParser.py:12295-12312)
-        Some(Seq("CREATE USER default",
+        ended(Seq("CREATE USER default",
           "CREATE SETTINGS PROFILE default",
           "CREATE QUOTA default",
           "GRANT ALL ON *.* TO default WITH GRANT OPTION").toDF("access"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).trim == "SHOW PRIVILEGES" =>
+      else if (c.eatKw("PRIVILEGES"))
         // the privilege vocabulary this engine's statement layer exposes
-        Some(Seq(
+        ended(Seq(
           ("SELECT", "TABLE"), ("INSERT", "TABLE"), ("ALTER", "TABLE"),
           ("CREATE TABLE", "TABLE"), ("CREATE VIEW", "VIEW"),
           ("CREATE DICTIONARY", "DICTIONARY"), ("DROP", "TABLE"),
           ("TRUNCATE", "TABLE"), ("OPTIMIZE", "TABLE"), ("SHOW", "GLOBAL"),
           ("KILL QUERY", "GLOBAL"), ("SYSTEM", "GLOBAL"),
           ("dictGet", "DICTIONARY")).toDF("privilege", "level"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).trim == "SHOW ENGINES" =>
+      else if (c.eatKw("ENGINES"))
         // system.table_engines shape, restricted to engines with mapped
         // semantics (MergeTree family props, view/stream registry,
         // dictionary registry, file sources)
-        Some(Seq(
+        ended(Seq(
           ("MergeTree", true, true, false),
           ("ReplacingMergeTree", true, true, true),
           ("SummingMergeTree", true, true, true),
@@ -851,26 +826,29 @@ object ChDdl {
           ("File", false, false, false))
           .toDF("name", "supports_sort_order", "supports_partition_by",
             "supports_final"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).startsWith("SHOW MERGES") =>
+      else if (c.eatKw("MERGES"))
         // merges/mutations run synchronously inside OPTIMIZE/ALTER here,
         // so the in-flight set is always empty — honest, not a stub
-        Some(Seq.empty[(String, String, Double, Double, Boolean)]
+        ended(Seq.empty[(String, String, Double, Double, Boolean)]
           .toDF("database", "table", "elapsed", "progress", "is_mutation"))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT)
-          .startsWith("SHOW FILESYSTEM CACHES") =>
-        Some(Seq.empty[String].toDF("name")) // no fs cache layer
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).startsWith("SHOW DATABASES") =>
-        Some(spark.catalog.listDatabases().toDF.select(col("name")))
-
-      case t if t.toUpperCase(java.util.Locale.ROOT).startsWith("SHOW TABLES") =>
-        Some(spark.catalog.listTables().toDF
-          .select(col("name")).orderBy("name"))
-
-      case _ => None
+      else c.fail(s"unsupported SHOW statement: SHOW ${c.slice(c.pos, c.end)}")
     }
+  }
+
+  /** `SHOW TABLES [FROM|IN db] [[NOT] LIKE|ILIKE 'p']` read after its head
+    * keywords: the catalog's tables of `db` (default: the current one,
+    * plus the `extra` names a caller lists itself — the [[graft.Sql]] CLI
+    * adds its directory's parquet tables), filtered and sorted by name. */
+  private[graft] def showTables(spark: SparkSession, c: Cur,
+      extra: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val db = if (c.eatKw("FROM") || c.eatKw("IN")) Some(c.ident("a database name"))
+      else None
+    db.foreach(d => require(spark.catalog.databaseExists(d),
+      s"ChSql: database $d does not exist"))
+    val listed = db.fold(spark.catalog.listTables())(spark.catalog.listTables)
+      .collect().map(_.name).toSeq ++ (if (db.isEmpty) extra else Nil)
+    likeTail(c, listed.distinct.toDF("name"), "name").orderBy("name")
   }
 
   // ===================== Memory engine / TEMPORARY tables ==============
@@ -902,7 +880,7 @@ object ChDdl {
   }
 
   private def createMemoryTable(spark: SparkSession, ifNotExists: Boolean,
-      name: String, colsText: String, temporary: Boolean,
+      name: String, defs: Seq[ColDef], temporary: Boolean,
       status: String => DataFrame): DataFrame = {
     // Memory tables live behind temp views, which cannot carry a db
     // qualifier — refuse a dotted name up front with a clear message
@@ -914,7 +892,6 @@ object ChDdl {
       if (ifNotExists) return status(s"table $name already exists")
       throw new IllegalArgumentException(s"ChSql: table $name already exists")
     }
-    val defs = splitTop(colsText).map(parseColDef)
     require(defs.forall(_.modKind.isEmpty),
       "ChSql: Memory/TEMPORARY tables take plain typed columns " +
         "(no DEFAULT/MATERIALIZED/ALIAS)")
@@ -983,12 +960,10 @@ object ChDdl {
 
   // ===================== MATERIALIZED / LIVE VIEW =====================
 
-  /** Text-layer MV metadata: source table + select text + TO target, so
-    * WATCH can rebuild the stream twin from the registered name. */
-  private final case class MvMeta(src: String, sel: String,
-      target: Option[String])
-  private val mvMeta =
-    scala.collection.concurrent.TrieMap.empty[String, MvMeta]
+  /** Each materialized view's source table, so WATCH can rebuild the
+    * stream twin from the registered name. */
+  private val mvSources =
+    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** `CREATE MATERIALIZED VIEW v [TO t] [POPULATE] AS SELECT`: register
     * the transform in the [[graft.streaming.StreamingOps]] MV registry
@@ -997,15 +972,16 @@ object ChDdl {
     * into the TO target when it is a writable catalog table, else as a
     * queryable temp view named after the MV (CH's implicit inner table). */
   private def createMaterializedView(spark: SparkSession, live: Boolean,
-      name: String, target: Option[String], populate: Boolean, sel: String,
-      resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
+      name: String, target: Option[String], populate: Boolean,
+      sel: ChSql.SetOp, resolve: String => DataFrame,
+      status: String => DataFrame): DataFrame = {
     import graft.streaming.StreamingOps
     val src = ChSql.firstTable(sel).getOrElse(throw new IllegalArgumentException(
       s"ChSql: materialized view $name has no source table in its SELECT"))
     val transform: DataFrame => DataFrame =
-      in => ChSql.sql(spark, sel)(n => if (n == src) in else resolve(n))
+      in => ChSql.plan(spark, sel)(n => if (n == src) in else resolve(n))
     StreamingOps.register(StreamingOps.MaterializedView(name, transform))
-    mvMeta.put(name, MvMeta(src, sel, target))
+    mvSources.put(name, src)
     if (populate) {
       val out = StreamingOps.populate(
         StreamingOps.MaterializedView(name, transform), resolve(src))
@@ -1032,12 +1008,12 @@ object ChDdl {
   private def watchView(spark: SparkSession, name: String,
       resolve: String => DataFrame, events: Boolean = false): DataFrame = {
     import graft.streaming.StreamingOps
-    val meta = mvMeta.getOrElse(name, throw new IllegalArgumentException(
+    val src = mvSources.getOrElse(name, throw new IllegalArgumentException(
       s"ChSql: WATCH: unknown view '$name' (CREATE MATERIALIZED VIEW first)"))
-    val srcBatch = resolve(meta.src)
+    val srcBatch = resolve(src)
     val paths = filePaths(spark, srcBatch)
     require(paths.nonEmpty,
-      s"ChSql: WATCH $name: source table '${meta.src}' is not file-backed")
+      s"ChSql: WATCH $name: source table '$src' is not file-backed")
     if (events)
       StreamingOps.watchEvents(spark, name, paths.head, srcBatch.schema)
     else StreamingOps.watch(spark, name, paths.head, srcBatch.schema)
@@ -1053,50 +1029,33 @@ object ChDdl {
   private final case class ColDef(name: String, chType: Option[String],
       modKind: Option[String], modExpr: Option[String], comment: Option[String])
 
-  private val ColMods = Set("DEFAULT", "MATERIALIZED", "ALIAS", "CODEC",
+  private val ColMods = Seq("DEFAULT", "MATERIALIZED", "ALIAS", "CODEC",
     "COMMENT", "TTL")
 
-  /** Token-level column-definition parse — the type text and the modifier
-    * expression are substrings of the original text cut at top-level
-    * keyword tokens, so `DEFAULT ') ENGINE = x'` parses as the string
-    * literal it is. */
-  private def parseColDef(defText: String): ColDef = {
-    val toks = ChSql.lexPos(defText)
-    val (name, nameEnd) = toks.headOption match {
-      case Some((id: ChSql.TId, _, e)) => (id.s, e)
-      case _ => throw new IllegalArgumentException(
-        s"ChSql: bad column definition '$defText'")
+  /** The column definition in tokens [from, until) of `c` — the type
+    * text and the modifier expression are slices of the original cut at
+    * top-level modifier keywords, so `DEFAULT ') ENGINE = x'` parses as
+    * the string literal it is. */
+  private def colDef(c: Cur, from: Int, until: Int): ColDef = {
+    val name = c.toks(from)._1 match {
+      case t: ChSql.TId => t.s
+      case _ => c.fail(s"bad column definition '${c.slice(from, until)}'")
     }
-    // top-level modifier keyword marks: (token idx, keyword, char start)
-    val marks = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Int)]
-    var depth = 0
-    var i = 1
-    while (i < toks.length) {
-      toks(i) match {
-        case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-        case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-        case (m: ChSql.TId, b, _) if depth == 0 && ColMods(m.up) =>
-          marks += ((i, m.up, b))
-        case _ =>
-      }
-      i += 1
-    }
-    val typeEnd = marks.headOption.map(_._3).getOrElse(defText.length)
-    val chType = Some(defText.substring(nameEnd, typeEnd).trim).filter(_.nonEmpty)
+    val marks = Iterator.iterate(c.find(from + 1, until, ColMods: _*))(
+      i => c.find(i + 1, until, ColMods: _*)).takeWhile(_ < until).toSeq
+    val chType = Some(c.slice(from + 1, marks.headOption.getOrElse(until)).trim)
+      .filter(_.nonEmpty)
     var modKind: Option[String] = None
     var modExpr: Option[String] = None
     var comment: Option[String] = None
-    marks.zipWithIndex.foreach { case ((tokIdx, kw, _), k) =>
-      val bodyStart = toks(tokIdx)._3
-      val bodyEnd = marks.lift(k + 1).map(_._3).getOrElse(defText.length)
-      kw match {
-        case "DEFAULT" | "MATERIALIZED" | "ALIAS" =>
+    marks.zip(marks.drop(1) :+ until).foreach { case (m, bodyEnd) =>
+      c.slice(m, m + 1).toUpperCase(java.util.Locale.ROOT) match {
+        case kw @ ("DEFAULT" | "MATERIALIZED" | "ALIAS") =>
           modKind = Some(kw)
-          modExpr = Some(defText.substring(bodyStart, bodyEnd).trim)
-        case "COMMENT" => toks.lift(tokIdx + 1) match {
-          case Some((ChSql.TStr(v), _, _)) => comment = Some(v)
-          case _ => throw new IllegalArgumentException(
-            s"ChSql: COMMENT on column $name needs a string literal")
+          modExpr = Some(c.slice(m + 1, bodyEnd).trim)
+        case "COMMENT" => c.toks(m + 1)._1 match {
+          case TStr(v) if m + 1 < bodyEnd => comment = Some(v)
+          case _ => c.fail(s"COMMENT on column $name needs a string literal")
         }
         case _ => // CODEC(...) / column-level TTL: accepted, no Spark twin
       }
@@ -1104,10 +1063,11 @@ object ChDdl {
     ColDef(name, chType, modKind, modExpr, comment)
   }
 
-  private def createTable(spark: SparkSession, ifNotExists: Boolean,
-      name: String, colsText: String, engine: String, engineArgs: String,
-      tail: String, status: String => DataFrame): DataFrame = {
-    val defs = splitTop(colsText).map(parseColDef)
+  /** A catalog (parquet/File) table from a CREATE TABLE column list. */
+  private def createStoredTable(spark: SparkSession, spec: TableSpec,
+      engine: String, status: String => DataFrame): DataFrame = {
+    val (name, ifNotExists, defs) = (spec.name, spec.ifNot, spec.cols)
+    val engineArgs = spec.engineArgs.getOrElse("")
     // ALIAS columns are never stored (CH computes them at SELECT time);
     // everything else lands in the physical schema
     val stored = defs.filterNot(_.modKind.contains("ALIAS"))
@@ -1115,41 +1075,23 @@ object ChDdl {
       s"ChSql: column ${d.name} needs a type (only ALIAS columns may omit it)"))
     val schema = graft.model.ChTypes.toSparkSchema(
       stored.map(d => s"${d.name} ${d.chType.get}").mkString(", "))
-    // engine tail: ORDER BY k / ORDER BY (k1, k2) / PARTITION BY c / TTL ...
-    def clause(kw: String): Option[String] = {
-      val re = ("(?is)" + kw +
-        "\\s+(\\([^)]*\\)|[\\w()]+(?:\\s*,\\s*[\\w()]+)*?)" +
-        "(?=\\s+(?:ORDER|PARTITION|PRIMARY|SAMPLE|TTL|SETTINGS)\\s|\\s*$)").r
-      re.findFirstMatchIn(tail)
-        .map(_.group(1).stripPrefix("(").stripSuffix(")").trim)
-    }
-    val orderBy = clause("ORDER\\s+BY")
-    val partitionBy = clause("PARTITION\\s+BY")
-    val ttl = ttlClause(tail)
+    val orderBy = spec.clauses.get("ORDER BY")
+    val partitionBy = spec.clauses.get("PARTITION BY")
+    val ttl = spec.clauses.get("TTL")
     // PRIMARY KEY (primaryKeyClause, ClickHouseParser.py:6013-6062): CH
     // requires it to be a prefix of the sorting key — enforce, then
     // record; SAMPLE BY (sampleByClause, 6063-6112) arms SAMPLE k/m reads
     // on this table without a per-query SETTINGS override
-    val primaryKey = clause("PRIMARY\\s+KEY")
+    val primaryKey = spec.clauses.get("PRIMARY KEY")
     primaryKey.foreach { pk =>
       val ob = orderBy.getOrElse(pk)
       require((ob + ",").replaceAll("\\s", "")
           .startsWith(pk.replaceAll("\\s", "") + ","),
         s"ChSql: PRIMARY KEY ($pk) must be a prefix of ORDER BY ($ob)")
     }
-    val sampleBy = clause("SAMPLE\\s+BY")
+    val sampleBy = spec.clauses.get("SAMPLE BY")
     sampleBy.foreach(sb => require(schema.fieldNames.contains(sb),
       s"ChSql: SAMPLE BY $sb is not a stored column"))
-    // trailing SETTINGS k = v, ... (engine settingsClause region,
-    // 5807-5962): recorded per-key; splitTop/topLevelEq are token-level
-    val tblSettings: Seq[(String, String)] =
-      "(?is)SETTINGS\\s+(.*)$".r.findFirstMatchIn(tail).toSeq
-        .flatMap(m => splitTop(m.group(1)).map { kv =>
-          val eq = topLevelEq(kv)
-          require(eq > 0, s"ChSql: malformed table SETTING '$kv'")
-          kv.substring(0, eq).trim -> kv.substring(eq + 1).trim.stripPrefix("'")
-            .stripSuffix("'")
-        })
     // ReplacingMergeTree(v): the engine argument is the version column
     val version = if (engine.equalsIgnoreCase("ReplacingMergeTree"))
       Some(engineArgs.trim).filter(_.nonEmpty) else None
@@ -1265,7 +1207,7 @@ object ChDdl {
       ttl.map("graft.ttl" -> _) ++
       primaryKey.map("graft.primary_key" -> _) ++
       sampleBy.map("graft.sample_by" -> _) ++
-      tblSettings.map { case (k, v) => s"graft.setting.$k" -> v } ++
+      spec.settings.map { case (k, v) => s"graft.setting.$k" -> v } ++
       defs.collect { case d if d.modKind.contains("DEFAULT") =>
         s"graft.default.${d.name}" -> d.modExpr.get } ++
       defs.collect { case d if d.modKind.contains("MATERIALIZED") =>
@@ -1296,42 +1238,45 @@ object ChDdl {
     status(s"table $name created")
   }
 
-  /** `TTL <expr>` from the engine tail (ttlClause,
-    * ClickHouseParser.py:6113): recorded as the `graft.ttl` property;
-    * [[optimizeTable]] applies it (CH applies TTL on merges). */
-  private def ttlClause(tail: String): Option[String] = {
-    val toks = ChSql.lexPos(tail)
-    var depth = 0
-    var start = -1
-    var i = 0
-    var iTtl = -1
-    while (i < toks.length && start < 0) {
-      toks(i) match {
-        case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-        case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-        case (id: ChSql.TId, _, e) if depth == 0 && id.up == "TTL" =>
-          start = e; iTtl = i
-        case _ =>
-      }
-      i += 1
-    }
-    if (start < 0) None
-    else {
-      // body runs to SETTINGS or end of tail
-      var end = tail.length
-      var j = iTtl + 1
-      while (j < toks.length && end == tail.length) {
-        toks(j) match {
-          case (id: ChSql.TId, b, _) if id.up == "SETTINGS" => end = b
-          case _ =>
+  // ===================== INSERT =====================
+
+  /** `INSERT INTO [TABLE] t [(cols)] VALUES (...), ... | SELECT ... |
+    * FORMAT f <rows>` (insertStmt). */
+  private def insert(spark: SparkSession, c: Cur,
+      resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
+    c.expectKw("INTO")
+    c.eatKw("TABLE")
+    val name = c.name("a table name")
+    val cols =
+      if (!c.isP("(")) Nil
+      else {
+        val (from, until) = c.group()
+        c.items(from, until).map { case (a, b) =>
+          c.toks(a)._1 match {
+            case t: ChSql.TId if b == a + 1 => t.s
+            case _ => c.fail(s"bad INSERT column '${c.slice(a, b)}'")
+          }
         }
-        j += 1
       }
-      Some(tail.substring(start, end).trim).filter(_.nonEmpty)
+    if (c.eatKw("FORMAT")) {
+      // INSERT ... FORMAT <fmt> <inline rows> (insertStmt data clause,
+      // ClickHouseParser.py:7796-7856): the lexer hands the rows over as
+      // one raw token
+      val fmt = c.ident("a format name")
+      val data = if (c.atEnd) "" else c.str("inline rows")
+      c.done()
+      appendInto(spark, name, cols, inlineRows(spark, name, cols, fmt, data))
+      status(s"inserted into $name ($fmt)")
+    } else {
+      val rows =
+        if (c.eatKw("VALUES")) valuesFrame(spark, c, resolve)
+        else if (c.isKw("SELECT") || c.isKw("WITH") || c.isP("("))
+          ChSql.plan(spark, c.query())(resolve)
+        else c.fail(s"INSERT INTO $name needs VALUES, SELECT or FORMAT")
+      appendInto(spark, name, cols, rows)
+      status(s"inserted into $name")
     }
   }
-
-  // ===================== INSERT =====================
 
   /** Parse `(...), (...)` VALUES tuples through the shared expression
     * grammar; each scalar is compiled by [[ChSql.compileExpr]], so
@@ -1340,12 +1285,17 @@ object ChDdl {
     * single-row range — O(1) plan depth however many tuples ride the
     * statement (a per-tuple union builds an O(n)-deep plan that slows
     * analysis and can overflow the stack on large VALUES lists). */
-  private def valuesFrame(spark: SparkSession, values: String,
+  private def valuesFrame(spark: SparkSession, c: Cur,
       resolve: String => DataFrame): DataFrame = {
-    val tuples = splitTuples(values)
+    val tuples = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    while (c.isP("(")) { tuples += c.group(); c.eatP(",") }
+    c.done()
     require(tuples.nonEmpty, "ChSql: INSERT VALUES needs at least one tuple")
-    val rows = tuples.map(t =>
-      splitTop(t).map(e => ChSql.compileExpr(spark, e, resolve)))
+    val rows = tuples.toSeq.map { case (from, until) =>
+      c.items(from, until).map { case (a, b) =>
+        ChSql.compileExpr(spark, c.expr(a, b), resolve)
+      }
+    }
     val arity = rows.head.size
     require(rows.forall(_.size == arity),
       s"ChSql: INSERT VALUES tuples have mixed arities")
@@ -1544,7 +1494,7 @@ object ChDdl {
           .option("header", fmt.equalsIgnoreCase("CSVWithNames")).csv(lines)
       case "tabseparated" | "tsv" | "tabseparatedwithnames" | "tsvwithnames" =>
         spark.read.schema(schema).option("mode", "FAILFAST").option("sep", "\t")
-          .option("header", fmt.toLowerCase.endsWith("withnames")).csv(lines)
+          .option("header", fmt.toLowerCase(java.util.Locale.ROOT).endsWith("withnames")).csv(lines)
       case other => throw new IllegalArgumentException(
         s"ChSql: unsupported inline INSERT FORMAT '$other'")
     }
@@ -1552,51 +1502,55 @@ object ChDdl {
 
   // ===================== ALTER =====================
 
-  private def alterTable(spark: SparkSession, name: String, clause: String,
+  /** A sidecar bloom skip index kind (r12): its ADD INDEX type, table
+    * property stem, status label, the scans it prunes, and its builder
+    * and sidecar table name in [[graft.plans.BloomSkipIndex]]. */
+  private final case class BloomKind(typ: String, prop: String, label: String,
+      scans: String, build: (SparkSession, String, String) => String,
+      sidecar: (String, String) => String)
+  private val BloomKinds = {
+    import graft.plans.BloomSkipIndex._
+    Seq(BloomKind("bloom_filter", "graft.bloomindex.", "bloom", "equality/IN",
+        materialize, sidecarName),
+      BloomKind("tokenbf_v1", "graft.tokbloomindex.", "token bloom", "hasToken",
+        materializeTokens, tokenSidecarName),
+      BloomKind("ngrambf_v1", "graft.ngrambloomindex.", "ngram bloom",
+        "LIKE-substring", materializeNgrams, ngramSidecarName))
+  }
+
+  /** `ALTER TABLE name <clause>` read from the cursor, which stands at the
+    * clause (alterTableClause, ClickHouseParser.py:2178-2960). */
+  private def alterTable(spark: SparkSession, cur: Cur, name: String,
       resolve: String => DataFrame, status: String => DataFrame): DataFrame = {
     import graft.operators.Mutations
-    val up = clause.toUpperCase(java.util.Locale.ROOT)
-    // resolve columns of the target table during predicate compilation
-    def pred(text: String): Column = ChSql.compileExpr(spark, text, resolve)
+    val clauseAt = cur.pos
+    def column(): String = cur.ident("a column name")
+    def ended(): Unit = cur.done()
+    def kw(kws: String*): Boolean = cur.eatKw(kws: _*)
 
-    if (up.startsWith("DELETE")) {
-      val where = "(?is)^DELETE\\s+WHERE\\s+(.*)$".r.findFirstMatchIn(clause)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "ChSql: ALTER ... DELETE needs WHERE"))
-      val p = pred(where)
-      val scope = mutateWhere(spark, name, p)(Mutations.delete(_, p))
-      status(s"mutation applied to $name (delete; $scope)")
-    } else if (up.startsWith("UPDATE")) {
-      val rest = clause.replaceFirst("(?is)^UPDATE\\s+", "")
-      val w = topKeywordPos(rest, "WHERE")
-      require(w >= 0, "ChSql: ALTER ... UPDATE needs assignments and WHERE")
-      val assignments = parseAssignments(spark, rest.substring(0, w), resolve)
-      val p = pred(rest.substring(w).replaceFirst("(?is)^WHERE\\s+", ""))
-      // guard after the transform: UPDATE c = NULL on a declared
-      // non-Nullable column must fail (CH parity), not store a NULL that
-      // the addfill read rule would silently resurrect as the default
-      val scope = mutateWhere(spark, name, p, rowsPreserved = true)(df =>
-        guardNonNullableWrites(tablePropsSafe(spark, name),
-          Mutations.update(df, assignments, p), name))
-      status(s"mutation applied to $name (update ${
-        assignments.map(_._1).mkString(",")}; $scope)")
-    } else if (up.startsWith("ADD COLUMN")) {
+    if (kw("DELETE")) {
+      status(s"mutation applied to $name (delete; ${
+        deleteRows(spark, cur, name, resolve, "ALTER ... DELETE needs WHERE")})")
+    } else if (kw("UPDATE")) {
+      val (cols, scope) = updateRows(spark, cur, name, resolve,
+        "ALTER ... UPDATE needs assignments and WHERE")
+      status(s"mutation applied to $name (update ${cols.mkString(",")}; $scope)")
+    } else if (kw("ADD", "COLUMN")) {
       // metadata-only in CH AND in Spark: the catalog schema grows, old
       // parquet files simply read the new column as NULL — zero jobs, no
       // rewrite (AlterTableAddColumnsCommand). An optional DEFAULT rides
       // as a graft.default property for future INSERTs.
-      val m = ("(?is)^ADD\\s+COLUMN\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
-        "(\\w+)\\s+(.*)$").r.findFirstMatchIn(clause).get
+      cur.ifNotExists()
       // optional position clause (AlterTableClauseAddColumn AFTER,
       // ClickHouseParser.py:2896-2960): placement is declared-order
       // metadata — the physical parquet schema appends, positional
       // INSERT and SHOW CREATE follow graft.columns
-      val posRe = "(?is)^(.*?)\\s+(?:AFTER\\s+(\\w+)|(FIRST))\\s*$".r
-      val (defText, afterCol, isFirst) = m.group(2).trim match {
-        case posRe(d0, a, f) => (d0, Option(a), Option(f).isDefined)
-        case other => (other, None, false)
-      }
-      val d = parseColDef(s"${m.group(1)} $defText")
+      val defEnd = cur.upTo("AFTER", "FIRST")
+      val d = colDef(cur, cur.pos, defEnd)
+      cur.pos = defEnd
+      val afterCol = if (kw("AFTER")) Some(column()) else None
+      val isFirst = kw("FIRST")
+      ended()
       require(!d.modKind.contains("ALIAS"), // ALIAS add = property only
         "ChSql: ADD COLUMN ... ALIAS: use CREATE TABLE ALIAS columns")
       val dt = graft.model.ChTypes.toSpark(d.chType.getOrElse(
@@ -1624,16 +1578,16 @@ object ChDdl {
               sqlLit(d.modExpr.getOrElse(""))})")
         if (afterCol.nonEmpty || isFirst) {
           val props = tablePropsSafe(spark, name)
-          val cur = props.get("graft.columns")
+          val declared = props.get("graft.columns")
             .map(_.split(",").map(_.trim).toSeq)
             .getOrElse(spark.table(name).columns.toSeq)
             .filterNot(_ == d.name)
           val ordered = afterCol match {
             case Some(a) =>
-              require(cur.contains(a),
+              require(declared.contains(a),
                 s"ChSql: ADD COLUMN AFTER $a: no such column in $name")
-              cur.flatMap(c => if (c == a) Seq(c, d.name) else Seq(c))
-            case None => d.name +: cur
+              declared.flatMap(c => if (c == a) Seq(c, d.name) else Seq(c))
+            case None => d.name +: declared
           }
           spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
             s"'graft.columns'=${sqlLit(ordered.mkString(","))})")
@@ -1650,47 +1604,50 @@ object ChDdl {
         else ""
         status(s"added column ${d.name} to $name (metadata only)$warn")
       }
-    } else if (up.startsWith("DROP COLUMN")) {
+    } else if (kw("DROP", "COLUMN")) {
       // genuinely rewrites data on immutable parquet (no column-mapping
       // metadata layer); a table format would make it metadata-only
-      val c = clause.split("\\s+").last
+      cur.ifExists()
+      val c = column()
+      ended()
       rewriteSwap(spark, name)(Mutations.dropColumn(_, c))
       // scrub the column's metadata: a surviving graft.default.<c> would
       // silently RESURRECT the old default if the column is later
       // re-ADDed, and a stale graft.columns entry pollutes declared order
       rekeyColProps(spark, name, c, None)
       status(s"dropped column $c from $name")
-    } else if (up.startsWith("RENAME COLUMN")) {
+    } else if (kw("RENAME", "COLUMN")) {
       // CH renames are metadata, but plain parquet resolves columns BY
       // NAME — a catalog-only rename would silently read NULLs from every
       // existing file. The honest Spark-on-parquet cost is a rewrite; a
       // field-id table format (Iceberg) would make this metadata-only.
-      val m = "(?is)^RENAME\\s+COLUMN\\s+(\\w+)\\s+TO\\s+(\\w+)$".r
-        .findFirstMatchIn(clause).get
-      rewriteSwap(spark, name)(Mutations.renameColumn(_, m.group(1), m.group(2)))
+      cur.ifExists()
+      val from = column()
+      cur.expectKw("TO")
+      val to = column()
+      ended()
+      rewriteSwap(spark, name)(Mutations.renameColumn(_, from, to))
       // re-key column-scoped metadata: a stale old name in graft.columns
       // silently REORDERS positional INSERT binding (the renamed column
       // drops out of the declared list and re-appends at the end, so
       // later positional INSERTs bind values to the wrong columns —
       // found by the r10 DDL fuzz gate, col_alter arm, seeds 237/349)
-      rekeyColProps(spark, name, m.group(1), Some(m.group(2)))
-      status(s"renamed column ${m.group(1)} to ${m.group(2)} in $name")
-    } else if (up.startsWith("MODIFY COLUMN")) {
-      val m = "(?is)^MODIFY\\s+COLUMN\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)\\s+(.*)$".r
-        .findFirstMatchIn(clause).get
-      val (c, rest) = (m.group(1), m.group(2).trim)
-      val restUp = rest.toUpperCase(java.util.Locale.ROOT)
-      val removeRe = ("(?is)^REMOVE\\s+(DEFAULT|MATERIALIZED|ALIAS|CODEC|" +
-        "COMMENT|TTL)\\s*$").r
-      if (restUp.startsWith("REMOVE")) {
+      rekeyColProps(spark, name, from, Some(to))
+      status(s"renamed column $from to $to in $name")
+    } else if (kw("MODIFY", "COLUMN")) {
+      cur.ifExists()
+      val defAt = cur.pos
+      val c = column()
+      if (kw("REMOVE")) {
         // MODIFY COLUMN c REMOVE prop (AlterTableClauseModifyRemove,
         // ClickHouseParser.py:2294-2323): the column expressions live as
         // graft.* properties — unset is metadata-only, zero jobs
-        val kind = removeRe.findFirstMatchIn(rest).getOrElse(
-          throw new IllegalArgumentException(
-            s"ChSql: MODIFY COLUMN REMOVE expects DEFAULT|MATERIALIZED|" +
-              s"ALIAS|CODEC|COMMENT|TTL, got '$rest'"))
-          .group(1).toLowerCase(java.util.Locale.ROOT)
+        val kind = Seq("DEFAULT", "MATERIALIZED", "ALIAS", "CODEC", "COMMENT",
+          "TTL").find(kw(_)).getOrElse(cur.fail(
+            s"MODIFY COLUMN REMOVE expects DEFAULT|MATERIALIZED|" +
+              s"ALIAS|CODEC|COMMENT|TTL, got '${cur.slice(cur.pos, cur.end)}'"))
+          .toLowerCase(java.util.Locale.ROOT)
+        ended()
         kind match {
           case "comment" =>
             spark.sql(s"ALTER TABLE $name ALTER COLUMN $c COMMENT ''")
@@ -1704,9 +1661,11 @@ object ChDdl {
               s"${sqlLit(s"graft.$k.$c")})")
         }
         status(s"removed $kind from column $c of $name (metadata only)")
-      } else if (restUp.startsWith("CODEC")) {
+      } else if (kw("CODEC")) {
         // column CODEC has no Spark twin (parquet picks its own encoding)
         // — same accepted-and-ignored contract as the CREATE TABLE path
+        cur.group()
+        ended()
         status(s"codec of $c accepted (parquet chooses physical encoding)")
       } else {
         // MODIFY COLUMN c Type [DEFAULT|MATERIALIZED expr] through the
@@ -1715,7 +1674,8 @@ object ChDdl {
         // (existing rows convert); a modifier change is metadata — the
         // recorded expression swaps, existing rows keep their values and
         // only LATER omitted-column INSERTs see the new default (CH)
-        val d = parseColDef(s"$c $rest")
+        val d = colDef(cur, defAt, cur.end)
+        cur.pos = cur.end
         require(!d.modKind.contains("ALIAS"),
           "ChSql: MODIFY COLUMN ... ALIAS: drop and re-create the ALIAS " +
             "column instead (ALIAS columns are never stored)")
@@ -1741,23 +1701,25 @@ object ChDdl {
           d.modKind.map(k => s" (${k.toLowerCase(java.util.Locale.ROOT)} " +
             "updated)").getOrElse(""))
       }
-    } else if (up.startsWith("CLEAR INDEX")) {
+    } else if (kw("CLEAR", "INDEX")) {
       // CLEAR INDEX IN PARTITION (AlterTableClauseClearIndex, 2665-2694):
       // our "index" IS the data clustering + parquet footer stats — there
       // is no side file to clear; MATERIALIZE INDEX rebuilds clustering
-      val idx = "(?is)^CLEAR\\s+INDEX\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)".r
-        .findFirstMatchIn(clause).map(_.group(1)).getOrElse("?")
+      cur.ifExists()
+      val idx = cur.ident("an index name")
+      if (kw("IN", "PARTITION")) partition(cur)
+      ended()
       status(s"index $idx stats live in parquet footers; nothing to clear " +
         s"(MATERIALIZE INDEX $idx re-clusters)")
-    } else if (up.startsWith("CLEAR PROJECTION")) {
+    } else if (kw("CLEAR", "PROJECTION")) {
       // CLEAR PROJECTION [IN PARTITION] (AlterTableClauseClearProjection,
       // 2264-2293): cleared parts need a rebuild — drop the materialized
       // table, keep the registration; substitution stops until the next
       // MATERIALIZE PROJECTION
-      val p = "(?is)^CLEAR\\s+PROJECTION\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)".r
-        .findFirstMatchIn(clause).map(_.group(1)).getOrElse(
-          throw new IllegalArgumentException(
-            "ChSql: CLEAR PROJECTION needs a name"))
+      cur.ifExists()
+      val p = cur.ident("CLEAR PROJECTION needs a name")
+      if (kw("IN", "PARTITION")) partition(cur)
+      ended()
       projMeta.get((name, p)) match {
         case None => status(s"no projection $p on $name")
         case Some(meta) =>
@@ -1766,15 +1728,17 @@ object ChDdl {
           projMeta.put((name, p), meta.copy(projTable = None, outCols = Nil))
           status(s"cleared projection $p of $name (re-MATERIALIZE to rebuild)")
       }
-    } else if (up.startsWith("COMMENT COLUMN")) {
+    } else if (kw("COMMENT", "COLUMN")) {
       // pure catalog metadata in both engines — zero-job ALTER COLUMN
-      val m = "(?is)^COMMENT\\s+COLUMN\\s+(\\w+)\\s+'(.*)'$".r
-        .findFirstMatchIn(clause).get
-      spark.sql(s"ALTER TABLE $name ALTER COLUMN ${m.group(1)} " +
-        s"COMMENT ${sqlLit(m.group(2))}")
-      status(s"commented column ${m.group(1)} in $name (metadata only)")
-    } else if (up.startsWith("DROP PARTITION")) {
-      val vals = partitionValues(clause.substring("DROP PARTITION".length))
+      cur.ifExists()
+      val c = column()
+      val text = cur.str("a comment string")
+      ended()
+      spark.sql(s"ALTER TABLE $name ALTER COLUMN $c COMMENT ${sqlLit(text)}")
+      status(s"commented column $c in $name (metadata only)")
+    } else if (kw("DROP", "PARTITION")) {
+      val vals = partition(cur)
+      ended()
       val spec = partitionSpecSql(spark, name, vals)
       spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION ($spec)")
       // content changed without a rewrite: materialized projections of
@@ -1783,216 +1747,174 @@ object ChDdl {
       // fuzz gate, projection arm)
       invalidateProjections(spark, name)
       status(s"dropped partition (${vals.mkString(", ")}) from $name")
-    } else if (up.startsWith("DETACH PARTITION")) {
-      val vals = partitionValues(clause.substring("DETACH PARTITION".length))
+    } else if (kw("DETACH", "PARTITION")) {
+      val vals = partition(cur)
+      ended()
       status(detachPartition(spark, name, vals))
-    } else if (up.startsWith("ATTACH PARTITION")) {
-      val vals = partitionValues(clause.substring("ATTACH PARTITION".length))
+    } else if (kw("ATTACH", "PARTITION")) {
+      val vals = partition(cur)
+      ended()
       status(attachPartition(spark, name, vals))
-    } else if (up.startsWith("MOVE PARTITION")) {
-      val m = ("(?is)^MOVE\\s+PARTITION\\s+(.*?)\\s+TO\\s+TABLE\\s+" +
-        "([\\w.]+)\\s*$").r.findFirstMatchIn(clause).getOrElse(
-          throw new IllegalArgumentException(
-            "ChSql: only MOVE PARTITION p TO TABLE t is supported " +
-              "(TO DISK/VOLUME have no Spark twin)"))
-      status(movePartition(spark, name, partitionValues(m.group(1)), m.group(2)))
-    } else if (up.startsWith("REPLACE PARTITION")) {
-      val m = "(?is)^REPLACE\\s+PARTITION\\s+(.*?)\\s+FROM\\s+([\\w.]+)\\s*$".r
-        .findFirstMatchIn(clause).getOrElse(
-          throw new IllegalArgumentException(
-            "ChSql: REPLACE PARTITION needs FROM <table>"))
-      status(replacePartition(spark, name, partitionValues(m.group(1)), m.group(2)))
-    } else if (up.startsWith("FREEZE")) {
-      val vals = "(?is)^FREEZE\\s+PARTITION\\s+(.*)$".r.findFirstMatchIn(clause)
-        .map(m => partitionValues(m.group(1)))
+    } else if (kw("MOVE", "PARTITION")) {
+      val vals = partition(cur)
+      if (!kw("TO", "TABLE")) cur.fail("only MOVE PARTITION p TO TABLE t is " +
+        "supported (TO DISK/VOLUME have no Spark twin)")
+      val to = cur.name("a table name")
+      ended()
+      status(movePartition(spark, name, vals, to))
+    } else if (kw("REPLACE", "PARTITION")) {
+      val vals = partition(cur)
+      if (!kw("FROM")) cur.fail("REPLACE PARTITION needs FROM <table>")
+      val from = cur.name("a table name")
+      ended()
+      status(replacePartition(spark, name, vals, from))
+    } else if (kw("FREEZE")) {
+      val vals = if (kw("PARTITION")) Some(partition(cur)) else None
+      ended()
       status(freezePartitions(spark, name, vals))
-    } else if (up.startsWith("MODIFY ORDER BY")) {
+    } else if (kw("MODIFY", "ORDER", "BY")) {
       // the sorting key is engine metadata here (drives FINAL/OPTIMIZE
       // collapse and sorted writes) — a property update, zero jobs; CH
       // likewise only re-sorts new parts
-      val k = clause.substring("MODIFY ORDER BY".length).trim
-        .stripPrefix("(").stripSuffix(")").trim
+      val (from, until) = cur.rest()
+      val k = cur.sliceUnparen(from, until).trim
       require(k.nonEmpty, "ChSql: MODIFY ORDER BY needs a key")
       spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
         s"'graft.order_by'=${sqlLit(k)})")
       status(s"sorting key of $name set to ($k) (metadata; new parts honor it)")
-    } else if (up.startsWith("MODIFY COMMENT")) {
-      val m = "(?is)^MODIFY\\s+COMMENT\\s+'(.*)'\\s*$".r
-        .findFirstMatchIn(clause).getOrElse(throw new IllegalArgumentException(
-          "ChSql: MODIFY COMMENT needs a string literal"))
-      spark.sql(s"COMMENT ON TABLE $name IS ${sqlLit(m.group(1))}")
+    } else if (kw("MODIFY", "COMMENT")) {
+      val text = cur.str("MODIFY COMMENT needs a string literal")
+      ended()
+      spark.sql(s"COMMENT ON TABLE $name IS ${sqlLit(text)}")
       status(s"comment set on $name (metadata only)")
-    } else if (up.startsWith("MODIFY TTL")) {
-      val ex = clause.substring("MODIFY TTL".length).trim
+    } else if (kw("MODIFY", "TTL")) {
+      val (from, until) = cur.rest()
+      val ex = cur.slice(from, until)
       require(ex.nonEmpty, "ChSql: MODIFY TTL needs an expression")
       spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
         s"'graft.ttl'=${sqlLit(ex)})")
       status(s"ttl set on $name (applied on OPTIMIZE)")
-    } else if (up.startsWith("REMOVE TTL")) {
+    } else if (kw("REMOVE", "TTL")) {
+      ended()
       spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS ('graft.ttl')")
       status(s"ttl removed from $name")
-    } else if (up.startsWith("ADD INDEX")) {
+    } else if (kw("ADD", "INDEX")) {
       // type may carry CH's tuning params — tokenbf_v1(256, 2, 0),
       // bloom_filter(0.01) — which our fixed-size twin acknowledges
       // and ignores (NumBits/NumHashes are the engine's operating point)
-      val m = ("(?is)^ADD\\s+INDEX\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?(\\w+)\\s+" +
-        "(\\w+)\\s+TYPE\\s+(\\w+)(?:\\s*\\([\\d\\s,\\.]*\\))?" +
-        "(?:\\s+GRANULARITY\\s+\\d+)?\\s*$").r
-        .findFirstMatchIn(clause).getOrElse(
-          throw new IllegalArgumentException(
-            "ChSql: ADD INDEX expects: name column TYPE type[(params)] " +
-              "[GRANULARITY n]"))
-      val (idx, c, typ) = (m.group(1), m.group(2), m.group(3))
+      // ADD INDEX name column TYPE type[(params)] [GRANULARITY n]
+      cur.ifNotExists()
+      val idx = cur.ident("an index name")
+      val c = column()
+      cur.expectKw("TYPE")
+      val typ = cur.ident("an index type")
+      if (cur.isP("(")) cur.group()
+      if (kw("GRANULARITY")) cur.num("a GRANULARITY number")
+      ended()
       val typL = typ.toLowerCase(java.util.Locale.ROOT)
-      if (typL == "bloom_filter") {
-        // bloom skip index (r12): equality/IN pruning on UNSORTED
-        // high-cardinality columns — the case min/max clustering can't
-        // serve. Registration installs the per-session prune rule;
-        // MATERIALIZE INDEX builds the per-file sidecar.
-        require(spark.table(name).columns.contains(c),
-          s"ChSql: ADD INDEX: no column $c in $name")
-        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-          s"${sqlLit(s"graft.bloomindex.$idx")}=${sqlLit(c)})")
-        graft.plans.BloomSkipIndex.install(spark)
-        status(s"bloom index $idx on $name($c) registered — equality/IN " +
-          s"scans prune files after MATERIALIZE INDEX $idx")
-      } else if (typL == "tokenbf_v1") {
-        // token bloom (r12): prunes hasToken(col, 'tok') scans — the
-        // text-search skip index over UNSORTED string columns
-        require(spark.table(name).columns.contains(c),
-          s"ChSql: ADD INDEX: no column $c in $name")
-        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-          s"${sqlLit(s"graft.tokbloomindex.$idx")}=${sqlLit(c)})")
-        graft.plans.BloomSkipIndex.install(spark)
-        status(s"token bloom index $idx on $name($c) registered — " +
-          s"hasToken scans prune files after MATERIALIZE INDEX $idx")
-      } else if (typL == "ngrambf_v1") {
-        // n-gram bloom (r12): prunes substring scans (LIKE '%pat%'),
-        // the one predicate class no other index serves
-        require(spark.table(name).columns.contains(c),
-          s"ChSql: ADD INDEX: no column $c in $name")
-        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-          s"${sqlLit(s"graft.ngrambloomindex.$idx")}=${sqlLit(c)})")
-        graft.plans.BloomSkipIndex.install(spark)
-        status(s"ngram bloom index $idx on $name($c) registered — " +
-          s"LIKE-substring scans prune files after MATERIALIZE INDEX $idx")
-      } else if (!Set("minmax", "set").contains(typL))
-        // the AdminOps.system pattern: refuse honestly, don't fake it
-        status(s"index type $typ has no Spark twin (parquet row-group " +
-          s"min/max stats back minmax/set; bloom_filter/tokenbf_v1/" +
-          s"ngrambf_v1 have sidecar twins) — not created")
-      else {
-        require(spark.table(name).columns.contains(c),
-          s"ChSql: ADD INDEX: no column $c in $name")
-        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-          s"${sqlLit(s"graft.index.$idx")}=${sqlLit(c)})")
-        status(s"index $idx on $name($c) registered — new writes cluster " +
-          s"by it; MATERIALIZE INDEX $idx rewrites existing parts")
+      BloomKinds.find(_.typ == typL) match {
+        case Some(b) =>
+          // bloom skip indexes (r12) prune what min/max clustering can't:
+          // equality/IN on UNSORTED high-cardinality columns, hasToken
+          // text search, LIKE substrings. Registration installs the
+          // per-session prune rule; MATERIALIZE INDEX builds the per-file
+          // sidecar.
+          require(spark.table(name).columns.contains(c),
+            s"ChSql: ADD INDEX: no column $c in $name")
+          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
+            s"${sqlLit(b.prop + idx)}=${sqlLit(c)})")
+          graft.plans.BloomSkipIndex.install(spark)
+          status(s"${b.label} index $idx on $name($c) registered — " +
+            s"${b.scans} scans prune files after MATERIALIZE INDEX $idx")
+        case None if !Set("minmax", "set").contains(typL) =>
+          // the AdminOps.system pattern: refuse honestly, don't fake it
+          status(s"index type $typ has no Spark twin (parquet row-group " +
+            s"min/max stats back minmax/set; bloom_filter/tokenbf_v1/" +
+            s"ngrambf_v1 have sidecar twins) — not created")
+        case None =>
+          require(spark.table(name).columns.contains(c),
+            s"ChSql: ADD INDEX: no column $c in $name")
+          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
+            s"${sqlLit(s"graft.index.$idx")}=${sqlLit(c)})")
+          status(s"index $idx on $name($c) registered — new writes cluster " +
+            s"by it; MATERIALIZE INDEX $idx rewrites existing parts")
       }
-    } else if (up.startsWith("MATERIALIZE INDEX") &&
-        tablePropsSafe(spark, name)
-          .contains(s"graft.bloomindex.${clause.split("\\s+").last}")) {
-      val idx = clause.split("\\s+").last
-      val c = tablePropsSafe(spark, name)(s"graft.bloomindex.$idx")
-      val side = graft.plans.BloomSkipIndex.materialize(spark, name, c)
-      graft.plans.BloomSkipIndex.install(spark)
-      status(s"materialized bloom index $idx on $name($c): per-file " +
-        s"sidecar $side built; equality/IN scans now prune")
-    } else if (up.startsWith("MATERIALIZE INDEX") &&
-        tablePropsSafe(spark, name)
-          .contains(s"graft.tokbloomindex.${clause.split("\\s+").last}")) {
-      val idx = clause.split("\\s+").last
-      val c = tablePropsSafe(spark, name)(s"graft.tokbloomindex.$idx")
-      val side = graft.plans.BloomSkipIndex.materializeTokens(spark, name, c)
-      graft.plans.BloomSkipIndex.install(spark)
-      status(s"materialized token bloom index $idx on $name($c): per-file " +
-        s"sidecar $side built; hasToken scans now prune")
-    } else if (up.startsWith("MATERIALIZE INDEX") &&
-        tablePropsSafe(spark, name)
-          .contains(s"graft.ngrambloomindex.${clause.split("\\s+").last}")) {
-      val idx = clause.split("\\s+").last
-      val c = tablePropsSafe(spark, name)(s"graft.ngrambloomindex.$idx")
-      val side = graft.plans.BloomSkipIndex.materializeNgrams(spark, name, c)
-      graft.plans.BloomSkipIndex.install(spark)
-      status(s"materialized ngram bloom index $idx on $name($c): per-file " +
-        s"sidecar $side built; LIKE-substring scans now prune")
-    } else if (up.startsWith("MATERIALIZE INDEX")) {
-      val idx = clause.split("\\s+").last
-      val c = tablePropsSafe(spark, name).getOrElse(s"graft.index.$idx",
-        throw new IllegalArgumentException(
-          s"ChSql: no index $idx on $name (ADD INDEX first)"))
-      // the Spark twin of a skipping index is CLUSTERED parquet: a
-      // range-repartition + in-file sort by the indexed column makes
-      // row-group/file min-max stats disjoint, so a range predicate
-      // skips parts — same effect as the CH granule index. The partition
-      // count is explicit so AQE cannot coalesce the clustering away
-      // (one merged file = one min-max range = nothing to skip)
-      val nParts = math.max(2, spark.sparkContext.defaultParallelism)
-      rewriteSwap(spark, name)(df =>
-        df.repartitionByRange(nParts, col(c)).sortWithinPartitions(col(c)))
-      status(s"materialized index $idx on $name($c): data re-clustered, " +
-        s"row-group stats now selective")
-    } else if (up.startsWith("DROP INDEX")) {
-      val idx = clause.split("\\s+").last
-      tablePropsSafe(spark, name).get(s"graft.bloomindex.$idx").foreach { c =>
-        val side = graft.plans.BloomSkipIndex.sidecarName(name, c)
+    } else if (kw("MATERIALIZE", "INDEX")) {
+      val idx = cur.ident("an index name")
+      ended()
+      val props = tablePropsSafe(spark, name)
+      BloomKinds.flatMap(b => props.get(b.prop + idx).map(b -> _)).headOption.map {
+        case (b, c) =>
+          val side = b.build(spark, name, c)
+          graft.plans.BloomSkipIndex.install(spark)
+          status(s"materialized ${b.label} index $idx on $name($c): per-file " +
+            s"sidecar $side built; ${b.scans} scans now prune")
+      }.getOrElse {
+        val c = props.getOrElse(s"graft.index.$idx",
+          throw new IllegalArgumentException(
+            s"ChSql: no index $idx on $name (ADD INDEX first)"))
+        // the Spark twin of a skipping index is CLUSTERED parquet: a
+        // range-repartition + in-file sort by the indexed column makes
+        // row-group/file min-max stats disjoint, so a range predicate
+        // skips parts — same effect as the CH granule index. The
+        // partition count is explicit so AQE cannot coalesce the
+        // clustering away (one merged file = one min-max range = nothing
+        // to skip)
+        val nParts = math.max(2, spark.sparkContext.defaultParallelism)
+        rewriteSwap(spark, name)(df =>
+          df.repartitionByRange(nParts, col(c)).sortWithinPartitions(col(c)))
+        status(s"materialized index $idx on $name($c): data re-clustered, " +
+          s"row-group stats now selective")
+      }
+    } else if (kw("DROP", "INDEX")) {
+      cur.ifExists()
+      val idx = cur.ident("an index name")
+      ended()
+      val props = tablePropsSafe(spark, name)
+      BloomKinds.foreach(b => props.get(b.prop + idx).foreach { c =>
+        val side = b.sidecar(name, c)
         if (spark.catalog.tableExists(side)) spark.sql(s"DROP TABLE $side")
         graft.plans.BloomSkipIndex.invalidate(side)
-      }
-      tablePropsSafe(spark, name).get(s"graft.tokbloomindex.$idx")
-        .foreach { c =>
-          val side = graft.plans.BloomSkipIndex.tokenSidecarName(name, c)
-          if (spark.catalog.tableExists(side)) spark.sql(s"DROP TABLE $side")
-          graft.plans.BloomSkipIndex.invalidate(side)
-        }
-      tablePropsSafe(spark, name).get(s"graft.ngrambloomindex.$idx")
-        .foreach { c =>
-          val side = graft.plans.BloomSkipIndex.ngramSidecarName(name, c)
-          if (spark.catalog.tableExists(side)) spark.sql(s"DROP TABLE $side")
-          graft.plans.BloomSkipIndex.invalidate(side)
-        }
+      })
       spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS (" +
-        s"${sqlLit(s"graft.index.$idx")}, " +
-        s"${sqlLit(s"graft.bloomindex.$idx")}, " +
-        s"${sqlLit(s"graft.tokbloomindex.$idx")}, " +
-        s"${sqlLit(s"graft.ngrambloomindex.$idx")})")
+        ("graft.index." +: BloomKinds.map(_.prop)).map(p => sqlLit(p + idx))
+          .mkString(", ") + ")")
       status(s"dropped index $idx from $name")
-    } else if (up.startsWith("ADD PROJECTION")) {
-      val m = ("(?is)^ADD\\s+PROJECTION\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
-        "(\\w+)\\s+(\\(.*)$").r.findFirstMatchIn(clause).getOrElse(
-          throw new IllegalArgumentException(
-            "ChSql: ADD PROJECTION expects: name (SELECT ...)"))
-      val body = m.group(2)
-      val end = matchParenEnd(body)
-      require(end > 0, "ChSql: ADD PROJECTION: unbalanced body")
-      val sel = body.substring(1, end - 1).trim
-      projMeta.put((name, m.group(1)),
-        ProjMeta(name, m.group(1), sel, None, Nil))
-      status(s"projection ${m.group(1)} added to $name (applies to new " +
+    } else if (kw("ADD", "PROJECTION")) {
+      cur.ifNotExists()
+      val p = cur.ident("a projection name")
+      val (from, until) = cur.group()
+      ended()
+      val sel = cur.query(from, until) match {
+        case ChSql.One(q) => q
+        case _ => cur.fail(s"ADD PROJECTION $p needs one SELECT")
+      }
+      projMeta.put((name, p), ProjMeta(name, p, sel, None, Nil))
+      status(s"projection $p added to $name (applies to new " +
         s"parts; MATERIALIZE PROJECTION builds it for existing data)")
-    } else if (up.startsWith("MATERIALIZE PROJECTION")) {
-      val p = clause.split("\\s+").last
+    } else if (kw("MATERIALIZE", "PROJECTION")) {
+      val p = cur.ident("a projection name")
+      ended()
       status(materializeProjection(spark, name, p, resolve))
-    } else if (up.startsWith("DROP PROJECTION")) {
-      val p = clause.split("\\s+").last
+    } else if (kw("DROP", "PROJECTION")) {
+      cur.ifExists()
+      val p = cur.ident("a projection name")
+      ended()
       projMeta.remove((name, p)).foreach { meta =>
         meta.projTable.filter(spark.catalog.tableExists)
           .foreach(t => spark.sql(s"DROP TABLE $t"))
       }
       status(s"dropped projection $p from $name")
-    } else if (up.startsWith("CLEAR COLUMN")) {
+    } else if (kw("CLEAR", "COLUMN")) {
       // CLEAR COLUMN c IN PARTITION p (ClickHouseParser.py:2374-2397):
       // reset the column to default/NULL in one partition — a mutation
       // pruned to exactly that partition
-      val m = ("(?is)^CLEAR\\s+COLUMN\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)\\s+" +
-        "IN\\s+PARTITION\\s+(.*)$").r.findFirstMatchIn(clause).get
-      val c = m.group(1)
-      val vals = partitionValues(m.group(2))
-      val pcols = partitionCols(spark, name)
-      require(vals.size == pcols.size, s"ChSql: CLEAR COLUMN: partition " +
-        s"value arity ${vals.size} != partition key arity ${pcols.size}")
-      val p = pcols.zip(vals).map { case (pc, v) =>
-        col(pc) === lit(v) }.reduce(_ && _)
+      cur.ifExists()
+      val c = column()
+      cur.expectKw("IN", "PARTITION")
+      val vals = partition(cur)
+      ended()
+      val p = withPartitionScope(spark, name, Some(vals), lit(true))
       val props = tablePropsSafe(spark, name)
       val field = spark.table(name).schema(c)
       // CH resets a cleared column to its DEFAULT expression if declared,
@@ -2006,8 +1928,8 @@ object ChDdl {
       val scope = mutateWhere(spark, name, p, rowsPreserved = true)(df =>
         df.withColumn(c, when(p, fill.cast(dt)).otherwise(col(c))))
       status(s"cleared column $c in partition (${vals.mkString(", ")}); $scope")
-    } else throw new IllegalArgumentException(
-      s"ChSql: unsupported ALTER TABLE clause: $clause")
+    } else cur.fail(
+      s"unsupported ALTER TABLE clause: ${cur.slice(clauseAt, cur.end)}")
   }
 
   // ===================== partition-level operations =====================
@@ -2017,26 +1939,29 @@ object ChDdl {
     spark.catalog.listColumns(name).collect()
       .filter(_.isPartition).map(_.name).toSeq
 
-  /** Parse a CH partition expression: `'v'` | `123` | `(v1, v2)` |
-    * `ID 'x'` (partitionClause, ClickHouseParser.py:2449 region). */
-  private def partitionValues(text: String): Seq[String] = {
-    val t = text.trim
-    val toks = ChSql.lexPos(t)
-    toks.headOption match {
-      case Some((ChSql.TP("("), _, _)) =>
-        val end = matchParenEnd(t)
-        require(end > 0, s"ChSql: unbalanced partition tuple '$t'")
-        splitTop(t.substring(1, end - 1)).map(v => partitionValues(v).head)
-      case Some((ChSql.TStr(v), _, _)) => Seq(v)
-      case Some((ChSql.TNum(v), _, _)) => Seq(v)
-      case Some((id: ChSql.TId, _, _)) if id.up == "ID" =>
-        toks.lift(1) match {
-          case Some((ChSql.TStr(v), _, _)) => Seq(v)
-          case _ => throw new IllegalArgumentException(
-            s"ChSql: PARTITION ID needs a string literal")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"ChSql: bad partition expression '$text'")
+  /** The partition expression at the cursor (partitionClause,
+    * ClickHouseParser.py:2449 region): `'v'` | `123` | `ID 'x'` |
+    * `[tuple](v1, v2, ...)`. */
+  private def partition(c: Cur): Seq[String] = {
+    def literal(): String = c.tok() match {
+      case TStr(v) => c.pos += 1; v
+      case TNum(v) => c.pos += 1; v
+      case _ => c.fail(s"bad partition expression '${c.slice(c.pos, c.pos + 1)}'")
+    }
+    if (c.isKw("TUPLE") && c.tok(1) == TP("(")) c.pos += 1
+    if (c.eatKw("ID")) Seq(c.str("PARTITION ID needs a string literal"))
+    else if (!c.isP("(")) Seq(literal())
+    else {
+      val (from, until) = c.group()
+      val after = c.pos
+      val vals = c.items(from, until).map { case (a, b) =>
+        c.pos = a
+        val v = literal()
+        if (c.pos != b) c.fail(s"bad partition value '${c.slice(a, b)}'")
+        v
+      }
+      c.pos = after
+      vals
     }
   }
 
@@ -2234,18 +2159,47 @@ object ChDdl {
 
   // ===================== mutations (partition-pruned) =====================
 
-  /** Split a `[IN PARTITION p] WHERE pred` statement tail (token-level,
-    * so literals containing the keywords cannot misparse) into the
-    * optional partition values and the WHERE text. */
-  private def splitInPartitionWhere(rest: String): (Option[Seq[String]], String) = {
-    val ip = topKeywordPos(rest, "IN", "PARTITION")
-    val w = topKeywordPos(rest, "WHERE")
-    require(w >= 0, "ChSql: mutation needs a WHERE clause")
-    val inPart = if (ip >= 0 && ip < w)
-      Some(partitionValues(rest.substring(ip, w)
-        .replaceFirst("(?is)^IN\\s+PARTITION\\s+", "")))
-    else None
-    (inPart, rest.substring(w).replaceFirst("(?is)^WHERE\\s+", ""))
+  /** The `[IN PARTITION p] WHERE pred` that ends a mutation statement,
+    * as one predicate with the partition restriction ANDed in. */
+  private def mutationScope(spark: SparkSession, c: Cur, name: String,
+      resolve: String => DataFrame, missingWhere: String): Column = {
+    c.cluster()
+    val inPart = if (c.eatKw("IN", "PARTITION")) Some(partition(c)) else None
+    if (!c.eatKw("WHERE")) c.fail(missingWhere)
+    withPartitionScope(spark, name, inPart,
+      ChSql.compileExpr(spark, c.expr(), resolve))
+  }
+
+  /** `DELETE FROM t` / `ALTER TABLE t DELETE`, read from the mutation
+    * scope on: the rows go, and the scope note comes back. */
+  private def deleteRows(spark: SparkSession, c: Cur, name: String,
+      resolve: String => DataFrame, missingWhere: String): String = {
+    val p = mutationScope(spark, c, name, resolve, missingWhere)
+    mutateWhere(spark, name, p)(graft.operators.Mutations.delete(_, p))
+  }
+
+  /** `UPDATE t SET` / `ALTER TABLE t UPDATE`, read from the `a = e1, b =
+    * e2` assignment list on (assignmentExprList, ClickHouseParser.py:
+    * 8267+): (assigned columns, scope note). */
+  private def updateRows(spark: SparkSession, c: Cur, name: String,
+      resolve: String => DataFrame, missingWhere: String): (Seq[String], String) = {
+    val stop = c.upTo("IN PARTITION", "WHERE", "ON CLUSTER")
+    val assignments = c.items(c.pos, stop).map { case (a, b) =>
+      (c.toks(a)._1, c.toks(a + 1)._1) match {
+        case (col: ChSql.TId, TP("=")) if b > a + 2 =>
+          col.s -> ChSql.compileExpr(spark, c.expr(a + 2, b), resolve)
+        case _ => c.fail(s"malformed UPDATE assignment '${c.slice(a, b)}'")
+      }
+    }
+    c.pos = stop
+    val p = mutationScope(spark, c, name, resolve, missingWhere)
+    // guard after the transform: UPDATE c = NULL on a declared
+    // non-Nullable column must fail (CH parity), not store a NULL that
+    // the addfill read rule would silently resurrect as the default, or
+    // that makes every later readTable AssertNotNull read throw
+    (assignments.map(_._1), mutateWhere(spark, name, p, rowsPreserved = true)(df =>
+      guardNonNullableWrites(tablePropsSafe(spark, name),
+        graft.operators.Mutations.update(df, assignments, p), name)))
   }
 
   /** AND an `IN PARTITION` restriction into a mutation predicate — the
@@ -2262,18 +2216,6 @@ object ChDdl {
           s"${vals.size} != partition key arity ${pcols.size}")
         pcols.zip(vals).map { case (c, v) => col(c) === lit(v) }
           .reduce(_ && _) && pred
-    }
-
-  /** `a = e1, b = e2` assignment list (assignmentExprList,
-    * ClickHouseParser.py:8267+) — shared by ALTER ... UPDATE and the
-    * standalone UPDATE statement. */
-  private def parseAssignments(spark: SparkSession, text: String,
-      resolve: String => DataFrame): Seq[(String, Column)] =
-    splitTop(text).map { a =>
-      val eq = topLevelEq(a)
-      require(eq > 0, s"ChSql: malformed UPDATE assignment '$a'")
-      val c = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
-      c -> ChSql.compileExpr(spark, a.substring(eq + 1).trim, resolve)
     }
 
   /** Partition-pruned mutation: on a partitioned table, only the
@@ -2353,8 +2295,8 @@ object ChDdl {
     * ClickHouseParser.py:2864/2498/2765; projectionSelectStmt 1288): an
     * aggregate the optimizer may substitute for a matching SELECT.
     * `projTable`/`outCols` are set by MATERIALIZE. */
-  private final case class ProjMeta(table: String, name: String, sel: String,
-      projTable: Option[String], outCols: Seq[String])
+  private final case class ProjMeta(table: String, name: String,
+      sel: ChSql.SelectStmt, projTable: Option[String], outCols: Seq[String])
   private val projMeta =
     scala.collection.concurrent.TrieMap.empty[(String, String), ProjMeta]
 
@@ -2394,8 +2336,7 @@ object ChDdl {
     try live.foreach { case (k, meta) =>
       val projTable = meta.projTable.get
       val mergeable: Option[(Seq[String], Seq[(String, String)])] =
-        scala.util.Try(ChSql.parseAst(withFrom(meta.sel, name))).toOption
-          .collect { case ChSql.One(ps) => ps }.flatMap { ps =>
+        Some(meta.sel).flatMap { ps =>
             val gset = ps.groupBy.map(normExpr).toSet
             def itemName(it: ChSql.SelectItem): Option[String] =
               it.alias.orElse(it.e match {
@@ -2419,7 +2360,7 @@ object ChDdl {
             else Some((keys, aggs))
           }
       val batchProj = scala.util.Try(
-        ChSql.sql(spark, withFrom(meta.sel, view))(spark.table)).toOption
+        ChSql.plan(spark, over(meta.sel, view))(spark.table)).toOption
       (mergeable, batchProj) match {
         case (Some((_, aggs)), Some(bp)) if aggs.isEmpty =>
           // plain reshape projection: the batch's rows just append
@@ -2453,21 +2394,16 @@ object ChDdl {
 
   /** Inject `FROM table` into a projection SELECT (the CH projection body
     * has no FROM — it is implicitly over the parent table). */
-  private def withFrom(sel: String, table: String): String =
-    if (topKeywordPos(sel, "FROM") >= 0) sel
-    else {
-      val cut = Seq(topKeywordPos(sel, "GROUP", "BY"),
-        topKeywordPos(sel, "ORDER", "BY")).filter(_ >= 0)
-        .sorted.headOption.getOrElse(sel.length)
-      sel.substring(0, cut) + s" FROM $table " + sel.substring(cut)
-    }
+  private def over(sel: ChSql.SelectStmt, table: String): ChSql.SetOp =
+    ChSql.One(if (sel.from.nonEmpty) sel
+      else sel.copy(from = Some(ChSql.TableRef(table, None, fin = false))))
 
   private def materializeProjection(spark: SparkSession, name: String,
       p: String, resolve: String => DataFrame): String = {
     val meta = projMeta.getOrElse((name, p), throw new IllegalArgumentException(
       s"ChSql: no projection $p on $name (ADD PROJECTION first)"))
     val projTable = s"${name}__proj_$p"
-    val df = ChSql.sql(spark, withFrom(meta.sel, name))(resolve)
+    val df = ChSql.plan(spark, over(meta.sel, name))(resolve)
     if (!spark.catalog.tableExists(projTable)) dropStaleLocation(spark, projTable)
     df.write.mode(SaveMode.Overwrite).saveAsTable(projTable)
     projMeta.put((name, p),
@@ -2483,12 +2419,9 @@ object ChDdl {
     * any feature outside the covered shape falls through to the normal
     * path. Called from [[ChSql.statement]]. */
   private[chsql] def substituteProjection(spark: SparkSession,
-      text: String): Option[DataFrame] = {
+      ast: ChSql.SetOp): Option[DataFrame] = {
     if (projMeta.isEmpty) None
-    else {
-      val up = text.trim.toUpperCase(java.util.Locale.ROOT)
-      if (!up.startsWith("SELECT")) None
-      else scala.util.Try(ChSql.parseAst(text)).toOption.flatMap {
+    else ast match {
         case ChSql.One(q) if q.joins.isEmpty && q.ctes.isEmpty &&
             q.exprCtes.isEmpty && q.where.isEmpty && q.prewhere.isEmpty &&
             q.having.isEmpty && q.arrayJoins.isEmpty && q.limitBy.isEmpty &&
@@ -2507,7 +2440,6 @@ object ChDdl {
           }
         case _ => None
       }
-    }
   }
 
   /** Case-normalize function names so `SUM(x)` matches `sum(x)`. */
@@ -2525,8 +2457,8 @@ object ChDdl {
 
   private def matchProjection(spark: SparkSession, q: ChSql.SelectStmt,
       m: ProjMeta): Option[DataFrame] =
-    scala.util.Try(ChSql.parseAst(withFrom(m.sel, m.table))).toOption.flatMap {
-      case ChSql.One(ps)
+    m.sel match {
+      case ps
           if q.groupBy.map(normExpr).toSet == ps.groupBy.map(normExpr).toSet =>
         val pItems: Seq[(ChSql.Expr, String)] =
           ps.items.map(it => normExpr(it.e)).zip(m.outCols)
@@ -2974,11 +2906,9 @@ object ChDdl {
       props: Map[String, String]): Option[String] =
     props.get("graft.ttl").map { ttlText =>
       val pcols = partitionCols(spark, name)
-      val simple = ("(?is)^\\s*(\\w+)\\s*\\+\\s*INTERVAL\\s+(\\d+)\\s+" +
-        "(\\w+)\\s*$").r.findFirstMatchIn(ttlText)
-      simple match {
-        case Some(m) if pcols == Seq(m.group(1)) =>
-          val (c, nStr, unit) = (m.group(1), m.group(2), m.group(3))
+      new Cur(ttlText).expr() match {
+        case ChSql.Bin("+", ChSql.Ident(Seq(c)), ChSql.IntervalE(ChSql.NumLit(nStr), unit))
+            if pcols == Seq(c) && nStr.forall(_.isDigit) =>
           // partition values are the directory strings; a date-typed key
           // compares correctly as its ISO string
           val cutoff = spark.sql(
@@ -3213,27 +3143,28 @@ object ChDdl {
 
   // ===================== SHOW family helpers =====================
 
-  /** CH LIKE/ILIKE pattern filter over a metadata frame's name column
-    * (the optional tail of the SHOW list forms). Spark's like/ilike use
-    * the same `%`/`_` wildcards as CH. */
-  private def likeFilter(df: DataFrame, colName: String,
-      kw: Option[String], pat: Option[String],
-      negate: Boolean = false): DataFrame =
-    pat match {
-      case None => df
-      case Some(p) =>
-        val c = if (kw.exists(_.equalsIgnoreCase("ILIKE")))
-          col(colName).ilike(p) else col(colName).like(p)
-        df.filter(if (negate) !c else c)
+  /** The optional `[NOT] LIKE|ILIKE 'p'` tail that ends the SHOW list
+    * forms, applied to the `colName` column of `df` (Spark's like/ilike
+    * use the same `%`/`_` wildcards as CH). */
+  private def likeTail(c: Cur, df: DataFrame, colName: String): DataFrame = {
+    val negate = c.eatKw("NOT")
+    val kw = Seq("LIKE", "ILIKE").find(c.eatKw(_))
+    if (negate && kw.isEmpty) c.fail("SHOW ... NOT needs LIKE or ILIKE")
+    val filtered = kw.map { k =>
+      val pat = c.str("a LIKE pattern string")
+      val m = if (k == "ILIKE") col(colName).ilike(pat) else col(colName).like(pat)
+      df.filter(if (negate) !m else m)
     }
+    c.done()
+    filtered.getOrElse(df)
+  }
 
   /** `SHOW COLUMNS FROM t` (showStmt COLUMNS, ClickHouseParser.py:
     * 12122-12203): CH's MySQL-compatible column frame — field / type /
     * null / key / default / extra. `key` marks sorting-key membership for
     * tables created through the DDL layer (CH reports PRI there too). */
   private def showColumns(spark: SparkSession, name: String,
-      resolve: String => DataFrame, negate: Boolean,
-      kw: Option[String], pat: Option[String]): DataFrame = {
+      resolve: String => DataFrame): DataFrame = {
     import spark.implicits._
     val (schema, props) =
       if (spark.catalog.tableExists(name))
@@ -3247,8 +3178,7 @@ object ChDdl {
         if (keyCols.contains(f.name)) "PRI" else "",
         null: String, "")
     }
-    likeFilter(rows.toDF("field", "type", "null", "key", "default", "extra"),
-      "field", kw, pat, negate)
+    rows.toDF("field", "type", "null", "key", "default", "extra")
   }
 
   /** `SHOW INDEX FROM t` (showStmt INDEX, 12344-12393): the one index a
@@ -3281,133 +3211,22 @@ object ChDdl {
     * `default` user/profile/quota exist; roles and row policies have no
     * members, so asking for one is an error, same as CH for an unknown
     * entity. */
-  private def showCreateAccess(kind0: String, name: String): String = {
-    val kind = kind0.toUpperCase(java.util.Locale.ROOT)
-      .replaceAll("\\s+", " ").trim
-    val normalized =
-      if (kind.endsWith("PROFILE")) "SETTINGS PROFILE"
-      else if (kind.endsWith("POLICY")) "ROW POLICY"
-      else kind
-    normalized match {
+  private def showCreateAccess(kind: String, name: String): String =
+    kind match {
       case "USER" | "QUOTA" | "SETTINGS PROFILE" =>
         require(name.equalsIgnoreCase("default"),
-          s"ChSql: there is no ${normalized.toLowerCase} named $name " +
-            "(single-user engine: only 'default')")
-        s"CREATE $normalized default"
+          s"ChSql: there is no ${kind.toLowerCase(java.util.Locale.ROOT)} " +
+            s"named $name (single-user engine: only 'default')")
+        s"CREATE $kind default"
       case _ =>
         throw new IllegalArgumentException(
-          s"ChSql: there is no ${normalized.toLowerCase} named $name " +
-            "(single-user engine defines none)")
+          s"ChSql: there is no ${kind.toLowerCase(java.util.Locale.ROOT)} " +
+            s"named $name (single-user engine defines none)")
     }
-  }
-
-  // ===================== small text utilities =====================
-  // All clause splitting rides the REAL ChSql lexer ([[ChSql.lexPos]]) —
-  // string literals containing keywords, commas or parens cannot fool a
-  // token-level scan the way a character scan can.
 
   /** A Spark-SQL single-quoted string literal with `\` and `'` escaped —
     * used wherever table properties / identifiers are interpolated into
     * `spark.sql` text (TBLPROPERTIES, partition specs, comments). */
   private def sqlLit(v: String): String =
     "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-  /** Split `(...), (...)` into tuple bodies (token-level). */
-  private def splitTuples(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = -1
-    ChSql.lexPos(s).foreach {
-      case (ChSql.TP("("), _, e) =>
-        depth += 1; if (depth == 1) start = e
-      case (ChSql.TP(")"), b, _) =>
-        depth -= 1
-        if (depth == 0) { out += s.substring(start, b); start = -1 }
-      case _ =>
-    }
-    require(depth == 0, s"ChSql: unbalanced VALUES tuples in '$s'")
-    out.toSeq
-  }
-
-  /** Split on top-level commas (token-level; parens/brackets nest,
-    * string literals are opaque). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0
-    ChSql.lexPos(s).foreach {
-      case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-      case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-      case (ChSql.TP(","), b, e) if depth == 0 =>
-        out += s.substring(start, b); start = e
-      case _ =>
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Index of the first top-level assignment `=` (the lexer already emits
-    * `==`, `!=`, `<=`, `>=` as single two-char tokens, so a bare `=` here
-    * IS the assignment operator). */
-  private def topLevelEq(s: String): Int = {
-    val toks = ChSql.lexPos(s)
-    var depth = 0; var i = 0; var found = -1
-    while (i < toks.length && found < 0) {
-      toks(i) match {
-        case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-        case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-        case (ChSql.TP("="), b, _) if depth == 0 => found = b
-        case _ =>
-      }
-      i += 1
-    }
-    found
-  }
-
-  /** Offset just past the close paren matching the FIRST token of `s`
-    * (which must be `(`), or -1 when `s` does not start with a paren
-    * group. Token-level, so literals/nesting are safe. */
-  private def matchParenEnd(s: String): Int = {
-    val toks = ChSql.lexPos(s)
-    toks.headOption match {
-      case Some((ChSql.TP("("), _, _)) =>
-        var depth = 0; var i = 0; var found = -1
-        while (i < toks.length && found < 0) {
-          toks(i) match {
-            case (ChSql.TP("("), _, _) => depth += 1
-            case (ChSql.TP(")"), _, e) =>
-              depth -= 1; if (depth == 0) found = e
-            case _ =>
-          }
-          i += 1
-        }
-        found
-      case _ => -1
-    }
-  }
-
-  /** Start offset of the first TOP-LEVEL occurrence of keyword sequence
-    * `kws` (case-insensitive identifiers), or -1. */
-  private def topKeywordPos(s: String, kws: String*): Int = {
-    val toks = ChSql.lexPos(s)
-    var depth = 0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case (ChSql.TP("(") | ChSql.TP("["), _, _) => depth += 1
-        case (ChSql.TP(")") | ChSql.TP("]"), _, _) => depth -= 1
-        case (id: ChSql.TId, b, _) if depth == 0 &&
-            id.up == kws.head.toUpperCase(java.util.Locale.ROOT) =>
-          val rest = kws.tail.zipWithIndex.forall { case (kw, k) =>
-            toks.lift(i + 1 + k) match {
-              case Some((id2: ChSql.TId, _, _)) =>
-                id2.up == kw.toUpperCase(java.util.Locale.ROOT)
-              case _ => false
-            }
-          }
-          if (rest) return b
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 }

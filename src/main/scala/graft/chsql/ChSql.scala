@@ -61,25 +61,41 @@ object ChSql {
   // ===================== lexer =====================
 
   private[graft] sealed trait Tok
-  private[graft] case class TId(s: String) extends Tok { def up: String = s.toUpperCase }
+  private[graft] case class TId(s: String) extends Tok {
+    def up: String = s.toUpperCase(java.util.Locale.ROOT)
+  }
   private[graft] case class TNum(s: String) extends Tok
   private[graft] case class TStr(s: String) extends Tok
   private[graft] case class TP(s: String) extends Tok
   private[graft] case object TEnd extends Tok
 
   /** Position-tracking lexer: (token, start, end-exclusive) offsets over
-    * the ORIGINAL text. The DDL layer ([[ChDdl]]) splits clause bodies
-    * with this instead of re-deriving tokenizer behavior in regex
-    * scanners — a string literal containing `) ENGINE =` or a keyword
-    * cannot fool token-level splitting; [[graft.Sql]] splits scripts into
-    * statements on its `;` tokens. */
+    * the ORIGINAL text. Comments and whitespace are hidden: they produce
+    * no token. Every statement is lexed once, here ([[Cur]]); a clause
+    * body that another parser reads as text is sliced back out of the
+    * original by these offsets, so a string literal containing `) ENGINE
+    * =` or a keyword cannot fool the split. [[graft.Sql]] splits scripts
+    * into statements on its `;` tokens. Unterminated strings, backquoted
+    * names and block comments are refused. */
   private[graft] def lexPos(input: String): Vector[(Tok, Int, Int)] =
     lexImpl(input)
 
-  private def lex(input: String): Vector[Tok] = lexImpl(input).map(_._1)
+  /** `INSERT INTO t [(cols)] FORMAT f` was just lexed: what follows the
+    * format name is data for the input format, not SQL (the CH parser
+    * hands it to the format reader unparsed), so it becomes one raw
+    * string token. */
+  private def insertDataFollows(out: collection.Seq[(Tok, Int, Int)]): Boolean = {
+    def is(i: Int, kws: String*): Boolean = out(i)._1 match {
+      case TId(s) => kws.exists(s.equalsIgnoreCase)
+      case _ => false
+    }
+    val n = out.length
+    n >= 5 && is(n - 2, "FORMAT") && is(0, "INSERT") && !is(n - 3, "INTO", "TABLE") &&
+      !(0 until n - 2).exists(is(_, "SELECT", "WITH", "VALUES"))
+  }
 
   private def lexImpl(input: String): Vector[(Tok, Int, Int)] = {
-    val out = Vector.newBuilder[(Tok, Int, Int)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Tok, Int, Int)]
     var i = 0
     val n = input.length
     def peek(k: Int) = if (i + k < n) input(i + k) else '\u0000'
@@ -88,19 +104,26 @@ object ChSql {
       if (c.isWhitespace) i += 1
       else if (c == '-' && peek(1) == '-') { while (i < n && input(i) != '\n') i += 1 }
       else if (c == '/' && peek(1) == '*') {
-        i += 2
-        while (i + 1 < n && !(input(i) == '*' && input(i + 1) == '/')) i += 1
-        i += 2
+        val close = input.indexOf("*/", i + 2)
+        if (close < 0) throw new IllegalArgumentException(
+          "ChSql: unterminated /* comment")
+        i = close + 2
       }
       else if (c.isLetter || c == '_') {
         val st = i
         while (i < n && (input(i).isLetterOrDigit || input(i) == '_')) i += 1
         out += ((TId(input.substring(st, i)), st, i))
+        if (insertDataFollows(out) &&
+            input.indexWhere(!_.isWhitespace, i) >= 0) {
+          out += ((TStr(input.substring(i)), i, n)); i = n
+        }
       }
       else if (c == '`') {
-        val st = i + 1; i += 1
-        while (i < n && input(i) != '`') i += 1
-        out += ((TId(input.substring(st, i)), st - 1, i + 1)); i += 1
+        val close = input.indexOf('`', i + 1)
+        if (close < 0) throw new IllegalArgumentException(
+          "ChSql: unterminated backquoted identifier")
+        out += ((TId(input.substring(i + 1, close)), i, close + 1))
+        i = close + 1
       }
       else if (c == '0' && (peek(1) == 'x' || peek(1) == 'X') &&
           (peek(2).isDigit || "abcdefABCDEF".indexOf(peek(2)) >= 0)) {
@@ -146,12 +169,171 @@ object ChSql {
       }
     }
     out += ((TEnd, n, n))
-    out.result()
+    out.toVector
   }
 
   private def unescape(c: Char): Char = c match {
     case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
     case '0' => '\u0000'; case other => other
+  }
+
+  /** The statement front end's cursor: one statement's tokens, lexed once,
+    * and a read position. Statement heads are matched on keyword tokens,
+    * so comments, case and line breaks between them do not matter. A body
+    * another parser reads goes over as tokens ([[query]], [[expr]]) or,
+    * where that reader takes text (type names, recorded metadata), as a
+    * [[slice]] of the original. A handler parses its whole statement
+    * before it acts and ends with [[done]], so a clause it does not know
+    * fails instead of being ignored. */
+  private[graft] final class Cur(val text: String) {
+    val toks: Vector[(Tok, Int, Int)] = lexPos(text)
+    val end: Int = toks.length - 1 // the TEnd token
+    var pos = 0
+
+    def tok(k: Int = 0): Tok = toks(math.min(pos + k, end))._1
+    /** Upper-cased identifier `k` tokens ahead, "" for any other token. */
+    def word(k: Int = 0): String = tok(k) match {
+      case t: TId => t.up
+      case _ => ""
+    }
+    private def kwsAt(i: Int, kws: Seq[String]): Boolean =
+      kws.indices.forall(k => toks(math.min(i + k, end))._1 match {
+        case t: TId => t.up == kws(k)
+        case _ => false
+      })
+    def isKw(kws: String*): Boolean = kwsAt(pos, kws)
+    def eatKw(kws: String*): Boolean = isKw(kws: _*) && { pos += kws.length; true }
+    def expectKw(kws: String*): Unit =
+      if (!eatKw(kws: _*)) fail(s"expected ${kws.mkString(" ")} at '${slice(pos, pos + 1)}'")
+    def isP(p: String): Boolean = tok() == TP(p)
+    def eatP(p: String): Boolean = isP(p) && { pos += 1; true }
+    def expectP(p: String): Unit =
+      if (!eatP(p)) fail(s"expected '$p' at '${slice(pos, pos + 1)}'")
+    def atEnd: Boolean = pos >= end
+    def fail(msg: String): Nothing = throw new IllegalArgumentException(s"ChSql: $msg")
+    /** Statement fully consumed, or a `ChSql:` error naming the rest. */
+    def done(): Unit =
+      if (!atEnd) fail(s"unexpected '${slice(pos, end)}' at the end of the statement")
+
+    def ident(what: String): String = tok() match {
+      case t: TId => pos += 1; t.s
+      case _ => fail(s"expected $what")
+    }
+    def str(what: String): String = tok() match {
+      case TStr(s) => pos += 1; s
+      case _ => fail(s"expected $what")
+    }
+    def num(what: String): String = tok() match {
+      case TNum(s) => pos += 1; s
+      case _ => fail(s"expected $what")
+    }
+    def ifExists(): Boolean = eatKw("IF", "EXISTS")
+    def ifNotExists(): Boolean = eatKw("IF", "NOT", "EXISTS")
+    /** `ON CLUSTER <id|'str'>` (clusterClause, ClickHouseParser.py:
+      * 5461-5530): one engine has only cluster-wide execution, so the
+      * topology name is read and discarded. */
+    def cluster(): Unit = if (eatKw("ON", "CLUSTER")) tok() match {
+      case _: TId | _: TStr => pos += 1
+      case _ => fail("ON CLUSTER needs a cluster name")
+    }
+    /** `[db.]name`, then the optional `ON CLUSTER` that follows object
+      * names in every DDL head. */
+    def name(what: String = "a name"): String = {
+      val n = ident(what)
+      val q = if (eatP(".")) s"$n.${ident(what)}" else n
+      cluster()
+      q
+    }
+
+    private def depthDelta(i: Int): Int = toks(i)._1 match {
+      case TP("(") | TP("[") => 1
+      case TP(")") | TP("]") => -1
+      case _ => 0
+    }
+    /** Index of the bracket that closes the one opening at token `i`. */
+    private def closeOf(i: Int): Int = {
+      var depth = depthDelta(i)
+      var j = i + 1
+      while (depth > 0 && j < end) { depth += depthDelta(j); j += 1 }
+      if (depth > 0) fail(s"unbalanced '(' in '${slice(i, end)}'")
+      j - 1
+    }
+    /** Token range inside the paren group that opens at the cursor; the
+      * cursor moves past its close. */
+    def group(): (Int, Int) = {
+      val close = if (isP("(")) closeOf(pos) else fail(s"expected '(' at '${slice(pos, pos + 1)}'")
+      val r = (pos + 1, close)
+      pos = close + 1
+      r
+    }
+    /** Index of the first top-level token in [from, until) that starts
+      * one of the keyword sequences `stops` ("ORDER BY", "WHERE"), or
+      * `until`. */
+    def find(from: Int, until: Int, stops: String*): Int = {
+      val seqs = stops.map(_.split(' ').toSeq)
+      var i = from
+      var depth = 0
+      while (i < until && !(depth == 0 && seqs.exists(kwsAt(i, _)))) {
+        depth += depthDelta(i); i += 1
+      }
+      i
+    }
+    /** [[find]] from the cursor to the end of the statement. */
+    def upTo(stops: String*): Int = find(pos, end, stops: _*)
+    /** The top-level comma-separated items of tokens [from, until). */
+    def items(from: Int, until: Int): Seq[(Int, Int)] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      var depth = 0
+      var start = from
+      for (i <- from until until) {
+        if (depth == 0 && toks(i)._1 == TP(",")) { out += ((start, i)); start = i + 1 }
+        depth += depthDelta(i)
+      }
+      if (until > start) out += ((start, until))
+      out.toSeq
+    }
+    /** The `name = value` items of tokens [from, until), each value's text
+      * with its quotes dropped. */
+    def pairs(from: Int, until: Int, what: String): Seq[(String, String)] =
+      items(from, until).map { case (a, b) =>
+        val eq = (a until b).find(toks(_)._1 == TP("=")).filter(i => i > a && i < b - 1)
+          .getOrElse(fail(s"malformed $what (expected name = value): '${slice(a, b)}'"))
+        slice(a, eq) -> slice(eq + 1, b).stripPrefix("'").stripSuffix("'")
+      }
+    /** The original text of tokens [from, until); a gap that holds a
+      * comment reads as one space. */
+    def slice(from: Int, until: Int): String = {
+      val sb = new java.lang.StringBuilder
+      for (i <- from until math.min(until, end)) {
+        if (i > from) {
+          val gap = text.substring(toks(i - 1)._3, toks(i)._2)
+          sb.append(if (gap.forall(_.isWhitespace)) gap else " ")
+        }
+        sb.append(text, toks(i)._2, toks(i)._3)
+      }
+      sb.toString
+    }
+    /** [[slice]] without one pair of parens around the whole range. */
+    def sliceUnparen(from: Int, until: Int): String =
+      if (until > from && toks(from)._1 == TP("(") && closeOf(from) == until - 1)
+        slice(from + 1, until - 1)
+      else slice(from, until)
+    /** The rest of the statement; the cursor moves to its end. */
+    def rest(): (Int, Int) = { val r = (pos, end); pos = end; r }
+
+    private def parsed[T](from: Int, until: Int)(rule: P => T): T = {
+      val p = new P(toks.slice(from, until).map(_._1) :+ TEnd)
+      val v = rule(p)
+      if (p.cur != TEnd) p.fail("trailing tokens after statement")
+      v
+    }
+    /** The query (SELECT/WITH/set operation) in [from, until). */
+    def query(from: Int, until: Int): SetOp = parsed(from, until)(_.parseSetOp())
+    /** The query that runs to the end of the statement. */
+    def query(): SetOp = { val (a, b) = rest(); query(a, b) }
+    def expr(from: Int, until: Int): Expr = parsed(from, until)(_.parseExpr())
+    /** The expression that runs to the end of the statement. */
+    def expr(): Expr = { val (a, b) = rest(); expr(a, b) }
   }
 
   // ===================== AST =====================
@@ -511,7 +693,7 @@ object ChSql {
       case t: TId if t.up == "INTERVAL" =>
         pos += 1
         val nTok = parseUnary()
-        val unit = ident().toLowerCase
+        val unit = ident().toLowerCase(java.util.Locale.ROOT)
         IntervalE(nTok, unit)
       case t: TId if t.up == "NOT" => pos += 1; NotE(parseNot())
       case t: TId =>
@@ -1240,7 +1422,7 @@ object ChSql {
     "ordefault" -> 9, "distinct" -> 8, "foreach" -> 7)
 
   private def isAggName(name: String): Boolean = {
-    val n = name.toLowerCase
+    val n = name.toLowerCase(java.util.Locale.ROOT)
     AggNames.contains(n) || AggSuffixes.exists { case (suf, len) =>
       n.endsWith(suf) && n.length > len && isAggName(n.dropRight(len))
     }
@@ -1257,123 +1439,117 @@ object ChSql {
     * so a display surface (the [[graft.Sql]] CLI) can honor the requested
     * wire format. The DataFrame itself is format-agnostic. */
   def sqlWithFormat(spark: SparkSession, text: String)(
+      resolve: String => DataFrame): (DataFrame, Option[String]) =
+    withFormat(spark, new Cur(text).query())(resolve)
+
+  private def withFormat(spark: SparkSession, ast: SetOp)(
       resolve: String => DataFrame): (DataFrame, Option[String]) = {
-    val p = new P(lex(text))
-    val ast = p.parseSetOp()
-    if (!p.cur.equals(TEnd)) p.fail("trailing tokens after statement")
     def fmt(op: SetOp): Option[String] = op match {
       case One(s) => s.format
       case Combine(_, _, l, r) => fmt(r).orElse(fmt(l))
     }
-    (buildSetOp(spark, ast, resolve, Map.empty), fmt(ast))
+    (plan(spark, ast)(resolve), fmt(ast))
   }
+
+  /** Plan a parsed query. */
+  private[chsql] def plan(spark: SparkSession, ast: SetOp)(
+      resolve: String => DataFrame): DataFrame =
+    buildSetOp(spark, ast, resolve, Map.empty)
 
   /** Resolve tables through the session catalog (temp views etc.). */
   def sqlCatalog(spark: SparkSession, text: String): DataFrame =
     sql(spark, text)(spark.table)
 
-  /** Statement-level dispatch (queryStmt + ddlStmt heads the CLI accepts):
-    *  - `SELECT`/`WITH` → [[sqlWithFormat]]
-    *  - `EXPLAIN [AST|SYNTAX|PLAN|PIPELINE|ESTIMATE] select` →
+  /** Statement-level dispatch, one front end for queryStmt, ddlStmt and
+    * the admin heads: the text is lexed once and routed on its leading
+    * keyword tokens.
+    *  - `EXPLAIN [AST|SYNTAX|PLAN|PIPELINE|ESTIMATE|QUERY TREE] select` →
     *    one `explain` string column ([[graft.plans.ExplainOps]] layers)
+    *  - `DESCRIBE|DESC [TABLE] t` → CH type names
+    *  - `SET name = value, ...` → [[graft.plans.Settings]] session confs
+    *  - `INSERT INTO FUNCTION file('path'[, 'Format']) select` → file sink
     *  - `CREATE [OR REPLACE] VIEW name AS select` → temp view (callers
     *    resolving catalog-first — [[graft.Sql]] does — can query it)
-    *  - `SET name = value, ...` → [[graft.plans.Settings]] session confs
+    *  - DDL/DML/admin heads → [[ChDdl.dispatch]]
+    *  - anything else is a query (`SELECT`/`WITH`/`(`)
     * Returns (result, FORMAT clause) — DDL/SET yield a one-column status. */
   def statement(spark: SparkSession, text: String)(
+      resolve: String => DataFrame): (DataFrame, Option[String]) =
+    statement(spark, new Cur(text))(resolve)
+
+  private[graft] def statement(spark: SparkSession, c: Cur)(
       resolve: String => DataFrame): (DataFrame, Option[String]) = {
     import spark.implicits._
-    val trimmed = text.trim
-    val up = trimmed.toUpperCase(java.util.Locale.ROOT)
-    // DDL/DML heads (CREATE TABLE, INSERT INTO table, ALTER, DROP,
-    // TRUNCATE, RENAME, USE, OPTIMIZE, SHOW ...) → [[ChDdl]]; None falls
-    // through to the SELECT-family dispatch below
-    ChDdl.dispatch(spark, trimmed)(resolve) match {
-      case Some(df) => return (df, None)
-      case None =>
-    }
-    if (up.startsWith("EXPLAIN")) {
-      val rest0 = trimmed.drop("EXPLAIN".length).trim
-      val restUp = rest0.toUpperCase(java.util.Locale.ROOT)
-      // two-word variants first (explainStmt, ClickHouseParser.py:
-      // 7487-7605): QUERY TREE is the analyzer-IR layer; TABLE OVERRIDE
-      // inspects an external-engine column override this engine does not
-      // have — refuse honestly rather than print something unrelated
-      if (restUp.startsWith("TABLE OVERRIDE"))
+    def status(msg: String) = (Seq(msg).toDF("status"), None)
+    if (c.eatKw("EXPLAIN")) {
+      // explainStmt variants (ClickHouseParser.py:7487-7605): QUERY TREE
+      // is the analyzer-IR layer; TABLE OVERRIDE inspects an
+      // external-engine column override this engine does not have —
+      // refuse honestly rather than print something unrelated
+      if (c.isKw("TABLE", "OVERRIDE"))
         fail("EXPLAIN TABLE OVERRIDE is not supported: table overrides " +
           "apply to external database engines (MySQL/MaterializedMySQL); " +
           "this engine has no external engine to override")
-      val parts = rest0.split("\\s+", 2)
-      val (variant, sel) =
-        if (restUp.startsWith("QUERY TREE"))
-          ("QUERY TREE", rest0.drop("QUERY TREE".length).trim match {
-            case "" => fail("EXPLAIN needs a SELECT")
-            case s => s
-          })
-        else parts(0).toUpperCase(java.util.Locale.ROOT) match {
-          case v @ ("AST" | "SYNTAX" | "PLAN" | "PIPELINE" | "ESTIMATE") =>
-            (v, parts.lift(1).getOrElse(fail("EXPLAIN needs a SELECT")))
-          case _ => ("PLAN", rest0)
-        }
-      val df = sql(spark, sel)(resolve)
+      val variant =
+        if (c.eatKw("QUERY", "TREE")) "QUERY TREE"
+        else Seq("AST", "SYNTAX", "PLAN", "PIPELINE", "ESTIMATE")
+          .find(c.eatKw(_)).getOrElse("PLAN")
+      if (c.atEnd) fail("EXPLAIN needs a SELECT")
+      val df = plan(spark, c.query())(resolve)
       (graft.plans.ExplainOps.explainText(df, variant)
-        .split("\n").toSeq.toDF("explain"), None)
-    } else if (up.startsWith("CREATE")) {
-      val re = ("(?is)CREATE\\s+(?:OR\\s+REPLACE\\s+)?VIEW\\s+" +
-        "([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+(.*)").r
-      trimmed match {
-        case re(name, sel) =>
-          // a {p:Type} reference anywhere makes this a PARAMETERIZED
-          // view: register the TEXT, bind per read via `FROM v(p = ...)`
-          if (hasParams(parseAst(sel))) {
-            paramViews.put(name, sel)
-            (Seq(s"parameterized view $name created").toDF("status"), None)
-          } else {
-            paramViews.remove(name)
-            sql(spark, sel)(resolve).createOrReplaceTempView(name)
-            (Seq(s"view $name created").toDF("status"), None)
-          }
-        case _ => fail(
-          "only CREATE [OR REPLACE] VIEW name AS SELECT ... is supported")
-      }
-    } else if (up.startsWith("DESCRIBE") || up.startsWith("DESC ")) {
+        .split('\n').toSeq.toDF("explain"), None)
+    } else if (c.eatKw("DESCRIBE") || c.eatKw("DESC")) {
       // DESCRIBE [TABLE] t (describeStmt) — CH type names via the
       // canonical inverse mapping (ChTypes.toCh)
-      val name = trimmed.split("\\s+").filterNot(w =>
-        Set("DESCRIBE", "DESC", "TABLE").contains(
-          w.toUpperCase(java.util.Locale.ROOT))).headOption
-        .getOrElse(fail("DESCRIBE needs a table name"))
+      c.eatKw("TABLE")
+      val name = c.name("DESCRIBE needs a table name")
+      c.done()
       val fields = resolve(name).schema.fields.toSeq
       (fields.map(fld =>
         (fld.name, graft.model.ChTypes.toCh(fld.dataType, fld.nullable)))
         .toDF("name", "type"), None)
-    } else if (up.startsWith("INSERT")) {
-      // INSERT INTO FUNCTION file('path'[, 'Format']) select — the
-      // table-function write path (insertStmt → tableFunctionExpr)
-      val re = ("(?is)INSERT\\s+INTO\\s+FUNCTION\\s+file\\s*\\(\\s*" +
-        "'([^']*)'\\s*(?:,\\s*'([^']*)'\\s*)?\\)\\s+(.*)").r
-      trimmed match {
-        case re(path, fmtOrNull, sel) =>
-          val df = sql(spark, sel)(resolve)
-          val fmt = Option(fmtOrNull).getOrElse("parquet")
-          graft.sources.Sinks.intoOutfile(df, path, fmt)
-          (Seq(s"wrote $path ($fmt)").toDF("status"), None)
-        case _ => fail(
-          "only INSERT INTO FUNCTION file('path'[, 'Format']) SELECT ... is supported")
-      }
-    } else if (up.startsWith("SET") &&
-        (up.length == 3 || up(3).isWhitespace || up(3) == '\n')) {
+    } else if (c.isKw("SET")) {
       val (applied, skipped) = graft.plans.Settings.applySet(
-        spark, graft.plans.Settings.parseSet(trimmed))
+        spark, graft.plans.Settings.parseSet(c))
       val rows = applied.toSeq.sorted.map { case (k, v) => s"set $k=$v" } ++
         skipped.map(s => s"skipped $s (no Spark twin)")
       ((if (rows.isEmpty) Seq("ok") else rows).toDF("status"), None)
-    } else ChDdl.substituteProjection(spark, trimmed) match {
-      // a registered, materialized projection whose shape covers this
-      // SELECT answers from its (much smaller) materialized table — the
-      // CH projection-substitution optimization
+    } else if (c.eatKw("INSERT", "INTO", "FUNCTION")) {
+      // INSERT INTO FUNCTION file('path'[, 'Format']) select — the
+      // table-function write path (insertStmt → tableFunctionExpr)
+      if (!c.eatKw("FILE")) fail(
+        "only INSERT INTO FUNCTION file('path'[, 'Format']) SELECT ... is supported")
+      c.expectP("(")
+      val path = c.str("a file path string")
+      val fmt = if (c.eatP(",")) c.str("a format name string") else "parquet"
+      c.expectP(")")
+      graft.sources.Sinks.intoOutfile(plan(spark, c.query())(resolve), path, fmt)
+      status(s"wrote $path ($fmt)")
+    } else if (c.isKw("CREATE", "VIEW") || c.isKw("CREATE", "OR", "REPLACE", "VIEW")) {
+      c.pos = if (c.word(1) == "OR") 4 else 2
+      val name = c.ident("a view name")
+      c.expectKw("AS")
+      val (from, until) = c.rest()
+      val ast = c.query(from, until)
+      // a {p:Type} reference anywhere makes this a PARAMETERIZED view:
+      // register the TEXT, bind per read via `FROM v(p = ...)`
+      if (hasParams(ast)) {
+        paramViews.put(name, c.slice(from, until))
+        status(s"parameterized view $name created")
+      } else {
+        paramViews.remove(name)
+        plan(spark, ast)(resolve).createOrReplaceTempView(name)
+        status(s"view $name created")
+      }
+    } else ChDdl.dispatch(spark, c)(resolve) match {
       case Some(df) => (df, None)
-      case None => sqlWithFormat(spark, trimmed)(resolve)
+      case None =>
+        val ast = c.query()
+        // a registered, materialized projection whose shape covers this
+        // SELECT answers from its (much smaller) materialized table — the
+        // CH projection-substitution optimization
+        ChDdl.substituteProjection(spark, ast).map((_, Option.empty[String]))
+          .getOrElse(withFormat(spark, ast)(resolve))
     }
   }
 
@@ -1407,11 +1583,8 @@ object ChSql {
     * unparenthesized single-parameter form `x -> expr`). Aggregates are
     * rejected inside the body — CH SQL UDFs are row-scalar, and an
     * aggregate would silently change the caller's query classification. */
-  private[chsql] def parseFunctionBody(name: String, text: String)
+  private[chsql] def parseFunctionBody(name: String, e: Expr)
       : (Seq[String], Expr) = {
-    val p = new P(lex(text))
-    val e = p.parseExpr()
-    if (!p.cur.equals(TEnd)) p.fail("trailing tokens after function body")
     val (params, body) = e match {
       case LambdaE(ps, b) => (ps, b)
       case _ => throw new IllegalArgumentException(
@@ -1419,8 +1592,8 @@ object ChSql {
     }
     def walk(x: Expr): Unit = x match {
       case FuncCall(n, ps2, as2, _) =>
-        val l = n.toLowerCase
-        if (l == name.toLowerCase) throw new IllegalArgumentException(
+        val l = n.toLowerCase(java.util.Locale.ROOT)
+        if (l == name.toLowerCase(java.util.Locale.ROOT)) throw new IllegalArgumentException(
           s"ChSql: CREATE FUNCTION $name: recursive functions are not supported")
         if (AggNames.contains(l)) throw new IllegalArgumentException(
           s"ChSql: CREATE FUNCTION $name: aggregate function $n is not " +
@@ -1496,21 +1669,11 @@ object ChSql {
     found
   }
 
-  /** Parse a SELECT/WITH statement to its AST without planning — the DDL
-    * layer's projection-substitution matcher inspects query shape here. */
-  private[chsql] def parseAst(text: String): SetOp = {
-    val p = new P(lex(text))
-    val ast = p.parseSetOp()
-    if (!p.cur.equals(TEnd)) p.fail("trailing tokens after statement")
-    ast
-  }
-
   /** First REAL table referenced in a SELECT's FROM chain — the MV source
     * table ([[ChDdl]] binds it to the stream input; a CH MV has exactly
     * one source). CTE names are not tables: a FROM that references a CTE
     * resolves through the CTE's body to the underlying table. */
-  private[chsql] def firstTable(text: String): Option[String] = {
-    val ast = new P(lex(text)).parseSetOp()
+  private[chsql] def firstTable(ast: SetOp): Option[String] = {
     def walk(op: SetOp, ctes: Map[String, SetOp]): Option[String] = op match {
       case One(s) =>
         val scope = ctes ++ s.ctes
@@ -1539,7 +1702,7 @@ object ChSql {
     * is also named `x` — qualified refs bypass CTEs in CH). Table
     * functions are relations but not tables — excluded. Sorted distinct. */
   def referencedTables(text: String): Seq[String] = {
-    val ast = new P(lex(text)).parseSetOp()
+    val ast = new P(lexPos(text).map(_._1)).parseSetOp()
     val out = scala.collection.mutable.Set[String]()
     def walkSetOp(op: SetOp, scope: Set[String]): Unit = op match {
       case One(s) => walkSelect(s, scope)
@@ -1599,12 +1762,12 @@ object ChSql {
     * assignments and VALUES literals. Shares the full expression grammar
     * (and translator registry) with the SELECT path. */
   private[chsql] def compileExpr(spark: SparkSession, text: String,
-      resolve: String => DataFrame): Column = {
-    val p = new P(lex(text))
-    val e = p.parseExpr()
-    if (p.cur != TEnd) p.fail(s"trailing input in expression '$text'")
+      resolve: String => DataFrame): Column =
+    compileExpr(spark, new Cur(text).expr(), resolve)
+
+  private[chsql] def compileExpr(spark: SparkSession, e: Expr,
+      resolve: String => DataFrame): Column =
     new Translator(spark, resolve, Map.empty, Map.empty, buildSetOp).apply(e)
-  }
 
   private def buildSetOp(spark: SparkSession, op: SetOp,
       resolve: String => DataFrame, ctes: Map[String, DataFrame]): DataFrame =
@@ -1805,7 +1968,7 @@ object ChSql {
           case other => throw new IllegalArgumentException(
             s"ChSql: $name() needs integer literal arguments, got $other")
         }
-        val df = name.toLowerCase match {
+        val df = name.toLowerCase(java.util.Locale.ROOT) match {
           case "numbers" => args match {
             case Seq(n) => TableFunctions.numbers(spark, lng(n))
             case Seq(st, n) => TableFunctions.numbersFrom(spark, lng(st), lng(n))
@@ -2104,9 +2267,10 @@ object ChSql {
         // query order — a rows-unbounded-preceding window of the stem.
         // Stems whose window form Spark supports (no DISTINCT windows):
         inner match {
-          case FuncCall(st, ps, args, d) if st.toLowerCase.endsWith("state") &&
-              Set("sum", "count", "min", "max", "avg")(
-                st.toLowerCase.dropRight(5)) =>
+          case FuncCall(st, ps, args, d)
+              if st.toLowerCase(java.util.Locale.ROOT).endsWith("state") &&
+                Set("sum", "count", "min", "max", "avg")(
+                  st.toLowerCase(java.util.Locale.ROOT).dropRight(5)) =>
             WindowE(FuncCall(st.dropRight(5), ps, args.map(rewriteNav), d),
               Nil, navOrd, Some((true, Long.MinValue, 0L)))
           case _ => throw new IllegalArgumentException(
@@ -2613,7 +2777,7 @@ object ChSql {
       def t(x: Expr): Column = translate(x, lambdaEnv)
       e match {
         case NumLit(s) =>
-          if (s.contains('.') || s.toLowerCase.contains('e')) lit(s.toDouble)
+          if (s.contains('.') || s.toLowerCase(java.util.Locale.ROOT).contains('e')) lit(s.toDouble)
           else {
             val l = s.toLong
             if (l >= Int.MinValue && l <= Int.MaxValue) lit(l.toInt) else lit(l)
@@ -2736,7 +2900,7 @@ object ChSql {
           // ranking/offset functions carry their own implicit frame; Spark
           // rejects an explicit one — only aggregate window functions take
           // the (possibly named-window) frame
-          val fnL = fn.name.toLowerCase
+          val fnL = fn.name.toLowerCase(java.util.Locale.ROOT)
           val framable = !Set("row_number", "rownumber", "rank", "dense_rank",
             "denserank", "ntile", "lag", "lead", "laginframe", "leadinframe",
             "percent_rank", "cume_dist")
@@ -2771,7 +2935,7 @@ object ChSql {
       * (sum/avg/count/min/max...) reuses the aggregate builders. */
     private def windowFn(f: FuncCall, env: Map[String, Column]): Column = {
       def a0: Column = translate(f.args.head, env)
-      f.name.toLowerCase match {
+      f.name.toLowerCase(java.util.Locale.ROOT) match {
         case "row_number" | "rownumber" => row_number()
         case "rank" => rank()
         case "dense_rank" | "denserank" => dense_rank()
@@ -2805,7 +2969,7 @@ object ChSql {
         throw new IllegalArgumentException(s"ChSql: IN list must be literals, got $other")
     }
 
-    private def intervalUnit(u: String): String = u.toLowerCase match {
+    private def intervalUnit(u: String): String = u.toLowerCase(java.util.Locale.ROOT) match {
       // sub-second units (interval rule lists NANOSECOND/MICROSECOND/
       // MILLISECOND, ClickHouseParser.py:17712-17784); Spark timestamps
       // are µs-precision, so ms/µs map natively and ns refuses honestly
@@ -2860,7 +3024,7 @@ object ChSql {
     private def returnsArray(e: Expr): Boolean = e match {
       case ArrayLit(_) => true
       case FuncCall(n, _, _, _) =>
-        val l = n.toLowerCase
+        val l = n.toLowerCase(java.util.Locale.ROOT)
         l.startsWith("emptyarray") ||
           Set("arraymap", "arrayfilter", "arraysort", "arrayreversesort",
             "arrayconcat", "arrayslice", "arrayresize", "arraydistinct",
@@ -2892,7 +3056,7 @@ object ChSql {
         case other => throw new IllegalArgumentException(s"numeric parameter expected: $other")
       }
 
-      val nm = f.name.toLowerCase
+      val nm = f.name.toLowerCase(java.util.Locale.ROOT)
       if (f.distinct && !Set("count", "sum", "avg", "min", "max", "grouparray",
           "groupuniqarray", "uniq", "uniqexact").contains(nm))
         throw new IllegalArgumentException(
@@ -3675,7 +3839,7 @@ object ChSql {
           // components floor correctly), calendar units (n=1) via
           // date_trunc
           val (n, unit) = f.args(1) match {
-            case IntervalE(NumLit(v), u) => (v.toLong, u.toLowerCase)
+            case IntervalE(NumLit(v), u) => (v.toLong, u.toLowerCase(java.util.Locale.ROOT))
             case _ => throw new IllegalArgumentException(
               "ChSql: toStartOfInterval needs INTERVAL <n> <unit>")
           }
@@ -4095,7 +4259,7 @@ object ChSql {
             "hour" -> (() => hour(d).cast("string")),
             "minute" -> (() => minute(d).cast("string")),
             "second" -> (() => second(d).cast("string")))
-          val u = litStr("dateName", f.args.head).toLowerCase
+          val u = litStr("dateName", f.args.head).toLowerCase(java.util.Locale.ROOT)
           units.getOrElse(u, throw new IllegalArgumentException(
             s"ChSql: dateName: unsupported unit '$u'"))()
 

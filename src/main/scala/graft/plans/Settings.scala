@@ -112,32 +112,18 @@ object Settings {
         changedNames.contains(name), key)
     }
 
-  /** Parse the textual form `SET a = 1, b = 'x'` (setStmt grammar).
-    * Quote-aware: a comma inside a quoted value (e.g.
-    * `session_timezone = 'America/Argentina,...'`) does not split the
-    * pair. Malformed pairs (no `=`) raise a clear error instead of a
-    * MatchError. */
-  def parseSet(stmt: String): Map[String, String] = {
-    val body = stmt.trim.replaceAll("(?i)^SET\\s+", "")
-    // split on commas that are outside single quotes
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    body.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case ',' if !inQuote => parts += cur.toString; cur.clear()
-      case ch => cur += ch
-    }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
-      kv.split("=", 2).map(_.trim) match {
-        case Array(k, v) if k.nonEmpty =>
-          k -> v.stripPrefix("'").stripSuffix("'")
-        case _ =>
-          throw new IllegalArgumentException(
-            s"malformed SET pair (expected name = value): '$kv'")
-      }
-    }.toMap
+  /** Parse the textual form `SET a = 1, b = 'x'` (setStmt grammar) on
+    * the ChSql lexer: a comma inside a quoted value (e.g.
+    * `session_timezone = 'America/Argentina,...'`) or a comment does not
+    * split the pairs. Malformed pairs (no `=`) raise a clear error. */
+  def parseSet(stmt: String): Map[String, String] =
+    parseSet(new graft.chsql.ChSql.Cur(stmt))
+
+  /** [[parseSet]] over an already-lexed statement. */
+  private[graft] def parseSet(c: graft.chsql.ChSql.Cur): Map[String, String] = {
+    c.eatKw("SET")
+    val (from, until) = c.rest()
+    c.pairs(from, until, "SET pair").toMap
   }
 
   /** Query-scoped `SETTINGS`: apply, run, restore — the statement-local

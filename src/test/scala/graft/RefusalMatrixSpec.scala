@@ -99,7 +99,19 @@ class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
       Seq("ASOF ON")),
     ("ANY JOIN without USING",
       "SELECT * FROM t1 ANY LEFT JOIN t2 ON t1.k = t2.k",
-      Seq("ANY JOIN", "USING")))
+      Seq("ANY JOIN", "USING")),
+    ("unterminated backquoted identifier",
+      "SELECT `k FROM t1",
+      Seq("unterminated backquoted identifier")),
+    ("unterminated block comment",
+      "SELECT k FROM t1 /* the rest",
+      Seq("unterminated /* comment")),
+    ("SHOW head with a clause it does not read",
+      "SHOW TABLES junk",
+      Seq("unexpected 'junk'")),
+    ("DROP TABLE with a clause it does not read",
+      "DROP TABLE refusal_graphite CASCADE",
+      Seq("unexpected 'CASCADE'")))
 
   test("every refused form raises a ChSql-marked error, never raw Spark") {
     // fixture the matrix rows lean on: a GraphiteMergeTree table (the
