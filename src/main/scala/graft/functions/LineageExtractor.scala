@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.util.Locale
 import scala.collection.mutable
 import graft.model.LineageParseException
 
@@ -54,7 +55,9 @@ object LineageExtractor {
   case object Punct extends Kind
 
   final case class Tok(text: String, kind: Kind) {
-    def upper: String = text.toUpperCase
+    /** Keywords compare in `Locale.ROOT`: under e.g. tr-TR `join` would
+      * upper-case to `JOİN` and stop matching `JOIN`. */
+    val upper: String = text.toUpperCase(Locale.ROOT)
     def is(kw: String): Boolean = kind == Ident && upper == kw
   }
 
@@ -227,7 +230,7 @@ object LineageExtractor {
       val t = toks(i)
       if (t.kind == Punct && t.text == "(") {
         val owner =
-          if (i > 0 && toks(i - 1).kind == Ident) toks(i - 1).text.toLowerCase else ""
+          if (i > 0 && toks(i - 1).kind == Ident) toks(i - 1).text.toLowerCase(Locale.ROOT) else ""
         owners.push(owner)
         depth2 += 1
         i += 1
@@ -288,7 +291,7 @@ object LineageExtractor {
     if (ddl == null || ddl.trim.isEmpty)
       return (tables(ddl, defaultDb), "heuristic") // throws the parity error
     val trimmed = ddl.trim
-    val up = trimmed.toUpperCase
+    val up = trimmed.toUpperCase(Locale.ROOT)
     // the SELECT body: the DDL itself when it IS a select, else the text
     // after the view definition's top-level `AS SELECT|WITH`
     val body =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, to_json, xxhash64}
 
@@ -140,7 +141,7 @@ object AdminOps {
     * callers (and tests) can see the mapping explicitly. */
   def system(spark: SparkSession, command: String, arg: Option[String] = None): String = {
     val original = command.trim
-    original.toUpperCase match {
+    original.toUpperCase(Locale.ROOT) match {
       case "DROP CACHE" | "DROP UNCOMPRESSED CACHE" | "DROP MARK CACHE" =>
         spark.catalog.clearCache()
         "cleared in-memory table cache (spark.catalog.clearCache)"
@@ -158,6 +159,11 @@ object AdminOps {
             graft.sources.Dictionaries.reload(spark, n)
             s"reloaded dictionary $n"
           case Some(n) =>
+            val isPath = scala.util.Try {
+              val p = new org.apache.hadoop.fs.Path(n)
+              p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+            }.getOrElse(false)
+            require(isPath, s"ChSql: SYSTEM RELOAD DICTIONARY $n: no such dictionary or source path")
             spark.catalog.refreshByPath(n) // path-registered source
             s"refreshed dictionary source $n"
           case None =>
@@ -169,7 +175,7 @@ object AdminOps {
       case "RESTART REPLICA" | "SYNC REPLICA" =>
         "unmapped: replication is the storage layer's concern (HDFS/S3)"
       case other =>
-        throw new IllegalArgumentException(s"unknown SYSTEM command: $other")
+        throw new IllegalArgumentException(s"ChSql: unknown SYSTEM command: $other")
     }
   }
 }

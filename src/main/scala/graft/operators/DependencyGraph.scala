@@ -4,65 +4,138 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Distributed form of the reference's graph stage (SURVEY.md §2.1 G2-G5)
-  * plus multi-hop closure and refresh-level extensions. G2-G5 are pure
-  * DataFrame ops — Catalyst handles pushdown/pruning, with hash joins on
-  * `src`/`dst`. The closure and refresh levels assume the edge list fits
-  * on the driver (one edge per view → dependency reference, metadata
-  * scale): each collects it once and runs no further driver round-trips;
-  * the closure broadcasts the adjacency map and its output stays
-  * distributed by source.
+/** The reference's graph stage (SURVEY.md §2.1 G2-G5,
+  * dependencies_to_mermaid.py:89-151) plus multi-hop closure and refresh
+  * levels, over a metadata-scale graph: one node per catalog object, one
+  * edge per view → dependency reference, thousands of rows. So every step
+  * runs on the driver. G2-G5 are one core over local collections, which
+  * [[graft.render.Mermaid.render]] calls as well. Their DataFrame forms
+  * collect the columns they read once — no job at all over the local rows
+  * of [[LineagePipeline.dependencies]] — compute with that core and return
+  * a local frame, with the column names, types and nullability of the
+  * equivalent SQL (a `row_number` window, explode + `distinct`, a left
+  * join, a `left_anti` join + sort). The closure and refresh levels also
+  * collect the edge list once and run no further driver round-trips; the
+  * closure broadcasts the adjacency map and its output stays distributed
+  * by source.
   *
   * Expected input: `lineage` DataFrame with columns
   * (view: string, deps: array<string>) — the output of the lineage UDF stage.
   */
 object DependencyGraph {
 
-  /** G2 (build edges): deps exploded → (src = dependency, dst = view).
-    * Direction per reference dependencies_to_mermaid.py:108.
-    * `posexplode` keeps the within-view dep position so first-seen edge
-    * order (G3) is reproducible under distribution. */
-  def edges(lineage: DataFrame): DataFrame =
-    lineage.select(
-      col("view"),
-      posexplode(col("deps")).as(Seq("pos", "src"))
-    ).select(col("src"), col("view").as("dst"), col("pos"))
+  // ---- the driver-side core ---------------------------------------------
 
-  /** G3 (edge dedup, first-occurrence-wins): reference
-    * dependencies_to_mermaid.py:110-117. Order key = (dst insertion order,
-    * dep position); we approximate dict order with (dst, pos) which is
-    * deterministic and distribution-safe. */
-  def dedupEdges(edges: DataFrame): DataFrame = {
-    val w = Window.partitionBy("src", "dst").orderBy("pos")
-    edges.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
+  /** Spark's ascending string order: nulls first, then UTF-8 bytes (the
+    * reference's code-point order). */
+  val sparkStringOrder: Ordering[String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** One edge: `src` is a dependency of view `dst`, at position `pos` of
+    * the view's dependency list. */
+  final case class Edge(src: String, dst: String, pos: Int)
+
+  /** G2 (build edges): every dep of every view, views then deps in order;
+    * a null dep list adds none. Direction per reference
+    * dependencies_to_mermaid.py:108. */
+  def edgeList(viewDeps: Iterable[(String, Seq[String])]): Seq[Edge] =
+    viewDeps.iterator.flatMap { case (view, deps) =>
+      Option(deps).iterator.flatMap(_.iterator.zipWithIndex.map { case (d, i) => Edge(d, view, i) })
+    }.toSeq
+
+  /** G2 (node set): each view, then its deps, once each in first-seen
+    * order. Reference dependencies_to_mermaid.py:100-108. */
+  def nodeList(viewDeps: Iterable[(String, Seq[String])]): Seq[String] = {
+    val seen = mutable.LinkedHashSet.empty[String]
+    for ((view, deps) <- viewDeps) { seen += view; if (deps != null) seen ++= deps }
+    seen.toSeq
   }
 
-  /** G2 (node set): endpoints ∪ declared views.
-    * Reference dependencies_to_mermaid.py:100-108. */
+  /** G3 (edge dedup, first occurrence wins): one edge per (src, dst), in
+    * first-seen order; of its occurrences, the one at the lowest position
+    * (the first of those on a tie). Reference
+    * dependencies_to_mermaid.py:110-117. */
+  def dedup(edges: Iterable[Edge]): Seq[Edge] = {
+    val kept = mutable.LinkedHashMap.empty[(String, String), Edge]
+    for (e <- edges) kept.get((e.src, e.dst)) match {
+      case Some(k) if k.pos <= e.pos =>
+      case _ => kept((e.src, e.dst)) = e
+    }
+    kept.values.toSeq
+  }
+
+  /** G4 (node classification): each id once as `chTable` per table id
+    * equal to it (`tableCount`), or once as `chView` when there is none; a
+    * null id equals nothing. Reference dependencies_to_mermaid.py:125-129. */
+  def classes(ids: Seq[String], tableCount: String => Int): Seq[(String, String)] =
+    ids.flatMap { id =>
+      val n = if (id == null) 0 else tableCount(id)
+      if (n == 0) Seq(id -> "chView") else Seq.fill(n)(id -> "chTable")
+    }
+
+  /** G5 (isolated nodes): the ids that are the endpoint of no edge, sorted
+    * in [[sparkStringOrder]]; a null id is never an endpoint. Reference
+    * dependencies_to_mermaid.py:137-149. */
+  def isolatedIds(ids: Seq[String], edges: Iterable[(String, String)]): Seq[String] = {
+    val ends = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
+    ids.filter(id => id == null || !ends(id)).sorted(sparkStringOrder)
+  }
+
+  // ---- DataFrame forms --------------------------------------------------
+
+  private def local(like: DataFrame, rows: Seq[Row], fields: StructField*): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava, StructType(fields))
+
+  private def viewDeps(lineage: DataFrame): Seq[(String, Seq[String])] =
+    lineage.select("view", "deps").collect().toSeq
+      .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getSeq[String](1)))
+
+  private def ids(nodes: DataFrame): Seq[String] =
+    nodes.select("id").collect().toSeq.map(_.getString(0))
+
+  private def depsElement(lineage: DataFrame): ArrayType =
+    lineage.schema("deps").dataType.asInstanceOf[ArrayType]
+
+  /** G2 edges of `lineage` as (src = dependency, dst = view, pos). */
+  def edges(lineage: DataFrame): DataFrame = {
+    val view = lineage.schema("view")
+    local(lineage, edgeList(viewDeps(lineage)).map(Row.fromTuple),
+      StructField("src", depsElement(lineage).elementType, depsElement(lineage).containsNull),
+      view.copy(name = "dst"), StructField("pos", IntegerType, nullable = false))
+  }
+
+  /** G3 over the (src, dst, pos) rows of [[edges]]. */
+  def dedupEdges(edges: DataFrame): DataFrame = {
+    val es = edges.select("src", "dst", "pos").collect().toSeq
+      .map(r => Edge(r.getString(0), r.getString(1), r.getInt(2)))
+    local(edges, dedup(es).map(Row.fromTuple),
+      edges.schema("src"), edges.schema("dst"), edges.schema("pos"))
+  }
+
+  /** G2 node set of `lineage` as (id): views ∪ deps, once each. */
   def nodes(lineage: DataFrame): DataFrame =
-    lineage.select(explode(concat(array(col("view")),
-        coalesce(col("deps"), array()))).as("id"))
-      .distinct()
+    local(lineage, nodeList(viewDeps(lineage)).map(Row(_)),
+      StructField("id", StringType,
+        lineage.schema("view").nullable || depsElement(lineage).containsNull))
 
-  /** G4 (node classification): node ∈ table set → chTable else chView.
-    * Reference dependencies_to_mermaid.py:125-129. Broadcast the table list
-    * (catalog-sized) so classification never shuffles the node set. */
-  def classify(nodes: DataFrame, tables: DataFrame): DataFrame =
-    nodes.join(broadcast(tables.select(col("id").as("tid"))),
-        nodes("id") === col("tid"), "left")
-      .select(nodes("id"),
-        when(col("tid").isNotNull, "chTable").otherwise("chView").as("cls"))
+  /** G4 over nodes (id) and table ids (id) as (id, cls). The table ids are
+    * counted in one aggregate — a sort in `tables` drops out of that plan,
+    * so it reads its input once. */
+  def classify(nodes: DataFrame, tables: DataFrame): DataFrame = {
+    val counts = tables.groupBy("id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1).toInt).toMap.withDefaultValue(0)
+    local(nodes, classes(ids(nodes), counts).map(Row.fromTuple),
+      nodes.schema("id"), StructField("cls", StringType, nullable = false))
+  }
 
-  /** G5 (isolated nodes): nodes that are endpoint of no edge, sorted.
-    * Reference dependencies_to_mermaid.py:137-149. */
+  /** G5 over nodes (id) and edges (src, dst) as (id), sorted. */
   def isolated(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val endpoints = edges.select(explode(array(col("src"), col("dst"))).as("id"))
-    nodes.join(endpoints, Seq("id"), "left_anti").orderBy("id")
+    val es = edges.select("src", "dst").collect().toSeq.map(r => r.getString(0) -> r.getString(1))
+    local(nodes, isolatedIds(ids(nodes), es).map(Row(_)), nodes.schema("id"))
   }
 
   /** Fan-out per source object / fan-in per view — SQL-surface extension
@@ -74,7 +147,7 @@ object DependencyGraph {
     edges.groupBy("dst").agg(count("*").as("fan_in")).orderBy(desc("fan_in"), col("dst"))
 
   /** The distinct (src, dst) edge list, read to the driver once: one
-    * action, plus whatever jobs the lazy upstream needs. */
+    * action, which starts no job over a local edge list. */
   private def collectEdges(edges: DataFrame): Array[(Any, Any)] =
     edges.select("src", "dst").collect().map(r => (r.get(0), r.get(1))).distinct
 
@@ -110,11 +183,13 @@ object DependencyGraph {
     * f(u) + 1) over the collected edges until a sweep changes nothing,
     * with f capped at 2^maxRounds; the k-th sweep has followed every walk
     * of k edges, so it settles within 2^maxRounds sweeps. Objects on or
-    * downstream of a cycle (a malformed catalog) read 2^maxRounds. */
+    * downstream of a cycle (a malformed catalog) read 2^maxRounds. The
+    * result is one local frame: the ids of `allObjects` that are no
+    * edge's target (a null id never is) at level 0, then every target. */
   def refreshLevels(allObjects: DataFrame, edges: DataFrame, maxRounds: Int = 10): DataFrame = {
     val es = collectEdges(edges)
     val cap = pathCap(maxRounds)
-    val level = mutable.HashMap.empty[Any, Int]
+    val level = mutable.LinkedHashMap.empty[Any, Int]
     es.foreach { case (_, v) => level(v) = 1 }
     var changed = true
     while (changed) {
@@ -125,15 +200,12 @@ object DependencyGraph {
         if (l > level(v)) { level(v) = l; changed = true }
       }
     }
-    val spark = edges.sparkSession
-    val lv = spark.createDataFrame(
-      level.iterator.map { case (id, l) => Row(id, l) }.toSeq.asJava,
-      StructType(Seq(edges.schema("dst").copy(name = "id"),
-        StructField("level", IntegerType, nullable = false))))
-    val zeros = allObjects.select(col("id"))
-      .join(lv, Seq("id"), "left_anti")
-      .withColumn("level", lit(0))
-    zeros.union(lv)
+    val zeros = allObjects.select("id").collect().iterator.map(_.get(0))
+      .filter(id => id == null || !level.contains(id)).map(Row(_, 0))
+    val id = allObjects.schema("id")
+    local(edges, (zeros ++ level.iterator.map { case (v, l) => Row(v, l) }).toSeq,
+      id.copy(nullable = id.nullable || edges.schema("dst").nullable),
+      StructField("level", IntegerType, nullable = false))
   }
 
   /** Multi-hop lineage: transitive closure with depth = shortest hop count

@@ -5,9 +5,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.LineageExtractor
 import graft.model.MermaidOptions
+import graft.operators.DependencyGraph.sparkStringOrder
 import graft.render.Mermaid
 import graft.sources.CatalogSource
 
@@ -53,11 +53,6 @@ object LineagePipeline {
     parse(views, lineageExactUdf)
       .select(col("view"), col("r._1").as("deps"), col("r._2").as("tier"),
         col("r._3").as("error"))
-
-  /** Spark's ascending string order: nulls first, then UTF-8 bytes. */
-  private val sparkStringOrder: Ordering[String] = (a, b) =>
-    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
-    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** Catalog objects of user databases on one side of the view rule (S1/S2),
     * without [[CatalogSource]]'s presentation sort. */

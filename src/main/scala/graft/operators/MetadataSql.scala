@@ -24,11 +24,13 @@ object MetadataSql {
     * (`graft_catalog`, `graft_objects`, `graft_objects_by_engine`) are lazy
     * plans over `catalog`. Every lineage-derived view is a snapshot taken
     * here: [[LineagePipeline.dependencies]] parses the DDL once, in one
-    * job, and `graft_view_dependencies`, `graft_lineage_errors`,
-    * `graft_edges`, `graft_node_classes`, `graft_isolated_objects`,
-    * `graft_fan_out`/`graft_fan_in` and `graft_closure` (which also reads
-    * the edge list to the driver once, here) are plans over those local
-    * rows. Later catalog changes need a re-register. */
+    * job, and the [[DependencyGraph]] steps compute `graft_edges`,
+    * `graft_node_classes` and `graft_isolated_objects` on the driver as
+    * local rows (the classes count the table ids in one catalog scan, the
+    * isolated objects read the user object ids in one). `graft_fan_out`/
+    * `graft_fan_in` are aggregates over the local edges and
+    * `graft_closure` broadcasts them to one BFS job. Later catalog changes
+    * need a re-register. */
   def register(spark: SparkSession, catalog: DataFrame): Unit = {
     catalog.createOrReplaceTempView("graft_catalog")
 

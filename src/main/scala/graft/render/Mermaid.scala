@@ -3,6 +3,7 @@ package graft.render
 import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.{MermaidDependencyGraphError, MermaidOptions}
+import graft.operators.DependencyGraph
 
 /** Mermaid flowchart rendering of the view→table dependency graph.
   *
@@ -17,9 +18,10 @@ import graft.model.{MermaidDependencyGraphError, MermaidOptions}
   * first-seen insertion order, which satisfies every substring contract of
   * the reference tests AND is reproducible (SURVEY.md §7 "hard parts" (1)).
   *
-  * The graph is metadata-scale (thousands of rows), so rendering is
-  * driver-side over collected rows; the distributed form of the same ops
-  * lives in [[graft.operators.DependencyGraph]].
+  * The graph stage itself — nodes, edges, first-seen dedup, table/view
+  * classes, sorted isolated nodes — is [[graft.operators.DependencyGraph]]'s
+  * driver-side core, the one the DataFrame forms of G2-G5 compute with;
+  * this object only validates input and lays out the text.
   */
 object Mermaid {
 
@@ -37,18 +39,9 @@ object Mermaid {
       throw new MermaidDependencyGraphError(
         "options.direction must be one of LR, TB, RL, BT")
 
-    val nodes = mutable.LinkedHashSet[String]()
-    val edges = mutable.ArrayBuffer[(String, String)]()
-    for ((view, deps) <- viewDeps) {
-      nodes += view
-      for (dep <- deps) { nodes += dep; edges += ((dep, view)) }
-    }
-
-    val finalEdges =
-      if (options.dedupeEdges) {
-        val seen = mutable.Set[(String, String)]()
-        edges.filter(e => seen.add(e)).toSeq // first-occurrence wins
-      } else edges.toSeq
+    val nodes = DependencyGraph.nodeList(viewDeps)
+    val all = DependencyGraph.edgeList(viewDeps)
+    val edges = if (options.dedupeEdges) DependencyGraph.dedup(all) else all
 
     val ind = options.indent
     val lines = mutable.ArrayBuffer[String](
@@ -56,20 +49,14 @@ object Mermaid {
       s"${ind}classDef chTable fill:#ffdd00,stroke:#000000,stroke-width:2px,color:#000000",
       s"${ind}classDef chView fill:#d6e4f8,stroke:#154360,stroke-width:2px,color:#154360",
       "")
-
-    for (n <- nodes)
-      lines += (if (tables.contains(n)) s"$ind$n:::chTable" else s"$ind$n:::chView")
+    for ((n, cls) <- DependencyGraph.classes(nodes, t => if (tables(t)) 1 else 0))
+      lines += s"$ind$n:::$cls"
     lines += ""
-
-    if (finalEdges.nonEmpty)
-      for ((src, dst) <- finalEdges) lines += s"$ind$src -.-> $dst"
-    else if (options.includeIsolatedNodes)
-      for (n <- nodes.toSeq.sorted) lines += s"$ind$n"
-
-    if (options.includeIsolatedNodes && finalEdges.nonEmpty) {
-      val connected = finalEdges.flatMap(e => Seq(e._1, e._2)).toSet
-      for (n <- (nodes.toSet -- connected).toSeq.sorted) lines += s"$ind$n"
-    }
+    for (e <- edges) lines += s"$ind${e.src} -.-> ${e.dst}"
+    // with no edges every node is isolated
+    if (options.includeIsolatedNodes)
+      for (n <- DependencyGraph.isolatedIds(nodes, edges.map(e => e.src -> e.dst)))
+        lines += s"$ind$n"
 
     lines.mkString("\n") + "\n"
   }

@@ -611,9 +611,12 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     assert(q("SELECT count() AS n FROM edge_t") == Seq(Seq(2L)))
     run("DROP TABLE edge_t")
 
-    // SYSTEM RELOAD DICTIONARY with the unquoted CH spelling
-    assert(run("SYSTEM RELOAD DICTIONARY no_such_dict").head.getString(0)
-      .contains("no_such_dict"))
+    // SYSTEM RELOAD DICTIONARY with the unquoted CH spelling: a name that
+    // is neither a dictionary nor a path refuses instead of a no-op refresh
+    val eDict = intercept[IllegalArgumentException](
+      run("SYSTEM RELOAD DICTIONARY no_such_dict"))
+    assert(eDict.getMessage.contains("ChSql") &&
+      eDict.getMessage.contains("no_such_dict"), eDict.getMessage)
   }
 
   test("CH-text admin verbs: CHECK TABLE, EXISTS, SYSTEM, KILL QUERY as statements") {

@@ -246,4 +246,21 @@ class LineageExtractorSpec extends AnyFunSuite with SparkSuite {
       else assert(tier == "exact", s"$name fell back to $tier")
     }
   }
+
+  test("keywords match under a Turkish default locale") {
+    // tr-TR upper-cases `join` to `JOİN` and lower-cases `SUBSTRING` to
+    // `substrıng`: keyword tests must not follow the default locale
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      assert(t("create view test.v as select * from a join b on a.x = b.x") ==
+        Seq("test.a", "test.b"))
+      assert(t("create view test.v as with x as (select * from t) select * from x") ==
+        Seq("test.t"))
+      assert(t("CREATE VIEW test.v AS SELECT SUBSTRING(s FROM pos) FROM t") == Seq("test.t"))
+      assert(LineageExtractor.tablesExact(
+        "create view test.v as with x as (select * from t) select * from x join u using k",
+        Some("test")) == (Seq("test.t", "test.u"), "exact"))
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TestBridge
 import graft.model.MermaidOptions
@@ -208,6 +209,95 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val lineage = Seq(("v1", Seq("t1", "t2")), ("v2", null)).toDF("view", "deps")
     assert(DependencyGraph.nodes(lineage).collect().map(_.getString(0)).toSet ==
       Set("v1", "v2", "t1", "t2"))
+  }
+
+  /** G2-G5 as the distributed SQL plans they once were — a `row_number`
+    * window, explode + `distinct`, a left join, a `left_anti` join + sort:
+    * the reference the driver-side forms must reproduce. */
+  private object SqlGraph {
+    def edges(lineage: DataFrame): DataFrame =
+      lineage.select(col("view"), posexplode(col("deps")).as(Seq("pos", "src")))
+        .select(col("src"), col("view").as("dst"), col("pos"))
+    def dedupEdges(edges: DataFrame): DataFrame =
+      edges.withColumn("rn", row_number().over(Window.partitionBy("src", "dst").orderBy("pos")))
+        .filter(col("rn") === 1).drop("rn")
+    def nodes(lineage: DataFrame): DataFrame =
+      lineage.select(explode(concat(array(col("view")),
+        coalesce(col("deps"), array()))).as("id")).distinct()
+    def classify(nodes: DataFrame, tables: DataFrame): DataFrame =
+      nodes.join(tables.select(col("id").as("tid")), nodes("id") === col("tid"), "left")
+        .select(nodes("id"), when(col("tid").isNotNull, "chTable").otherwise("chView").as("cls"))
+    def isolated(nodes: DataFrame, edges: DataFrame): DataFrame = {
+      val endpoints = edges.select(explode(array(col("src"), col("dst"))).as("id"))
+      nodes.join(endpoints, Seq("id"), "left_anti").orderBy("id")
+    }
+  }
+
+  /** Same schema and the same rows: as a sequence when `ordered`, else as
+    * a multiset. */
+  private def assertSame(got: DataFrame, want: DataFrame, ordered: Boolean = false): Unit = {
+    assert(got.schema == want.schema)
+    def rows(df: DataFrame) = {
+      val rs = df.collect().toSeq.map(_.toSeq.map(String.valueOf))
+      if (ordered) rs else rs.sortBy(_.mkString("\u0001"))
+    }
+    assert(rows(got) == rows(want))
+  }
+
+  test("driver-side G2-G5 equal their SQL formulations on a generated lineage") {
+    import spark.implicits._
+    // ids whose UTF-16 and UTF-8 orders differ: U+FF61 < U+1F600 only in UTF-8
+    val pool = Seq("t0", "t1", "t2", "t3", "v0", "v1", "v2", "\uFF61x", "\uD83D\uDE00x", "é")
+    val rnd = new scala.util.Random(7)
+    val generated = (0 until 40).map { i =>
+      val deps =
+        if (rnd.nextInt(8) == 0) null
+        else Seq.fill(rnd.nextInt(5))(if (rnd.nextInt(10) == 0) null else pool(rnd.nextInt(pool.size)))
+      (s"v${i % 12}", deps) // views 0-11 listed several times
+    }
+    val fixed = Seq(("v1", Seq("t1", "t2", "t1")), ("v1", Seq("t2", "t1")), ("v9", null),
+      ("v10", Seq("t0", null)), ("\uFF61v", Seq()), ("\uD83D\uDE00v", Seq()), ("w", Seq()))
+    for (lineage <- Seq((fixed ++ generated).toDF("view", "deps"),
+        LineagePipeline.dependencies(catalog)._1)) {
+      val tables = Seq("t0", "t1", "t1", null, "t3", "\uFF61x", "absent").toDF("id").orderBy("id")
+      val edges = DependencyGraph.edges(lineage)
+      assertSame(edges, SqlGraph.edges(lineage))
+      val deduped = DependencyGraph.dedupEdges(edges)
+      assertSame(deduped, SqlGraph.dedupEdges(edges))
+      val nodes = DependencyGraph.nodes(lineage)
+      assertSame(nodes, SqlGraph.nodes(lineage))
+      assertSame(DependencyGraph.classify(nodes, tables), SqlGraph.classify(nodes, tables))
+      for (es <- Seq(deduped, edges.filter(col("src") =!= "t1"), edges.limit(0)))
+        assertSame(DependencyGraph.isolated(nodes, es), SqlGraph.isolated(nodes, es), ordered = true)
+    }
+  }
+
+  test("G2-G5 over the dependencies frames start no job; closure and levels only their own") {
+    val (deps, _) = LineagePipeline.dependencies(catalog)
+    val ((edges, nodes), g2g5) = jobsOf {
+      val edges = DependencyGraph.dedupEdges(DependencyGraph.edges(deps)).select("src", "dst")
+      val nodes = DependencyGraph.nodes(deps)
+      edges.collect(); nodes.collect(); DependencyGraph.isolated(nodes, edges).collect()
+      (edges, nodes)
+    }
+    assert(g2g5 == 0)
+    val (closure, built) = jobsOf(DependencyGraph.transitiveClosure(edges))
+    assert(built == 0)
+    val (pairs, ran) = jobsOf(closure.collect())
+    assert(ran == 1 && pairs.length == 27)
+    val (levels, leveled) = jobsOf(DependencyGraph.refreshLevels(nodes, edges).collect())
+    assert(leveled == 0 && levels.length == 12)
+  }
+
+  test("G2-G5 read a lazy UDF-backed lineage, as m9 does") {
+    val (deps, _) = LineagePipeline.dependencies(catalog)
+    val exact = LineagePipeline.lineageExact(CatalogSource.views(catalog))
+      .filter(col("error").isNull).select("view", "deps")
+    def edgeSet(lineage: DataFrame) =
+      DependencyGraph.dedupEdges(DependencyGraph.edges(lineage)).select("src", "dst")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(edgeSet(exact) == edgeSet(deps) && edgeSet(exact).size == 17)
+    assert(DependencyGraph.nodes(exact).count() == 12)
   }
 
   test("mermaid output matches the reference output contract") {

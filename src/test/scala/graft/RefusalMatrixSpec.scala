@@ -111,7 +111,13 @@ class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
       Seq("unexpected 'junk'")),
     ("DROP TABLE with a clause it does not read",
       "DROP TABLE refusal_graphite CASCADE",
-      Seq("unexpected 'CASCADE'")))
+      Seq("unexpected 'CASCADE'")),
+    ("SYSTEM unknown command",
+      "SYSTEM EXPLODE",
+      Seq("unknown SYSTEM command", "EXPLODE")),
+    ("SYSTEM RELOAD DICTIONARY unknown name",
+      "SYSTEM RELOAD DICTIONARY refusal_no_such_dict",
+      Seq("refusal_no_such_dict", "no such dictionary")))
 
   test("every refused form raises a ChSql-marked error, never raw Spark") {
     // fixture the matrix rows lean on: a GraphiteMergeTree table (the
