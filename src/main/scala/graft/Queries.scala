@@ -8,6 +8,7 @@ import graft.operators.{DependencyGraph, LineagePipeline, Mutations, Similarity}
 import graft.operators.Similarity.{AnnIndex, Cells, Coarse, Every, Exhaustive,
   Pq, ResidualPq, Sq8, Sqrt}
 import graft.sources.{CatalogSource, TableFunctions}
+import org.apache.spark.sql.graftbridge.FooterSchema
 
 /** The operator inventory (SURVEY.md §2) as named queries with DuckDB
   * oracles. Every entry keeps column names identical between the Spark
@@ -28,7 +29,8 @@ object Queries {
     * 13 ms with the schema supplied — and the bench pays it again on
     * every pass of every query. A production deployment reads these
     * tables through a catalog whose schema is already known; caching the
-    * inferred StructType per path reproduces that contract. Metadata
+    * footer's StructType ([[FooterSchema]]: no job) per path reproduces
+    * that contract. Metadata
     * only: every invocation still lists, opens and scans the parquet
     * data itself — no rows, results or intermediates are memoized. Keyed
     * by full path so scale-factor dirs never collide; only used for the
@@ -39,7 +41,7 @@ object Queries {
 
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = tblSchemas.computeIfAbsent(path, p => s.read.parquet(p).schema)
+    val sch = tblSchemas.computeIfAbsent(path, FooterSchema.read(s, _))
     s.read.schema(sch).parquet(path)
   }
 

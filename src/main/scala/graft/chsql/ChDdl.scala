@@ -2,6 +2,7 @@ package graft.chsql
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import ChSql.{Cur, TNum, TP, TStr}
 
 /** The DDL/DML/admin statements of the CH grammar, read from the tokens
@@ -399,8 +400,7 @@ object ChDdl {
           // record the declared UUID (catalog tables only — TEMPORARY /
           // Memory tables have no CH UUID identity) for SHOW CREATE
           s.uuid.filter(_ => !isMem).foreach(u =>
-            spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-              s"('graft.uuid' = '$u')"))
+            TableMeta.update(spark, name, set = Map("graft.uuid" -> u)))
           sel.foreach(q => appendInto(spark, name, Nil, ChSql.plan(spark, q)(resolve)))
         }
         created
@@ -480,9 +480,7 @@ object ChDdl {
           val w = sizedWrite(df).write.mode(SaveMode.ErrorIfExists)
           (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
             .saveAsTable(name)
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            props.map { case (k, v) => s"${sqlLit(k)}=${sqlLit(v)}" }
-              .mkString(", ") + ")")
+          TableMeta.update(spark, name, set = props)
           status(s"table $name created from select")
         }
 
@@ -991,7 +989,7 @@ object ChDdl {
           // applies here like any INSERT — a NULL-producing view select
           // must not plant a NULL that declared non-Nullable reads
           // (readTable's AssertNotNull) would then throw on
-          sizedWrite(guardNonNullableWrites(tablePropsSafe(spark, t), out, t))
+          sizedWrite(guardNonNullableWrites(TableMeta.props(spark, t), out, t))
             .write.mode(SaveMode.Append).insertInto(t)
         case _ => out.createOrReplaceTempView(target.getOrElse(name))
       }
@@ -1321,7 +1319,7 @@ object ChDdl {
     require(spark.catalog.tableExists(name),
       s"ChSql: INSERT INTO unknown table '$name' (CREATE TABLE it first)")
     val target = spark.table(name).schema
-    val props = tablePropsSafe(spark, name)
+    val props = TableMeta.props(spark, name)
     val materialized = target.fieldNames
       .filter(c => props.contains(s"graft.materialized.$c")).toSet
     def defaultOf(c: String): Option[String] =
@@ -1356,10 +1354,7 @@ object ChDdl {
     // positional binding follows the DECLARED order (the catalog puts
     // partition columns last; CH binds by the order the user wrote);
     // columns added later (metadata ADD COLUMN) append at the end
-    val declared0 = props.get("graft.columns")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
-    val declared = declared0.filter(target.fieldNames.contains) ++
-      target.fieldNames.filterNot(declared0.contains)
+    val declared = TableMeta.declaredOrder(props, target.fieldNames.toSeq)
     val provided: Map[String, Int] =
       if (byName) cols.zipWithIndex.toMap
       else declared.filterNot(materialized).zipWithIndex.toMap
@@ -1403,17 +1398,14 @@ object ChDdl {
     * (rewriteSwap materializes the fill — CH's merge does the same). */
   private def addFillDecorate(spark: SparkSession, name: String,
       df: DataFrame, props: Map[String, String]): DataFrame = {
-    val fills = props.keys.filter(_.startsWith("graft.addfill."))
-      .map(_.stripPrefix("graft.addfill.")).toSeq.sorted
-    fills.foldLeft(df) { (d, c) =>
-      if (!d.columns.contains(c)) d
-      else {
+    TableMeta.prefixed(props, "graft.addfill.").toSeq.sorted.foldLeft(df) {
+      case (d, (c, _)) if !d.columns.contains(c) => d
+      case (d, (c, ex)) =>
         val dt = d.schema(c).dataType
-        val fill = Some(props(s"graft.addfill.$c")).filter(_.trim.nonEmpty)
-          .map(ex => ChSql.compileExpr(spark, ex, spark.table(_)))
+        val fill = Some(ex).filter(_.trim.nonEmpty)
+          .map(e => ChSql.compileExpr(spark, e, spark.table(_)))
           .getOrElse(chTypeDefault(dt))
         d.withColumn(c, coalesce(col(c), fill.cast(dt)))
-      }
     }
   }
 
@@ -1423,7 +1415,7 @@ object ChDdl {
     * fills. Text-layer resolvers should prefer this over bare
     * `spark.table`. */
   def readTable(spark: SparkSession, name: String): DataFrame = {
-    val props = tablePropsSafe(spark, name)
+    val props = TableMeta.props(spark, name)
     val df0 = addFillDecorate(spark, name, spark.table(name), props)
     // restore the DECLARED nullability on the read: parquet storage is
     // relaxed to all-nullable (rewrite mutations re-save from a
@@ -1459,13 +1451,12 @@ object ChDdl {
               col(f.name)))).as(f.name)
       }.toSeq: _*)
     }
-    val aliases = props.keys.filter(_.startsWith("graft.alias."))
-      .map(_.stripPrefix("graft.alias.")).toSeq.sorted
-    aliases.foldLeft(df) { (d, c) =>
-      val ex = ChSql.compileExpr(spark, props(s"graft.alias.$c"), spark.table(_))
-      val typed = props.get(s"graft.aliastype.$c")
-        .map(t => ex.cast(graft.model.ChTypes.toSpark(t))).getOrElse(ex)
-      d.withColumn(c, typed)
+    TableMeta.prefixed(props, "graft.alias.").toSeq.sorted.foldLeft(df) {
+      case (d, (c, text)) =>
+        val ex = ChSql.compileExpr(spark, text, spark.table(_))
+        val typed = props.get(s"graft.aliastype.$c")
+          .map(t => ex.cast(graft.model.ChTypes.toSpark(t))).getOrElse(ex)
+        d.withColumn(c, typed)
     }
   }
 
@@ -1563,8 +1554,7 @@ object ChDdl {
         d.modExpr.foreach { ex =>
           val kind = if (d.modKind.contains("MATERIALIZED")) "materialized"
             else "default"
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"${sqlLit(s"graft.$kind.${d.name}")}=${sqlLit(ex)})")
+          TableMeta.update(spark, name, set = Map(s"graft.$kind.${d.name}" -> ex))
         }
         // maintain the declared-Nullable list, and for a non-Nullable add
         // record the read-time fill (CH: old parts read the DEFAULT — or
@@ -1572,16 +1562,11 @@ object ChDdl {
         val declaredNullable = graft.model.ChTypes
           .toSparkSchema(s"${d.name} ${d.chType.get}").head.nullable
         setNullColMembership(spark, name, d.name, declaredNullable)
-        if (!declaredNullable)
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"${sqlLit(s"graft.addfill.${d.name}")}=${
-              sqlLit(d.modExpr.getOrElse(""))})")
+        if (!declaredNullable) TableMeta.update(spark, name,
+          set = Map(s"graft.addfill.${d.name}" -> d.modExpr.getOrElse("")))
         if (afterCol.nonEmpty || isFirst) {
-          val props = tablePropsSafe(spark, name)
-          val declared = props.get("graft.columns")
-            .map(_.split(",").map(_.trim).toSeq)
-            .getOrElse(spark.table(name).columns.toSeq)
-            .filterNot(_ == d.name)
+          val declared = TableMeta.declaredOrder(TableMeta.props(spark, name),
+            spark.table(name).columns.toSeq).filterNot(_ == d.name)
           val ordered = afterCol match {
             case Some(a) =>
               require(declared.contains(a),
@@ -1589,8 +1574,8 @@ object ChDdl {
               declared.flatMap(c => if (c == a) Seq(c, d.name) else Seq(c))
             case None => d.name +: declared
           }
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"'graft.columns'=${sqlLit(ordered.mkString(","))})")
+          TableMeta.update(spark, name,
+            set = Map("graft.columns" -> ordered.mkString(",")))
         }
         // documented divergence, surfaced at ALTER time: CH computes the
         // DEFAULT for old parts of a Nullable added column too; here old
@@ -1653,12 +1638,9 @@ object ChDdl {
             spark.sql(s"ALTER TABLE $name ALTER COLUMN $c COMMENT ''")
           case "codec" | "ttl" => // accepted-and-ignored at CREATE too
           case "alias" =>
-            Seq(s"graft.alias.$c", s"graft.aliastype.$c").foreach(k =>
-              spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES " +
-                s"IF EXISTS (${sqlLit(k)})"))
-          case k =>
-            spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS (" +
-              s"${sqlLit(s"graft.$k.$c")})")
+            TableMeta.update(spark, name,
+              unset = Seq(s"graft.alias.$c", s"graft.aliastype.$c"))
+          case k => TableMeta.update(spark, name, unset = Seq(s"graft.$k.$c"))
         }
         status(s"removed $kind from column $c of $name (metadata only)")
       } else if (kw("CODEC")) {
@@ -1692,10 +1674,8 @@ object ChDdl {
           val other = if (kind == "default") "materialized" else "default"
           // the two kinds are exclusive per column — setting one clears
           // the other, or a stale twin would win on the next short INSERT
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"${sqlLit(s"graft.$kind.$c")}=${sqlLit(ex)})")
-          spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS (" +
-            s"${sqlLit(s"graft.$other.$c")})")
+          TableMeta.update(spark, name, set = Map(s"graft.$kind.$c" -> ex),
+            unset = Seq(s"graft.$other.$c"))
         }
         status(s"modified column $c in $name" +
           d.modKind.map(k => s" (${k.toLowerCase(java.util.Locale.ROOT)} " +
@@ -1779,8 +1759,7 @@ object ChDdl {
       val (from, until) = cur.rest()
       val k = cur.sliceUnparen(from, until).trim
       require(k.nonEmpty, "ChSql: MODIFY ORDER BY needs a key")
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-        s"'graft.order_by'=${sqlLit(k)})")
+      TableMeta.update(spark, name, set = Map("graft.order_by" -> k))
       status(s"sorting key of $name set to ($k) (metadata; new parts honor it)")
     } else if (kw("MODIFY", "COMMENT")) {
       val text = cur.str("MODIFY COMMENT needs a string literal")
@@ -1791,12 +1770,11 @@ object ChDdl {
       val (from, until) = cur.rest()
       val ex = cur.slice(from, until)
       require(ex.nonEmpty, "ChSql: MODIFY TTL needs an expression")
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-        s"'graft.ttl'=${sqlLit(ex)})")
+      TableMeta.update(spark, name, set = Map("graft.ttl" -> ex))
       status(s"ttl set on $name (applied on OPTIMIZE)")
     } else if (kw("REMOVE", "TTL")) {
       ended()
-      spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS ('graft.ttl')")
+      TableMeta.update(spark, name, unset = Seq("graft.ttl"))
       status(s"ttl removed from $name")
     } else if (kw("ADD", "INDEX")) {
       // type may carry CH's tuning params — tokenbf_v1(256, 2, 0),
@@ -1821,8 +1799,7 @@ object ChDdl {
           // sidecar.
           require(spark.table(name).columns.contains(c),
             s"ChSql: ADD INDEX: no column $c in $name")
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"${sqlLit(b.prop + idx)}=${sqlLit(c)})")
+          TableMeta.update(spark, name, set = Map(b.prop + idx -> c))
           graft.plans.BloomSkipIndex.install(spark)
           status(s"${b.label} index $idx on $name($c) registered — " +
             s"${b.scans} scans prune files after MATERIALIZE INDEX $idx")
@@ -1834,15 +1811,14 @@ object ChDdl {
         case None =>
           require(spark.table(name).columns.contains(c),
             s"ChSql: ADD INDEX: no column $c in $name")
-          spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-            s"${sqlLit(s"graft.index.$idx")}=${sqlLit(c)})")
+          TableMeta.update(spark, name, set = Map(s"graft.index.$idx" -> c))
           status(s"index $idx on $name($c) registered — new writes cluster " +
             s"by it; MATERIALIZE INDEX $idx rewrites existing parts")
       }
     } else if (kw("MATERIALIZE", "INDEX")) {
       val idx = cur.ident("an index name")
       ended()
-      val props = tablePropsSafe(spark, name)
+      val props = TableMeta.props(spark, name)
       BloomKinds.flatMap(b => props.get(b.prop + idx).map(b -> _)).headOption.map {
         case (b, c) =>
           val side = b.build(spark, name, c)
@@ -1870,15 +1846,14 @@ object ChDdl {
       cur.ifExists()
       val idx = cur.ident("an index name")
       ended()
-      val props = tablePropsSafe(spark, name)
+      val props = TableMeta.props(spark, name)
       BloomKinds.foreach(b => props.get(b.prop + idx).foreach { c =>
         val side = b.sidecar(name, c)
         if (spark.catalog.tableExists(side)) spark.sql(s"DROP TABLE $side")
         graft.plans.BloomSkipIndex.invalidate(side)
       })
-      spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS (" +
-        ("graft.index." +: BloomKinds.map(_.prop)).map(p => sqlLit(p + idx))
-          .mkString(", ") + ")")
+      TableMeta.update(spark, name,
+        unset = ("graft.index." +: BloomKinds.map(_.prop)).map(_ + idx))
       status(s"dropped index $idx from $name")
     } else if (kw("ADD", "PROJECTION")) {
       cur.ifNotExists()
@@ -1915,7 +1890,7 @@ object ChDdl {
       val vals = partition(cur)
       ended()
       val p = withPartitionScope(spark, name, Some(vals), lit(true))
-      val props = tablePropsSafe(spark, name)
+      val props = TableMeta.props(spark, name)
       val field = spark.table(name).schema(c)
       // CH resets a cleared column to its DEFAULT expression if declared,
       // else the type's implicit default — NULL only for Nullable columns
@@ -1933,11 +1908,6 @@ object ChDdl {
   }
 
   // ===================== partition-level operations =====================
-
-  /** The table's partition columns, in layout order. */
-  private def partitionCols(spark: SparkSession, name: String): Seq[String] =
-    spark.catalog.listColumns(name).collect()
-      .filter(_.isPartition).map(_.name).toSeq
 
   /** The partition expression at the cursor (partitionClause,
     * ClickHouseParser.py:2449 region): `'v'` | `123` | `ID 'x'` |
@@ -1965,26 +1935,27 @@ object ChDdl {
     }
   }
 
-  /** `c1='v1', c2='v2'` partition spec over the table's partition key. */
-  private def partitionSpecSql(spark: SparkSession, name: String,
-      vals: Seq[String]): String = {
-    val pcols = partitionCols(spark, name)
-    require(pcols.nonEmpty, s"ChSql: $name is not partitioned")
+  /** The table's partition key paired with the partition values `vals`. */
+  private def partitionSpec(spark: SparkSession, name: String,
+      vals: Seq[String]): Seq[(String, String)] = {
+    val pcols = TableMeta.partitionCols(spark, name)
+    require(pcols.nonEmpty, s"ChSql: $name is not a partitioned catalog table")
     require(vals.size == pcols.size,
       s"ChSql: partition value arity ${vals.size} != partition key " +
         s"(${pcols.mkString(", ")})")
-    pcols.zip(vals).map { case (c, v) => s"$c=${sqlLit(v)}" }.mkString(", ")
+    pcols.zip(vals)
   }
+
+  /** `c1='v1', c2='v2'` partition spec over the table's partition key. */
+  private def partitionSpecSql(spark: SparkSession, name: String,
+      vals: Seq[String]): String =
+    partitionSpec(spark, name, vals).map { case (c, v) => s"$c=${sqlLit(v)}" }
+      .mkString(", ")
 
   /** The `<c1>=<v1>[/<c2>=<v2>]` relative directory of one partition. */
   private def partitionRelDir(spark: SparkSession, name: String,
-      vals: Seq[String]): String = {
-    val pcols = partitionCols(spark, name)
-    require(vals.size == pcols.size,
-      s"ChSql: partition value arity ${vals.size} != partition key " +
-        s"(${pcols.mkString(", ")})")
-    pcols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString("/")
-  }
+      vals: Seq[String]): String =
+    partitionSpec(spark, name, vals).map { case (c, v) => s"$c=$v" }.mkString("/")
 
   private def tableLocation(spark: SparkSession, name: String):
       org.apache.hadoop.fs.Path =
@@ -1993,9 +1964,6 @@ object ChDdl {
       .getOrElse(throw new IllegalArgumentException(
         s"ChSql: $name is not a file-backed table"))
 
-  /** Merge-move every child of `src` into `dst` (rename when `dst` is
-    * absent — O(1); per-file renames when parts already live there, the
-    * CH attach-into-existing-partition case). Metadata-only either way. */
   /** Structural schema equality for partition exchange verbs: column
     * names and data types, in order — NOT nullability or metadata.
     * Rewriting mutations (OPTIMIZE, ALTER UPDATE/DELETE via rewriteSwap)
@@ -2010,6 +1978,9 @@ object ChDdl {
     shape(a) == shape(b)
   }
 
+  /** Merge-move every child of `src` into `dst` (rename when `dst` is
+    * absent — O(1); per-file renames when parts already live there, the
+    * CH attach-into-existing-partition case). Metadata-only either way. */
   private def moveDirInto(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Unit = {
@@ -2085,7 +2056,7 @@ object ChDdl {
   private def movePartition(spark: SparkSession, name: String,
       vals: Seq[String], dest: String): String = {
     require(spark.catalog.tableExists(dest), s"ChSql: unknown table '$dest'")
-    require(partitionCols(spark, name) == partitionCols(spark, dest),
+    require(TableMeta.partitionCols(spark, name) == TableMeta.partitionCols(spark, dest),
       s"ChSql: MOVE PARTITION: $name and $dest have different partition keys")
     require(structurallyEqual(spark, name, dest),
       s"ChSql: MOVE PARTITION: $name and $dest have different schemas")
@@ -2198,7 +2169,7 @@ object ChDdl {
     // the addfill read rule would silently resurrect as the default, or
     // that makes every later readTable AssertNotNull read throw
     (assignments.map(_._1), mutateWhere(spark, name, p, rowsPreserved = true)(df =>
-      guardNonNullableWrites(tablePropsSafe(spark, name),
+      guardNonNullableWrites(TableMeta.props(spark, name),
         graft.operators.Mutations.update(df, assignments, p), name)))
   }
 
@@ -2210,11 +2181,7 @@ object ChDdl {
     inPart match {
       case None => pred
       case Some(vals) =>
-        val pcols = partitionCols(spark, name)
-        require(pcols.nonEmpty, s"ChSql: $name is not partitioned")
-        require(vals.size == pcols.size, s"ChSql: partition value arity " +
-          s"${vals.size} != partition key arity ${pcols.size}")
-        pcols.zip(vals).map { case (c, v) => col(c) === lit(v) }
+        partitionSpec(spark, name, vals).map { case (c, v) => col(c) === lit(v) }
           .reduce(_ && _) && pred
     }
 
@@ -2228,11 +2195,11 @@ object ChDdl {
   private def mutateWhere(spark: SparkSession, name: String, pred: Column,
       rowsPreserved: Boolean = false)(
       transform: DataFrame => DataFrame): String = {
-    require(!tablePropsSafe(spark, name)
+    require(!TableMeta.props(spark, name)
       .getOrElse("graft.engine", "").equalsIgnoreCase("File"),
       s"ChSql: mutations are not supported on ENGINE = File tables " +
         s"($name) — CH parity; CTAS into a MergeTree table first")
-    val pcols = partitionCols(spark, name)
+    val pcols = TableMeta.partitionCols(spark, name)
     if (pcols.isEmpty) {
       rewriteSwap(spark, name)(transform)
       "rewrote table"
@@ -2242,7 +2209,7 @@ object ChDdl {
       // stay (the dynamic overwrite touches only affected partitions, and
       // coalesce over the materialized non-NULL values remains exact)
       val full = addFillDecorate(spark, name, spark.table(name),
-        tablePropsSafe(spark, name))
+        TableMeta.props(spark, name))
       // phase 1 (find): which partitions can the predicate touch? When
       // the WHERE constrains the partition key, Catalyst prunes this scan
       // to the matching directories — the find phase is then metadata-fast
@@ -2278,11 +2245,9 @@ object ChDdl {
           case None =>
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
-        affected.filterNot(r => remaining.contains(key(r))).foreach { r =>
-          val spec = pcols.zipWithIndex.map { case (c, i) =>
-            s"$c=${sqlLit(String.valueOf(r.get(i)))}" }.mkString(", ")
-          spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION ($spec)")
-        }
+        affected.map(key).filterNot(remaining).foreach(vals => spark.sql(
+          s"ALTER TABLE $name DROP IF EXISTS PARTITION (${
+            partitionSpecSql(spark, name, vals)})"))
         invalidateProjections(spark, name)
         s"rewrote ${affected.size} affected partition(s), rest untouched"
       }
@@ -2610,25 +2575,21 @@ object ChDdl {
     * MODIFY COLUMN type changes maintain the declaration). */
   private def setNullColMembership(spark: SparkSession, name: String,
       c: String, nullable: Boolean): Unit =
-    declaredNullCols(tablePropsSafe(spark, name)).foreach { cur =>
+    declaredNullCols(TableMeta.props(spark, name)).foreach { cur =>
       val next = if (nullable) cur + c else cur - c
-      if (next != cur)
-        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-          s"'graft.nullcols'=${sqlLit(next.toSeq.sorted.mkString(","))})")
+      if (next != cur) TableMeta.update(spark, name,
+        set = Map("graft.nullcols" -> next.toSeq.sorted.mkString(",")))
     }
 
   private def rekeyColProps(spark: SparkSession, name: String,
       from: String, to: Option[String]): Unit = {
-    val props = tablePropsSafe(spark, name)
+    val props = TableMeta.props(spark, name)
     val sets = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val unsets = scala.collection.mutable.ArrayBuffer.empty[String]
     Seq("graft.columns", "graft.nullcols").foreach { key =>
-      props.get(key).foreach { cs =>
-        val cur = cs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        if (cur.contains(from))
-          sets(key) = cur.flatMap(c =>
-            if (c == from) to.toSeq else Seq(c)).mkString(",")
-      }
+      val cur = TableMeta.list(props, key)
+      if (cur.contains(from))
+        sets(key) = cur.flatMap(c => if (c == from) to.toSeq else Seq(c)).mkString(",")
     }
     Seq("default", "materialized", "alias", "aliastype", "addfill")
       .foreach { k =>
@@ -2637,30 +2598,25 @@ object ChDdl {
           unsets += s"graft.$k.$from"
         }
       }
-    if (sets.nonEmpty)
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" + sets.map {
-        case (k, v) => s"${sqlLit(k)}=${sqlLit(v)}" }.mkString(", ") + ")")
-    if (unsets.nonEmpty)
-      spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES IF EXISTS (" +
-        unsets.map(sqlLit).mkString(", ") + ")")
+    TableMeta.update(spark, name, sets, unsets)
   }
 
   private def rewriteSwap(spark: SparkSession, name: String)(
       transform: DataFrame => DataFrame): Unit = {
-    require(spark.catalog.tableExists(name),
-      s"ChSql: unknown table '$name'")
+    val meta = TableMeta.lookup(spark, name).getOrElse(
+      throw new IllegalArgumentException(s"ChSql: unknown table '$name' " +
+        "(mutations and OPTIMIZE rewrite catalog tables only)"))
     // rename-swap moves MANAGED directories; an external table's rename
     // keeps its location and the swap would mix old and new files there.
     // ATTACH re-registers managed, so external targets only arise from
     // user-created tables — refuse clearly instead of corrupting.
-    require(spark.catalog.getTable(name).tableType != "EXTERNAL",
+    require(meta.tableType != CatalogTableType.EXTERNAL,
       s"ChSql: $name is EXTERNAL — mutations/OPTIMIZE need a managed " +
         s"table (CTAS it into a managed one first)")
-    val props = tableProps(spark, name)
+    val props = TableMeta.props(meta)
     // preserve the physical layout: partition columns pass through, so
     // downstream partition pruning is unaffected by the mutation
-    val partCols = spark.catalog.listColumns(name).collect()
-      .filter(_.isPartition).map(_.name).toSeq
+    val partCols = meta.partitionColumnNames
     // unique per-invocation suffix: concurrent mutations on different
     // tables must not share a staging name; tmp lives in the SAME
     // database (ALTER ... RENAME cannot cross dbs)
@@ -2678,9 +2634,6 @@ object ChDdl {
     val w = transform(addFillDecorate(spark, name, spark.table(name), props))
       .write.mode(SaveMode.Overwrite)
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).saveAsTable(tmp)
-    // rename-aside instead of drop-then-rename: a failure between the two
-    // renames leaves the data recoverable under the __graft_old name
-    // instead of lost
     if (partCols.isEmpty) {
       // rename-aside instead of drop-then-rename: a failure between the
       // two renames leaves the data recoverable under the __graft_old name
@@ -2700,11 +2653,7 @@ object ChDdl {
       spark.catalog.refreshTable(name)
     }
     // addfill markers are spent: the rewrite above materialized them
-    val keep = props.filterNot(_._1.startsWith("graft.addfill."))
-    if (keep.nonEmpty)
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-        keep.map { case (k, v) => s"${sqlLit(k)}=${sqlLit(v)}" }
-          .mkString(", ") + ")")
+    TableMeta.update(spark, name, props.filterNot(_._1.startsWith("graft.addfill.")))
     invalidateProjections(spark, name)
   }
 
@@ -2727,28 +2676,11 @@ object ChDdl {
     * catalog does not know the name, the directory is an orphan: remove
     * it so CREATE TABLE is re-runnable across sessions. */
   private def dropStaleLocation(spark: SparkSession, name: String): Unit = {
-    val parts = name.split("\\.")
-    val (db, tbl) =
-      if (parts.length == 2) (parts(0), parts(1))
-      else (spark.catalog.currentDatabase, parts(0))
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val dbPath = if (db == "default") wh else s"$wh/$db.db"
+    val (dbPath, tbl) = dbPathAndTable(spark, name)
     val loc = new org.apache.hadoop.fs.Path(s"$dbPath/$tbl")
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
-
-  private def tableProps(spark: SparkSession, name: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES $name").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft.")).toMap
-
-  /** [[tableProps]] for names that may be temp views (no TBLPROPERTIES
-    * surface): empty map instead of an error. */
-  private[chsql] def tablePropsSafe(spark: SparkSession,
-      name: String): Map[String, String] =
-    try tableProps(spark, name)
-    catch { case _: Exception => Map.empty }
 
   /** Engine-aware row-merging collapse, shared by `OPTIMIZE ... FINAL`
     * (merge-time, rows rewritten) and `FROM t FINAL` (read-time, rows
@@ -2768,8 +2700,7 @@ object ChDdl {
   private[chsql] def engineCollapse(df: DataFrame,
       props: Map[String, String], name: String): DataFrame = {
     import graft.operators.ChOps
-    val keys = props.get("graft.order_by").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val keys = TableMeta.list(props, "graft.order_by")
     def needKeys(): Seq[String] = {
       require(keys.nonEmpty,
         s"ChSql: FINAL on $name needs the engine's ORDER BY sorting key")
@@ -2782,9 +2713,7 @@ object ChDdl {
         case None => ChOps.selectFinalNoVersion(df, needKeys())
       }
       case "summingmergetree" =>
-        ChOps.selectSummed(df, needKeys(),
-          props.getOrElse("graft.sum_cols", "").split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq)
+        ChOps.selectSummed(df, needKeys(), TableMeta.list(props, "graft.sum_cols"))
       case "collapsingmergetree" =>
         ChOps.selectCollapsed(df, needKeys(), props("graft.sign"))
       case "versionedcollapsingmergetree" =>
@@ -2794,12 +2723,8 @@ object ChDdl {
         ChOps.selectCollapsed(df,
           (needKeys() :+ props("graft.version")).distinct, props("graft.sign"))
       case "aggregatingmergetree" =>
-        val stems = props.collect {
-          case (k, stem) if k.startsWith("graft.aggfunc.") =>
-            k.stripPrefix("graft.aggfunc.") -> stem }
-        val simple = props.collect {
-          case (k, stem) if k.startsWith("graft.simpleagg.") =>
-            k.stripPrefix("graft.simpleagg.") -> stem }
+        val stems = TableMeta.prefixed(props, "graft.aggfunc.")
+        val simple = TableMeta.prefixed(props, "graft.simpleagg.")
         // a CTAS-created table has no declared AggregateFunction column
         // types, so there is nothing to say WHICH merge each column
         // needs — refuse rather than collapse wrongly
@@ -2823,21 +2748,10 @@ object ChDdl {
     * frames) fall through unchanged — their FINAL rides the
     * graft_final_keys SETTINGS path instead. */
   private[chsql] def finalCollapse(spark: SparkSession, name: String,
-      df: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(name)) df
-    else {
-      val props = tablePropsSafe(spark, name)
-      if (props.contains("graft.engine")) engineCollapse(df, props, name)
-      else df
-    }
-
-  /** The table's recorded `SAMPLE BY` column (sampleByClause,
-    * ClickHouseParser.py:6063-6112), if any — lets `SAMPLE k/m` reads
-    * resolve their bucketing key from DDL instead of a per-query
-    * SETTINGS override. */
-  private[chsql] def sampleKey(spark: SparkSession, name: String): Option[String] =
-    if (!spark.catalog.tableExists(name)) None
-    else tablePropsSafe(spark, name).get("graft.sample_by")
+      df: DataFrame): DataFrame = {
+    val props = TableMeta.props(spark, name)
+    if (props.contains("graft.engine")) engineCollapse(df, props, name) else df
+  }
 
   // ===================== OPTIMIZE =====================
 
@@ -2848,7 +2762,7 @@ object ChDdl {
   private def optimizeTable(spark: SparkSession, name: String,
       partVals: Option[Seq[String]], fin: Boolean, dedup: Boolean,
       status: String => DataFrame): DataFrame = {
-    val props = tableProps(spark, name)
+    val props = TableMeta.props(spark, name)
     require(!props.getOrElse("graft.engine", "").equalsIgnoreCase("File"),
       s"ChSql: OPTIMIZE is not supported on ENGINE = File tables ($name)")
     // TTL applies on merges in CH; here the merge is OPTIMIZE. Run it
@@ -2881,14 +2795,9 @@ object ChDdl {
     // (the compaction replaced every file name, so a stale sidecar
     // would stop pruning — still sound via keep-on-unknown, but an
     // OPTIMIZE that silently disabled the index would surprise)
-    val freshProps = tablePropsSafe(spark, name)
-    val rebuilt =
-      graft.plans.BloomSkipIndex.indexedColumns(freshProps).values.map(c =>
-        graft.plans.BloomSkipIndex.materialize(spark, name, c)) ++
-      graft.plans.BloomSkipIndex.tokenIndexedColumns(freshProps).values.map(c =>
-        graft.plans.BloomSkipIndex.materializeTokens(spark, name, c)) ++
-      graft.plans.BloomSkipIndex.ngramIndexedColumns(freshProps).values.map(c =>
-        graft.plans.BloomSkipIndex.materializeNgrams(spark, name, c))
+    val freshProps = TableMeta.props(spark, name)
+    val rebuilt = BloomKinds.flatMap(b =>
+      TableMeta.prefixed(freshProps, b.prop).values.map(b.build(spark, name, _)))
     val idxNote =
       if (rebuilt.isEmpty) "" else s"; ${rebuilt.size} bloom index(es) rebuilt"
     status(s"optimized $name" + (if (fin) " final" else "") +
@@ -2905,7 +2814,7 @@ object ChDdl {
   private def applyTtlNow(spark: SparkSession, name: String,
       props: Map[String, String]): Option[String] =
     props.get("graft.ttl").map { ttlText =>
-      val pcols = partitionCols(spark, name)
+      val pcols = TableMeta.partitionCols(spark, name)
       new Cur(ttlText).expr() match {
         case ChSql.Bin("+", ChSql.Ident(Seq(c)), ChSql.IntervalE(ChSql.NumLit(nStr), unit))
             if pcols == Seq(c) && nStr.forall(_.isDigit) =>
@@ -2943,23 +2852,20 @@ object ChDdl {
       return s"CREATE ${if (mt.temporary) "TEMPORARY " else ""}TABLE $name" +
         s"\n(\n$cols\n)\nENGINE = Memory"
     }
-    val inCatalog = spark.catalog.tableExists(name)
-    val (schema, props) =
-      if (inCatalog) (spark.table(name).schema, tablePropsSafe(spark, name))
-      else (resolve(name).schema, Map.empty[String, String])
-    val pcols = if (inCatalog)
-      try partitionCols(spark, name) catch { case _: Exception => Nil }
-      else Nil
-    val declared0 = props.get("graft.columns")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
-    val ordered = (declared0.filter(schema.fieldNames.contains) ++
-      schema.fieldNames.filterNot(declared0.contains)).map(schema(_))
+    val schema =
+      if (spark.catalog.tableExists(name)) spark.table(name).schema
+      else resolve(name).schema
+    val meta = TableMeta.lookup(spark, name)
+    val props = meta.fold(Map.empty[String, String])(TableMeta.props)
+    val pcols = meta.fold(Seq.empty[String])(_.partitionColumnNames)
+    val ordered = TableMeta.declaredOrder(props, schema.fieldNames.toSeq).map(schema(_))
     def modifier(c: String): String =
       props.get(s"graft.default.$c").map(e => s" DEFAULT $e")
         .orElse(props.get(s"graft.materialized.$c").map(e => s" MATERIALIZED $e"))
-        .getOrElse("")
-    val aliasCols = props.keys.filter(_.startsWith("graft.alias."))
-      .map(_.stripPrefix("graft.alias.")).toSeq.sorted
+        .getOrElse("") +
+      meta.flatMap(_.schema.find(_.name == c)).flatMap(_.getComment())
+        .filter(_.nonEmpty).fold("")(t => s" COMMENT ${sqlLit(t)}")
+    val aliasCols = TableMeta.prefixed(props, "graft.alias.").toSeq.sorted
     // render the DECLARED nullability where tracked: rewrite mutations
     // relax the physical flag, and SHOW CREATE must not start printing
     // Nullable(...) for a column the user declared plain
@@ -2968,8 +2874,8 @@ object ChDdl {
         graft.model.ChTypes.toCh(f.dataType,
           colDeclaredNullable(props, f.name, f.nullable)))}${
         modifier(f.name)}") ++
-      aliasCols.map(c => s"  $c ${props.getOrElse(s"graft.aliastype.$c",
-        "String")} ALIAS ${props(s"graft.alias.$c")}")).mkString(",\n")
+      aliasCols.map { case (c, ex) => s"  $c ${props.getOrElse(s"graft.aliastype.$c",
+        "String")} ALIAS $ex" }).mkString(",\n")
     val engine = props.getOrElse("graft.engine", "MergeTree")
     val engineArgs =
       if (engine.equalsIgnoreCase("VersionedCollapsingMergeTree"))
@@ -2988,9 +2894,8 @@ object ChDdl {
       .map(k => s"\nSAMPLE BY $k").getOrElse("")
     val ttl = props.get("graft.ttl").map(t => s"\nTTL $t").getOrElse("")
     val settings = {
-      val kvs = props.keys.filter(_.startsWith("graft.setting."))
-        .toSeq.sorted.map(k =>
-          s"${k.stripPrefix("graft.setting.")} = ${props(k)}")
+      val kvs = TableMeta.prefixed(props, "graft.setting.").toSeq.sorted
+        .map { case (k, v) => s"$k = $v" }
       if (kvs.isEmpty) "" else s"\nSETTINGS ${kvs.mkString(", ")}"
     }
     val uuid = props.get("graft.uuid").map(u => s" UUID '$u'").getOrElse("")
@@ -3043,12 +2948,9 @@ object ChDdl {
         if (ifExists) return status(s"table $name does not exist")
         throw new IllegalArgumentException(s"ChSql: TABLE $name does not exist")
       }
-      val props = tableProps(spark, name)
+      val props = TableMeta.props(spark, name)
       val (dbPath, tbl) = dbPathAndTable(spark, name)
-      val loc = filePaths(spark, spark.table(name)).headOption
-        .map(new org.apache.hadoop.fs.Path(_))
-        .getOrElse(throw new IllegalArgumentException(
-          s"ChSql: DETACH TABLE $name: not a file-backed table"))
+      val loc = tableLocation(spark, name)
       val dst = new org.apache.hadoop.fs.Path(s"$dbPath/detached/$tbl")
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(dst)) fs.delete(dst, true)
@@ -3166,12 +3068,11 @@ object ChDdl {
   private def showColumns(spark: SparkSession, name: String,
       resolve: String => DataFrame): DataFrame = {
     import spark.implicits._
-    val (schema, props) =
-      if (spark.catalog.tableExists(name))
-        (spark.table(name).schema, tableProps(spark, name))
-      else (resolve(name).schema, Map.empty[String, String])
-    val keyCols = props.get("graft.order_by")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    val schema =
+      if (spark.catalog.tableExists(name)) spark.table(name).schema
+      else resolve(name).schema
+    val props = TableMeta.props(spark, name)
+    val keyCols = TableMeta.list(props, "graft.order_by").toSet
     val rows = schema.fields.toSeq.map { f =>
       (f.name, graft.model.ChTypes.toCh(f.dataType, f.nullable),
         if (f.nullable) "YES" else "NO",
@@ -3188,19 +3089,13 @@ object ChDdl {
     * that role implicitly at scan time. */
   private def showIndex(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val props: Map[String, String] =
-      if (spark.catalog.tableExists(name)) tableProps(spark, name)
-      else Map.empty
-    val keys: Seq[String] = props.get("graft.order_by")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-    val primary = keys.zipWithIndex.map { case (c, i) =>
+    val props = TableMeta.props(spark, name)
+    val primary = TableMeta.list(props, "graft.order_by").zipWithIndex.map { case (c, i) =>
       (name, 1, "PRIMARY", i + 1, c, "A")
     }
     // data-skipping bloom/token-bloom indexes (r12) are real secondary
     // indexes here
-    val blooms = (graft.plans.BloomSkipIndex.indexedColumns(props) ++
-        graft.plans.BloomSkipIndex.tokenIndexedColumns(props) ++
-        graft.plans.BloomSkipIndex.ngramIndexedColumns(props)).toSeq
+    val blooms = BloomKinds.flatMap(b => TableMeta.prefixed(props, b.prop))
       .sortBy(_._1).map { case (idx, c) => (name, 1, idx, 1, c, "A") }
     (primary ++ blooms).toDF("table", "non_unique", "key_name",
       "seq_in_index", "column_name", "collation")
@@ -3224,9 +3119,9 @@ object ChDdl {
             s"named $name (single-user engine defines none)")
     }
 
-  /** A Spark-SQL single-quoted string literal with `\` and `'` escaped —
-    * used wherever table properties / identifiers are interpolated into
-    * `spark.sql` text (TBLPROPERTIES, partition specs, comments). */
+  /** A single-quoted literal with `\` and `'` escaped, as Spark SQL and the
+    * CH lexer read it: values in `spark.sql` text (CREATE-time TBLPROPERTIES,
+    * partition specs, comments) and SHOW CREATE's column comments. */
   private def sqlLit(v: String): String =
     "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 }

@@ -2051,10 +2051,11 @@ object ChSql {
     s.sample.foreach { case (k, m, off) =>
       // key resolution: per-query SETTINGS override first, then the
       // table's own SAMPLE BY column recorded at CREATE TABLE time
+      // (sampleByClause, ClickHouseParser.py:6063-6112)
       val keyName = s.settings.collectFirst {
         case ("graft_sample_key", v) => v
       }.orElse(s.from.collect { case TableRef(n, _, _) => n }
-        .flatMap(ChDdl.sampleKey(spark, _)))
+        .flatMap(TableMeta.props(spark, _).get("graft.sample_by")))
         .getOrElse(throw new IllegalArgumentException(
           "ChSql: SAMPLE needs the table created with SAMPLE BY <col> or " +
             "SETTINGS graft_sample_key = '<integer column>'"))

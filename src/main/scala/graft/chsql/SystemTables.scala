@@ -2,6 +2,8 @@ package graft.chsql
 
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 
 /** The `system.*` introspection tables (CH's system database; the
   * reference reads `system.tables` for its whole pipeline —
@@ -26,9 +28,10 @@ object SystemTables {
 
       case "system.tables" =>
         Some(allTables(spark).map { case (db, t, qualified) =>
-          val engine = ChDdl.tablePropsSafe(spark, qualified)
-            .getOrElse("graft.engine",
-              if (isView(spark, db, t)) "View" else "MergeTree")
+          val meta = TableMeta.lookup(spark, TableIdentifier(t, Some(db)))
+          val engine = meta.flatMap(TableMeta.props(_).get("graft.engine"))
+            .getOrElse(if (meta.exists(_.tableType == CatalogTableType.VIEW))
+              "View" else "MergeTree")
           val ddl = Try(ChDdl.showCreate(spark, qualified,
             spark.table(_))).getOrElse(null)
           (db, t, engine, ddl)
@@ -77,11 +80,10 @@ object SystemTables {
         // onto clustered parquet stats), the bloom family under its
         // three sidecar-backed kinds
         Some(allTables(spark).flatMap { case (db, t, qualified) =>
-          val props = ChDdl.tablePropsSafe(spark, qualified)
-          def rows(prefix: String, kind: String) = props.collect {
-            case (k, v) if k.startsWith(prefix) =>
-              (db, t, k.stripPrefix(prefix), kind, v)
-          }
+          val props = TableMeta.lookup(spark, TableIdentifier(t, Some(db)))
+            .fold(Map.empty[String, String])(TableMeta.props)
+          def rows(prefix: String, kind: String) = TableMeta.prefixed(props, prefix)
+            .map { case (idx, c) => (db, t, idx, kind, c) }
           rows("graft.index.", "minmax_or_set") ++
             rows("graft.bloomindex.", "bloom_filter") ++
             rows("graft.tokbloomindex.", "tokenbf_v1") ++
@@ -113,8 +115,4 @@ object SystemTables {
           .filter(t => t.database != null) // skip session temp views
           .map(t => (db, t.name, s"$db.${t.name}"))
       }.toSeq
-
-  private def isView(spark: SparkSession, db: String, t: String): Boolean =
-    Try(spark.catalog.getTable(db, t).tableType).toOption
-      .exists(_.equalsIgnoreCase("VIEW"))
 }

@@ -11,9 +11,12 @@ object Names {
     * leading/trailing backtick, double-quote, or square bracket, then
     * collapses doubled backticks/quotes. */
   def clean(s0: String): String = {
-    val s = s0.trim.replaceAll("(^`|`$|^\"|\"$|^\\[|\\]$)", "")
+    val s = Quoting.matcher(s0.trim).replaceAll("")
     s.replace("``", "`").replace("\"\"", "\"")
   }
+
+  /** Compiled once: [[clean]] runs for every table reference. */
+  private val Quoting = java.util.regex.Pattern.compile("(^`|`$|^\"|\"$|^\\[|\\]$)")
 
   /** Split `db.table` → (Some(db), table); unqualified → (None, name).
     * Parity: `split_qualified`, ch_view_dependencies.py:75-84 — note the

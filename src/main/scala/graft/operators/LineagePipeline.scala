@@ -54,17 +54,16 @@ object LineagePipeline {
       .select(col("view"), col("r._1").as("deps"), col("r._2").as("tier"),
         col("r._3").as("error"))
 
-  /** Catalog objects of user databases on one side of the view rule (S1/S2),
-    * without [[CatalogSource]]'s presentation sort. */
-  private def userObjects(catalog: DataFrame, views: Boolean): DataFrame =
-    catalog.filter((if (views) CatalogSource.isView else !CatalogSource.isView) &&
-      !col("database").isin(CatalogSource.systemDbs: _*))
+  /** Catalog objects of user databases (S1/S2), without
+    * [[CatalogSource]]'s presentation sort. */
+  private def userObjects(catalog: DataFrame): DataFrame =
+    catalog.filter(!col("database").isin(CatalogSource.systemDbs: _*))
 
   /** (view, deps, error) of every user view, in one job: the UDF runs once
     * per row, and the rows come back sorted by (database, name) — the
     * reference's ORDER BY (ch_view_dependencies.py:305) — on the driver. */
   private def lineageRows(catalog: DataFrame): (Array[Row], StructType) = {
-    val lin = parse(userObjects(catalog, views = true), lineageUdf)
+    val lin = parse(userObjects(catalog).filter(CatalogSource.isView), lineageUdf)
       .select(col("database"), col("name"), col("view"),
         col("r._1").as("deps"), col("r._2").as("error"))
     val rows = lin.collect()
@@ -92,18 +91,25 @@ object LineagePipeline {
   }
 
   /** Full pipeline → Mermaid text (driver-side render of the collected,
-    * metadata-scale graph; reference ch_view_dependencies.py:390-395):
-    * the lineage job plus one job for the table set. */
+    * metadata-scale graph; reference ch_view_dependencies.py:390-395), in
+    * one job: one scan of the user objects returns each object's id and
+    * kind, and the lineage UDF's result for the views only. */
   def toMermaid(
       catalog: DataFrame,
       options: MermaidOptions = MermaidOptions(includeIsolatedNodes = false)
   ): String = {
-    val viewDeps = lineageRows(catalog)._1.filter(_.isNullAt(2))
-      .map(r => r.getString(0) -> r.getSeq[String](1))
-      .sortBy(_._1)(sparkStringOrder)
-    val tableSet = userObjects(catalog, views = false)
-      .select(concat_ws(".", col("database"), col("name"))).collect()
-      .map(_.getString(0)).toSet
-    Mermaid.render(viewDeps.toSeq, tableSet, options)
+    val isView = CatalogSource.isView
+    val (views, tables) = userObjects(catalog)
+      .select(col("database"), col("name"),
+        concat_ws(".", col("database"), col("name")), isView,
+        when(isView, lineageUdf(coalesce(col("create_table_query"), lit("")),
+          col("database"))))
+      .collect().filter(!_.isNullAt(3)).partition(_.getBoolean(3))
+    // parsed views by id, equal ids in (database, name) order
+    val viewDeps = views.filter(_.getStruct(4).isNullAt(1))
+      .sortBy(r => (r.getString(2), r.getString(0), r.getString(1)))(
+        Ordering.Tuple3(sparkStringOrder, sparkStringOrder, sparkStringOrder))
+      .map(r => r.getString(2) -> r.getStruct(4).getSeq[String](0))
+    Mermaid.render(viewDeps.toSeq, tables.map(_.getString(2)).toSet, options)
   }
 }

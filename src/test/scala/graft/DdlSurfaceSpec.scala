@@ -1988,4 +1988,32 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     assert(r == Seq(Seq(1L, "one"), Seq(2L, "two"), Seq(3L, "?")))
     chRun("DROP DICTIONARY dset")
   }
+
+  test("DEFAULT and COMMENT texts with ' \\ , = round-trip through SHOW CREATE") {
+    // CH text: the DEFAULT is an expression over three string literals,
+    // the COMMENT a literal; SHOW CREATE must give both back verbatim
+    val dflt = """concat('a\'b', '\\', ',=x')"""
+    val note = """'it\'s a \\ b, k=v'"""
+    chRun("DROP TABLE IF EXISTS quote_t")
+    chRun(s"CREATE TABLE quote_t (k Int64, s String DEFAULT $dflt COMMENT $note) " +
+      "ENGINE = MergeTree ORDER BY k")
+    val created = chRun("SHOW CREATE TABLE quote_t").head.getString(0)
+    assert(created.contains(s"s String DEFAULT $dflt COMMENT $note"), created)
+    assert(spark.table("quote_t").schema("s").getComment().contains("""it's a \ b, k=v"""))
+    chRun("INSERT INTO quote_t (k) VALUES (1)")
+    // MODIFY COLUMN ... DEFAULT writes the new text through the catalog
+    val dflt2 = """concat('=\'', ',\\')"""
+    chRun(s"ALTER TABLE quote_t MODIFY COLUMN s String DEFAULT $dflt2")
+    val modified = chRun("SHOW CREATE TABLE quote_t").head.getString(0)
+    assert(modified.contains(s"s String DEFAULT $dflt2 COMMENT $note"), modified)
+    chRun("INSERT INTO quote_t (k) VALUES (2)")
+    assert(chRun("SELECT k, s FROM quote_t ORDER BY k")
+      .map(r => r.getLong(0) -> r.getString(1)) == Seq(1L -> """a'b\,=x""", 2L -> """=',\"""))
+    // the SHOW CREATE text re-creates the same definition
+    chRun("DROP TABLE IF EXISTS quote_t2")
+    chRun(modified.replace("CREATE TABLE quote_t\n", "CREATE TABLE quote_t2\n"))
+    assert(chRun("SHOW CREATE TABLE quote_t2").head.getString(0) ==
+      modified.replace("CREATE TABLE quote_t\n", "CREATE TABLE quote_t2\n"))
+    Seq("quote_t", "quote_t2").foreach(t => chRun(s"DROP TABLE $t"))
+  }
 }

@@ -103,6 +103,19 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("toMermaid reads the catalog in one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_catalog")
+    try {
+      val path = dir.resolve("catalog.parquet").toString
+      catalog.write.parquet(path)
+      val onDisk = CatalogSource.readParquet(spark, path)
+      onDisk.count() // warm the scan so lazy set-up jobs stay out of the count
+      val (out, jobs) = jobsOf(LineagePipeline.toMermaid(onDisk))
+      assert(jobs == 1)
+      assert(out == LineagePipeline.toMermaid(catalog))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("dependencies rows come in (database, name) order, equal to the lazy lineage") {
     import spark.implicits._
     // as view ids "a-b.c" < "a.z", but as (database, name) ("a", "z") < ("a-b", "c")

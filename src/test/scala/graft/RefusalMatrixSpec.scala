@@ -117,7 +117,13 @@ class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
       Seq("unknown SYSTEM command", "EXPLODE")),
     ("SYSTEM RELOAD DICTIONARY unknown name",
       "SYSTEM RELOAD DICTIONARY refusal_no_such_dict",
-      Seq("refusal_no_such_dict", "no such dictionary")))
+      Seq("refusal_no_such_dict", "no such dictionary")),
+    ("ALTER DELETE on a Memory table",
+      "ALTER TABLE refusal_mem DELETE WHERE k = 1",
+      Seq("refusal_mem", "catalog tables only")),
+    ("OPTIMIZE on a Memory table",
+      "OPTIMIZE TABLE refusal_mem FINAL",
+      Seq("refusal_mem", "catalog tables only")))
 
   test("every refused form raises a ChSql-marked error, never raw Spark") {
     // fixture the matrix rows lean on: a GraphiteMergeTree table (the
@@ -126,6 +132,10 @@ class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
     run("CREATE TABLE refusal_graphite (k Int64, v Float64) " +
       "ENGINE = GraphiteMergeTree ORDER BY k")
     run("INSERT INTO refusal_graphite VALUES (1, 1.0)")
+    // and a Memory table: RAM rows behind a temp view, not a catalog table
+    run("DROP TABLE IF EXISTS refusal_mem")
+    run("CREATE TABLE refusal_mem (k Int64) ENGINE = Memory")
+    run("INSERT INTO refusal_mem VALUES (1), (2)")
     val failures = matrix.flatMap { case (label, stmt, frags) =>
       val got =
         try { run(stmt); Some(s"$label: DID NOT THROW (silent acceptance)") }
@@ -139,7 +149,10 @@ class RefusalMatrixSpec extends AnyFunSuite with SparkSuite {
         }
       got
     }
+    assert(run("SELECT count() AS n FROM refusal_mem").head.getLong(0) == 2)
+    assert(!spark.catalog.tableExists("default", "refusal_mem"))
     run("DROP TABLE refusal_graphite")
+    run("DROP TABLE refusal_mem")
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 

@@ -29,6 +29,34 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       case e: ShuffleExchangeExec => e
     }.size
 
+  test("registry tables take their schema from the parquet footer: Spark's schema, no job") {
+    val dir = new java.io.File(new java.io.File(sf).getParent, "sf0.01").getPath
+    val paths = new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet"))
+      .sorted.map(f => s"$dir/$f")
+    assert(paths.size >= 10)
+    val tag = "graft.spec.footer"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    val footer = try {
+      val out = paths.map(org.apache.spark.sql.graftbridge.FooterSchema.read(spark, _))
+      org.apache.spark.sql.graftbridge.TestBridge.waitListenerBus(spark)
+      out
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() == 0)
+    paths.zip(footer).foreach { case (p, sch) =>
+      assert(sch == spark.read.parquet(p).schema, p)
+    }
+  }
+
   test("bucketed join is shuffle-free; unbucketed join shuffles both sides") {
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")
