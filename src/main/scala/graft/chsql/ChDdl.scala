@@ -229,6 +229,16 @@ object ChDdl {
           status(graft.operators.AdminOps.killMutation(c.slice(from, until)))
         }
 
+      case "SYSTEM" if c.eatKw("RELOAD", "DICTIONARY") =>
+        // SYSTEM RELOAD DICTIONARY [name | 'source path']
+        val arg = c.tok() match {
+          case TStr(path) => c.pos += 1; Some(path)
+          case _ if c.atEnd => None
+          case _ => Some(c.name("a dictionary name"))
+        }
+        c.done()
+        status(graft.operators.AdminOps.system(spark, "RELOAD DICTIONARY", arg))
+
       case "SYSTEM" =>
         // systemStmt (13902-14107): the command words, then an optional
         // quoted argument

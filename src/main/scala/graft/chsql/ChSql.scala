@@ -61,22 +61,30 @@ object ChSql {
   // ===================== lexer =====================
 
   private[graft] sealed trait Tok
-  private[graft] case class TId(s: String) extends Tok {
-    def up: String = s.toUpperCase(java.util.Locale.ROOT)
+  /** A name: bare, or `quoted` in backquotes or double quotes (quotes
+    * dropped, doubled quotes undone). [[up]] is what keyword tests
+    * compare: upper-cased in `Locale.ROOT`, and empty for a quoted name,
+    * which never matches a keyword (`` `from` `` is a column). */
+  private[graft] case class TId(s: String, quoted: Boolean = false) extends Tok {
+    val up: String = if (quoted) "" else s.toUpperCase(java.util.Locale.ROOT)
   }
   private[graft] case class TNum(s: String) extends Tok
   private[graft] case class TStr(s: String) extends Tok
   private[graft] case class TP(s: String) extends Tok
   private[graft] case object TEnd extends Tok
 
-  /** Position-tracking lexer: (token, start, end-exclusive) offsets over
+  /** graft's one SQL lexer: (token, start, end-exclusive) offsets over
     * the ORIGINAL text. Comments and whitespace are hidden: they produce
-    * no token. Every statement is lexed once, here ([[Cur]]); a clause
-    * body that another parser reads as text is sliced back out of the
-    * original by these offsets, so a string literal containing `) ENGINE
-    * =` or a keyword cannot fool the split. [[graft.Sql]] splits scripts
-    * into statements on its `;` tokens. Unterminated strings, backquoted
-    * names and block comments are refused. */
+    * no token. It follows ClickHouse's quoting: `'it''s'` and `'it\'s'`
+    * are one string, `` `a``b` `` and `"a""b"` one quoted name. Every
+    * statement is lexed once, here ([[Cur]]); a clause body that another
+    * parser reads as text is sliced back out of the original by these
+    * offsets, so a string literal containing `) ENGINE =` or a keyword
+    * cannot fool the split. [[graft.Sql]] splits scripts into statements
+    * on its `;` tokens, the lineage extractor scans view DDL on its tokens
+    * ([[graft.functions.LineageExtractor]]) and [[graft.model.ChTypes]]
+    * cuts type lists on them. Unterminated strings, quoted names and
+    * block comments are refused. */
   private[graft] def lexPos(input: String): Vector[(Tok, Int, Int)] =
     lexImpl(input)
 
@@ -86,7 +94,7 @@ object ChSql {
     * string token. */
   private def insertDataFollows(out: collection.Seq[(Tok, Int, Int)]): Boolean = {
     def is(i: Int, kws: String*): Boolean = out(i)._1 match {
-      case TId(s) => kws.exists(s.equalsIgnoreCase)
+      case t: TId => kws.contains(t.up)
       case _ => false
     }
     val n = out.length
@@ -99,6 +107,23 @@ object ChSql {
     var i = 0
     val n = input.length
     def peek(k: Int) = if (i + k < n) input(i + k) else '\u0000'
+    /** The quoted token opening at `i` with quote `q`, unescaped: a
+      * doubled quote stands for one, and in a string literal a backslash
+      * escapes the next character. Leaves `i` past the closing quote. */
+    def quoted(q: Char, what: String): String = {
+      val sb = new java.lang.StringBuilder
+      i += 1
+      var open = true
+      while (open && i < n) {
+        val d = input(i)
+        if (d == '\\' && q == '\'' && i + 1 < n) { sb.append(unescape(input(i + 1))); i += 2 }
+        else if (d == q && peek(1) == q) { sb.append(q); i += 2 }
+        else if (d == q) { i += 1; open = false }
+        else { sb.append(d); i += 1 }
+      }
+      if (open) throw new IllegalArgumentException(s"ChSql: unterminated $what")
+      sb.toString
+    }
     while (i < n) {
       val c = input(i)
       if (c.isWhitespace) i += 1
@@ -118,12 +143,10 @@ object ChSql {
           out += ((TStr(input.substring(i)), i, n)); i = n
         }
       }
-      else if (c == '`') {
-        val close = input.indexOf('`', i + 1)
-        if (close < 0) throw new IllegalArgumentException(
-          "ChSql: unterminated backquoted identifier")
-        out += ((TId(input.substring(i + 1, close)), i, close + 1))
-        i = close + 1
+      else if (c == '`' || c == '"') {
+        val st = i
+        val name = quoted(c, if (c == '`') "backquoted identifier" else "quoted identifier")
+        out += ((TId(name, quoted = true), st, i))
       }
       else if (c == '0' && (peek(1) == 'x' || peek(1) == 'X') &&
           (peek(2).isDigit || "abcdefABCDEF".indexOf(peek(2)) >= 0)) {
@@ -131,7 +154,7 @@ object ChSql {
         val st = i + 2; i += 2
         while (i < n && (input(i).isDigit ||
           "abcdefABCDEF".indexOf(input(i)) >= 0)) i += 1
-        out += ((TNum(java.lang.Long.parseLong(
+        out += ((TNum(new java.math.BigInteger(
           input.substring(st, i), 16).toString), st - 2, i))
       }
       else if (c == '0' && (peek(1) == 'b' || peek(1) == 'B') &&
@@ -139,7 +162,7 @@ object ChSql {
         // binary literal (lexer BINARY_LITERAL)
         val st = i + 2; i += 2
         while (i < n && (input(i) == '0' || input(i) == '1')) i += 1
-        out += ((TNum(java.lang.Long.parseLong(
+        out += ((TNum(new java.math.BigInteger(
           input.substring(st, i), 2).toString), st - 2, i))
       }
       else if (c.isDigit || (c == '.' && peek(1).isDigit)) {
@@ -151,19 +174,11 @@ object ChSql {
       }
       else if (c == '\'') {
         val st = i
-        val sb = new StringBuilder; i += 1
-        while (i < n && input(i) != '\'') {
-          if (input(i) == '\\' && i + 1 < n) { sb.append(unescape(input(i + 1))); i += 2 }
-          else { sb.append(input(i)); i += 1 }
-        }
-        if (i >= n) throw new IllegalArgumentException(
-          "ChSql: unterminated string literal")
-        i += 1
-        out += ((TStr(sb.toString), st, i))
+        out += ((TStr(quoted('\'', "string literal")), st, i))
       }
       else {
         val two = if (i + 1 < n) input.substring(i, i + 2) else ""
-        if (Set("==", "!=", "<>", "<=", ">=", "||", "->", "::").contains(two)) {
+        if (TwoCharOps.contains(two)) {
           out += ((TP(two), i, i + 2)); i += 2
         } else { out += ((TP(c.toString), i, i + 1)); i += 1 }
       }
@@ -171,6 +186,8 @@ object ChSql {
     out += ((TEnd, n, n))
     out.toVector
   }
+
+  private val TwoCharOps = Set("==", "!=", "<>", "<=", ">=", "||", "->", "::")
 
   private def unescape(c: Char): Char = c match {
     case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
@@ -185,8 +202,8 @@ object ChSql {
     * [[slice]] of the original. A handler parses its whole statement
     * before it acts and ends with [[done]], so a clause it does not know
     * fails instead of being ignored. */
-  private[graft] final class Cur(val text: String) {
-    val toks: Vector[(Tok, Int, Int)] = lexPos(text)
+  private[graft] final class Cur(val text: String, val toks: Vector[(Tok, Int, Int)]) {
+    def this(text: String) = this(text, lexPos(text))
     val end: Int = toks.length - 1 // the TEnd token
     var pos = 0
 
@@ -636,7 +653,7 @@ object ChSql {
             case TP("(") => depth += 1; ty += '('
             case TP(")") => depth -= 1; ty += ')'
             case TP(p) => ty ++= p
-            case TId(s) => if (ty.nonEmpty &&
+            case TId(s, _) => if (ty.nonEmpty &&
               ty.last.isLetterOrDigit) ty += ' '; ty ++= s
             case TNum(s) => ty ++= s
             case TStr(s) => ty ++= s"'$s'"
@@ -1693,16 +1710,16 @@ object ChSql {
     walk(ast, Map.empty)
   }
 
-  /** Every real table referenced anywhere in a SELECT/WITH statement —
-    * the AST-exact lineage source ([[graft.functions.LineageExtractor]]'s
+  /** Every real table referenced anywhere in a parsed SELECT/WITH
+    * statement ([[Cur.query]], which refuses trailing tokens) — the
+    * AST-exact lineage source ([[graft.functions.LineageExtractor]]'s
     * exact tier). Walks relations (FROM + every JOIN), subqueries in
     * relations AND expressions (IN/scalar/EXISTS), and CTE bodies. CTE
     * names shadow unqualified refs in their scope (and, unlike the
     * best-effort heuristic, a *qualified* `db.x` is kept even when a CTE
     * is also named `x` — qualified refs bypass CTEs in CH). Table
     * functions are relations but not tables — excluded. Sorted distinct. */
-  def referencedTables(text: String): Seq[String] = {
-    val ast = new P(lexPos(text).map(_._1)).parseSetOp()
+  def referencedTables(ast: SetOp): Seq[String] = {
     val out = scala.collection.mutable.Set[String]()
     def walkSetOp(op: SetOp, scope: Set[String]): Unit = op match {
       case One(s) => walkSelect(s, scope)

@@ -1,7 +1,7 @@
 package graft.functions
 
-import java.util.Locale
 import scala.collection.mutable
+import graft.chsql.ChSql
 import graft.model.LineageParseException
 
 /** Best-effort table-reference extractor for ClickHouse CREATE VIEW /
@@ -42,24 +42,14 @@ import graft.model.LineageParseException
   *    that need the keep-going contract use [[extract]] which traps the error
   *    per-row (ch_view_dependencies.py:356-358).
   *
-  * Implemented as a hand-written SQL tokenizer (string-, quote- and
-  * comment-aware) + linear token scanner — self-contained Scala, no parser
-  * dependency, trivially parallel per row as a Spark UDF.
+  * Both tiers read the tokens of graft's one SQL lexer,
+  * [[graft.chsql.ChSql.lexPos]] (string-, quote- and comment-aware, the
+  * same tokens the statement front end parses): [[tables]] scans them
+  * linearly, [[tablesExact]] parses them. Pure Scala over the DDL text,
+  * trivially parallel per row as a Spark UDF.
   */
 object LineageExtractor {
-
-  sealed trait Kind
-  case object Ident extends Kind   // bare, `quoted`, or "quoted"
-  case object Str extends Kind     // '...' literal
-  case object Num extends Kind
-  case object Punct extends Kind
-
-  final case class Tok(text: String, kind: Kind) {
-    /** Keywords compare in `Locale.ROOT`: under e.g. tr-TR `join` would
-      * upper-case to `JOİN` and stop matching `JOIN`. */
-    val upper: String = text.toUpperCase(Locale.ROOT)
-    def is(kw: String): Boolean = kind == Ident && upper == kw
-  }
+  import ChSql.{TId, TP, Tok}
 
   /** SQL keywords that terminate an alias position / FROM list. */
   private val stopWords: Set[String] = Set(
@@ -69,75 +59,60 @@ object LineageExtractor {
     "GLOBAL", "WINDOW", "FORMAT", "INTO", "WITH", "SELECT", "FROM", "FINAL",
     "AS", "INTERSECT", "EXCEPT")
 
-  /** Tokenize ClickHouse-ish SQL. Handles `--` and `/* */` comments,
-    * single-quoted strings with backslash and '' escapes, backtick and
-    * double-quote identifiers (with doubling escapes). Throws
-    * [[LineageParseException]] on unterminated strings/quotes. */
-  def tokenize(sql: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    val n = sql.length
-    var i = 0
-    def err(msg: String) = throw new LineageParseException(msg)
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val end = sql.indexOf("*/", i + 2)
-        i = if (end < 0) n else end + 2
-      } else if (c == '\'') {
-        val sb = new StringBuilder("'")
-        i += 1
-        var closed = false
-        while (i < n && !closed) {
-          val d = sql.charAt(i)
-          if (d == '\\' && i + 1 < n) { sb.append(d).append(sql.charAt(i + 1)); i += 2 }
-          else if (d == '\'' && i + 1 < n && sql.charAt(i + 1) == '\'') { sb.append("''"); i += 2 }
-          else if (d == '\'') { sb.append(d); i += 1; closed = true }
-          else { sb.append(d); i += 1 }
-        }
-        if (!closed) err("Unterminated string literal")
-        out += Tok(sb.toString, Str)
-      } else if (c == '`' || c == '"') {
-        val q = c
-        val sb = new StringBuilder().append(q)
-        i += 1
-        var closed = false
-        while (i < n && !closed) {
-          val d = sql.charAt(i)
-          if (d == q && i + 1 < n && sql.charAt(i + 1) == q) { sb.append(q).append(q); i += 2 }
-          else if (d == q) { sb.append(q); i += 1; closed = true }
-          else { sb.append(d); i += 1 }
-        }
-        if (!closed) err(s"Unterminated quoted identifier")
-        out += Tok(sb.toString, Ident)
-      } else if (c.isDigit) {
-        val start = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '.' ||
-          ((sql.charAt(i) == '+' || sql.charAt(i) == '-') && i > start &&
-            (sql.charAt(i - 1) == 'e' || sql.charAt(i - 1) == 'E')))) i += 1
-        out += Tok(sql.substring(start, i), Num)
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-        out += Tok(sql.substring(start, i), Ident)
-      } else {
-        out += Tok(c.toString, Punct)
-        i += 1
-      }
+  /** Keywords that close the FROM clause at its own depth. */
+  private val fromEnders: Set[String] = Set("WHERE", "GROUP", "ORDER", "LIMIT",
+    "HAVING", "SETTINGS", "UNION", "INTERSECT", "EXCEPT", "SELECT", "WINDOW",
+    "PREWHERE", "FORMAT", "INTO", "ARRAY")
+
+  /** Functions whose `FROM` is an argument separator, never a table
+    * context (ColumnExpr contexts in the reference grammar,
+    * ClickHouseParser.py:14873-15007, 15251-15283). */
+  private val scalarFromFns: Set[String] = Set("EXTRACT", "SUBSTRING", "TRIM")
+
+  /** The DDL's tokens. Blank text and a lexer refusal raise the
+    * reference's parse failure, with the texts the lineage errors have
+    * always carried (`Unterminated string literal`, `Unterminated quoted
+    * identifier`). */
+  private def lex(ddl: String): Vector[(Tok, Int, Int)] = {
+    if (ddl == null || ddl.trim.isEmpty)
+      throw new LineageParseException(
+        "Could not find a suitable entry rule on ClickHouseParser for this grammar.")
+    try ChSql.lexPos(ddl)
+    catch { case e: IllegalArgumentException =>
+      val msg = e.getMessage.stripPrefix("ChSql: ")
+      throw new LineageParseException(
+        if (msg.endsWith("identifier")) "Unterminated quoted identifier" else msg.capitalize)
     }
-    out.result()
   }
 
   /** Extract referenced tables from a CREATE VIEW/MV DDL (or bare SELECT),
     * normalized and sorted. Throws [[LineageParseException]] on blank input
-    * (parity with the reference's entry-rule failure contract). */
-  def tables(ddl: String, defaultDb: Option[String]): Seq[String] = {
-    if (ddl == null || ddl.trim.isEmpty)
-      throw new LineageParseException(
-        "Could not find a suitable entry rule on ClickHouseParser for this grammar.")
-    val toks = tokenize(ddl)
+    * (parity with the reference's entry-rule failure contract) and on text
+    * the lexer refuses. */
+  def tables(ddl: String, defaultDb: Option[String]): Seq[String] =
+    scan(ddl, lex(ddl), defaultDb)
+
+  /** The heuristic over `ddl`'s tokens `lexed`. A name's raw text is its
+    * source slice, quotes included, as [[Names.normalize]] expects. */
+  private def scan(ddl: String, lexed: Vector[(Tok, Int, Int)],
+      defaultDb: Option[String]): Seq[String] = {
+    val n = lexed.length - 1 // the TEnd token
+    def tok(k: Int): Tok = lexed(math.min(k, n))._1
+    def text(k: Int): String = ddl.substring(lexed(k)._2, lexed(k)._3)
+    def isP(k: Int, p: String): Boolean = tok(k) match {
+      case TP(s) => s == p
+      case _ => false
+    }
+    def kw(k: Int, w: String): Boolean = tok(k) match {
+      case t: TId => t.up == w
+      case _ => false
+    }
+    def isId(k: Int): Boolean = tok(k).isInstanceOf[TId]
+    /** A name that is not a clause keyword. */
+    def isName(k: Int): Boolean = tok(k) match {
+      case t: TId => !stopWords.contains(t.up)
+      case _ => false
+    }
 
     // --- pass 1: CTE name capture (ch_view_dependencies.py:132-141) ---
     // Active from a WITH keyword until a SELECT/FROM at the same paren depth;
@@ -146,37 +121,29 @@ object LineageExtractor {
     var depth = 0
     var withActive = false
     var withDepth = 0
-    var k = 0
-    while (k < toks.length) {
-      val t = toks(k)
-      if (t.kind == Punct && t.text == "(") depth += 1
-      else if (t.kind == Punct && t.text == ")") depth -= 1
-      else if (t.is("WITH")) { withActive = true; withDepth = depth }
-      else if (withActive && depth == withDepth && (t.is("SELECT") || t.is("FROM")))
-        withActive = false
-      else if (withActive && t.kind == Ident && k + 2 < toks.length &&
-        toks(k + 1).is("AS") && toks(k + 2).text == "(")
-        cteNames += Names.clean(t.text)
-      k += 1
+    for (k <- 0 until n) tok(k) match {
+      case TP("(") => depth += 1
+      case TP(")") => depth -= 1
+      case t: TId if t.up == "WITH" => withActive = true; withDepth = depth
+      case t: TId if withActive && depth == withDepth &&
+          (t.up == "SELECT" || t.up == "FROM") => withActive = false
+      case _: TId if withActive && kw(k + 1, "AS") && isP(k + 2, "(") =>
+        cteNames += Names.clean(text(k))
+      case _ =>
     }
 
     // --- pass 2: table refs after FROM / JOIN ---
     val found = mutable.Set[String]()
-    // Stack of "paren owners": the identifier immediately before each `(`,
-    // lowercased — used to suppress the scalar-function FROMs of
-    // EXTRACT/SUBSTRING/TRIM (ColumnExpr contexts in the reference grammar,
-    // never table contexts: ClickHouseParser.py:14873-15007, 15251-15283).
-    val owners = mutable.Stack[String]()
-    val scalarFromFns = Set("extract", "substring", "trim")
-
-    def isStop(t: Tok): Boolean = stopWords.contains(t.upper)
+    // One entry per open `(`: whether it opens EXTRACT/SUBSTRING/TRIM's
+    // arguments, whose FROM is no table context.
+    val scalarParens = mutable.Stack[Boolean]()
 
     /** Parse a qualified name starting at index j; returns (rawName, next). */
     def qualifiedName(j0: Int): (String, Int) = {
-      val sb = new StringBuilder(toks(j0).text)
+      val sb = new StringBuilder(text(j0))
       var j = j0 + 1
-      while (j + 1 < toks.length && toks(j).text == "." && toks(j + 1).kind == Ident) {
-        sb.append('.').append(toks(j + 1).text)
+      while (isP(j, ".") && isId(j + 1)) {
+        sb.append('.').append(text(j + 1))
         j += 2
       }
       (sb.toString, j)
@@ -190,12 +157,12 @@ object LineageExtractor {
       if (!cteNames.contains(tbl)) found += norm
     }
 
-    /** Parse one table ref at j (must be an Ident). Returns index after the
+    /** Parse one table ref at j (must be a name). Returns index after the
       * ref + its alias. Adds the candidate unless it is a table function. */
     def tableRef(j0: Int): Int = {
       val (raw, jAfter) = qualifiedName(j0)
       var j = jAfter
-      if (j < toks.length && toks(j).text == "(") {
+      if (isP(j, "(")) {
         // table function like s3('...') — excluded (paren rule); the linear
         // scan keeps going inside the parens naturally.
         j
@@ -203,11 +170,10 @@ object LineageExtractor {
         addCandidate(raw)
         // skip FINAL / AS alias / bare alias
         var continue = true
-        while (continue && j < toks.length) {
-          val t = toks(j)
-          if (t.is("FINAL")) j += 1
-          else if (t.is("AS") && j + 1 < toks.length && toks(j + 1).kind == Ident) { j += 2 }
-          else if (t.kind == Ident && !isStop(t)) j += 1
+        while (continue && j < n) {
+          if (kw(j, "FINAL")) j += 1
+          else if (kw(j, "AS") && isId(j + 1)) j += 2
+          else if (isName(j)) j += 1
           else continue = false
         }
         j
@@ -219,54 +185,36 @@ object LineageExtractor {
     // (JoinExprCrossOp, ClickHouseParser.py:10407-10429) even after an
     // ON condition — `FROM a JOIN b ON x = 1, c` references c.
     val fromDepths = mutable.Stack[Int]()
-    // keywords that close the FROM clause at its own depth
-    val fromEnders = Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
-      "SETTINGS", "UNION", "INTERSECT", "EXCEPT", "SELECT", "WINDOW",
-      "PREWHERE", "FORMAT", "INTO", "ARRAY")
-
-    var depth2 = 0
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.kind == Punct && t.text == "(") {
-        val owner =
-          if (i > 0 && toks(i - 1).kind == Ident) toks(i - 1).text.toLowerCase(Locale.ROOT) else ""
-        owners.push(owner)
-        depth2 += 1
-        i += 1
-      } else if (t.kind == Punct && t.text == ")") {
-        if (owners.nonEmpty) owners.pop()
-        depth2 -= 1
-        while (fromDepths.nonEmpty && fromDepths.top > depth2) fromDepths.pop()
-        i += 1
-      } else if (t.is("FROM") &&
-        !(owners.nonEmpty && scalarFromFns.contains(owners.top))) {
-        if (!fromDepths.contains(depth2)) fromDepths.push(depth2)
+    def fromOpen: Boolean = fromDepths.nonEmpty && fromDepths.top == depth
+    depth = 0
+    for (i <- 0 until n) tok(i) match {
+      case TP("(") =>
+        scalarParens.push(i > 0 && (tok(i - 1) match {
+          case t: TId => scalarFromFns.contains(t.up)
+          case _ => false
+        }))
+        depth += 1
+      case TP(")") =>
+        if (scalarParens.nonEmpty) scalarParens.pop()
+        depth -= 1
+        while (fromDepths.nonEmpty && fromDepths.top > depth) fromDepths.pop()
+      case t: TId if t.up == "FROM" && !(scalarParens.nonEmpty && scalarParens.top) =>
+        if (!fromDepths.contains(depth)) fromDepths.push(depth)
         // FROM <ref> [, <ref>]*  — comma list = cross join
         // (ClickHouseParser.py:10855-10934)
         var j = i + 1
         var more = true
-        while (more && j < toks.length) {
-          if (toks(j).kind == Ident && !isStop(toks(j))) {
-            j = tableRef(j)
-            if (j < toks.length && toks(j).text == ",") { j += 1 } else more = false
-          } else more = false // subquery `(` or clause keyword
-        }
-        i += 1
-      } else if (t.is("JOIN") && !(i > 0 && toks(i - 1).is("ARRAY"))) {
-        val j = i + 1
-        if (j < toks.length && toks(j).kind == Ident && !isStop(toks(j))) tableRef(j)
-        i += 1
-      } else if (t.kind == Punct && t.text == "," &&
-        fromDepths.nonEmpty && fromDepths.top == depth2) {
-        val j = i + 1
-        if (j < toks.length && toks(j).kind == Ident && !isStop(toks(j))) tableRef(j)
-        i += 1
-      } else if (t.kind == Ident && fromEnders.contains(t.upper) &&
-        fromDepths.nonEmpty && fromDepths.top == depth2) {
+        while (more && isName(j)) {
+          j = tableRef(j)
+          if (isP(j, ",")) j += 1 else more = false
+        } // else a subquery `(` or clause keyword
+      case t: TId if t.up == "JOIN" && !(i > 0 && kw(i - 1, "ARRAY")) =>
+        if (isName(i + 1)) tableRef(i + 1)
+      case TP(",") if fromOpen =>
+        if (isName(i + 1)) tableRef(i + 1)
+      case t: TId if fromOpen && fromEnders.contains(t.up) =>
         fromDepths.pop()
-        i += 1
-      } else i += 1
+      case _ =>
     }
 
     found.toSeq.sorted
@@ -284,25 +232,40 @@ object LineageExtractor {
     * docstring admits best-effort (ch_view_dependencies.py:109-123):
     * qualified refs that collide with a CTE name are kept (qualified refs
     * bypass CTEs in CH), and nothing outside a genuine table context can
-    * leak in. Falls back to the [[tables]] heuristic when the body does
-    * not parse (the heuristic's whole point is surviving odd DDL).
+    * leak in. The DDL is lexed once: its head and body are read from the
+    * same tokens, and the [[tables]] heuristic scans them when the DDL
+    * does not parse (the heuristic's whole point is surviving odd DDL).
     * Returns (tables, tier) with tier ∈ {"exact", "heuristic"}. */
   def tablesExact(ddl: String, defaultDb: Option[String]): (Seq[String], String) = {
-    if (ddl == null || ddl.trim.isEmpty)
-      return (tables(ddl, defaultDb), "heuristic") // throws the parity error
-    val trimmed = ddl.trim
-    val up = trimmed.toUpperCase(Locale.ROOT)
-    // the SELECT body: the DDL itself when it IS a select, else the text
-    // after the view definition's top-level `AS SELECT|WITH`
-    val body =
-      if (up.startsWith("SELECT") || up.startsWith("WITH")) Some(trimmed)
-      else "(?is)\\bAS\\s+((?:SELECT|WITH)\\b.*)$".r
-        .findFirstMatchIn(trimmed).map(_.group(1))
-    body.flatMap { b =>
-      try Some((graft.chsql.ChSql.referencedTables(b)
-        .map(Names.normalize(_, defaultDb)).distinct.sorted, "exact"))
+    val lexed = lex(ddl)
+    val exact =
+      try Some(ChSql.referencedTables(viewQuery(new ChSql.Cur(ddl, lexed))))
       catch { case _: Exception => None }
-    }.getOrElse((tables(ddl, defaultDb), "heuristic"))
+    exact match {
+      case Some(ts) => (ts.map(Names.normalize(_, defaultDb)).distinct.sorted, "exact")
+      case None => (scan(ddl, lexed, defaultDb), "heuristic")
+    }
+  }
+
+  /** The query of a view DDL: the whole statement when it is a SELECT,
+    * else what follows the head `CREATE [OR REPLACE] [MATERIALIZED] VIEW
+    * [IF NOT EXISTS] [db.]name [ON CLUSTER c] [TO [db.]t] [(columns)]
+    * AS`. A materialized view's storage clauses (`ENGINE = …`,
+    * `POPULATE`) are passed over to its top-level `AS`. */
+  private def viewQuery(c: ChSql.Cur): ChSql.SetOp = {
+    if (!c.isKw("SELECT") && !c.isKw("WITH")) {
+      c.expectKw("CREATE")
+      c.eatKw("OR", "REPLACE")
+      val materialized = c.eatKw("MATERIALIZED")
+      c.expectKw("VIEW")
+      c.ifNotExists()
+      c.name("a view name")
+      if (c.eatKw("TO")) c.name("a table name")
+      if (c.isP("(")) c.group()
+      if (materialized) c.pos = c.upTo("AS")
+      c.expectKw("AS")
+    }
+    c.query()
   }
 
   /** Keep-going wrapper for the exact tier: (deps, tier, error). */

@@ -203,22 +203,11 @@ object ChTypes {
     }
   }
 
-  /** Top-level comma split, respecting parentheses and single quotes
-    * (Enum values like 'a,b' = 1 must not split). */
+  /** Top-level comma split on lexer tokens: commas inside parentheses
+    * or string literals (Enum values like `'a,b' = 1`) do not split. */
   private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    s.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case '(' if !inQuote => depth += 1; cur += '('
-      case ')' if !inQuote => depth -= 1; cur += ')'
-      case ',' if !inQuote && depth == 0 => out += cur.toString.trim; cur.clear()
-      case ch => cur += ch
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.toSeq
+    val c = new graft.chsql.ChSql.Cur(s)
+    c.items(0, c.end).map { case (a, b) => c.slice(a, b) }
   }
 
   /** The same type with every nullability flag relaxed to nullable —

@@ -140,21 +140,16 @@ object AdminOps {
   /** `SYSTEM ...` dispatch. Returns a description of the action taken so
     * callers (and tests) can see the mapping explicitly. */
   def system(spark: SparkSession, command: String, arg: Option[String] = None): String = {
-    val original = command.trim
-    original.toUpperCase(Locale.ROOT) match {
+    command.trim.toUpperCase(Locale.ROOT) match {
       case "DROP CACHE" | "DROP UNCOMPRESSED CACHE" | "DROP MARK CACHE" =>
         spark.catalog.clearCache()
         "cleared in-memory table cache (spark.catalog.clearCache)"
       // dictionaries are broadcast lookup tables read per query; reload =
       // invalidate cached relations so the next lookup sees the current
-      // source. The CH syntax carries the name UNQUOTED after the verb
-      // (`SYSTEM RELOAD DICTIONARY d`), so it may arrive folded into the
-      // command text rather than as `arg`.
+      // source. `arg` is the dictionary name or source path; none reloads
+      // every source.
       case c if c.startsWith("RELOAD DICTIONAR") =>
-        val name = arg.orElse( // extract from the ORIGINAL casing
-          "(?i)^RELOAD\\s+DICTIONARY\\s+(\\S+)$".r.findFirstMatchIn(original)
-            .map(_.group(1)))
-        name match {
+        arg match {
           case Some(n) if graft.sources.Dictionaries.exists(n) =>
             graft.sources.Dictionaries.reload(spark, n)
             s"reloaded dictionary $n"

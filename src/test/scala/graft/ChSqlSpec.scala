@@ -1618,4 +1618,18 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
     assert(Sql.splitStatements("SELECT 1; SELECT 'x;y' ;\n; SELECT 2;") ==
       Seq("SELECT 1", "SELECT 'x;y'", "SELECT 2"))
   }
+
+  test("lexer follows ClickHouse quoting: '' in strings, \"…\" names, doubled quotes") {
+    assert(run("SELECT 'it''s' AS s") == Seq(Seq("it's")))
+    assert(ChSql.sql(spark, "SELECT 1 AS \"x\"")(resolve).columns.toSeq == Seq("x"))
+    var read = ""
+    ChSql.sql(spark, "SELECT count() AS n FROM `a``b`") { n => read = n; orders }
+    assert(read == "a`b")
+  }
+
+  test("a quoted name never matches a keyword: SELECT `from` FROM t") {
+    val t = Seq(7).toDF("from")
+    val df = ChSql.sql(spark, "SELECT `from` FROM t")(_ => t)
+    assert(df.columns.toSeq == Seq("from") && df.collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
 }

@@ -2016,4 +2016,15 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
       modified.replace("CREATE TABLE quote_t\n", "CREATE TABLE quote_t2\n"))
     Seq("quote_t", "quote_t2").foreach(t => chRun(s"DROP TABLE $t"))
   }
+
+  test("CREATE TABLE cuts its column list on tokens: an escaped quote in an Enum value") {
+    chRun("DROP TABLE IF EXISTS enum_q")
+    chRun("CREATE TABLE enum_q (e Enum8('it\\'s' = 1, 'b' = 2), x Int32) " +
+      "ENGINE = MergeTree ORDER BY x")
+    assert(spark.table("enum_q").schema.fieldNames.toSeq == Seq("e", "x"))
+    chRun("INSERT INTO enum_q VALUES ('it''s', 7)")
+    assert(chRun("SELECT e, x FROM enum_q").map(r => (r.getString(0), r.getInt(1))) ==
+      Seq(("it's", 7)))
+    chRun("DROP TABLE enum_q")
+  }
 }

@@ -263,4 +263,37 @@ class LineageExtractorSpec extends AnyFunSuite with SparkSuite {
         Some("test")) == (Seq("test.t", "test.u"), "exact"))
     } finally java.util.Locale.setDefault(saved)
   }
+
+  test("exact tier reads the view head on tokens: comments, quoted names, TO, columns") {
+    def exact(ddl: String) = LineageExtractor.tablesExact(ddl, Some("test"))
+    assert(exact("CREATE VIEW test.v AS /* c */ SELECT * FROM test.a") == (Seq("test.a"), "exact"))
+    assert(exact("CREATE VIEW test.`x AS SELECT 1` AS SELECT * FROM test.a") ==
+      (Seq("test.a"), "exact"))
+    assert(exact("CREATE VIEW test.v AS SELECT * FROM \"db\".\"t\"") == (Seq("db.t"), "exact"))
+    assert(exact("CREATE VIEW test.v AS SELECT 'it''s' AS s FROM test.a") == (Seq("test.a"), "exact"))
+    assert(exact(
+      """CREATE MATERIALIZED VIEW IF NOT EXISTS test.mv ON CLUSTER c TO test.dest
+        |(k UInt64, n UInt64) -- stored columns
+        |AS SELECT k, count() AS n FROM test.src GROUP BY k""".stripMargin) ==
+      (Seq("test.src"), "exact"))
+  }
+
+  test("exact tier parses the whole body: trailing tokens fall back to the heuristic") {
+    assert(LineageExtractor.tablesExact(
+      "CREATE VIEW test.v AS SELECT 1 AS a b c FROM test.a", Some("test")) ==
+      (Seq("test.a"), "heuristic"))
+  }
+
+  test("the lexer keeps what the heuristic read: escapes, quoted keywords, wide hex") {
+    assert(t("CREATE VIEW test.v AS SELECT 'a\\'b''c' AS s, 0xFFFFFFFFFFFFFFFFF AS h " +
+      "FROM test.a JOIN `order` USING k") == Seq("test.a", "test.order"))
+  }
+
+  test("parity decision: an unterminated /* comment is a lineage error") {
+    val ddl = "CREATE VIEW test.v AS SELECT * FROM test.a /* open"
+    assert(LineageExtractor.extract(ddl, Some("test")) ==
+      (Nil, Some("LineageParseException: Unterminated /* comment")))
+    assert(LineageExtractor.extractExact(ddl, Some("test")) ==
+      (Nil, "error", Some("LineageParseException: Unterminated /* comment")))
+  }
 }

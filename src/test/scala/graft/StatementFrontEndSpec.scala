@@ -341,4 +341,22 @@ class StatementFrontEndSpec extends AnyFunSuite with SparkSuite {
       .filter(body.contains)
     assert(patterns.isEmpty, s"ChSql.statement matches text: ${patterns.mkString(", ")}")
   }
+
+  test("one SQL lexer: no (?i text patterns in functions/, model/ or AdminOps, no second tokenizer") {
+    import scala.jdk.CollectionConverters._
+    val files = Seq("functions", "model").flatMap { d =>
+      Files.list(Paths.get(s"src/main/scala/graft/$d")).iterator.asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+    } :+ Paths.get("src/main/scala/graft/operators/AdminOps.scala")
+    val regexLines = files.flatMap(f =>
+      Files.readAllLines(f).asScala.filter(_.contains("(?i")).map(l => s"${f.getFileName}: $l"))
+    assert(regexLines.isEmpty, s"SQL text matched with (?i regexes:\n${regexLines.mkString("\n")}")
+    // LineageExtractor reads ChSql.lexPos tokens: it keeps no character
+    // loop of its own, and ChTypes cuts type lists on tokens, not quotes
+    val lineage = Files.readString(Paths.get("src/main/scala/graft/functions/LineageExtractor.scala"))
+    val own = Seq("def tokenize", "charAt(", "case class Tok").filter(lineage.contains)
+    assert(own.isEmpty, s"LineageExtractor.scala tokenizes SQL itself: ${own.mkString(", ")}")
+    val types = Files.readString(Paths.get("src/main/scala/graft/model/ChTypes.scala"))
+    assert(!types.contains("'\\''"), "ChTypes.scala scans quotes itself")
+  }
 }
