@@ -6498,7 +6498,7 @@ object Queries {
     "t28_bpe" -> ((s, dir) =>
       tbl(s, dir, "documents").filter(col("doc_id") < 400)
         .select(col("doc_id"),
-          TextAnalysis.bpePieceCount(col("text"), bpeSnapshotMerges)
+          size(TextAnalysis.bpeEncode(col("text"), bpeSnapshotMerges))
             .cast("long").as("n_pieces"),
           graft.functions.PortableHash.charFold(concat_ws(" ",
             TextAnalysis.bpeEncode(col("text"), bpeSnapshotMerges)))
@@ -6526,7 +6526,7 @@ object Queries {
         .select(col("doc_id"),
           TextAnalysis.pairEnrich(col("text")).as("text"))
         .select(col("doc_id"),
-          TextAnalysis.bpePieceCountFast(col("text"), model)
+          size(TextAnalysis.bpeEncodeFast(col("text"), model))
             .cast("long").as("n_pieces"),
           graft.functions.PortableHash.charFold(concat_ws(" ",
             TextAnalysis.bpeEncodeFast(col("text"), model)))
@@ -6588,13 +6588,13 @@ object Queries {
       val model = TextAnalysis.bpeModelBytes(s, bpeMergesBytes1k)
       tbl(s, dir, "documents").filter(col("doc_id") < 400)
         .select(col("doc_id"),
-          TextAnalysis.pairEnrichBytes(TextAnalysis.mixedScriptFixture(
+          TextAnalysis.pairEnrichBytes(Fixtures.mixedScriptFixture(
             col("text"), col("lang"))).as("text"))
         .select(col("doc_id"),
-          TextAnalysis.bpePieceCountBytesFast(col("text"), model)
+          size(TextAnalysis.bpeEncodeFast(col("text"), model))
             .cast("long").as("n_pieces"),
           graft.functions.PortableHash.charFold(concat_ws(" ",
-            TextAnalysis.bpeEncodeBytesFast(col("text"), model)))
+            TextAnalysis.bpeEncodeFast(col("text"), model)))
             .as("fp"))
         // always true; blocks column pruning under a bare count() (t28)
         .filter(col("n_pieces") >= 0)
@@ -6611,7 +6611,7 @@ object Queries {
       val model = TextAnalysis.bpeModelBytes(s, bpeMergesBytes1k)
       tbl(s, dir, "documents").filter(col("doc_id") < 400)
         .select(col("doc_id"),
-          TextAnalysis.pairEnrichBytes(TextAnalysis.mixedScriptFixture(
+          TextAnalysis.pairEnrichBytes(Fixtures.mixedScriptFixture(
             col("text"), col("lang"))).as("text"))
         .select(col("doc_id"),
           TextAnalysis.bpeEncodeIdsBytes(col("text"), model).as("ids"))
@@ -6707,7 +6707,7 @@ object Queries {
     "p6_multilingual_pack" -> ((s, dir) => {
       val model = TextAnalysis.bpeModelBytes(s, bpeMergesBytes1k)
       val docs = tbl(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.mixedScriptFixture(
+        .select(col("doc_id"), Fixtures.mixedScriptFixture(
           col("text"), col("lang")).as("text"))
         .filter(TextAnalysis.tokenCount(col("text")) >= 20)
         .select(col("doc_id"),
@@ -7387,7 +7387,7 @@ object Queries {
          |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin)
 
   /** The mixed-script fixture derivation as DuckDB SQL — the exact
-    * replace chain of [[graft.operators.TextAnalysis.mixedScriptFixture]]
+    * replace chain of [[Fixtures.mixedScriptFixture]]
     * (one definition per engine; both pinned to each other by t28c). */
   private val sqlMixedScript: String =
     """CASE WHEN lang = 'fr' THEN replace(replace(text, 'e', 'é'), 'c', 'ç')
@@ -7852,7 +7852,7 @@ object Queries {
         .map { case (n, c) => c.as(n) }
       tblPar(s, dir, "documents", "doc_id")
         .select(col("doc_id"),
-          TextAnalysis.multiLineFixture(col("text")).as("text"))
+          Fixtures.multiLineFixture(col("text")).as("text"))
         .select(col("doc_id") +: cols: _*)
         .orderBy("doc_id")
     }),
@@ -7885,7 +7885,7 @@ object Queries {
     "p8_gopher_decontam_pack" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.multiLineFixture(col("text")).as("text"))
+          Fixtures.multiLineFixture(col("text")).as("text"))
       val keep = docs.groupBy(md5(col("text")).as("digest"))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
       val rules = TextAnalysis.gopherRules(col("text")).toMap
@@ -7918,7 +7918,7 @@ object Queries {
   // ---- shared r12c oracle blocks (one definition each — t31/t32/p8) ----
 
   /** The t31/p8 multi-line fixture: three plain replaces, the SQL twin of
-    * TextAnalysis.multiLineFixture. */
+    * Fixtures.multiLineFixture. */
   private def sqlGopherFx(src: String): String =
     s"""fx AS (SELECT doc_id,
        |    replace(replace(replace(text, ' table ', chr(10) || '- table '),
@@ -8082,7 +8082,7 @@ object Queries {
     sqlGopherRepConds.map(_._2).mkString(" AND ")
 
   /** The t31b repetition fixture, SQL twin of
-    * TextAnalysis.repetitionFixture. */
+    * Fixtures.repetitionFixture. */
   private def sqlRepFx(src: String): String =
     s"""fx AS (SELECT doc_id,
        |    CASE WHEN doc_id % 11 = 0 THEN text ||
@@ -8252,7 +8252,7 @@ object Queries {
     // sane oracle budget), so this entry encodes with merges.take(1000)
     // and the prefix chain is proven cross-engine against the SHIPPED
     // 32k file. The FULL 32k serving path is pinned in ScalaTest:
-    // bpeEncodeBytesFast(32k) ≡ an independent driver-side
+    // bpeEncodeFast(32k) ≡ an independent driver-side
     // lowest-rank-first reference encoder, the decode round-trip, and
     // the flat-encode measurement (BpeBytesFlatMain) — the encoder's
     // per-token cost is table-size-independent by design.
@@ -8261,13 +8261,13 @@ object Queries {
       tbl(s, dir, "documents").filter(col("doc_id") < 60)
         .select(col("doc_id"),
           TextAnalysis.pairEnrichBytes(TextAnalysis.pairEnrichBytes(
-            TextAnalysis.mixedScriptFixture(col("text"), col("lang"))))
+            Fixtures.mixedScriptFixture(col("text"), col("lang"))))
             .as("text"))
         .select(col("doc_id"),
-          TextAnalysis.bpePieceCountBytesFast(col("text"), model)
+          size(TextAnalysis.bpeEncodeFast(col("text"), model))
             .cast("long").as("n_pieces"),
           graft.functions.PortableHash.charFold(concat_ws(" ",
-            TextAnalysis.bpeEncodeBytesFast(col("text"), model)))
+            TextAnalysis.bpeEncodeFast(col("text"), model)))
             .as("fp"))
         .filter(col("n_pieces") >= 0)
         .orderBy("doc_id")
@@ -8285,7 +8285,7 @@ object Queries {
         .map { case (n, c) => c.as(n) }
       tbl(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.repetitionFixture(col("text")).as("text"))
+          Fixtures.repetitionFixture(col("text")).as("text"))
         .select(col("doc_id") +: cols: _*)
         .orderBy("doc_id")
     }),
@@ -8472,7 +8472,7 @@ object Queries {
     "t33_trained_quality" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.spamFixture(col("text"), col("doc_id")).as("text"))
+          Fixtures.spamFixture(col("text"), col("doc_id")).as("text"))
       TextAnalysis.trainedQualityScore(docs, "doc_id", "text",
           label = pmod(col("doc_id"), lit(7L)) =!= 0, buckets = 64,
           steps = 3, lr = 128.0)
@@ -8500,8 +8500,8 @@ object Queries {
       // corpus lacks) composed with the planted-boilerplate spam fixture
       val docs = tblPar(s, dir, "documents", "doc_id")
         .select(col("doc_id"),
-          TextAnalysis.spamFixture(
-            TextAnalysis.multiLineFixture(col("text")),
+          Fixtures.spamFixture(
+            Fixtures.multiLineFixture(col("text")),
             col("doc_id")).as("text"))
       val rules = TextAnalysis.gopherRules(col("text")).toMap
       val repRules = TextAnalysis.gopherRepetitionRules(col("text")).toMap
@@ -8534,7 +8534,7 @@ object Queries {
     "t34_trained_langid" -> ((s, dir) => {
       val docs = tblPar(s, dir, "documents", "doc_id")
         .select(col("doc_id"), col("lang"),
-          TextAnalysis.mixedScriptFixture(col("text"), col("lang"))
+          Fixtures.mixedScriptFixture(col("text"), col("lang"))
             .as("text"))
       val langs = Seq("de", "en", "es", "fr", "zh")
       // all five models train in ONE exploded aggregate per step
@@ -8588,7 +8588,7 @@ object Queries {
         .orderBy(col("query_id"), col("dist"), col("neighbor_id"))
     }))
 
-  /** The t33/p9 spam fixture, SQL twin of TextAnalysis.spamFixture. */
+  /** The t33/p9 spam fixture, SQL twin of Fixtures.spamFixture. */
   private def sqlSpamFx(src: String): String =
     s"""sfx AS (SELECT doc_id,
        |    CASE WHEN doc_id % 7 = 0 THEN text || repeat(
@@ -8939,7 +8939,7 @@ object Queries {
     "t35_gate_eval" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.spamFixture(col("text"), col("doc_id")).as("text"))
+          Fixtures.spamFixture(col("text"), col("doc_id")).as("text"))
       val scored = TextAnalysis.trainedQualityScore(docs, "doc_id",
           "text", label = pmod(col("doc_id"), lit(7L)) =!= 0,
           buckets = 64, steps = 3, lr = 128.0)
@@ -8981,7 +8981,8 @@ object Queries {
           tbl(s, dir, "documents").filter(col("doc_id") < 400),
           "doc_id"),
         "doc_id").toDF()
-      Multimodal.imageNearDuplicatesCapped(hashes, "doc_id")
+      Multimodal.imageNearDuplicates(hashes, "doc_id",
+          maxBucketSize = graft.operators.Dedup.DefaultMaxBucketSize)
         .orderBy("id1", "id2")
     }),
 
@@ -9000,7 +9001,7 @@ object Queries {
       val strict = TextAnalysis.gopherRepetitionRules(col("text")).toMap
       tblPar(s, dir, "documents", "doc_id")
         .select(col("doc_id"),
-          TextAnalysis.repetitionFixture(col("text")).as("text"))
+          Fixtures.repetitionFixture(col("text")).as("text"))
         .select((col("doc_id") +:
           (5 to 10).map(n =>
             cov.getField(s"cov${n}gram_frac").as(s"cov${n}gram_frac"))) ++
@@ -9022,10 +9023,10 @@ object Queries {
     "t37_trained_sgd" -> ((s, dir) => {
       val docs = tblPar(s, dir, "documents", "doc_id")
         .select(col("doc_id"),
-          TextAnalysis.spamFixture(col("text"), col("doc_id")).as("text"))
-      val w = TextAnalysis.trainLogisticSgd(docs, "doc_id", "text",
+          Fixtures.spamFixture(col("text"), col("doc_id")).as("text"))
+      val w = TextAnalysis.trainLogistic(docs, "doc_id", "text",
         label = pmod(col("doc_id"), lit(7L)) =!= 0, buckets = 64,
-        epochs = 2, batches = 4, lr = 128.0)
+        steps = 2, batches = 4, lr = 128.0)
       TextAnalysis.linearScore(docs, "doc_id", "text", dim = 64,
           weights = Some(w), bias = 0.0)
         .orderBy("doc_id")

@@ -3,6 +3,7 @@ package graft.chsql
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import scala.util.control.NonFatal
 import ChSql.{Cur, TNum, TP, TStr}
 
 /** The DDL/DML/admin statements of the CH grammar, read from the tokens
@@ -1046,7 +1047,7 @@ object ChDdl {
     * the string literal it is. */
   private def colDef(c: Cur, from: Int, until: Int): ColDef = {
     val name = c.toks(from)._1 match {
-      case t: ChSql.TId => t.s
+      case t: ChSql.TId if t.s.nonEmpty => t.s
       case _ => c.fail(s"bad column definition '${c.slice(from, until)}'")
     }
     val marks = Iterator.iterate(c.find(from + 1, until, ColMods: _*))(
@@ -1261,7 +1262,7 @@ object ChDdl {
         val (from, until) = c.group()
         c.items(from, until).map { case (a, b) =>
           c.toks(a)._1 match {
-            case t: ChSql.TId if b == a + 1 => t.s
+            case t: ChSql.TId if b == a + 1 && t.s.nonEmpty => t.s
             case _ => c.fail(s"bad INSERT column '${c.slice(a, b)}'")
           }
         }
@@ -2167,7 +2168,7 @@ object ChDdl {
     val stop = c.upTo("IN PARTITION", "WHERE", "ON CLUSTER")
     val assignments = c.items(c.pos, stop).map { case (a, b) =>
       (c.toks(a)._1, c.toks(a + 1)._1) match {
-        case (col: ChSql.TId, TP("=")) if b > a + 2 =>
+        case (col: ChSql.TId, TP("=")) if b > a + 2 && col.s.nonEmpty =>
           col.s -> ChSql.compileExpr(spark, c.expr(a + 2, b), resolve)
         case _ => c.fail(s"malformed UPDATE assignment '${c.slice(a, b)}'")
       }
@@ -2487,19 +2488,6 @@ object ChDdl {
       case _ => None
     }
 
-  /** The mutation job: rewrite the table through `transform` into a new
-    * table, then swap names — the same two phases as a CH mutation
-    * (background part rewrite, then metadata commit). Engine properties
-    * survive the swap. Distributed end to end; the transforms themselves
-    * (filter / conditional withColumn) are row-local, no shuffle. */
-  /** Re-key (rename) or scrub (drop) the column-scoped table metadata
-    * after a column DDL rewrite: the declared INSERT/SHOW CREATE order in
-    * `graft.columns` and the per-column expression properties
-    * (`graft.{default,materialized,alias,aliastype}.<col>`). rewriteSwap
-    * re-applies the pre-rewrite properties verbatim, so without this a
-    * RENAME leaves the OLD name in the declared list — positional INSERT
-    * then binds values to the wrong columns — and a DROP leaves a stale
-    * default that would resurrect on a later re-ADD. */
   /** Columns DECLARED `Nullable(...)` at CREATE/ADD/MODIFY time, from the
     * `graft.nullcols` property. The physical schema flag is NOT the
     * declaration: rewrite mutations (saveAsTable from a DataFrame) relax
@@ -2514,16 +2502,6 @@ object ChDdl {
       c: String, schemaFlag: => Boolean): Boolean =
     declaredNullCols(props).map(_.contains(c)).getOrElse(schemaFlag)
 
-  /** CH parity: writing NULL into a declared non-Nullable column is an
-    * error ("Cannot insert NULL value into a non-Nullable type"), never a
-    * silent store. Physical storage here is relaxed to all-nullable
-    * (rewrite mutations re-save from a DataFrame, and the post-ADD
-    * read-fill relies on NULL meaning exactly "pre-ADD row"), so without
-    * this guard an explicit NULL write (INSERT ... SELECT, UPDATE c =
-    * NULL) would land physically and then be invisibly resurrected as the
-    * column default at read time. Row-local when/raise_error over the
-    * declared-Nullable list — codegen'd, no extra scan or shuffle.
-    * Inactive (conservative) for pre-prop tables with no recorded list. */
   /** Output-file sizing for the engine's writes (r15, guide §6): Spark
     * plans a VALUES relation as min(rows, defaultParallelism) slices, so
     * every small INSERT wrote (and later re-read) that many ~KB parquet
@@ -2542,6 +2520,16 @@ object ChDdl {
     if (tiny) df.coalesce(1) else df
   }
 
+  /** CH parity: writing NULL into a declared non-Nullable column is an
+    * error ("Cannot insert NULL value into a non-Nullable type"), never a
+    * silent store. Physical storage here is relaxed to all-nullable
+    * (rewrite mutations re-save from a DataFrame, and the post-ADD
+    * read-fill relies on NULL meaning exactly "pre-ADD row"), so without
+    * this guard an explicit NULL write (INSERT ... SELECT, UPDATE c =
+    * NULL) would land physically and then be invisibly resurrected as the
+    * column default at read time. Row-local when/raise_error over the
+    * declared-Nullable list — codegen'd, no extra scan or shuffle.
+    * Inactive (conservative) for pre-prop tables with no recorded list. */
   private def guardNonNullableWrites(props: Map[String, String],
       df: DataFrame, table: String): DataFrame =
     declaredNullCols(props) match {
@@ -2591,6 +2579,14 @@ object ChDdl {
         set = Map("graft.nullcols" -> next.toSeq.sorted.mkString(",")))
     }
 
+  /** Re-key (rename) or scrub (drop) the column-scoped table metadata
+    * after a column DDL rewrite: the declared INSERT/SHOW CREATE order in
+    * `graft.columns` and the per-column expression properties
+    * (`graft.{default,materialized,alias,aliastype}.<col>`). rewriteSwap
+    * re-applies the pre-rewrite properties verbatim, so without this a
+    * RENAME leaves the OLD name in the declared list — positional INSERT
+    * then binds values to the wrong columns — and a DROP leaves a stale
+    * default that would resurrect on a later re-ADD. */
   private def rekeyColProps(spark: SparkSession, name: String,
       from: String, to: Option[String]): Unit = {
     val props = TableMeta.props(spark, name)
@@ -2611,6 +2607,13 @@ object ChDdl {
     TableMeta.update(spark, name, sets, unsets)
   }
 
+  /** The mutation job: rewrite the table through `transform` into a new
+    * table, then swap names — the same two phases as a CH mutation
+    * (background part rewrite, then metadata commit). Engine properties
+    * survive the swap. Distributed end to end; the transforms themselves
+    * (filter / conditional withColumn) are row-local, no shuffle. A
+    * staging write that fails (a refused NULL write, say) drops the
+    * staging table and its directory and rethrows its own error. */
   private def rewriteSwap(spark: SparkSession, name: String)(
       transform: DataFrame => DataFrame): Unit = {
     val meta = TableMeta.lookup(spark, name).getOrElse(
@@ -2643,7 +2646,14 @@ object ChDdl {
     // are dropped from the re-applied properties below
     val w = transform(addFillDecorate(spark, name, spark.table(name), props))
       .write.mode(SaveMode.Overwrite)
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).saveAsTable(tmp)
+    try (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).saveAsTable(tmp)
+    catch { case NonFatal(e) =>
+      try {
+        spark.sql(s"DROP TABLE IF EXISTS $tmp")
+        dropStaleLocation(spark, tmp)
+      } catch { case NonFatal(c) => e.addSuppressed(c) }
+      throw e
+    }
     if (partCols.isEmpty) {
       // rename-aside instead of drop-then-rename: a failure between the
       // two renames leaves the data recoverable under the __graft_old name

@@ -107,6 +107,27 @@ object ChSql {
     var i = 0
     val n = input.length
     def peek(k: Int) = if (i + k < n) input(i + k) else '\u0000'
+    def wordChar(ch: Char) = ch.isLetterOrDigit || ch == '_'
+    /** The number token `tok` read from `st`, unless the number runs on
+      * into word characters: then, as in ClickHouse's lexer, it reads to
+      * the end of the word, which is one name when every character is a
+      * word character (`1abc`, `1each`, `0x1Fg`) and refused otherwise
+      * (`1.5abc`). */
+    def number(st: Int, tok: => Tok): Unit =
+      if (i < n && wordChar(input(i))) {
+        while (i < n && wordChar(input(i))) i += 1
+        val word = input.substring(st, i)
+        if (!word.forall(wordChar)) throw new IllegalArgumentException(
+          s"ChSql: malformed number '$word'")
+        out += ((TId(word), st, i))
+      } else out += ((tok, st, i))
+    /** A `.` written right after a name or a closing bracket is the
+      * compound-name or tuple-access dot, never a number's point: `db.1t`
+      * is `db` `.` `1t` and `t.1` is `t` `.` `1` (ClickHouse's lexer). */
+    def dotAfterName = out.nonEmpty && out.last._3 == i && (out.last._1 match {
+      case _: TId | TP(")") | TP("]") => true
+      case _ => false
+    })
     /** The quoted token opening at `i` with quote `q`, unescaped: a
       * doubled quote stands for one, and in a string literal a backslash
       * escapes the next character. Leaves `i` past the closing quote. */
@@ -136,7 +157,7 @@ object ChSql {
       }
       else if (c.isLetter || c == '_') {
         val st = i
-        while (i < n && (input(i).isLetterOrDigit || input(i) == '_')) i += 1
+        while (i < n && wordChar(input(i))) i += 1
         out += ((TId(input.substring(st, i)), st, i))
         if (insertDataFollows(out) &&
             input.indexWhere(!_.isWhitespace, i) >= 0) {
@@ -151,26 +172,26 @@ object ChSql {
       else if (c == '0' && (peek(1) == 'x' || peek(1) == 'X') &&
           (peek(2).isDigit || "abcdefABCDEF".indexOf(peek(2)) >= 0)) {
         // hex literal (lexer HEXADECIMAL_LITERAL) — normalized to decimal
-        val st = i + 2; i += 2
+        val st = i; i += 2
         while (i < n && (input(i).isDigit ||
           "abcdefABCDEF".indexOf(input(i)) >= 0)) i += 1
-        out += ((TNum(new java.math.BigInteger(
-          input.substring(st, i), 16).toString), st - 2, i))
+        number(st, TNum(new java.math.BigInteger(
+          input.substring(st + 2, i), 16).toString))
       }
       else if (c == '0' && (peek(1) == 'b' || peek(1) == 'B') &&
           (peek(2) == '0' || peek(2) == '1')) {
         // binary literal (lexer BINARY_LITERAL)
-        val st = i + 2; i += 2
+        val st = i; i += 2
         while (i < n && (input(i) == '0' || input(i) == '1')) i += 1
-        out += ((TNum(new java.math.BigInteger(
-          input.substring(st, i), 2).toString), st - 2, i))
+        number(st, TNum(new java.math.BigInteger(
+          input.substring(st + 2, i), 2).toString))
       }
-      else if (c.isDigit || (c == '.' && peek(1).isDigit)) {
+      else if (c.isDigit || (c == '.' && peek(1).isDigit && !dotAfterName)) {
         val st = i
         while (i < n && (input(i).isDigit || input(i) == '.' || input(i) == 'e' ||
           input(i) == 'E' || ((input(i) == '+' || input(i) == '-') &&
             (input(i - 1) == 'e' || input(i - 1) == 'E')))) i += 1
-        out += ((TNum(input.substring(st, i)), st, i))
+        number(st, TNum(input.substring(st, i)))
       }
       else if (c == '\'') {
         val st = i
@@ -233,6 +254,7 @@ object ChSql {
       if (!atEnd) fail(s"unexpected '${slice(pos, end)}' at the end of the statement")
 
     def ident(what: String): String = tok() match {
+      case t: TId if t.s.isEmpty => fail(s"$what is an empty quoted name")
       case t: TId => pos += 1; t.s
       case _ => fail(s"expected $what")
     }
@@ -500,10 +522,20 @@ object ChSql {
       throw new IllegalArgumentException(
         s"ChSql parse error at token $pos (${cur}): $msg")
 
+    /** A name. ClickHouse's identifier parser refuses an empty quoted
+      * name (`""`, an empty backquoted one), so this does too. */
     def ident(): String = cur match {
+      case t: TId if t.s.isEmpty => fail("empty quoted identifier")
       case t: TId => pos += 1; t.s
       case _ => fail("expected identifier")
     }
+    /** `AS alias`, or a bare alias that is no reserved keyword. */
+    def optAlias(): Option[String] =
+      if (eatKw("AS")) Some(ident())
+      else cur match {
+        case t: TId if !Reserved.contains(t.up) => Some(ident())
+        case _ => None
+      }
 
     // ---- expressions ----
 
@@ -616,8 +648,8 @@ object ChSql {
           val i = advance().asInstanceOf[TNum].s.toInt
           e = FuncCall("tupleElement", Nil, Seq(e, NumLit(i.toString)))
         }
-        // the lexer greedily reads `t.1` / `(...).1` as the float ".1" —
-        // a dot-number directly after a postfix expr is tuple access
+        // after a gap the lexer reads `t .1` / `(...) .1` as the float
+        // ".1" — a dot-number directly after a postfix expr is tuple access
         else if (cur match {
           case TNum(s) => s.startsWith(".") && s.drop(1).forall(_.isDigit)
           case _ => false
@@ -719,12 +751,12 @@ object ChSql {
         if (Reserved.contains(t.up) && t.up != "LEFT" && t.up != "RIGHT" &&
             !(t.up == "ANY" && toks(pos + 1) == TP("(")))
           fail(s"unexpected keyword ${t.s} in expression")
-        pos += 1
-        if (isP("(")) parseCallAfterName(t.s)
-        else if (isP("->")) { pos += 1; LambdaE(Seq(t.s), parseExpr()) }
+        val name = ident()
+        if (isP("(")) parseCallAfterName(name)
+        else if (isP("->")) { pos += 1; LambdaE(Seq(name), parseExpr()) }
         else {
           val parts = Seq.newBuilder[String]
-          parts += t.s
+          parts += name
           while (isP(".") && toks(pos + 1).isInstanceOf[TId]) {
             pos += 1; parts += ident()
           }
@@ -1324,12 +1356,7 @@ object ChSql {
             }
           case other => other
         }
-        val alias =
-          if (eatKw("AS")) Some(ident())
-          else cur match {
-            case t: TId if !Reserved.contains(t.up) => pos += 1; Some(t.s)
-            case _ => None
-          }
+        val alias = optAlias()
         b += SelectItem(e, alias)
         more = eatP(",")
       }
@@ -1339,12 +1366,7 @@ object ChSql {
     private def parseRelation(): Relation = {
       if (eatP("(")) {
         val sel = parseSetOp(); expectP(")")
-        val alias =
-          if (eatKw("AS")) Some(ident())
-          else cur match {
-            case t: TId if !Reserved.contains(t.up) => pos += 1; Some(t.s)
-            case _ => None
-          }
+        val alias = optAlias()
         SubqueryRel(sel, alias)
       } else {
         val parts = Seq.newBuilder[String]
@@ -1355,23 +1377,13 @@ object ChSql {
           expectP("(")
           val fargs = if (isP(")")) Nil else parseExprList()
           expectP(")")
-          val alias =
-            if (eatKw("AS")) Some(ident())
-            else cur match {
-              case t: TId if !Reserved.contains(t.up) => pos += 1; Some(t.s)
-              case _ => None
-            }
+          val alias = optAlias()
           return TableFuncRel(fname, fargs, alias)
         }
         while (isP(".") && toks(pos + 1).isInstanceOf[TId]) { pos += 1; parts += ident() }
         val name = parts.result().mkString(".")
         val fin = eatKw("FINAL")
-        val alias =
-          if (eatKw("AS")) Some(ident())
-          else cur match {
-            case t: TId if !Reserved.contains(t.up) => pos += 1; Some(t.s)
-            case _ => None
-          }
+        val alias = optAlias()
         TableRef(name, alias, fin)
       }
     }

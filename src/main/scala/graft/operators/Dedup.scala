@@ -70,22 +70,17 @@ object Dedup {
             (acc, x) => pmod(acc * lit(1000003L) + x, lit(PortableHash.Mod)))))
         .as(Seq("band_id", "band_hash")))
 
-  /** Default hot-bucket cap for [[lshCandidatePairsCapped]]: 1000 members
+  /** Default hot-bucket cap for [[lshCandidatePairs]]: 1000 members
     * bounds any one bucket's self-join output at ~5·10^5 pair rows. In a
     * healthy MinHash-LSH run a bucket is a handful of genuine near-dups;
     * a 1000-member bucket is degenerate content (empty strings, license
     * headers, boilerplate) whose members still meet through their other,
     * more selective bands. Raise it only with evidence from bucket-size
-    * stats — at 100 TB the b² blowup, not the drop, is the real risk. */
+    * stats — at 100 TB the b² blowup, not the drop, is the real risk.
+    * The uncapped `Int.MaxValue` exists for oracle-exact runs (a cap
+    * drops data, which would break hash-matched comparisons at toy
+    * scale); a 100 TB pipeline passes this cap. */
   val DefaultMaxBucketSize: Int = 1000
-
-  /** [[lshCandidatePairs]] with the skew guard ON by default — the
-    * preset a 100 TB pipeline should reach for. The uncapped variant
-    * exists for oracle-exact runs (a cap drops data, which would break
-    * hash-matched comparisons at toy scale). */
-  def lshCandidatePairsCapped(bandsDf: DataFrame, idCol: String,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    lshCandidatePairs(bandsDf, idCol, maxBucketSize)
 
   /** Candidate near-duplicate pairs (id1 < id2) from shared LSH buckets,
     * deduplicated across bands.
@@ -240,7 +235,7 @@ object Dedup {
     val sigs = docs.select(col(idCol),
       minhashSignature(shingleHashes(col(textCol), shingleN), sigK)
         .as("__sig"))
-    val pairs = lshCandidatePairsCapped(
+    val pairs = lshCandidatePairs(
       lshBands(sigs, idCol, "__sig", bands, rowsPerBand), idCol,
       maxBucketSize)
     verifyPairs(pairs, docs, idCol, textCol, threshold, roundTo)

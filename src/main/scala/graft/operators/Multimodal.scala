@@ -582,7 +582,11 @@ object Multimodal {
     * [[graft.operators.Dedup.verifyPairs]] contract). Returns
     * (id1, id2, hamming); duplicate CLUSTERS compose with
     * [[graft.operators.Dedup.connectedComponents]] exactly as t9 does
-    * for text. */
+    * for text. A 100 TB pipeline passes `maxBucketSize =
+    * Dedup.DefaultMaxBucketSize`: a degenerate bucket — e.g. solid-color
+    * images all hashing to 0 — yields b² candidate rows, and members of
+    * a dropped bucket still meet through their other, more selective
+    * bands. */
   def imageNearDuplicates(hashes: DataFrame, idCol: String,
       hashCol: String = "dhash", maxHamming: Int = 10, bands: Int = 4,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
@@ -601,19 +605,6 @@ object Multimodal {
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
-
-  /** [[imageNearDuplicates]] with the hot-bucket guard ON by default —
-    * the 100 TB entry point (the
-    * [[graft.operators.Dedup.lshCandidatePairsCapped]] convention: a
-    * degenerate bucket — e.g. solid-color images all hashing to 0 —
-    * yields b² candidate rows; members of a dropped bucket still meet
-    * through their other, more selective bands). */
-  def imageNearDuplicatesCapped(hashes: DataFrame, idCol: String,
-      hashCol: String = "dhash", maxHamming: Int = 10, bands: Int = 4,
-      maxBucketSize: Int = graft.operators.Dedup.DefaultMaxBucketSize
-  ): DataFrame =
-    imageNearDuplicates(hashes, idCol, hashCol, maxHamming, bands,
-      maxBucketSize)
 
   /** Batched metadata extraction: partitions stream through the codec in
     * `batchSize` groups (bounded memory per batch, codec amortization —

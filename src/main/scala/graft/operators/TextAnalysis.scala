@@ -296,32 +296,6 @@ object TextAnalysis {
     gopherRules(text).toMap.apply("keep") === 1 &&
       gopherRepetitionRules(text).toMap.apply("keep_rep") === 1
 
-  /** Deterministic repetition fixture for t31b: every 11th doc gains
-    * three identical appended paragraphs (duplicate-paragraph tiers),
-    * every 7th (not 11th) doc gains a 5-word phrase repeated 20 times
-    * (top-n-gram + duplicate-n-gram tiers) — plain CASE + repeat both
-    * engines compute identically. */
-  def repetitionFixture(text: Column): Column =
-    when(pmod(col("doc_id"), lit(11)) === 0,
-      concat(text, lit("\n\npara one\n\npara one\n\npara one")))
-      .when(pmod(col("doc_id"), lit(7)) === 0,
-        concat(text, lit(" "),
-          repeat(lit("badger mushroom snake gopher rae "), 20)))
-      .otherwise(text)
-
-  /** Deterministic multi-line fixture for the line-level Gopher rules:
-    * the flat single-line test corpus gains bullets, ellipses,
-    * duplicate-able lines and a second stop word ("of" — the corpus
-    * vocabulary only carries "the", which alone can never satisfy the
-    * ≥ 2-distinct-stop-words rule) through three plain (non-regex)
-    * replaces that any engine applies identically. */
-  def multiLineFixture(text: Column): Column =
-    replace(
-      replace(
-        replace(text, lit(" table "), lit("\n- table ")),
-        lit(" row "), lit("...\nrow ")),
-      lit(" value "), lit(" of value "))
-
   /** Document fingerprint: polynomial rolling hash of the whole text
     * (portable) — pair with Dedup.minhashSignature for locality-sensitive
     * fingerprints. */
@@ -410,10 +384,10 @@ object TextAnalysis {
     * minhash/banding used by the dedup cascade, so any engine replays
     * the whole chain.
     *
-    * `maxBandSize` is the hot-band guard (the
-    * [[Dedup.lshCandidatePairsCapped]] contract, r13): a degenerate
-    * band key — empty-text shingles, boilerplate that collapses to one
-    * signature — can put millions of corpus docs into one bucket, and
+    * `maxBandSize` is the hot-band guard (the `maxBucketSize` contract
+    * of [[Dedup.lshCandidatePairs]], r13): a degenerate band key —
+    * empty-text shingles, boilerplate that collapses to one signature —
+    * can put millions of corpus docs into one bucket, and
     * every one of them becomes a candidate against each bench doc
     * sharing the band, flooding the list the verify stage broadcasts
     * back. Corpus-side (band_id, band_hash) groups larger than the cap
@@ -425,7 +399,7 @@ object TextAnalysis {
     * hot band is missed (flag such corpora upstream — a band that hot
     * is boilerplate, which exact dedup should have removed first). The
     * default `Int.MaxValue` keeps the oracle-exact uncapped behavior;
-    * [[decontaminateFuzzyCapped]] is the 100 TB preset. */
+    * a 100 TB pipeline passes `Dedup.DefaultMaxBucketSize`. */
   def decontaminateFuzzy(corpus: org.apache.spark.sql.DataFrame,
       benchmark: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, numHashes: Int = 16,
@@ -472,19 +446,6 @@ object TextAnalysis {
       .select(col(idCol), col("bench_id"), j.as("j"))
       .filter(col("j") >= jaccardMin)
   }
-
-  /** [[decontaminateFuzzy]] with the hot-band guard ON by default (cap
-    * contract and rationale there) — the preset a 100 TB pipeline
-    * should reach for; the uncapped variant exists for oracle-exact
-    * runs. */
-  def decontaminateFuzzyCapped(corpus: org.apache.spark.sql.DataFrame,
-      benchmark: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, jaccardMin: Double = 0.5,
-      roundTo: Int = 6,
-      maxBandSize: Int = Dedup.DefaultMaxBucketSize): org.apache.spark.sql.DataFrame =
-    decontaminateFuzzy(corpus, benchmark, idCol, textCol, shingleN,
-      numHashes, bands, jaccardMin, roundTo, maxBandSize)
 
   // ===================== chunking =====================
 
@@ -840,7 +801,7 @@ object TextAnalysis {
       s"linearScore: weights.length ${w.length} != dim $dim")
     // typed array literal (reference-slot codegen): linearScore serves
     // right after a trainer in t33/t37/p9, and the inlined-constant form
-    // forced one more fresh Janino compile per query (see trainLogistic)
+    // forced one more fresh Janino compile per query (see logisticCore)
     val wLit = typedLit(w.toSeq)
     val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
     val n = size(toks)
@@ -1036,10 +997,6 @@ object TextAnalysis {
     flatten(pieces)
   }
 
-  /** True model-based token count — [[bpeEncode]] piece count. */
-  def bpePieceCount(text: Column, merges: Seq[(String, String)]): Column =
-    size(bpeEncode(text, merges))
-
   /** Broadcast a trained merge table as a serving-shape
     * [[graft.plans.BpeModel]] (train once, broadcast everywhere — the
     * Codebook/PqLutMap convention). */
@@ -1048,29 +1005,30 @@ object TextAnalysis {
       : org.apache.spark.broadcast.Broadcast[graft.plans.BpeModel] =
     spark.sparkContext.broadcast(new graft.plans.BpeModel(merges, BpeEow))
 
-  /** PRODUCTION-shape BPE encoder: same tokenization and output contract
-    * as [[bpeEncode]], but the merge table rides as ONE broadcast and
-    * each word is encoded by the standard lowest-rank-first loop inside
-    * a codegen'd native expression — per-token cost is O(word_len ·
-    * merges_applied), independent of the table size, vs the replace
-    * chain's O(total_merges) string passes per token and plan-literal
-    * blowup past a few hundred merges. Use this at real vocabularies
-    * (1k-32k merges); [[bpeEncode]] remains the plan-literal tier for
-    * toy tables and cross-engine chain replay. Row-local, zero shuffle
-    * (plan-pinned in ScaleDesignSpec). */
+  /** PRODUCTION-shape BPE encoder: the merge table rides as ONE
+    * broadcast and each word is encoded by the standard lowest-rank-first
+    * loop inside a codegen'd native expression — per-token cost is
+    * O(word_len · merges_applied), independent of the table size, vs the
+    * replace chain's O(total_merges) string passes per token and
+    * plan-literal blowup past a few hundred merges. Use this at real
+    * vocabularies (1k-32k merges); [[bpeEncode]] remains the plan-literal
+    * tier for toy tables and cross-engine chain replay.
+    *
+    * The model's tier picks the pre-tokenizer: a char-level model
+    * ([[bpeModel]]) reads [[bpeEncode]]'s lower-cased `[a-z]+` tokens
+    * (same output contract as the chain); a byte-level model
+    * ([[bpeModelBytes]]) reads [[byteTokens]] (no token of any script is
+    * dropped) as hex-pair byte symbols. Piece count is `size` of the
+    * result. Row-local, zero shuffle (plan-pinned in ScaleDesignSpec). */
   def bpeEncodeFast(text: Column,
       model: org.apache.spark.broadcast.Broadcast[graft.plans.BpeModel])
       : Column = {
-    val toks = filter(split(trim(lower(text)), "\\s+"),
-      t => t.rlike("^[a-z]+$"))
+    val toks =
+      if (model.value.byteLevel) byteTokens(text)
+      else filter(split(trim(lower(text)), "\\s+"),
+        t => t.rlike("^[a-z]+$"))
     graft.plans.NativeExpressions.bpe_encode_bc(toks, model)
   }
-
-  /** [[bpeEncodeFast]] piece count. */
-  def bpePieceCountFast(text: Column,
-      model: org.apache.spark.broadcast.Broadcast[graft.plans.BpeModel])
-      : Column =
-    size(bpeEncodeFast(text, model))
 
   /** Sliding adjacent-word concatenations of the [a-z]+ tokens as a
     * space-joined text column — the t28b fixture derivation (the
@@ -1139,23 +1097,6 @@ object TextAnalysis {
     spark.sparkContext.broadcast(
       new graft.plans.BpeModel(merges, BpeEow, byteLevel = true))
 
-  /** Byte-level serving encoder: [[byteTokens]] pre-tokenization (no
-    * token of any script is dropped — the multilingual-fidelity bound
-    * [[bpeEncodeFast]] carries), then the same ONE-broadcast
-    * lowest-rank-first native loop over hex-pair byte symbols.
-    * Row-local, zero shuffles, per-token cost independent of the merge
-    * table size (plan-pinned in ScaleDesignSpec). */
-  def bpeEncodeBytesFast(text: Column,
-      model: org.apache.spark.broadcast.Broadcast[graft.plans.BpeModel])
-      : Column =
-    graft.plans.NativeExpressions.bpe_encode_bc(byteTokens(text), model)
-
-  /** [[bpeEncodeBytesFast]] piece count. */
-  def bpePieceCountBytesFast(text: Column,
-      model: org.apache.spark.broadcast.Broadcast[graft.plans.BpeModel])
-      : Column =
-    size(bpeEncodeBytesFast(text, model))
-
   /** Encode straight to TOKEN IDS — the shape a training pipeline
     * actually persists (ints, not piece strings; 4 bytes/token):
     * the same byte-level lowest-rank-first loop, each piece mapped
@@ -1167,8 +1108,9 @@ object TextAnalysis {
       : Column =
     graft.plans.NativeExpressions.bpe_encode_ids_bc(byteTokens(text), model)
 
-  /** Decode a byte-level piece stream back to text ([[bpeEncodeBytesFast]]'s
-    * inverse up to the pre-tokenizer: tokens come back space-joined).
+  /** Decode a byte-level piece stream back to text ([[bpeEncodeFast]]'s
+    * inverse over a byte-level model, up to the pre-tokenizer: tokens
+    * come back space-joined).
     * Pieces are concatenations of hex-pair byte symbols terminated by
     * [[BpeEow]], so decoding is split-on-EOW → unhex → UTF-8 — row-local
     * column ops, zero shuffles. The loss-free-alphabet property
@@ -1195,26 +1137,6 @@ object TextAnalysis {
       (a, b) => concat(a, b)), " ")
   }
 
-  /** Deterministic mixed-script derivation over the (all-ASCII)
-    * synthetic corpus: per-language chained literal replaces introduce
-    * 2-byte Latin accents (fr/de/es), 3-byte CJK (zh), and punctuation
-    * adjacent to letters (en) — the byte-level tier's test diet. Every
-    * engine computes the identical text (plain `replace` chains, no
-    * regex), so the t28c oracle rebuilds the same fixture. */
-  def mixedScriptFixture(text: Column, lang: Column): Column =
-    when(lang === "fr",
-      replace(replace(text, lit("e"), lit("é")), lit("c"), lit("ç")))
-      .when(lang === "de",
-        replace(replace(text, lit("a"), lit("ä")), lit("u"), lit("ü")))
-      .when(lang === "es",
-        replace(replace(text, lit("n"), lit("ñ")), lit("o"), lit("ó")))
-      .when(lang === "zh",
-        replace(replace(replace(text, lit("data"), lit("数据")),
-          lit("table"), lit("表")), lit("query"), lit("查询")))
-      .otherwise(
-        replace(replace(text, lit("slow"), lit("slow,")),
-          lit("fast"), lit("fast!")))
-
   // ============ DSIR importance weights (data selection) ============
 
   /** DSIR-style importance weights (Xie et al., "Data Selection for
@@ -1239,9 +1161,7 @@ object TextAnalysis {
       textCol: String, target: Column, buckets: Int = 64,
       roundTo: Int = 6): org.apache.spark.sql.DataFrame = {
     require(buckets > 0, "dsirWeights: buckets must be positive")
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
+    val bucketArr = tokenBuckets(col(textCol), buckets)
     dsirProfileFold(df, idCol, bucketArr, target, buckets, roundTo)
   }
 
@@ -1267,6 +1187,15 @@ object TextAnalysis {
         lit(buckets.toLong)))
     dsirProfileFold(df, idCol, concat(uni, bi), target, buckets, roundTo)
   }
+
+  /** The hashed-bucket token features the DSIR profiles, the trainers
+    * and the trained scorers read: each non-empty whitespace token's
+    * portable charFold hash mod `buckets` ([[PortableHash]], so a SQL
+    * oracle replays the same features). */
+  private def tokenBuckets(text: Column, buckets: Int): Column =
+    graft.plans.NativeExpressions.hash_buckets(
+      filter(split(trim(text), "\\s+"), t => length(t) > 0),
+      buckets.toLong, PortableHash.Mult, PortableHash.Mod)
 
   /** Shared DSIR estimator body: one map-combinable two-counter profile
     * pass over the feature-bucket array (≤ `buckets` rows to the
@@ -1329,8 +1258,8 @@ object TextAnalysis {
       df.sparkSession.sparkContext.defaultParallelism.toLong,
       nDocs / 1024L + 1L)).toInt
 
-  /** Full-batch logistic-regression TRAINER over the hashed-bucket token
-    * feature space ([[dsirWeights]]' B-bucket convention — the features
+  /** Logistic-regression TRAINER over the hashed-bucket token feature
+    * space ([[dsirWeights]]' B-bucket convention — the features
     * [[linearScore]] serves). Closes the fastText curation recipe the
     * quality gates were missing: label documents with a heuristic rule
     * or domain column, TRAIN a shallow classifier, then gate the corpus
@@ -1341,15 +1270,26 @@ object TextAnalysis {
     * algebra, so the trained (weights, bias) plug straight into it.
     *
     * Training is DETERMINISTIC, engine-replayable gradient descent:
-    * init w = 0; per step ONE map-combinable aggregate computes the
-    * full-batch gradient — per-doc (bucket, err/n_tokens) entries
-    * explode and group-sum into ≤ B driver rows (the
-    * [[graft.operators.Similarity.kmeansCodebook]] convention: driver
-    * state bounded by CONFIGURATION, not corpus). Updates
-    * w ← w − lr·grad/N are ROUNDED to `roundTo` decimals, so a SQL
-    * engine replaying the chain reproduces the exact trajectory
+    * init w = 0; `steps` passes over the corpus, each making `batches`
+    * updates. Each update is ONE map-combinable aggregate: per-doc
+    * (bucket, err/n_tokens) entries explode and group-sum into ≤ B
+    * driver rows (the [[graft.operators.Similarity.kmeansCodebook]]
+    * convention: driver state bounded by CONFIGURATION, not corpus).
+    * Updates w ← w − lr·grad/N are ROUNDED to `roundTo` decimals, so a
+    * SQL engine replaying the chain reproduces the exact trajectory
     * (last-ulp summation-order differences are absorbed by the
     * rounding, same as the k-means rounded-mean replay).
+    *
+    * `batches = 1` is full-batch GD. `batches` > 1 is deterministic
+    * MINI-BATCH SGD (r15, t37 — what the 100 TB recipe runs): batch
+    * membership is the portable charFold of the doc id mod `batches`
+    * (the same engine-replayable determinism trick as the Gumbel
+    * sampler), each pass sweeps the batches IN ORDER, each update's
+    * gradient covers ONLY that batch's rows and N is the BATCH size
+    * (the oracle chain is the shared [[graft.Queries]] generator with
+    * `batches` > 1). An empty batch is refused (the trajectory would
+    * diverge between engines on skip-vs-update semantics): lower
+    * `batches`.
     *
     * No separate intercept is trained: the token-normalized features
     * sum to exactly 1 per non-empty document (Σ_b x_b = 1), so the
@@ -1357,150 +1297,16 @@ object TextAnalysis {
     * separate bias term has 64× the feature scale, which wrecks
     * full-batch GD conditioning at any lr the bucket weights need.
     *
-    * Scale shape: per step one corpus scan + one shuffle of ≤ B
-    * map-side-combined groups; nothing scales with corpus size except
-    * the scans. Returns the trained weight vector (serve it via
-    * [[linearScore]] with bias = 0). */
+    * Scale shape: features persist once; per update one scan of the
+    * batch + one shuffle of ≤ B map-side-combined groups; nothing scales
+    * with corpus size except the scans. Returns the trained weight
+    * vector (serve it via [[linearScore]] with bias = 0). */
   def trainLogistic(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, label: Column, buckets: Int = 64, steps: Int = 3,
-      lr: Double = 128.0, roundTo: Int = 6): Array[Double] = {
-    require(buckets > 0, s"trainLogistic: need buckets > 0, got $buckets")
-    require(steps >= 0, s"trainLogistic: need steps >= 0, got $steps")
-    require(lr > 0, s"trainLogistic: need lr > 0, got $lr")
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
-    // corpus size FIRST (column-pruned count — the projections and the
-    // label are dead code under count(1)), so the feature-pass fan-out
-    // can be derived from it instead of the cluster constant
-    val nDocsL = df.count()
-    require(nDocsL > 0, "trainLogistic: empty corpus")
-    val base = df
-      .select(label.cast("double").as("y"), bucketArr.as("bs"))
-      .withColumn("n", size(col("bs")).cast("double"))
-      // spread the per-document fold work across the cluster once: a
-      // single-file corpus otherwise trains on ONE task (the gradient
-      // math is per-row CPU, not IO — measured 8x wall at sf1);
-      // partition count derived from the corpus size ([[featurePartitions]])
-      .repartition(featurePartitions(df, nDocsL))
-      .persist() // scanned once per step; feature arrays, not raw text
-    try {
-      val nDocs = nDocsL.toDouble
-      var w = Array.fill(buckets)(0.0)
-      for (_ <- 0 until steps) {
-        // ONE ArrayType literal (reference-slot codegen), not B inlined
-        // double constants: inlined constants change the generated
-        // source every step, so each step paid a fresh Janino compile
-        // with every concurrent task stalled on the compile lock (r15 —
-        // profiled as ~150 ms × cores of fake executorRunTime per step);
-        // a typed literal rides the references array, the source is
-        // step-invariant, and the codegen cache hits from step 2 on.
-        // Same doubles, same fold order — value-identical.
-        val wLit = typedLit(w.toSeq)
-        val dot = graft.plans.NativeExpressions.bucket_gather_sum(
-          col("bs"), wLit)
-        val z = when(col("n") > 0, dot / col("n")).otherwise(lit(0.0))
-        val e = lit(1.0) / (lit(1.0) + exp(-z)) - col("y")
-        // one exploded (bucket, err/n) aggregate per step — ≤ buckets
-        // rows to the driver, map-side combined. The err column rides
-        // through the Generate as a PASS-THROUGH value (evaluated once
-        // per document); referencing `e` inside a per-token lambda
-        // would re-run its O(tokens) interpreted dot-fold per TOKEN —
-        // the O(tokens²)-per-doc blowup this codebase keeps hunting
-        // (first measured here as a wedged sf1 bench pass)
-        // two-step select: a single select-with-explode is analyzed as
-        // Project ABOVE the Generate, i.e. the err expression (one
-        // O(tokens) gather) would re-evaluate per TOKEN — the separate
-        // projection pins it below the Generate, once per document
-        // the collected per-bucket sums are ROUNDED (9 decimals) before
-        // the update so the compared quantity is order-INSENSITIVE —
-        // partial-sum order varies across the repartitioned shuffle vs
-        // DuckDB's sequential fold, and the 1e-6 update rounding alone
-        // only absorbs ulp noise probabilistically (an update landing
-        // within ~1e-14 of a .5e-6 boundary could diverge); the oracle
-        // (sqlLogisticChain) applies the same round(sum, 9)
-        val g = base.select((e / col("n")).as("g"), col("bs"))
-          .select(col("g"), explode(col("bs")).as("b"))
-          .groupBy(col("b")).agg(sum(col("g")).as("gs"))
-          .collect()
-          .map(r => r.getLong(0) -> roundHalfUp(r.getDouble(1), 9)).toMap
-        w = Array.tabulate(buckets)(i =>
-          roundHalfUp(w(i) - lr * g.getOrElse(i.toLong, 0.0) / nDocs,
-            roundTo))
-      }
-      w
-    } finally base.unpersist()
-  }
-
-  /** Deterministic MINI-BATCH SGD tier over [[trainLogistic]]'s model
-    * (r15, t37 — full-batch GD at a handful of steps is fine for
-    * distillation demos; mini-batch is what the 100 TB recipe runs):
-    * batch membership is the portable charFold of the doc id mod
-    * `batches` (the same engine-replayable determinism trick as the
-    * Gumbel sampler), epochs sweep the batches IN ORDER, and each step
-    * is one map-combinable ≤ B-row gradient aggregate over ONLY that
-    * batch's rows — same replay contract as the full-batch trainer
-    * (rounded gradient sums, rounded updates; the oracle chain is the
-    * shared [[graft.Queries]] generator with `batches` > 1), updates
-    * normalized by the BATCH size. `batches = 1` reproduces
-    * [[trainLogistic]] with `steps = epochs` bit for bit (pinned).
-    * Refuses an empty batch honestly (the trajectory would diverge
-    * between engines on skip-vs-update semantics): lower `batches`.
-    *
-    * Scale shape: features persist once; each epoch scans the corpus
-    * once ACROSS its batches (each step's scan-side filter prunes to
-    * the batch), driver state stays ≤ B + `batches` rows. */
-  def trainLogisticSgd(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, label: Column, buckets: Int = 64, epochs: Int = 1,
-      batches: Int = 4, lr: Double = 128.0,
-      roundTo: Int = 6): Array[Double] = {
-    require(buckets > 0, s"trainLogisticSgd: need buckets > 0, got $buckets")
-    require(epochs >= 0, s"trainLogisticSgd: need epochs >= 0, got $epochs")
-    require(batches > 0, s"trainLogisticSgd: need batches > 0, got $batches")
-    require(lr > 0, s"trainLogisticSgd: need lr > 0, got $lr")
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
-    val base = df
-      .select(label.cast("double").as("y"), bucketArr.as("bs"),
-        pmod(PortableHash.charFold(col(idCol).cast("string")),
-          lit(batches.toLong)).as("bt"))
-      .withColumn("n", size(col("bs")).cast("double"))
-      // corpus-size-derived fan-out (see [[featurePartitions]])
-      .repartition(featurePartitions(df, df.count()))
-      .persist()
-    try {
-      val bn = base.groupBy("bt").agg(count(lit(1)).as("c")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1).toDouble).toMap
-      require(bn.values.sum > 0, "trainLogisticSgd: empty corpus")
-      require(bn.size == batches,
-        s"trainLogisticSgd: only ${bn.size} of $batches batches are " +
-          "non-empty — lower `batches`")
-      var w = Array.fill(buckets)(0.0)
-      for (_ <- 0 until epochs; b <- 0 until batches) {
-        val nB = bn(b.toLong)
-        // typed array literal, not B inlined constants — step-invariant
-        // codegen source (see trainLogistic); value-identical
-        val wLit = typedLit(w.toSeq)
-        val dot = graft.plans.NativeExpressions.bucket_gather_sum(
-          col("bs"), wLit)
-        val z = when(col("n") > 0, dot / col("n")).otherwise(lit(0.0))
-        val e = lit(1.0) / (lit(1.0) + exp(-z)) - col("y")
-        // same two-step select as trainLogistic: pin the err expression
-        // below the Generate (once per document, not per token)
-        val g = base.filter(col("bt") === b)
-          .select((e / col("n")).as("g"), col("bs"))
-          .select(col("g"), explode(col("bs")).as("b"))
-          .groupBy(col("b")).agg(sum(col("g")).as("gs"))
-          .collect()
-          .map(r => r.getLong(0) -> roundHalfUp(r.getDouble(1), 9)).toMap
-        w = Array.tabulate(buckets)(i =>
-          roundHalfUp(w(i) - lr * g.getOrElse(i.toLong, 0.0) / nB,
-            roundTo))
-      }
-      w
-    } finally base.unpersist()
-  }
+      lr: Double = 128.0, roundTo: Int = 6,
+      batches: Int = 1): Array[Double] =
+    logisticCore("trainLogistic", df, idCol, textCol, Seq(label), buckets,
+      steps, batches, lr, roundTo).head
 
   /** Mean log-loss of a (weights, bias) model over the corpus — the
     * trainer's objective, exposed so a property test can pin the
@@ -1510,9 +1316,7 @@ object TextAnalysis {
       textCol: String, label: Column, weights: Array[Double],
       bias: Double = 0.0): Double = {
     val buckets = weights.length
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
+    val bucketArr = tokenBuckets(col(textCol), buckets)
     val wLit = array(weights.map(lit): _*)
     val n = size(bucketArr).cast("double")
     val dot = graft.plans.NativeExpressions.bucket_gather_sum(
@@ -1538,76 +1342,118 @@ object TextAnalysis {
   }
 
   /** One-vs-rest [[trainLogistic]] for K labels SHARING the feature
-    * pass (r14, t34): per step ONE exploded (label, bucket, err/n)
-    * aggregate computes every model's full-batch gradient together —
-    * ≤ K·B driver rows instead of K separate jobs per step (the
-    * trajectory is IDENTICAL to K independent trainLogistic runs: each
-    * label's error column uses its own weights, so the SQL oracle can
-    * still replay the chains independently). Returns label → weights,
-    * in input order. */
+    * pass (r14, t34): per step ONE exploded (bucket, K err/n) aggregate
+    * computes every model's full-batch gradient together — ≤ B driver
+    * rows of K sums instead of K separate jobs per step (the trajectory
+    * is IDENTICAL to K independent trainLogistic runs: each label's
+    * error column uses its own weights, so the SQL oracle can still
+    * replay the chains independently). Returns label → weights, in
+    * input order. */
   def trainLogisticMulti(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, labels: Seq[(String, Column)], buckets: Int = 64,
       steps: Int = 3, lr: Double = 128.0,
-      roundTo: Int = 6): Seq[(String, Array[Double])] = {
-    require(labels.nonEmpty, "trainLogisticMulti: need at least one label")
-    require(buckets > 0 && steps >= 0 && lr > 0,
-      s"trainLogisticMulti: bad buckets=$buckets steps=$steps lr=$lr")
+      roundTo: Int = 6): Seq[(String, Array[Double])] =
+    labels.map(_._1).zip(logisticCore("trainLogisticMulti", df, idCol,
+      textCol, labels.map(_._2), buckets, steps, 1, lr, roundTo))
+
+  /** The one step loop behind [[trainLogistic]] and
+    * [[trainLogisticMulti]]: K labels share one persisted feature base,
+    * and each update is one token-exploded aggregate with K gradient
+    * sums over one batch. Jobs: a corpus count, a batch-size aggregate
+    * when `batches` > 1, then one gradient aggregate per update. */
+  private def logisticCore(who: String, df: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, labels: Seq[Column], buckets: Int,
+      steps: Int, batches: Int, lr: Double,
+      roundTo: Int): Seq[Array[Double]] = {
+    require(labels.nonEmpty, s"$who: need at least one label")
+    require(buckets > 0, s"$who: need buckets > 0, got $buckets")
+    require(steps >= 0, s"$who: need steps >= 0, got $steps")
+    require(batches > 0, s"$who: need batches > 0, got $batches")
+    require(lr > 0, s"$who: need lr > 0, got $lr")
     val k = labels.size
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
+    val bucketArr = tokenBuckets(col(textCol), buckets)
+    // corpus size FIRST (column-pruned count — the projections and the
+    // labels are dead code under count(1)), so the feature-pass fan-out
+    // can be derived from it instead of the cluster constant
     val nDocsL = df.count()
-    require(nDocsL > 0, "trainLogisticMulti: empty corpus")
+    require(nDocsL > 0, s"$who: empty corpus")
+    val batchOf =
+      if (batches == 1) Nil
+      else Seq(pmod(PortableHash.charFold(col(idCol).cast("string")),
+        lit(batches.toLong)).as("bt"))
     val base = df
-      .select(array(labels.map(_._2.cast("double")): _*).as("ys"),
-        bucketArr.as("bs"))
+      .select(Seq(array(labels.map(_.cast("double")): _*).as("ys"),
+        bucketArr.as("bs")) ++ batchOf: _*)
       .withColumn("n", size(col("bs")).cast("double"))
-      // same single-file-corpus parallelism guard as [[trainLogistic]],
-      // corpus-size-derived (see [[featurePartitions]])
+      // spread the per-document fold work across the cluster once: a
+      // single-file corpus otherwise trains on ONE task (the gradient
+      // math is per-row CPU, not IO — measured 8x wall at sf1);
+      // partition count derived from the corpus size ([[featurePartitions]])
       .repartition(featurePartitions(df, nDocsL))
-      .persist()
+      .persist() // scanned once per update; feature arrays, not raw text
     try {
-      val nDocs = nDocsL.toDouble
+      val batchSize: Map[Long, Double] =
+        if (batches == 1) Map(0L -> nDocsL.toDouble)
+        else {
+          val bn = base.groupBy("bt").agg(count(lit(1)).as("c")).collect()
+            .map(r => r.getLong(0) -> r.getLong(1).toDouble).toMap
+          require(bn.size == batches,
+            s"$who: only ${bn.size} of $batches batches are " +
+              "non-empty — lower `batches`")
+          bn
+        }
       val w = Array.fill(k, buckets)(0.0)
-      for (_ <- 0 until steps) {
-        // per label: e_l = sigmoid(dot_l / n) − y_l, over its OWN weights
+      for (_ <- 0 until steps; b <- 0 until batches) {
+        // per label: e_l = sigmoid(dot_l / n) − y_l, over its OWN weights.
+        // ONE ArrayType literal per label (reference-slot codegen), not B
+        // inlined double constants: inlined constants change the
+        // generated source every step, so each step paid a fresh Janino
+        // compile with every concurrent task stalled on the compile lock
+        // (r15 — profiled as ~150 ms × cores of fake executorRunTime per
+        // step); a typed literal rides the references array, the source
+        // is step-invariant, and the codegen cache hits from step 2 on.
+        // Same doubles, same fold order — value-identical.
         val es = (0 until k).map { li =>
-          // typed array literal, not B inlined constants — step-invariant
-          // codegen source (see trainLogistic); value-identical
-          val wLit = typedLit(w(li).toSeq)
           val dot = graft.plans.NativeExpressions.bucket_gather_sum(
-            col("bs"), wLit)
+            col("bs"), typedLit(w(li).toSeq))
           val z = when(col("n") > 0, dot / col("n")).otherwise(lit(0.0))
-          lit(1.0) / (lit(1.0) + exp(-z)) -
-            element_at(col("ys"), li + 1)
+          lit(1.0) / (lit(1.0) + exp(-z)) - element_at(col("ys"), li + 1)
         }
         // one token-exploded pass with K sums — ≤ B driver rows of K
-        // columns each. The K err/n values ride the Generate as ONE
-        // pass-through array computed per DOCUMENT; referencing the
-        // error expressions inside a per-token lambda re-ran their
-        // O(tokens) interpreted dot-folds per TOKEN — O(K·tokens²) per
-        // doc per step, first measured as a wedged sf1 bench pass —
-        // and exploding (label × token) rows cost K× the shuffle input
+        // columns each, map-side combined. The K err/n values ride the
+        // Generate as ONE pass-through array computed per DOCUMENT;
+        // referencing the error expressions inside a per-token lambda
+        // re-ran their O(tokens) dot-folds per TOKEN — O(K·tokens²) per
+        // doc per step, first measured as a wedged sf1 bench pass — and
+        // exploding (label × token) rows cost K× the shuffle input.
+        // Two-step select: a single select-with-explode is analyzed as
+        // Project ABOVE the Generate, i.e. the gathers would re-evaluate
+        // per TOKEN — the separate projection pins them below it.
         val gArr = array(es.map(_ / col("n")): _*)
         val sums = (0 until k).map(li =>
           sum(element_at(col("ga"), li + 1)).as(s"g$li"))
-        // two-step select — same per-document pinning as trainLogistic:
-        // analyzed as one select, the K gathers would run per TOKEN
-        val g = base
+        val rows = if (batches == 1) base else base.filter(col("bt") === b)
+        // the collected per-bucket sums are ROUNDED (9 decimals) before
+        // the update so the compared quantity is order-INSENSITIVE —
+        // partial-sum order varies across the repartitioned shuffle vs
+        // DuckDB's sequential fold, and the 1e-6 update rounding alone
+        // only absorbs ulp noise probabilistically (an update landing
+        // within ~1e-14 of a .5e-6 boundary could diverge); the oracle
+        // (sqlLogisticChain) applies the same round(sum, 9)
+        val g = rows
           .select(gArr.as("ga"), col("bs"))
           .select(col("ga"), explode(col("bs")).as("b"))
           .groupBy(col("b")).agg(sums.head, sums.tail: _*)
           .collect()
-          // same order-insensitive round(sum, 9) as [[trainLogistic]]
           .flatMap(r => (0 until k).map(li =>
-            (li, r.getLong(0)) ->
-              roundHalfUp(r.getDouble(li + 1), 9))).toMap
-        for (li <- 0 until k; b <- 0 until buckets)
-          w(li)(b) = roundHalfUp(
-            w(li)(b) - lr * g.getOrElse((li, b.toLong), 0.0) / nDocs,
-            roundTo)
+            (li, r.getLong(0)) -> roundHalfUp(r.getDouble(li + 1), 9)))
+          .toMap
+        val nB = batchSize(b.toLong)
+        for (li <- 0 until k; i <- 0 until buckets)
+          w(li)(i) = roundHalfUp(
+            w(li)(i) - lr * g.getOrElse((li, i.toLong), 0.0) / nB, roundTo)
       }
-      labels.map(_._1).zip(w.map(_.clone())).toSeq
+      w.toSeq
     } finally base.unpersist()
   }
 
@@ -1640,9 +1486,7 @@ object TextAnalysis {
     val lm = new graft.plans.LinearModels(
       sorted.map(_._1).toArray, sorted.map(_._2.clone()).toArray)
     val bc = df.sparkSession.sparkContext.broadcast(lm)
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
+    val bucketArr = tokenBuckets(col(textCol), buckets)
     df.select(col(idCol),
         graft.plans.NativeExpressions.lang_argmax_bc(bucketArr, bc,
           roundTo).as("__p"))
@@ -1663,9 +1507,7 @@ object TextAnalysis {
     val buckets = models.head._2.length
     require(models.forall(_._2.length == buckets),
       "langIdTrained: all models must share one bucket space")
-    val toks = filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)
-    val bucketArr = graft.plans.NativeExpressions.hash_buckets(
-      toks, buckets.toLong, PortableHash.Mult, PortableHash.Mod)
+    val bucketArr = tokenBuckets(col(textCol), buckets)
     val n = size(bucketArr).cast("double")
     val scored = models.sortBy(_._1).map { case (l, w) =>
       val wLit = array(w.map(lit): _*)
@@ -1775,18 +1617,6 @@ object TextAnalysis {
         round(rec, roundTo).as("recall"),
         round(f1, roundTo).as("f1"))
       .orderBy("threshold")
-  }
-
-  /** Deterministic low-quality fixture for the trained-classifier tier
-    * (t33/p9): every 7th document gains a 20×-repeated spam/boilerplate
-    * phrase — the dominated-by-boilerplate shape real quality
-    * classifiers are trained to catch (and exactly what the Gopher
-    * repetition rules flag, making them usable as weak labels). A plain
-    * concat both engines compute identically. */
-  def spamFixture(text: Column, id: Column): Column = {
-    val phrase = " click here buy now subscribe free winner prize offer"
-    when(pmod(id, lit(7L)) === 0, concat(text, lit(phrase * 20)))
-      .otherwise(text)
   }
 
   /** DSIR importance RESAMPLING — the consumer of [[dsirWeights]]/

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Encode-time-flat-in-merges evidence for the byte-level BPE tier
-  * (r12): times bpeEncodeBytesFast over the sf0.1 mixed-script fixture
+  * (r12): times bpeEncodeFast over the sf0.1 mixed-script fixture
   * with the shipped 1,000-merge model vs its 50-merge prefix (a prefix
   * of a trained table is itself a valid trained table). The broadcast
   * lowest-rank-first loop's per-token cost is O(word_len ·
@@ -23,7 +23,7 @@ object BpeBytesFlatMain {
       finally in.close()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), graft.operators.TextAnalysis.pairEnrichBytes(
-        graft.operators.TextAnalysis.mixedScriptFixture(
+        Fixtures.mixedScriptFixture(
           col("text"), col("lang"))).as("text"))
       .persist()
     docs.count()
@@ -32,8 +32,8 @@ object BpeBytesFlatMain {
         spark, all.take(nMerges))
       def once(): Double = {
         val t0 = System.nanoTime()
-        docs.select(sum(graft.operators.TextAnalysis
-          .bpePieceCountBytesFast(col("text"), model))).head()
+        docs.select(sum(size(graft.operators.TextAnalysis
+          .bpeEncodeFast(col("text"), model)))).head()
         (System.nanoTime() - t0) / 1e9
       }
       once() // warmup (codegen + broadcast)
@@ -54,7 +54,7 @@ object BpeBytesFlatMain {
     val docs2 = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), graft.operators.TextAnalysis.pairEnrichBytes(
         graft.operators.TextAnalysis.pairEnrichBytes(
-          graft.operators.TextAnalysis.mixedScriptFixture(
+          Fixtures.mixedScriptFixture(
             col("text"), col("lang")))).as("text"))
       .persist()
     docs2.count()
@@ -63,8 +63,8 @@ object BpeBytesFlatMain {
         spark, all32.take(nMerges))
       def once(): Double = {
         val t0 = System.nanoTime()
-        docs2.select(sum(graft.operators.TextAnalysis
-          .bpePieceCountBytesFast(col("text"), model))).head()
+        docs2.select(sum(size(graft.operators.TextAnalysis
+          .bpeEncodeFast(col("text"), model)))).head()
         (System.nanoTime() - t0) / 1e9
       }
       once() // warmup (codegen + broadcast)

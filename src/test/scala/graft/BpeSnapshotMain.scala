@@ -45,11 +45,11 @@ object BpeSnapshotMain {
       if (byte2Mode)
         raw.select(graft.operators.TextAnalysis.pairEnrichBytes(
           graft.operators.TextAnalysis.pairEnrichBytes(
-            graft.operators.TextAnalysis.mixedScriptFixture(
+            Fixtures.mixedScriptFixture(
               col("text"), col("lang")))).as("text"))
       else if (byteMode)
         raw.select(graft.operators.TextAnalysis.pairEnrichBytes(
-          graft.operators.TextAnalysis.mixedScriptFixture(
+          Fixtures.mixedScriptFixture(
             col("text"), col("lang"))).as("text"))
       else if (pairMode)
         base.select(graft.operators.TextAnalysis.pairEnrich(col("text"))

@@ -1298,6 +1298,40 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
     assert(math.abs(ku - m4s / (m2s * m2s)) < 1e-6 * math.max(1, ku))
   }
 
+  test("a digit-led word is one name; a number run into a non-word character is refused") {
+    import ChSql.{TEnd, TId, TNum}
+    assert(ChSql.lexPos("1 1.5 1e5 1.5e-3 0x1F 0b101").map(_._1) ==
+      Vector(TNum("1"), TNum("1.5"), TNum("1e5"), TNum("1.5e-3"), TNum("31"),
+        TNum("5"), TEnd))
+    assert(ChSql.lexPos("1abc 1each 0x1Fg db.1t t.1").map(_._1) ==
+      Vector(TId("1abc"), TId("1each"), TId("0x1Fg"), TId("db"), ChSql.TP("."),
+        TId("1t"), TId("t"), ChSql.TP("."), TNum("1"), TEnd))
+    val t = Seq((7L, 8L)).toDF("1abc", "1each")
+    val df = ChSql.sql(spark, "SELECT 1abc, 1each FROM t")(_ => t)
+    assert(df.columns.toSeq == Seq("1abc", "1each"))
+    assert(df.collect().map(_.toSeq).toSeq == Seq(Seq(7L, 8L)))
+    for (bad <- Seq("SELECT 1.5abc FROM t", "SELECT 1e-5x FROM t")) {
+      val e = intercept[IllegalArgumentException](ChSql.sql(spark, bad)(_ => t))
+      assert(e.getMessage.startsWith("ChSql: malformed number"), e.getMessage)
+    }
+  }
+
+  test("an empty quoted name is refused, never looked up as a table") {
+    val asked = scala.collection.mutable.Buffer.empty[String]
+    def q(s: String) = ChSql.sql(spark, s) { n => asked += n; orders }
+    for (s <- Seq("SELECT * FROM \"\"", "SELECT * FROM ``", "SELECT `` FROM orders",
+        "SELECT okey AS \"\" FROM orders", "SELECT o.`` FROM orders AS o")) {
+      val e = intercept[IllegalArgumentException](q(s))
+      assert(e.getMessage.contains("ChSql") &&
+        e.getMessage.contains("empty quoted"), s"$s: ${e.getMessage}")
+    }
+    assert(!asked.contains(""))
+    val e = intercept[IllegalArgumentException](ChSql.statement(spark,
+      "CREATE TABLE `` (a Int64) ENGINE = Memory")(resolve))
+    assert(e.getMessage.startsWith("ChSql:") &&
+      e.getMessage.contains("empty quoted"), e.getMessage)
+  }
+
   test("FunctionCatalog is pinned to the dispatcher source (no drift)") {
     // Re-extract the `case "..."` arms of funcCall + windowFn from the
     // ChSql source and assert set equality with the published catalog —
@@ -1319,7 +1353,12 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
       (extract("// ---- aggregates ----", "ChSql: unknown function") ++
         extract("private def windowFn", "case _ => funcCall")).toSet
     val catalog = graft.chsql.FunctionCatalog.names.toSet
-    assert(graft.chsql.FunctionCatalog.names.distinct.size == catalog.size)
+    val names = graft.chsql.FunctionCatalog.names
+    assert(names.size == names.distinct.size,
+      s"FunctionCatalog lists a name twice: ${names.diff(names.distinct)}")
+    // a duplicate row would surface twice in SHOW FUNCTIONS
+    assert(ChSql.statement(spark, "SHOW FUNCTIONS LIKE 'mapfrom%'")(resolve)
+      ._1.collect().map(_.getString(0)).toSeq == Seq("mapfromarrays"))
     val missing = fromSource -- catalog
     val stale = catalog -- fromSource
     assert(missing.isEmpty && stale.isEmpty,

@@ -1431,6 +1431,27 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     chRun("DROP TABLE ng_t")
   }
 
+  test("a refused rewrite leaves no staging directory behind") {
+    val dbDir = new java.io.File(new java.net.URI(
+      spark.catalog.getDatabase("default").locationUri))
+    def staging(): Set[String] =
+      Option(dbDir.list()).toSeq.flatten.filter(_.startsWith("graft_rw_")).toSet
+    chRun("DROP TABLE IF EXISTS rw_leak_t")
+    chRun("""CREATE TABLE rw_leak_t (k Int64, v Int64)
+      |ENGINE = MergeTree ORDER BY k""".stripMargin)
+    chRun("INSERT INTO rw_leak_t VALUES (1, 10), (2, 20)")
+    val before = staging()
+    val e = intercept[Exception](
+      chRun("ALTER TABLE rw_leak_t UPDATE v = NULL WHERE k = 1"))
+    assert(e.getMessage.contains("non-Nullable"), e.getMessage)
+    assert(staging() == before,
+      s"refused UPDATE left ${(staging() -- before).mkString(", ")}")
+    assert(!spark.catalog.listTables("default").collect()
+      .exists(_.name.startsWith("graft_rw_")))
+    assert(chRun("SELECT v FROM rw_leak_t WHERE k = 1").head.getLong(0) == 10L)
+    chRun("DROP TABLE rw_leak_t")
+  }
+
   test("catalog CTAS records the declared-Nullable set: short INSERTs " +
       "fill type defaults even after a rewrite mutation") {
     chRun("DROP TABLE IF EXISTS cta_t")

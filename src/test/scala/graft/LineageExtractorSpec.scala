@@ -296,4 +296,18 @@ class LineageExtractorSpec extends AnyFunSuite with SparkSuite {
     assert(LineageExtractor.extractExact(ddl, Some("test")) ==
       (Nil, "error", Some("LineageParseException: Unterminated /* comment")))
   }
+
+  test("a digit-led name is one name: FROM db.1t reads db.1t") {
+    assert(t("CREATE VIEW test.v AS SELECT * FROM db.1t") == Seq("db.1t"))
+    assert(t("CREATE VIEW test.v AS SELECT * FROM 1each JOIN db.2x_y USING k") ==
+      Seq("db.2x_y", "test.1each"))
+    assert(LineageExtractor.tablesExact("CREATE VIEW test.v AS SELECT * FROM db.1t",
+      Some("test")) == (Seq("db.1t"), "exact"))
+  }
+
+  test("parity decision: an empty quoted name falls back to the heuristic") {
+    for (q <- Seq("\"\"", "``"))
+      assert(LineageExtractor.tablesExact(s"CREATE VIEW test.v AS SELECT * FROM $q",
+        Some("test")) == (Seq("test."), "heuristic"), q)
+  }
 }

@@ -294,17 +294,17 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("capped presets default the hot-bucket guard on (both LSH paths)") {
     import spark.implicits._
     // adversarial: everyone shares one band bucket / one hyperplane
-    // bucket; the capped presets must drop it WITHOUT the caller passing
-    // a cap — the guard is no longer opt-in knowledge
+    // bucket; the default cap must drop it
     val n = graft.operators.Dedup.DefaultMaxBucketSize + 100
     val bands = (0 until n).map(i => (i.toLong, 0, 7L))
       .toDF("doc_id", "band_id", "band_hash")
-    assert(graft.operators.Dedup
-      .lshCandidatePairsCapped(bands, "doc_id").count() == 0)
+    assert(graft.operators.Dedup.lshCandidatePairs(bands, "doc_id",
+      graft.operators.Dedup.DefaultMaxBucketSize).count() == 0)
     // small buckets keep their pairs under the default cap
     val mixedBands = bands.unionByName(
       Seq((5000L, 1, 9L), (5001L, 1, 9L)).toDF("doc_id", "band_id", "band_hash"))
-    assert(graft.operators.Dedup.lshCandidatePairsCapped(mixedBands, "doc_id")
+    assert(graft.operators.Dedup.lshCandidatePairs(mixedBands, "doc_id",
+        graft.operators.Dedup.DefaultMaxBucketSize)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((5000L, 5001L)))
     val degenerate = (0 until n).map(i => (i.toLong, Array(1.0f, 2.0f, 3.0f)))
@@ -338,7 +338,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     val sigs = docs.select(col("doc_id"),
       Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 3), 32).as("sig"))
     val bands = Dedup.lshBands(sigs, "doc_id", "sig", bands = 8, rowsPerBand = 4)
-    val capped = Dedup.lshCandidatePairsCapped(bands, "doc_id",
+    val capped = Dedup.lshCandidatePairs(bands, "doc_id",
         maxBucketSize = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     // the hot bucket is dropped (no boilerplate pairs survive), the true
@@ -1623,7 +1623,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       (f"${i % 256}%02x", f"${(i * 11 + 5) % 256}%02x"))
     val model = graft.operators.TextAnalysis.bpeModelBytes(spark, merges)
     val counted = docs.select(col("doc_id"),
-      graft.operators.TextAnalysis.mixedScriptFixture(
+      Fixtures.mixedScriptFixture(
         col("text"), col("lang")).as("text"))
       .filter(graft.operators.TextAnalysis.tokenCount(col("text")) >= 20)
       .select(col("doc_id"),
@@ -1668,7 +1668,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       (f"${i % 256}%02x", f"${(i * 7 + 3) % 256}%02x"))
     val model = graft.operators.TextAnalysis.bpeModelBytes(spark, merges)
     val out = docs.select(col("doc_id"),
-      graft.operators.TextAnalysis.bpeEncodeBytesFast(col("text"), model)
+      graft.operators.TextAnalysis.bpeEncodeFast(col("text"), model)
         .as("pieces"))
     assert(shuffleCount(out) == 0, "byte-level encode must not shuffle")
     assert(out.queryExecution.executedPlan.collect {

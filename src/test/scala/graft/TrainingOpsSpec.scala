@@ -266,8 +266,8 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       assert((rows(id).dhash >>> 16) == (rows(id - 1).dhash >>> 16),
         s"near-copy $id moved bits outside band 0")
     }
-    val pairs = Multimodal.imageNearDuplicatesCapped(hashes.toDF(),
-        "doc_id")
+    val pairs = Multimodal.imageNearDuplicates(hashes.toDF(),
+        "doc_id", maxBucketSize = Dedup.DefaultMaxBucketSize)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (id <- 4L until 50L by 5L)
       assert(pairs.contains((id - 1, id)), s"planted pair ${id - 1},$id missing")
@@ -1178,20 +1178,20 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val lab = col("doc_id") % 3 === 0
     val full = TextAnalysis.trainLogistic(corpus, "doc_id", "text", lab,
       buckets = 16, steps = 3, lr = 128.0)
-    val sgd1 = TextAnalysis.trainLogisticSgd(corpus, "doc_id", "text",
-      lab, buckets = 16, epochs = 3, batches = 1, lr = 128.0)
+    val sgd1 = TextAnalysis.trainLogistic(corpus, "doc_id", "text",
+      lab, buckets = 16, steps = 3, batches = 1, lr = 128.0)
     assert(sgd1.toSeq == full.toSeq,
       "batches=1 SGD must reproduce the full-batch trajectory")
-    val a = TextAnalysis.trainLogisticSgd(corpus, "doc_id", "text", lab,
-      buckets = 16, epochs = 2, batches = 4, lr = 128.0)
-    val b = TextAnalysis.trainLogisticSgd(corpus, "doc_id", "text", lab,
-      buckets = 16, epochs = 2, batches = 4, lr = 128.0)
+    val a = TextAnalysis.trainLogistic(corpus, "doc_id", "text", lab,
+      buckets = 16, steps = 2, batches = 4, lr = 128.0)
+    val b = TextAnalysis.trainLogistic(corpus, "doc_id", "text", lab,
+      buckets = 16, steps = 2, batches = 4, lr = 128.0)
     assert(a.toSeq == b.toSeq, "SGD trajectory must be deterministic")
     assert(a.toSeq != full.toSeq,
       "4-batch SGD should genuinely differ from full-batch GD")
     intercept[IllegalArgumentException] { // 3 docs cannot fill 64 batches
-      TextAnalysis.trainLogisticSgd(corpus.filter(col("doc_id") < 3),
-        "doc_id", "text", lab, buckets = 16, epochs = 1, batches = 64)
+      TextAnalysis.trainLogistic(corpus.filter(col("doc_id") < 3),
+        "doc_id", "text", lab, buckets = 16, steps = 1, batches = 64)
     }
   }
 
@@ -1221,7 +1221,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       "ties break to the alphabetically smallest language") {
     val fx = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("lang"),
-        TextAnalysis.mixedScriptFixture(col("text"), col("lang")).as("text"))
+        Fixtures.mixedScriptFixture(col("text"), col("lang")).as("text"))
       .persist()
     val langs = Seq("de", "en", "es", "fr", "zh")
     val models = langs.map(l => l -> TextAnalysis.trainLogistic(fx,
@@ -1518,7 +1518,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
       .select(col("doc_id"),
         TextAnalysis.bpeEncode(col("text"), merges).as("p"),
-        TextAnalysis.bpePieceCount(col("text"), merges).as("n"))
+        size(TextAnalysis.bpeEncode(col("text"), merges)).as("n"))
       .collect().map(r => r.getLong(0) ->
         ((r.getSeq[String](1), r.getInt(2)))).toMap
     // lowest: l o w e s t</w> -> es -> est -> est</w> -> lo
@@ -1614,8 +1614,8 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     both.foreach(r => assert(again(r.getLong(0)) == r.getSeq[String](2)))
     // piece counts agree between tiers
     val counts = probe.select(
-        TextAnalysis.bpePieceCount(col("text"), merges).as("a"),
-        TextAnalysis.bpePieceCountFast(col("text"), model).as("b"))
+        size(TextAnalysis.bpeEncode(col("text"), merges)).as("a"),
+        size(TextAnalysis.bpeEncodeFast(col("text"), model)).as("b"))
       .collect()
     counts.foreach(r => assert(r.getInt(0) == r.getInt(1)))
     // left-to-right non-overlap inside the chosen merge: (a,a) on "aaaa"
@@ -1645,8 +1645,8 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     // "ab," pre-tokenizes to "ab" + ","; "中" is 3 bytes e4 b8 ad — all
     // survive as base hex symbols (nothing is out-of-alphabet)
     val got = Seq((0L, "éé ab, 中")).toDF("doc_id", "text")
-      .select(TextAnalysis.bpeEncodeBytesFast(col("text"), model).as("p"),
-        TextAnalysis.bpePieceCountBytesFast(col("text"), model).as("n"))
+      .select(TextAnalysis.bpeEncodeFast(col("text"), model).as("p"),
+        size(TextAnalysis.bpeEncodeFast(col("text"), model)).as("n"))
       .head()
     assert(got.getSeq[String](0) == Seq("c3a9c3a9</w>",
       "61", "62", "</w>", "2c", "</w>", "e4", "b8", "ad", "</w>"),
@@ -1850,7 +1850,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     // coverage keep — checked over the t31b fixture corpus
     val fx = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"),
-        TextAnalysis.repetitionFixture(col("text")).as("text"))
+        Fixtures.repetitionFixture(col("text")).as("text"))
     val strict = TextAnalysis.gopherRepetitionRules(col("text")).toMap
     val both = fx.select(col("doc_id"),
         cov.getField("cov5gram_frac").as("c5"),
@@ -1974,10 +1974,10 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .filter(col("doc_id") < 40)
       .select(col("doc_id"),
         TextAnalysis.pairEnrichBytes(TextAnalysis.pairEnrichBytes(
-          TextAnalysis.mixedScriptFixture(col("text"), col("lang"))))
+          Fixtures.mixedScriptFixture(col("text"), col("lang"))))
           .as("text"))
     val got = docs.select(col("doc_id"),
-        TextAnalysis.bpeEncodeBytesFast(col("text"), model).as("pieces"),
+        TextAnalysis.bpeEncodeFast(col("text"), model).as("pieces"),
         TextAnalysis.byteTokens(col("text")).as("toks")).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
@@ -1988,7 +1988,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     // loss-free decode at the production vocabulary
     val rt = docs.select(
       TextAnalysis.bpeDecodeBytes(
-        TextAnalysis.bpeEncodeBytesFast(col("text"), model)).as("dec"),
+        TextAnalysis.bpeEncodeFast(col("text"), model)).as("dec"),
       array_join(TextAnalysis.byteTokens(col("text")), " ").as("want"))
       .collect()
     rt.foreach(r => assert(r.getString(0) == r.getString(1),
@@ -1998,9 +1998,9 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
     val h = hand.select(
       TextAnalysis.bpeDecodeBytes(
-        TextAnalysis.bpeEncodeBytesFast(col("text"), model)).as("dec"),
+        TextAnalysis.bpeEncodeFast(col("text"), model)).as("dec"),
       array_join(TextAnalysis.byteTokens(col("text")), " ").as("want"),
-      TextAnalysis.bpeEncodeBytesFast(col("text"), model).as("pieces"),
+      TextAnalysis.bpeEncodeFast(col("text"), model).as("pieces"),
       TextAnalysis.byteTokens(col("text")).as("toks")).head()
     assert(h.getString(0) == h.getString(1))
     assert(h.getSeq[String](2) == h.getSeq[String](3).flatMap(refEncode))
@@ -2017,7 +2017,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
     val uncapped = TextAnalysis.decontaminateFuzzy(corpus, bench,
       "doc_id", "text", jaccardMin = 0.5).collect()
-    val capped = TextAnalysis.decontaminateFuzzyCapped(corpus, bench,
+    val capped = TextAnalysis.decontaminateFuzzy(corpus, bench,
       "doc_id", "text", jaccardMin = 0.5, maxBandSize = 10).collect()
     // uncapped: every boilerplate copy floods in as a (verified) flag
     assert(uncapped.count(_.getLong(1) == 500L) == 60)

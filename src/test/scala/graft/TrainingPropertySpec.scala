@@ -239,7 +239,7 @@ class TrainingPropertySpec extends AnyFunSuite with SparkSuite {
         val model = TextAnalysis.bpeModelBytes(spark, merges)
         val enc = probe.toDF("doc_id", "text")
           .select(col("doc_id"),
-            TextAnalysis.bpeEncodeBytesFast(col("text"), model).as("fast"))
+            TextAnalysis.bpeEncodeFast(col("text"), model).as("fast"))
         val got = enc
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         // full decode round-trip: pieces → text == space-joined tokens
