@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.ListenerBus
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool (r15 optimization round): per-query cost breakdown the bench
@@ -45,6 +46,8 @@ object ProfileQuery {
       }
     })
     Bench.warmUp(spark, sfDir)
+    // the counters are read after each pass; the bus delivers late
+    ListenerBus.drain(spark.sparkContext)
     println(f"${"query"}%-28s pass  build_s  plan_s  exec_s  jobs stages tasks task_cpu_s")
     for (n <- names; p <- 1 to passes) {
       val fn = SparkEntry.queries(n)
@@ -58,6 +61,7 @@ object ProfileQuery {
       val t2 = System.nanoTime()
       qe.toRdd.count()
       val t3 = System.nanoTime()
+      ListenerBus.drain(spark.sparkContext)
       // note: build may itself run jobs (counts/collect-driven queries);
       // those are charged to build_s and included in the job counts.
       println(f"$n%-28s $p%4d  ${(t1 - t0) / 1e9}%7.3f ${(t2 - t1) / 1e9}%7.3f ${(t3 - t2) / 1e9}%7.3f  ${jobs.get}%4d ${stages.get}%6d ${tasks.get}%5d ${taskNanos.get / 1e9}%9.3f")

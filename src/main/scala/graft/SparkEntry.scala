@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{DependencyGraph, LineagePipeline}
+import graft.registry.Registry
 import graft.sources.CatalogSource
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -23,8 +24,8 @@ object SparkEntry {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all
+    Registry.entries.map(e => e.name -> e.build).toMap
 
   def oracleSql: Map[String, String] =
-    Queries.oracles
+    Registry.entries.map(e => e.name -> e.oracle).toMap
 }

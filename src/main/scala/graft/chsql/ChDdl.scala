@@ -2247,7 +2247,8 @@ object ChDdl {
           if (rowsPreserved) affected.map(key).toSet
           else result.select(pcols.map(col): _*)
             .distinct().collect().map(key).toSet
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        // the set value only: getOption would also return the default
+        val prev = spark.conf.getAll.get("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try result.write.mode(SaveMode.Overwrite).insertInto(name)
         finally prev match {

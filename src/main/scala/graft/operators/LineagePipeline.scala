@@ -14,9 +14,10 @@ import graft.sources.CatalogSource
 /** End-to-end dependency analysis: the reference CLI flow
   * (ch_view_dependencies.py:367-395) re-expressed over DataFrames. The
   * per-view N+1 DDL fetch + single-threaded parse loop of the reference
-  * becomes one scan + a parallel UDF: the UDF stage runs per row, in
-  * parallel, with no shuffle, and only its output (view names and dep
-  * arrays, no DDL text — metadata scale) is collected to the driver.
+  * becomes one scan + a UDF: the UDF stage runs per row with no
+  * shuffle, one task per scan split (a single-file snapshot catalog is
+  * one task), and only its output (view names and dep arrays, no DDL
+  * text — metadata scale) is collected to the driver.
   * Every later step, graph and render alike, reads those local rows.
   */
 object LineagePipeline {

@@ -1286,8 +1286,8 @@ object TextAnalysis {
     * (the same engine-replayable determinism trick as the Gumbel
     * sampler), each pass sweeps the batches IN ORDER, each update's
     * gradient covers ONLY that batch's rows and N is the BATCH size
-    * (the oracle chain is the shared [[graft.Queries]] generator with
-    * `batches` > 1). An empty batch is refused (the trajectory would
+    * (the oracle chain is the shared `TFamily.sqlLogisticChain`
+    * generator with `batches` > 1). An empty batch is refused (the trajectory would
     * diverge between engines on skip-vs-update semantics): lower
     * `batches`.
     *

@@ -998,7 +998,7 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("INSERT INTO FUNCTION file(...) writes; FROM file(...) reads it back") {
-    val dir = java.nio.file.Files.createTempDirectory("chsql_ins").toString
+    val dir = tempDir("chsql_ins").toString
     val (st, _) = ChSql.statement(spark,
       s"""INSERT INTO FUNCTION file('$dir/out', 'Parquet')
          |SELECT okey, price FROM orders WHERE price > 100""".stripMargin)(resolve)
@@ -1115,7 +1115,7 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("INTO OUTFILE ... FORMAT writes through the sink and returns rows") {
-    val dir = java.nio.file.Files.createTempDirectory("chsql_out").toString
+    val dir = tempDir("chsql_out").toString
     val r = run(
       s"""SELECT okey, price FROM orders WHERE price > 100
          |ORDER BY okey
@@ -1211,7 +1211,7 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
           |WHERE EXISTS (SELECT 1 FROM custs WHERE nat = 1)
           |  AND price > (SELECT avg(price) FROM orders)
           |ORDER BY okey""".stripMargin)(resolve)
-      org.apache.spark.sql.graftbridge.TestBridge.waitListenerBus(spark)
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"translation launched ${jobs.get()} Spark job(s) — subqueries are eager again")
       // the subplans are INSIDE the outer plan, visible to the optimizer
@@ -1226,7 +1226,7 @@ class ChSqlSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("distributed: translated plan pushes filter to scan on parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("chsql").toString
+    val dir = tempDir("chsql").toString
     orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val df = ChSql.sql(spark, "SELECT okey, price FROM orders WHERE price > 100")(
       n => spark.read.parquet(s"$dir/$n.parquet"))

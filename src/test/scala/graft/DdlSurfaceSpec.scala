@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val loc =
-    java.nio.file.Files.createTempDirectory("graft_ddl").toString
+    tempDir("graft_ddl").toString
 
   test("CREATE DATABASE / TABLE / INSERT / SELECT round-trip") {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ddl LOCATION '$loc/db'")
@@ -49,7 +49,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   test("INTO OUTFILE sinks: parquet, CSVWithNames, JSONEachRow round-trip") {
     import graft.sources.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink").toString
     val df = spark.sql("SELECT id, name FROM graft_ddl.t")
     val n = df.count()
     Sinks.intoOutfile(df, s"$dir/p")
@@ -70,7 +70,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   test("FORMAT family: TabSeparated[WithNames], Native alias, Pretty render") {
     import graft.sources.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = tempDir("graft_fmt").toString
     val df = spark.sql("SELECT id, name FROM graft_ddl.t")
     val n = df.count()
     Sinks.intoOutfile(df, s"$dir/tsv", "TabSeparated")
@@ -94,7 +94,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
   test("ORDER BY (sorted write) and TTL (partition retention) mappings") {
     import graft.sources.Sinks
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+    val dir = tempDir("graft_ttl").toString
     val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .withColumn("dt", date_format(col("o_orderdate"), "yyyy-MM"))
     Sinks.writeSorted(df, s"$dir/orders", Seq("o_custkey", "o_orderdate"),
@@ -217,7 +217,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     import graft.operators.AdminOps
     val (ok, n, err) = AdminOps.checkTable(spark, "/root/testdata/sf0.001/nation.parquet")
     assert(ok && n == 25 && err.isEmpty)
-    val bad = java.nio.file.Files.createTempDirectory("graft_check").toString
+    val bad = tempDir("graft_check").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$bad/part-0.parquet"),
       "this is not parquet".getBytes)
     val (ok2, _, err2) = AdminOps.checkTable(spark, bad)
@@ -227,7 +227,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
   test("CHECK TABLE: healthy file with a map column is not a false corruption") {
     import graft.operators.AdminOps
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_check_map").toString
+    val dir = tempDir("graft_check_map").toString
     spark.range(5)
       .select(col("id"), map(lit("k"), col("id")).as("m"),
         array(map(lit("n"), col("id") * 2)).as("am"))
@@ -238,7 +238,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   test("ATTACH/DETACH: catalog-only registration, data untouched") {
     import graft.operators.AdminOps
-    val dir = java.nio.file.Files.createTempDirectory("graft_attach").toString
+    val dir = tempDir("graft_attach").toString
     spark.range(7).write.mode("overwrite").parquet(dir)
     AdminOps.attachTable(spark, "graft_ddl.attached", dir)
     assert(spark.table("graft_ddl.attached").count() == 7)
@@ -274,7 +274,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
   test("OPTIMIZE TABLE [FINAL]: small-file compaction + version collapse") {
     import graft.operators.AdminOps
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_opt").toString
+    val dir = tempDir("graft_opt").toString
     // a fragmented table: 16 small files, 2 versions per key
     val df = spark.range(100).select(
       (col("id") % 50).as("k"), expr("id div 50").as("ver"), (col("id") * 10).as("v"))
@@ -324,7 +324,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     import graft.sources.Dictionaries
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dict").toString
+    val dir = tempDir("graft_dict").toString
     Seq((10L, "alpha"), (20L, "beta")).toDF("k", "v")
       .write.mode("overwrite").parquet(s"$dir/d")
     Dictionaries.createFromPath("labels", s"$dir/d", "parquet",
@@ -357,7 +357,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     def q(sel: String) =
       ChSql.sql(spark, sel)(spark.table).collect().toSeq.map(_.toSeq)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_rngdict").toString
+    val dir = tempDir("graft_rngdict").toString
     // key 1 has two OVERLAPPING intervals — the pick must be the one with
     // the smaller lower bound (CH default range_lookup_strategy = 'min')
     Seq((1L, "2020-01-01", "2020-06-30", 1.0),
@@ -527,7 +527,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     import graft.chsql.ChSql
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dicttext").toString
+    val dir = tempDir("graft_dicttext").toString
     Seq((10L, "alpha", 1.5), (20L, "beta", 2.5)).toDF("k", "v", "w")
       .write.mode("overwrite").parquet(s"$dir/d.parquet")
     def resolve(n: String) = spark.table(n)
@@ -696,7 +696,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
     run("DROP TABLE det_t")
 
     // dictionary detach/attach rides the registry
-    val dictSrc = java.nio.file.Files.createTempDirectory("graft_dict").toString
+    val dictSrc = tempDir("graft_dict").toString
     spark.range(3).selectExpr("id AS k", "concat('v', id) AS v")
       .write.mode("overwrite").parquet(dictSrc)
     run(s"CREATE DICTIONARY det_d (k UInt64, v String) PRIMARY KEY k " +
@@ -823,7 +823,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
         .head.getString(0)
       assert(msg.contains("metadata only"))
       chRun("ALTER TABLE meta_t COMMENT COLUMN extra 'the new column'")
-      org.apache.spark.sql.graftbridge.TestBridge.waitListenerBus(spark)
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"metadata-only ALTERs launched ${jobs.get()} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -1992,7 +1992,7 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkSuite {
   test("CREATE DICTIONARY accepts a SETTINGS(...) clause (ignored)") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dict_set").toString
+    val dir = tempDir("graft_dict_set").toString
     Seq((1L, "one"), (2L, "two")).toDF("id", "label")
       .write.mode("overwrite").parquet(s"$dir/d")
     chRun("DROP DICTIONARY IF EXISTS dset")

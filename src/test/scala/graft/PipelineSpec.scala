@@ -7,11 +7,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.TestBridge
+import org.apache.spark.sql.graftbridge.ListenerBus
 import graft.model.MermaidOptions
 import graft.operators.{DependencyGraph, LineagePipeline}
 import graft.sources.CatalogSource
@@ -72,7 +71,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     spark.sparkContext.setLocalProperty(tag, "1")
     try {
       val out = body
-      TestBridge.waitListenerBus(spark)
+      ListenerBus.drain(spark.sparkContext)
       (out, jobs.get())
     } finally {
       spark.sparkContext.setLocalProperty(tag, null)
@@ -85,7 +84,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("dependencies parses the catalog in one job; both frames are local rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_catalog")
+    val dir = tempDir("graft_catalog")
     try {
       val path = dir.resolve("catalog.parquet").toString
       catalog.write.parquet(path)
@@ -104,7 +103,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("toMermaid reads the catalog in one job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_catalog")
+    val dir = tempDir("graft_catalog")
     try {
       val path = dir.resolve("catalog.parquet").toString
       catalog.write.parquet(path)
@@ -130,30 +129,12 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(lazyDeps.map(_.getString(0)).take(2) == Seq("a.z", "a-b.c"))
   }
 
-  /** Runs `frames` and asserts it left no persistent RDD, no cached relation
-    * and no conf change behind. */
-  private def assertLeavesNoState(frames: => Seq[DataFrame]): Unit = {
-    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val cacheEmptyBefore = cache.isEmpty
-    val confBefore = spark.conf.getAll
-    for (df <- frames) {
-      df.collect()
-      assert(df.queryExecution.withCachedData.collectFirst {
-        case r: InMemoryRelation => r }.isEmpty)
-    }
-    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
-    assert(cache.isEmpty == cacheEmptyBefore)
-    assert(spark.conf.getAll == confBefore)
-  }
-
   test("dependencies, toMermaid and the m3-m7 registry entries leave no state behind") {
     assertLeavesNoState {
       val (deps, errs) = LineagePipeline.dependencies(catalog)
       LineagePipeline.toMermaid(catalog)
       Seq(deps, errs) ++ Seq("m3_lineage_edges", "m4_fanout", "m5_isolated",
-        "m6_closure", "m7_refresh_levels").map(Queries.all(_)(spark, ""))
+        "m6_closure", "m7_refresh_levels").map(SparkEntry.queries(_)(spark, ""))
     }
   }
 

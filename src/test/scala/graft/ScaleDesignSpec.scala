@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * plan SHAPE, which is scale-invariant.) */
 class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+  private lazy val wh = tempDir("graft_wh").toString
 
   // AQE/broadcast knobs are set on this spec's child session: builder
   // configs would be silently ignored by getOrCreate
@@ -45,7 +45,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     spark.sparkContext.setLocalProperty(tag, "1")
     val footer = try {
       val out = paths.map(org.apache.spark.sql.graftbridge.FooterSchema.read(spark, _))
-      org.apache.spark.sql.graftbridge.TestBridge.waitListenerBus(spark)
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
       out
     } finally {
       spark.sparkContext.setLocalProperty(tag, null)
@@ -83,7 +83,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("partitioned layout prunes partitions at the source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     spark.read.parquet(s"$sf/orders.parquet")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.partitionBy("o_year").mode("overwrite").parquet(dir)
@@ -144,7 +144,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // ch1 (CH text) has to look like the plan a hand-authored DataFrame
     // chain would get: filter pushed into the scan, pruned read schema,
     // partial+final aggregation, nothing extra
-    val df = Queries.all("ch1_sql_agg")(spark, sf)
+    val df = SparkEntry.queries("ch1_sql_agg")(spark, sf)
     val plan = df.queryExecution.executedPlan
     val scans = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
@@ -161,7 +161,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("CH-SQL new clauses keep scale-safe shapes: rollup expands, ties avoid windows, sample prunes") {
     // ROLLUP via text lowers onto Expand + partial/final aggregation —
     // the same one-shuffle shape as the hand-built q11
-    val rollup = Queries.all("ch19_sql_rollup")(spark, sf)
+    val rollup = SparkEntry.queries("ch19_sql_rollup")(spark, sf)
     val rplan = rollup.queryExecution.executedPlan
     assert(rplan.collect {
       case e: org.apache.spark.sql.execution.ExpandExec => e }.nonEmpty)
@@ -171,13 +171,13 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
     // LIMIT WITH TIES via text uses the two-pass cutoff — a global
     // window here would single-partition 100 TB
-    val ties = Queries.all("ch22_sql_ties")(spark, sf)
+    val ties = SparkEntry.queries("ch22_sql_ties")(spark, sf)
     assert(ties.queryExecution.executedPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty)
 
     // SAMPLE via text is a deterministic key-bucket filter; the scan
     // reads only the key and the aggregated column
-    val sample = Queries.all("ch23_sql_sample")(spark, sf)
+    val sample = SparkEntry.queries("ch23_sql_sample")(spark, sf)
     val scans = sample.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans.nonEmpty)
@@ -189,7 +189,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // the typed imperative aggregate gives per-key sums in a single
     // map-side-combinable pass — the q89 two-level groupBy costs a second
     // shuffle at 100 TB
-    val df = Queries.all("ch31_sql_summap")(spark, sf)
+    val df = SparkEntry.queries("ch31_sql_summap")(spark, sf)
     val aggs = df.queryExecution.executedPlan.collect {
       case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a }
     assert(aggs.size == 2, s"expected partial+final, got ${aggs.size}")
@@ -200,7 +200,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // the -Merge rollup is the AggregatingMergeTree read path — folding
     // states must stay a single map-side-combinable aggregation, not a
     // re-expansion of the original rows
-    val df = Queries.all("ch48_sql_state_merge")(spark, sf)
+    val df = SparkEntry.queries("ch48_sql_state_merge")(spark, sf)
     val aggs = df.queryExecution.executedPlan.collect {
       case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a }
     assert(aggs.size == 2, s"expected partial+final, got ${aggs.size}")
@@ -240,7 +240,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("hyperplane bucketing is the single native expression, not per-plane HOFs") {
     // the interpreted form ran nPlanes zip_with+aggregate passes per row;
     // the native HyperplaneBucket computes every sign bit in one traversal
-    val plan = Queries.all("v6_embed_neardup")(spark, sf)
+    val plan = SparkEntry.queries("v6_embed_neardup")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("hyperplanebucket"))
     assert(!plan.contains("zip_with"), "per-plane interpreted HOF pass is back")
@@ -739,7 +739,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
       "pq" -> "j INT, c INT, cv ARRAY<DOUBLE>",
       "hnsw" -> "pos INT, cid BIGINT, cv ARRAY<DOUBLE>, lvl INT, adj ARRAY<ARRAY<INT>>")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_layout")
+    val dir = tempDir("graft_idx_layout")
     try {
       for ((sub, spec) <- Seq(
           "ivfpq" -> AnnIndex(Coarse(Every(50)), Pq(4, 50)),
@@ -765,9 +765,9 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("persisted-index registry entries leave no index directory behind") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def indexDirs(): Set[String] = tmp.list().toSet
-      .filter(n => n.startsWith("graft_idx") || n.startsWith("graft_hnsw"))
+      .filter(n => Seq("graft_idx", "graft_hnsw", "graft_lm").exists(n.startsWith))
     val before = indexDirs()
-    for (name <- Seq("v17_index_persist", "v22b_hnsw_persist"))
+    for (name <- Seq("v17_index_persist", "v22b_hnsw_persist", "t34_trained_langid"))
       assert(SparkEntry.queries(name)(spark, sf).count() > 0, name)
     val leaked = indexDirs() -- before
     assert(leaked.isEmpty, s"leaked index dirs: $leaked")
@@ -997,7 +997,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   test("p7 pretrain pipeline: selection is TakeOrderedAndProject, no nested-loop joins, text never shuffles") {
     import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    val df = Queries.all("p7_pretrain_pipeline")(spark,
+    val df = SparkEntry.queries("p7_pretrain_pipeline")(spark,
       "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan
     // the Gumbel-top-k selection must be per-partition heaps + a driver
@@ -1020,7 +1020,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
 
   test("p8 gopher/decontam pipeline: no sort-merge joins, text never " +
       "shuffles (digest/id/count rows only cross exchanges)") {
-    val df = Queries.all("p8_gopher_decontam_pack")(spark,
+    val df = SparkEntry.queries("p8_gopher_decontam_pack")(spark,
       "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan
     assert(plan.collect {
@@ -1233,8 +1233,8 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
     // these pins prove the plans are still the textbook partial+final
     // aggregate so any future delta is attributable to the harness, not
     // the plan (bench now takes min-of-3 for the same reason)
-    val q16 = Queries.all("q16_conditional_agg")(spark, sf)
-    val q13 = Queries.all("q13_grouping_sets")(spark, sf)
+    val q16 = SparkEntry.queries("q16_conditional_agg")(spark, sf)
+    val q13 = SparkEntry.queries("q13_grouping_sets")(spark, sf)
     for (df <- Seq(q16, q13)) {
       val plan = df.queryExecution.executedPlan
       // no window, no join — pure aggregate + order
@@ -1265,7 +1265,7 @@ class ScaleDesignSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("weighted quantile: aggregate runs BELOW the window (distinct-value input)") {
-    val df = Queries.all("q83_weighted_quantile")(spark, sf)
+    val df = SparkEntry.queries("q83_weighted_quantile")(spark, sf)
     val plan = df.queryExecution.executedPlan
     val windows = plan.collect { case w: WindowExec => w }
     assert(windows.nonEmpty)

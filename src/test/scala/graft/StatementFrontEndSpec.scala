@@ -65,7 +65,7 @@ class StatementFrontEndSpec extends AnyFunSuite with SparkSuite {
     "INSERT INTO fe_w VALUES (1, 10, 'a'), (2, 20, 'a'), (3, 30, 'b'), (3, 31, 'b')")
   private val dropW = Seq("DROP TABLE IF EXISTS fe_w")
   private val readW = Seq("SELECT k, v, p FROM fe_w ORDER BY k, v")
-  private lazy val outDir = Files.createTempDirectory("graft_fe").toString
+  private lazy val outDir = tempDir("graft_fe").toString
 
   private lazy val kinds: Seq[Kind] = Seq(
     // ---- ChSql.statement heads ----
@@ -322,7 +322,7 @@ class StatementFrontEndSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("the Sql CLI lists its directory's tables after a leading comment") {
-    val dir = Files.createTempDirectory("graft_cli").toString
+    val dir = tempDir("graft_cli").toString
     spark.range(3).write.parquet(s"$dir/fe_cli_tab.parquet")
     val out = new java.io.ByteArrayOutputStream
     Console.withOut(out)(Sql.run(spark, dir, "-- c\nSHOW TABLES", 50))

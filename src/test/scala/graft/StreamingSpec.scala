@@ -29,7 +29,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .write.mode("overwrite").parquet(dir)
 
   test("MV: batch populate == streaming refresh (Kappa consistency)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     writeBatch(dir)
     val mv = MaterializedView("mv_hourly", StreamingOps.windowedCounts(_))
 
@@ -46,7 +46,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("WATCH view: registered MV yields a streaming subscription with MV results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_watch").toString
+    val dir = tempDir("graft_watch").toString
     writeBatch(dir)
     val mv = MaterializedView("mv_watch", StreamingOps.windowedCounts(_))
     StreamingOps.register(mv)
@@ -70,7 +70,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("CH-text MV/WATCH: register via statement, POPULATE backfills, WATCH streams") {
     import graft.chsql.ChSql
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvtext").toString
+    val dir = tempDir("graft_mvtext").toString
     writeBatch(s"$dir/events.parquet")
     def resolve(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     def stmt(s: String) = ChSql.statement(spark, s)(resolve)._1
@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming dedup drops repeated digests within the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup").toString
+    val dir = tempDir("graft_dedup").toString
     Seq(
       ("2024-01-01 00:10:00", "click", 1.0),
       ("2024-01-01 00:10:00", "click", 1.0), // exact dup
@@ -156,7 +156,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("stream-static broadcast enrichment (streaming dictGet twin)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich").toString
+    val dir = tempDir("graft_enrich").toString
     writeBatch(dir)
     val dict = Seq(("click", "interaction"), ("view", "passive"))
       .toDF("et", "category")

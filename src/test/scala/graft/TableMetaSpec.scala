@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.graftbridge.TestBridge
+import org.apache.spark.sql.graftbridge.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Table metadata (the `graft.*` properties, partition columns and table
@@ -40,7 +40,7 @@ class TableMetaSpec extends AnyFunSuite with SparkSuite {
     spark.listenerManager.register(listener)
     try {
       val out = body
-      TestBridge.waitListenerBus(spark)
+      ListenerBus.drain(spark.sparkContext)
       (out, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }

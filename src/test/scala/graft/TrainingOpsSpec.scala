@@ -585,7 +585,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     val spec = AnnIndex(Coarse(Every(24), iters = 2), Pq(4, 12, iters = 1))
     val ix = annTrain(df, spec)
     val (cids, cvs, cb) = (ix.cids, ix.cvs, ix.pq.get)
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_t").toString
+    val dir = tempDir("graft_idx_t").toString
     Similarity.save(spark, dir, ix)
     // loading is eager: the artifact can go as soon as load returns
     val ix2 = try Similarity.load(spark, dir, spec) finally deleteDir(dir)
@@ -834,7 +834,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       cents.map(_.getSeq[Double](1).toArray), m = 4)
     val spec = AnnIndex(Coarse(Every(8), hnsw = Some(4)))
     val ix = annTrain(df, spec)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_t").toString
+    val dir = tempDir("graft_hnsw_t").toString
     Similarity.save(spark, dir, ix)
     // loading is eager: the artifact can go as soon as load returns
     val loaded = try Similarity.load(spark, dir, spec) finally deleteDir(dir)
@@ -856,7 +856,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(fromArtifact == fromBuild,
       "serving from the persisted graph diverged from the in-memory build")
-    val empty = java.nio.file.Files.createTempDirectory("graft_hnsw_e").toString
+    val empty = tempDir("graft_hnsw_e").toString
     try intercept[Exception] { // empty dir: no artifact, fails honestly
       Similarity.load(spark, empty, spec)
     } finally deleteDir(empty)
@@ -1284,7 +1284,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     assert(math.abs(planLen(wide) - planLen(models)) < 200,
       s"plan grew with K: ${planLen(models)} -> ${planLen(wide)}")
     // parquet round-trip: weights bit-exact, load→serve ≡ train→serve
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm_t").toString
+    val dir = tempDir("graft_lm_t").toString
     TextAnalysis.saveLinearModels(spark, dir, models)
     val loaded = TextAnalysis.loadLinearModels(spark, dir)
     assert(loaded.map(_._1) == langs.sorted)
@@ -1296,7 +1296,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
     assert(servedLoaded == bcOut, "load->serve diverged from train->serve")
     intercept[Exception] { // empty dir: schema inference fails honestly
       TextAnalysis.loadLinearModels(spark,
-        java.nio.file.Files.createTempDirectory("graft_lm_e").toString)
+        tempDir("graft_lm_e").toString)
     }
   }
 
@@ -1939,7 +1939,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSuite {
   test("byte-level BPE at the 32k PRODUCTION vocabulary: native encoder " +
       "≡ an independent lowest-rank-first reference; decode round-trips; " +
       "the t28e prefix is a true prefix of the shipped table") {
-    val merges = Queries.bpeMergesBytes32k
+    val merges = registry.Support.bpeMergesBytes32k
     assert(merges.size == 32000)
     val ranks = merges.zipWithIndex.toMap
     // independent reference: hex-pair base symbols + EOW, repeatedly
