@@ -31,7 +31,9 @@ class RegistrySpec extends AnyFunSuite with SparkSuite {
   /** Each RDD allowance is localCheckpoint'ed data: what the returned
     * frame still reads, or an operator's intermediate. The ContextCleaner
     * drops it once it is unreachable, so a GC during the entry can leave
-    * fewer than the allowance, never more. */
+    * fewer than the allowance, never more. The test unpersists what each
+    * entry left before the next one starts, so the cleaner has nothing
+    * of an earlier entry's to drop while a later one is checked. */
   private val allowances: Map[String, Allowance] = {
     val codes = Allowance("the PQ code table the frame reads", 1)
     val kmeans = Allowance("the coarse k-means pass's input vectors", 1)
@@ -69,12 +71,17 @@ class RegistrySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("every registry entry leaves no cached relation, conf change or unlisted persistent RDD behind") {
+    val sc = spark.sparkContext
     val failed = Registry.entries.flatMap { e =>
       val a = allowances.getOrElse(e.name, Allowance("none"))
+      val before = sc.getPersistentRDDs.keySet
       try {
-        assertLeavesNoState(Seq(e.build(spark, sf)), a.rdds, a.conf, e.name)
+        assertLeavesNoState(Seq(e.build(spark, sf)), a.rdds, a.conf,
+          s"${e.name} (allowed: ${a.why})")
         None
       } catch { case f: TestFailedException => Some(f.getMessage) }
+      finally (sc.getPersistentRDDs -- before).values
+        .foreach(_.unpersist(blocking = true))
     }
     assert(failed.isEmpty, failed.mkString("\n"))
   }

@@ -31,8 +31,8 @@ trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
     finally super.afterAll()
 
   /** Runs `frames` and asserts they left no cached relation, no change
-    * to a conf key outside `allowedConf` and no persistent RDD beyond
-    * `allowedRdds` new ones behind. */
+    * to a conf key outside `allowedConf`, no persistent RDD beyond
+    * `allowedRdds` new ones behind, and removed none that existed. */
   protected def assertLeavesNoState(frames: => Seq[DataFrame],
       allowedRdds: Int = 0, allowedConf: Set[String] = Set.empty,
       clue: String = ""): Unit = {
@@ -46,7 +46,10 @@ trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
       assert(df.queryExecution.withCachedData.collectFirst {
         case r: InMemoryRelation => r }.isEmpty, clue)
     }
-    val newRdds = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    val rddsAfter = spark.sparkContext.getPersistentRDDs.keySet
+    assert(rddsBefore.subsetOf(rddsAfter),
+      s"$clue: removed persistent RDDs ${rddsBefore -- rddsAfter}")
+    val newRdds = rddsAfter -- rddsBefore
     assert(newRdds.size <= allowedRdds, s"$clue: persistent RDDs $newRdds")
     assert(cache.isEmpty == cacheEmptyBefore, clue)
     assert(spark.conf.getAll -- allowedConf == confBefore -- allowedConf, clue)
